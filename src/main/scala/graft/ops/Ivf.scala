@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.vector.VectorOps
+import org.apache.spark.sql.graft.CosineSimilarity
 
 /** IVF (inverted-file) approximate nearest neighbor — the codebook-based
   * scale path next to [[Similarity.annCosineLsh]]'s hash-based one.
@@ -49,56 +49,123 @@ object Ivf {
   }
 
   /** Centroids as exact integer state: cid -> (component sums, count). */
-  final case class Model(centroids: Map[Int, (Array[Long], Long)]) extends Serializable
-
-  /** floor(x * 2^20) per component, as a codegen'd SQL transform. */
-  private[ops] def quantCol(vecCol: String) =
-    expr(s"transform($vecCol, x -> cast(floor(cast(x as double) * 1048576.0D) as bigint))")
-
-  /** Scala twin of [[quantCol]] for driver-side query vectors — identical
-    * IEEE arithmetic (float→double widen, exact product step, floor), so
-    * a vector quantized here equals the same vector quantized in-plan. */
-  private[ops] def quantize(v: Seq[Float]): Seq[Long] =
-    v.map(x => math.floor(x.toDouble * QuantScale).toLong)
-
-  /** Nearest centroid of `v` among `cents` (MUST be sorted ascending by
-    * cid): strict `>` over ascending cids keeps ties on the lowest cid —
-    * the tie-break the DuckDB oracles replay as ORDER BY sim DESC, cid.
-    * Every assignment path (IVF assign/search, PQ train/encode/search)
-    * goes through here so the rule lives once. */
-  private[ops] def nearest(cents: Array[(Int, (Array[Long], Long))], v: Seq[Long]): Int =
-    nearestWithSim(cents, v)._1
-
-  /** [[nearest]] plus the winning similarity itself — the prototypicality
-    * observable [[Prune]] ranks on. Same strict-`>`/ascending-cid
-    * tie-break; one loop for both callers. */
-  private[ops] def nearestWithSim(cents: Array[(Int, (Array[Long], Long))], v: Seq[Long]): (Int, Double) = {
-    var best = -1; var bestSim = Double.NegativeInfinity
-    for ((cid, (s, n)) <- cents) {
-      val sim = cosineCentroid(s, n, v)
-      if (sim > bestSim) { bestSim = sim; best = cid }
-    }
-    (best, bestSim)
+  final case class Model(centroids: Map[Int, (Array[Long], Long)]) extends Serializable {
+    /** The assignment form of these centroids, built once per model. */
+    lazy val codebook: Codebook = Codebook(centroids)
   }
 
-  /** Cosine of an exact-integer centroid (s/n per dim) against a quantized
-    * vector — strict left-to-right fold, mirrored by the oracle SQL. */
-  private[ops] def cosineCentroid(s: Array[Long], n: Long, v: Seq[Long]): Double = {
-    val len = math.min(s.length, v.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < len) {
-      val x = s(i).toDouble / n
-      val y = v(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
+  /** A codebook in the form every assignment loop reads: cids ascending,
+    * and each centroid's mean `s(i).toDouble / n` divided once per model,
+    * not once per vector × centroid × dimension. The same division feeds
+    * the same fold order, so every similarity and distance is the value
+    * the DuckDB oracles replay from the exact-integer state.
+    *
+    * Strict `>` over ascending cids keeps ties on the lowest cid — the
+    * tie-break the oracles replay as ORDER BY sim DESC, cid. Every
+    * assignment path (IVF train/assign/search, hierarchical, PQ, Prune)
+    * goes through here so the rule lives once. */
+  final class Codebook private (ids: Array[Int], means: Array[Array[Double]])
+    extends Serializable {
+
+    /** Cosine of centroid `c` (by position) against a quantized vector —
+      * strict left-to-right fold over the common prefix. */
+    private def cosine(c: Int, v: Array[Long]): Double = {
+      val m = means(c)
+      val len = math.min(m.length, v.length)
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      var i = 0
+      while (i < len) {
+        val x = m(i)
+        val y = v(i).toDouble
+        dot += x * y; na += x * x; nb += y * y
+        i += 1
+      }
+      val d = math.sqrt(na) * math.sqrt(nb)
+      if (d == 0.0) 0.0 else dot / d
     }
-    val d = math.sqrt(na) * math.sqrt(nb)
-    if (d == 0.0) 0.0 else dot / d
+
+    /** Nearest centroid's cid and its similarity — the prototypicality
+      * observable [[Prune]] ranks on. */
+    def nearestWithSim(v: Array[Long]): (Int, Double) = {
+      var best = -1; var bestSim = Double.NegativeInfinity
+      var c = 0
+      while (c < ids.length) {
+        val sim = cosine(c, v)
+        if (sim > bestSim) { bestSim = sim; best = ids(c) }
+        c += 1
+      }
+      (best, bestSim)
+    }
+
+    def nearest(v: Array[Long]): Int = nearestWithSim(v)._1
+
+    /** The `nprobe` most similar cids, by (sim DESC, cid). */
+    def probes(v: Array[Long], nprobe: Int): Array[Int] =
+      ids.indices.map(c => (ids(c), cosine(c, v)))
+        .sortBy { case (cid, sim) => (-sim, cid) }
+        .take(nprobe).map(_._1).toArray
+
+    /** Squared L2 to the nearest centroid — strict left-to-right fold per
+      * centroid, mirrored by the oracle SQL. */
+    def minDistSq(v: Array[Long]): Double = {
+      var best = Double.PositiveInfinity
+      for (m <- means) {
+        val len = math.min(m.length, v.length)
+        var acc = 0.0
+        var i = 0
+        while (i < len) {
+          val d = m(i) - v(i).toDouble
+          acc += d * d
+          i += 1
+        }
+        if (acc < best) best = acc
+      }
+      best
+    }
+  }
+
+  object Codebook {
+    def apply(centroids: Map[Int, (Array[Long], Long)]): Codebook = {
+      val ids = centroids.keys.toArray.sorted
+      new Codebook(ids, ids.map { cid =>
+        val (s, n) = centroids(cid)
+        s.map(_.toDouble / n)
+      })
+    }
+  }
+
+  /** floor(x * 2^20) per component of a vector read as `array<double>`
+    * (a lossless widen from float): the same exact product, floor and
+    * saturating long conversion as the in-plan
+    * `transform(v, x -> cast(floor(cast(x as double) * 1048576.0D) as bigint))`,
+    * so both quantize every vector to the same longs. */
+  private[graft] def quantize(v: Array[Double]): Array[Long] = {
+    val q = new Array[Long](v.length)
+    var i = 0
+    while (i < v.length) { q(i) = math.floor(v(i) * QuantScale).toLong; i += 1 }
+    q
+  }
+
+  /** (id as long, vector as `array<double>`) rows: the one read every
+    * corpus pass starts from; quantization happens in Scala. */
+  private[graft] def vectors(emb: DataFrame, idCol: String, vecCol: String): Dataset[(Long, Array[Double])] = {
+    import emb.sparkSession.implicits._
+    emb.select(col(idCol).cast("long"), col(vecCol).cast("array<double>")).as[(Long, Array[Double])]
   }
 
   /** Nearest-centroid assignment of every vector: (id, cluster). Ties keep
     * the lowest cluster id (strictly-greater comparison over cid order). */
+  def assign(emb: DataFrame, idCol: String, vecCol: String, model: Model): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(model.codebook)
+    vectors(emb, idCol, vecCol)
+      .mapPartitions { iter =>
+        val book = bc.value
+        iter.map { case (id, v) => (id, book.nearest(quantize(v))) }
+      }.toDF(idCol, "cluster")
+  }
+
   /** Persist the trained coarse quantizer's EXACT integer state — one row
     * per centroid (cid, sums, n) — so increments assign against a model
     * built ONCE per corpus epoch, the ANN-side analogue of the persisted
@@ -149,34 +216,12 @@ object Ivf {
   def nearestDistQ(emb: DataFrame, idCol: String, vecCol: String, model: Model): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model.centroids.toArray.sortBy(_._1))
-    emb.select(col(idCol).cast("long"), quantCol(vecCol)).as[(Long, Seq[Long])]
+    val bc = spark.sparkContext.broadcast(model.codebook)
+    vectors(emb, idCol, vecCol)
       .mapPartitions { iter =>
-        val cents = bc.value
-        iter.map { case (id, v) =>
-          var best = Double.PositiveInfinity
-          for ((_, (s, n)) <- cents) {
-            val d = distSqCentroid(s, n, v)
-            if (d < best) best = d
-          }
-          (id, math.floor(math.sqrt(best)).toLong)
-        }
+        val book = bc.value
+        iter.map { case (id, v) => (id, math.floor(math.sqrt(book.minDistSq(quantize(v)))).toLong) }
       }.toDF(idCol, "dist_q")
-  }
-
-  /** Squared L2 of an exact-integer centroid (s/n per dim) against a
-    * quantized vector — strict left-to-right fold, mirrored by the
-    * oracle SQL. */
-  private[ops] def distSqCentroid(s: Array[Long], n: Long, v: Seq[Long]): Double = {
-    val len = math.min(s.length, v.length)
-    var acc = 0.0
-    var i = 0
-    while (i < len) {
-      val d = s(i).toDouble / n - v(i).toDouble
-      acc += d * d
-      i += 1
-    }
-    acc
   }
 
   /** Mean of [[nearestDistQ]] over the batch, as one integer (values are
@@ -210,17 +255,6 @@ object Ivf {
   def readTrainRef(spark: SparkSession, table: String): Long =
     spark.table(table + "_ref").collect()(0).getLong(0)
 
-  def assign(emb: DataFrame, idCol: String, vecCol: String, model: Model): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model.centroids.toArray.sortBy(_._1))
-    emb.select(col(idCol).cast("long"), quantCol(vecCol)).as[(Long, Seq[Long])]
-      .mapPartitions { iter =>
-        val cents = bc.value
-        iter.map { case (id, v) => (id, nearest(cents, v)) }
-      }.toDF(idCol, "cluster")
-  }
-
   /** Train a k-centroid codebook: seed with the k lowest-id vectors
     * (quantized, count 1), then `iters` Lloyd rounds of assign →
     * exact-integer sum/count update. */
@@ -228,11 +262,10 @@ object Ivf {
             k: Int, iters: Int = 2): Model = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val seedRows = emb.orderBy(col(idCol)).limit(k)
-      .select(col(idCol), quantCol(vecCol)).as[(Long, Seq[Long])]
-      .collect()
-    var model = Model(seedRows.zipWithIndex.map { case ((_, v), i) => i -> (v.toArray, 1L) }.toMap)
-    val dim = seedRows.headOption.map(_._2.length).getOrElse(0)
+    val seeds = vectors(emb.orderBy(col(idCol)).limit(k), idCol, vecCol)
+      .collect().map { case (_, v) => quantize(v) }
+    var model = Model(seeds.zipWithIndex.map { case (v, i) => i -> (v, 1L) }.toMap)
+    val dim = seeds.headOption.map(_.length).getOrElse(0)
     val sumAgg = new graft.vector.VectorSumLong(dim).toColumn
     for (_ <- 1 to iters) {
       // r17 optimization: one fused pass per Lloyd round — each vector is
@@ -246,11 +279,14 @@ object Ivf {
       // where the fused pass counts each row once — the sensible
       // semantics, noted per ADVICE r17), and the integer sums are
       // merge-order-free.
-      val bc = emb.sparkSession.sparkContext.broadcast(model.centroids.toArray.sortBy(_._1))
-      val sums = emb.select(col(idCol).cast("long"), quantCol(vecCol)).as[(Long, Seq[Long])]
+      val bc = emb.sparkSession.sparkContext.broadcast(model.codebook)
+      val sums = vectors(emb, idCol, vecCol)
         .mapPartitions { iter =>
-          val cents = bc.value
-          iter.map { case (_, v) => (nearest(cents, v), v) }
+          val book = bc.value
+          iter.map { case (_, v) =>
+            val q = quantize(v)
+            (book.nearest(q), q)
+          }
         }
         .groupByKey(_._1)
         .mapValues(_._2)
@@ -319,11 +355,14 @@ object Ivf {
     val spark = emb.sparkSession
     import spark.implicits._
     val superModel = train(emb, idCol, vecCol, k2, superIters)
-    // one materialized (id, super, vq) pass feeds seeding and every round
-    val sv = assign(emb, idCol, vecCol, superModel)
-      .join(emb.select(col(idCol), quantCol(vecCol).as("_v")), idCol)
-      .select(col(idCol).cast("long").as("_id"), col("cluster").as("_sc"), col("_v"))
-      .as[(Long, Int, Seq[Long])]
+    // one materialized (id, super, vq) pass feeds seeding and every round;
+    // each corpus row appears once, also under a duplicated id
+    val bcS = spark.sparkContext.broadcast(superModel.codebook)
+    val sv = vectors(emb, idCol, vecCol)
+      .mapPartitions { iter =>
+        val book = bcS.value
+        iter.map { case (id, v) => val q = quantize(v); (id, book.nearest(q), q) }
+      }
       .localCheckpoint(false)
     val wSeed = Window.partitionBy(col("_sc")).orderBy(col("_id"))
     val seedRows = sv.toDF("_id", "_sc", "_v")
@@ -331,20 +370,18 @@ object Ivf {
       .withColumn("_ns", count(lit(1)).over(Window.partitionBy(col("_sc"))))
       .filter(col("_rn") <= ceil(col("_ns") / lit(targetCell.toDouble)))
       .select(col("_sc"), (col("_rn") - 1).cast("int").as("_child"), col("_v"))
-      .as[(Int, Int, Seq[Long])].collect()
+      .as[(Int, Int, Array[Long])].collect()
     var children: Map[Int, Model] = seedRows.groupBy(_._1).map { case (sc, rows) =>
-      sc -> Model(rows.map { case (_, c, v) => c -> (v.toArray, 1L) }.toMap)
+      sc -> Model(rows.map { case (_, c, v) => c -> (v, 1L) }.toMap)
     }
     val dim = seedRows.headOption.map(_._3.length).getOrElse(0)
     val sumAgg = new graft.vector.VectorSumLong(dim).toColumn
     for (_ <- 1 to childIters) {
-      val bc = spark.sparkContext.broadcast(
-        children.map { case (sc, m) => sc -> m.centroids.toArray.sortBy(_._1) })
-      val asn = sv.mapPartitions { iter =>
+      val bc = spark.sparkContext.broadcast(children.map { case (sc, m) => sc -> m.codebook })
+      val sums = sv.mapPartitions { iter =>
         val cs = bc.value
-        iter.map { case (id, sc, v) => ((sc, nearest(cs(sc), v)), (id, v)) }
+        iter.map { case (_, sc, v) => ((sc, cs(sc).nearest(v)), v) }
       }
-      val sums = asn.map { case (k, (_, v)) => (k, v) }
         .groupByKey(_._1)
         .mapValues(_._2)
         .agg(sumAgg.name("centroid"))
@@ -403,53 +440,56 @@ object Ivf {
                          m2: Model2): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val bcS = spark.sparkContext.broadcast(m2.superModel.centroids.toArray.sortBy(_._1))
-    val bcC = spark.sparkContext.broadcast(
-      m2.children.map { case (sc, m) => sc -> m.centroids.toArray.sortBy(_._1) })
-    emb.select(col(idCol).cast("long"), quantCol(vecCol)).as[(Long, Seq[Long])]
+    val bcS = spark.sparkContext.broadcast(m2.superModel.codebook)
+    val bcC = spark.sparkContext.broadcast(m2.children.map { case (sc, m) => sc -> m.codebook })
+    vectors(emb, idCol, vecCol)
       .mapPartitions { iter =>
         val sups = bcS.value; val cs = bcC.value
         iter.map { case (id, v) =>
-          val sc = nearest(sups, v)
+          val q = quantize(v)
+          val sc = sups.nearest(q)
           // a super-cell empty at train time has no children: out-of-corpus
           // probes landing there take child 0 (the cell is still addressable)
-          val ch = cs.getOrElse(sc, Array.empty[(Int, (Array[Long], Long))])
-          (id, sc.toLong * ChildStride + (if (ch.isEmpty) 0L else nearest(ch, v).toLong))
+          (id, sc.toLong * ChildStride + cs.get(sc).fold(0L)(_.nearest(q).toLong))
         }
       }.toDF(idCol, "cluster")
   }
 
-  /** The shared candidate pass of [[search]] and
-    * [[graft.ops.Mining.hardNegatives]]: `(query_id, neighbor_id, sim)` —
-    * every member of each query's `nprobe` nearest clusters (quantized
-    * centroid cosine picks the probes, driver-side over the broadcast-
-    * small codebook), exact-cosine-rescored against the ORIGINAL float
-    * vectors. No ranking/truncation here — consumers apply their own. */
+  /** The shared candidate pass of [[search]], [[graft.ops.Mining.hardNegatives]]
+    * and [[graft.ops.Mining.triplets]]: `(query_id, neighbor_id, sim)` for
+    * every member of each query's `nprobe` nearest cells, rescored by exact
+    * cosine against the ORIGINAL vectors. No ranking/truncation here —
+    * consumers apply their own.
+    *
+    * Two steps. One lookup collects each query row's id and vector; the
+    * driver quantizes it and picks its probes (quantized centroid cosine
+    * over the small codebook). Then one map-only pass over the corpus
+    * quantizes each vector, assigns it against the broadcast codebook, and
+    * rescores it against the broadcast vectors of the queries probing its
+    * cell, with the fold [[graft.vector.VectorOps.cosine]] evaluates
+    * ([[org.apache.spark.sql.graft.CosineSimilarity.fold]]): two jobs and
+    * two corpus scans, no join and no shuffle.
+    *
+    * Each corpus row is scored once per query row probing its cell. With
+    * duplicated ids that differs from a join back to the corpus by
+    * neighbor id, which fanned out over every row sharing the id. */
   def probedRescored(emb: DataFrame, idCol: String, vecCol: String, model: Model,
                      queryIds: Seq[Long], nprobe: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val queries = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).cast("long"), quantCol(vecCol)).as[(Long, Seq[Long])]
-      .collect()
-    val probes: Seq[(Long, Int)] = queries.toSeq.flatMap { case (qid, qv) =>
-      model.centroids.toSeq
-        .map { case (cid, (s, n)) => (cid, cosineCentroid(s, n, qv)) }
-        .sortBy { case (cid, sim) => (-sim, cid) }
-        .take(nprobe)
-        .map { case (cid, _) => (qid, cid) }
-    }
-    val probeDf = probes.toDF("query_id", "cluster")
-    val assigned = assign(emb, idCol, vecCol, model)
-    val members = assigned.join(broadcast(probeDf), Seq("cluster"))
-      .filter(col(idCol) =!= col("query_id"))
-      .select(col("query_id"), col(idCol).as("neighbor_id"))
-    val qVecs = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-    val rescored = members
-      .join(emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("_nv")), "neighbor_id")
-      .join(broadcast(qVecs), "query_id")
-      .withColumn("sim", VectorOps.cosine(col("_nv"), col("_qv")))
-    rescored.select(col("query_id"), col("neighbor_id"), col("sim"))
+    val book = model.codebook
+    val queries = vectors(emb.filter(col(idCol).isin(queryIds: _*)), idCol, vecCol).collect()
+    val probing: Map[Int, Array[(Long, Array[Double])]] = queries
+      .flatMap { case q @ (_, qv) => book.probes(quantize(qv), nprobe).map(_ -> q) }
+      .groupMap(_._1)(_._2)
+    val bc = spark.sparkContext.broadcast((book, probing))
+    vectors(emb, idCol, vecCol)
+      .mapPartitions { iter =>
+        val (cb, cells) = bc.value
+        iter.flatMap { case (id, v) =>
+          cells.getOrElse(cb.nearest(quantize(v)), Array.empty[(Long, Array[Double])]).iterator
+            .collect { case (qid, qv) if qid != id => (qid, id, CosineSimilarity.fold(v, qv)) }
+        }
+      }.toDF("query_id", "neighbor_id", "sim")
   }
 }

@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
   * training-loop constant, not a corpus fraction), so cost is
   * |Q| × nprobe × cell-size = linear in the corpus at fixed Q, and the
   * output is ≤ |Q|·k rows. The codebook is driver-resident (k·dim longs,
-  * the Ivf broadcast contract); the only corpus-wide work is the assign
-  * pass and the per-probed-cell rescore join.
+  * the Ivf broadcast contract); the only corpus-wide work is the single
+  * map-only pass that assigns each vector and rescores it against the
+  * queries probing its cell, plus the label lookups.
   */
 object Mining {
 

@@ -27,10 +27,9 @@ object Pq {
   /** Per-subspace codebooks as exact integer state (sums, count). */
   final case class Model(subDim: Int, books: Vector[Map[Int, (Array[Long], Long)]])
     extends Serializable {
-    /** Books as cid-ascending arrays — the form [[Ivf.nearest]] requires;
-      * computed once per broadcast, never per row. */
-    def sortedBooks: Vector[Array[(Int, (Array[Long], Long))]] =
-      books.map(_.toArray.sortBy(_._1))
+    /** Books in the assignment form ([[Ivf.Codebook]]): computed once per
+      * broadcast, never per row. */
+    def codebooks: Vector[Ivf.Codebook] = books.map(Ivf.Codebook(_))
   }
 
   /** Train `m` subspace codebooks of `k` centroids each. Vector length
@@ -49,28 +48,28 @@ object Pq {
             m: Int = 4, k: Int = 8, iters: Int = 1): Model = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val seedRows = emb.orderBy(col(idCol)).limit(k)
-      .select(col(idCol).cast("long"), Ivf.quantCol(vecCol)).as[(Long, Seq[Long])]
-      .collect()
-    require(seedRows.nonEmpty, "cannot train PQ on an empty corpus")
-    val dim = seedRows.head._2.length
+    val seeds = Ivf.vectors(emb.orderBy(col(idCol)).limit(k), idCol, vecCol)
+      .collect().map { case (_, v) => Ivf.quantize(v) }
+    require(seeds.nonEmpty, "cannot train PQ on an empty corpus")
+    val dim = seeds.head.length
     require(dim % m == 0, s"vector dim $dim must divide into $m subspaces")
     val subDim = dim / m
-    def sliceSub(v: Seq[Long], s: Int): Array[Long] =
-      v.slice(s * subDim, (s + 1) * subDim).toArray
+    def sliceSub(v: Array[Long], s: Int): Array[Long] =
+      v.slice(s * subDim, (s + 1) * subDim)
     var books: Vector[Map[Int, (Array[Long], Long)]] = (0 until m).map { s =>
-      seedRows.zipWithIndex.map { case ((_, v), i) => i -> (sliceSub(v, s), 1L) }.toMap
+      seeds.zipWithIndex.map { case (v, i) => i -> (sliceSub(v, s), 1L) }.toMap
     }.toVector
     val sumAgg = new graft.vector.VectorSumLong(subDim).toColumn
     for (_ <- 1 to iters) {
-      val bc = spark.sparkContext.broadcast(books.map(_.toArray.sortBy(_._1)))
-      val assigned = emb.select(col(idCol).cast("long"), Ivf.quantCol(vecCol)).as[(Long, Seq[Long])]
+      val bc = spark.sparkContext.broadcast(books.map(Ivf.Codebook(_)))
+      val assigned = Ivf.vectors(emb, idCol, vecCol)
         .mapPartitions { iter =>
           val bks = bc.value
           iter.flatMap { case (_, v) =>
+            val q = Ivf.quantize(v)
             bks.indices.iterator.map { s =>
-              val sub = sliceSub(v, s)
-              ((s, Ivf.nearest(bks(s), sub)), sub.toSeq)
+              val sub = sliceSub(q, s)
+              ((s, bks(s).nearest(sub)), sub)
             }
           }
         }
@@ -98,13 +97,14 @@ object Pq {
     // sort the Map once per row per subspace); ascending-cid iteration
     // with strict > keeps ties on the lowest code id
     val bc = spark.sparkContext.broadcast(
-      (model.subDim, model.sortedBooks))
-    emb.select(col(idCol).cast("long"), Ivf.quantCol(vecCol)).as[(Long, Seq[Long])]
+      (model.subDim, model.codebooks))
+    Ivf.vectors(emb, idCol, vecCol)
       .mapPartitions { iter =>
         val (subDim, books) = bc.value
         iter.map { case (id, v) =>
+          val q = Ivf.quantize(v)
           val codes = books.indices.map { s =>
-            Ivf.nearest(books(s), v.slice(s * subDim, (s + 1) * subDim))
+            books(s).nearest(q.slice(s * subDim, (s + 1) * subDim))
           }
           (id, codes)
         }
@@ -123,31 +123,26 @@ object Pq {
                    coarse: Ivf.Model, queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    // ONE query-vector collect; the quantized form derives driver-side
-    // (Ivf.quantize ≡ quantCol bit-for-bit), not via a second corpus scan
-    val qFloat = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).cast("long"), col(vecCol)).as[(Long, Seq[Float])]
-      .collect()
+    // ONE query-vector collect; the quantized form derives driver-side,
+    // not via a second corpus scan
+    val qVecs = Ivf.vectors(emb.filter(col(idCol).isin(queryIds: _*)), idCol, vecCol).collect()
     // per-query probe sets against the coarse book (driver-side: k×|queries|)
-    val probeSets: Map[Long, Set[Int]] = qFloat.map { case (qid, qv) =>
-      val q = Ivf.quantize(qv) // once per query, not per centroid
-      qid -> coarse.centroids.toSeq
-        .map { case (cid, (s, n)) => (cid, Ivf.cosineCentroid(s, n, q)) }
-        .sortBy { case (cid, sim) => (-sim, cid) }
-        .take(nprobe).map(_._1).toSet
+    val coarseBook = coarse.codebook
+    val probeSets: Map[Long, Set[Int]] = qVecs.map { case (qid, qv) =>
+      qid -> coarseBook.probes(Ivf.quantize(qv), nprobe).toSet
     }.toMap
-    val tables = adcTables(qFloat, model)
-    val coarseCents = coarse.centroids.toArray.sortBy(_._1)
+    val tables = adcTables(qVecs, model)
     val bc = spark.sparkContext.broadcast(
-      (model.subDim, model.sortedBooks, coarseCents, tables, probeSets))
-    val scored = emb.select(col(idCol).cast("long"), Ivf.quantCol(vecCol)).as[(Long, Seq[Long])]
+      (model.subDim, model.codebooks, coarseBook, tables, probeSets))
+    val scored = Ivf.vectors(emb, idCol, vecCol)
       .mapPartitions { iter =>
         val (subDim, books, cents, ts, probes) = bc.value
         iter.flatMap { case (id, v) =>
-          val cluster = Ivf.nearest(cents, v)
+          val q = Ivf.quantize(v)
+          val cluster = cents.nearest(q)
           // codes only matter if some query probes this row's cluster
           lazy val codes = books.indices.map { s =>
-            Ivf.nearest(books(s), v.slice(s * subDim, (s + 1) * subDim))
+            books(s).nearest(q.slice(s * subDim, (s + 1) * subDim))
           }
           ts.iterator.collect {
             case (qid, t) if qid != id && probes(qid).contains(cluster) =>
@@ -169,9 +164,7 @@ object Pq {
                 queryIds: Seq[Long], k: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val queries = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).cast("long"), col(vecCol)).as[(Long, Seq[Float])]
-      .collect()
+    val queries = Ivf.vectors(emb.filter(col(idCol).isin(queryIds: _*)), idCol, vecCol).collect()
     val bc = spark.sparkContext.broadcast(adcTables(queries, model))
     val scored = encode(emb, idCol, vecCol, model).as[(Long, Seq[Int])]
       .mapPartitions { iter =>
@@ -191,7 +184,7 @@ object Pq {
   /** Per-query ADC lookup tables: table(q)(s)(cid) = dot(q_s,
     * centroid_{s,cid}), the fixed-order fold over the ORIGINAL float
     * query components the oracle replays. */
-  private def adcTables(queries: Array[(Long, Seq[Float])],
+  private def adcTables(queries: Array[(Long, Array[Double])],
                         model: Model): Array[(Long, Array[Array[Double]])] = {
     queries.map { case (qid, qv) =>
       val t = model.books.indices.map { s =>
@@ -201,7 +194,7 @@ object Pq {
           var dot = 0.0
           var i = 0
           while (i < model.subDim) {
-            dot += (cs(i).toDouble / cn) * qv(s * model.subDim + i).toDouble
+            dot += (cs(i).toDouble / cn) * qv(s * model.subDim + i)
             i += 1
           }
           row(cid) = dot

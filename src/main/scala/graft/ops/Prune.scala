@@ -34,12 +34,12 @@ object Prune {
                     model: Ivf.Model): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model.centroids.toArray.sortBy(_._1))
-    emb.select(col(idCol).cast("long"), Ivf.quantCol(vecCol)).as[(Long, Seq[Long])]
+    val bc = spark.sparkContext.broadcast(model.codebook)
+    Ivf.vectors(emb, idCol, vecCol)
       .mapPartitions { iter =>
-        val cents = bc.value
+        val book = bc.value
         iter.map { case (id, v) =>
-          val (cid, sim) = Ivf.nearestWithSim(cents, v)
+          val (cid, sim) = book.nearestWithSim(Ivf.quantize(v))
           (id, cid, sim)
         }
       }.toDF(idCol, "cluster", "proto_sim")

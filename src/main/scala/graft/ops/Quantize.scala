@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * expression is a pure SQL array transform, so the pass rides whole-stage
   * codegen and composes with any scan.
   *
-  * Parity contract (the repo's established pattern, cf. [[Ivf.quantCol]]):
+  * Parity contract (the repo's established pattern, cf. [[Ivf.quantize]]):
   * all arithmetic happens in the exact-integer 2^-20 domain —
   * `xq = floor(x · 2^20)`, per-vector scale `amax_q = max |xq|`, code =
   * `sign(xq) · round(|xq|·127 / amax_q)` with the round expressed as

@@ -11,11 +11,11 @@ import org.apache.spark.sql.expressions.Aggregator
   * partitions — unlike a double-sum ([[VectorMean]]), whose low bits depend
   * on merge order. Deterministic centroids are what make IVF training
   * reproducible run-to-run and replayable by the DuckDB oracle. */
-class VectorSumLong(dim: Int) extends Aggregator[Seq[Long], (Array[Long], Long), (Seq[Long], Long)] {
+class VectorSumLong(dim: Int) extends Aggregator[Array[Long], (Array[Long], Long), (Seq[Long], Long)] {
 
   override def zero: (Array[Long], Long) = (new Array[Long](dim), 0L)
 
-  override def reduce(b: (Array[Long], Long), v: Seq[Long]): (Array[Long], Long) = {
+  override def reduce(b: (Array[Long], Long), v: Array[Long]): (Array[Long], Long) = {
     val (sums, n) = b
     require(v.length == dim, s"VectorSumLong(dim=$dim) got a vector of length ${v.length}")
     var i = 0

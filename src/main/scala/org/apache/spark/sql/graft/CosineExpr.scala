@@ -42,25 +42,14 @@ case class CosineSimilarity(left: Expression, right: Expression)
     case _                       => false
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    // dimension mismatch → null, matching the builtins form (zip_with pads
-    // with null, which poisons the fold)
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
-    val xf = isFloat(left); val yf = isFloat(right)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = if (xf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (yf) y.getFloat(i).toDouble else y.getDouble(i)
-      dot += xv * yv; na += xv * xv; nb += yv * yv
-      i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.fold(doubles(a.asInstanceOf[ArrayData], left),
+      doubles(b.asInstanceOf[ArrayData], right))
+
+  /** The array widened to doubles: float→double is lossless, so these are
+    * exactly the values the generated code reads element by element. */
+  private def doubles(d: ArrayData, e: Expression): Array[Double] =
+    if (isFloat(e)) d.toFloatArray().map(_.toDouble) else d.toDoubleArray()
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -101,6 +90,27 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object CosineSimilarity {
   import org.apache.spark.sql.classic.ExpressionUtils
+
+  /** The scalar fold behind the interpreted `eval` and behind
+    * [[graft.ops.Ivf.probedRescored]]'s corpus pass: dot product and both
+    * squared norms accumulated left to right in one loop, the arithmetic
+    * the generated code repeats. Null (SQL null) on a dimension mismatch or
+    * a zero denominator. */
+  def fold(x: Array[Double], y: Array[Double]): java.lang.Double = {
+    // dimension mismatch → null, matching the builtins form (zip_with pads
+    // with null, which poisons the fold)
+    if (x.length != y.length) return null
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < x.length) {
+      val xv = x(i); val yv = y(i)
+      dot += xv * yv; na += xv * xv; nb += yv * yv
+      i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
+  }
+
   /** Column API for the native expression. */
   def apply(a: Column, b: Column): Column =
     ExpressionUtils.column(

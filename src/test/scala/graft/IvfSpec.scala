@@ -98,14 +98,89 @@ class IvfSpec extends AnyFunSuite {
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
+  private def withIdType(t: String) = emb.withColumn("vec_id", col("vec_id").cast(t))
+
   test("full-probe IVF search equals brute force exactly") {
     val qids = Seq(0L, 1L, 2L)
-    val ivf = Ivf.search(emb, "vec_id", "embedding", model, qids, k = 5, nprobe = 8)
-      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank"))).toSet
-    val q = emb.filter(col("vec_id") < 3).select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val brute = VectorOps.knnCosine(emb, "vec_id", "embedding", q, "qid", "qvec", k = 5)
-      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank"))).toSet
-    assert(ivf == brute)
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("query_id").cast("long"), col("neighbor_id").cast("long"), col("rank"))
+        .as[(Long, Long, Int)].collect().toSet
+    for (t <- Seq("int", "long"); nprobe <- Seq(8, 12)) {
+      val e = withIdType(t)
+      val ivf = triples(Ivf.search(e, "vec_id", "embedding", model, qids, k = 5, nprobe = nprobe))
+      val q = e.filter(col("vec_id") < 3).select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+      val brute = triples(VectorOps.knnCosine(e, "vec_id", "embedding", q, "qid", "qvec", k = 5))
+      assert(ivf.size == 15 && ivf == brute, s"$t ids, nprobe=$nprobe")
+    }
+  }
+
+  test("probedRescored equals the join formulation row for row") {
+    // (query_id, neighbor_id, sim bits), sim compared exactly, null kept
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(2))))).toSet
+    val absent = 123456L
+    val cases = Seq(
+      Seq(0L, 1L, 2L) -> 3,
+      Seq(5L, 5L, 9L) -> 2,         // a repeated query id
+      Seq(absent) -> 3,             // not in the corpus: no rows
+      Seq(7L, absent) -> 1,
+      Seq(3L, 4L) -> 12)            // nprobe beyond k probes every cell
+    for (t <- Seq("int", "long"); (qids, nprobe) <- cases) {
+      val e = withIdType(t)
+      val got = rows(Ivf.probedRescored(e, "vec_id", "embedding", model, qids, nprobe))
+      val ref = rows(IvfReference.probedRescoredJoin(e, "vec_id", "embedding", model, qids, nprobe))
+      assert(got == ref, s"$t ids, queries $qids, nprobe $nprobe")
+      assert(got.map(_._1) == qids.filter(_ != absent).toSet, s"$t ids, queries $qids")
+    }
+    val schema = Ivf.probedRescored(emb, "vec_id", "embedding", model, Seq(0L), 1).schema
+    assert(schema.map(f => (f.name, f.dataType.simpleString)) ==
+      Seq(("query_id", "bigint"), ("neighbor_id", "bigint"), ("sim", "double")))
+    assert(schema("sim").nullable)
+  }
+
+  test("assign equals the in-plan quantized tuple-array assignment") {
+    val got = Ivf.assign(emb, "vec_id", "embedding", model).as[(Long, Int)].collect().toSet
+    val ref = IvfReference.assign(emb, "vec_id", "embedding", model).as[(Long, Int)].collect().toSet
+    assert(got == ref)
+  }
+
+  test("exact counts: search collects in <= 3 jobs; probedRescored scans the corpus twice") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scanListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        scans.addAndGet(helper.collect(qe.executedPlan) { case s: FileSourceScanExec => s }.size)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def counted(body: => Unit): (Int, Int) = {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      jobs.set(0); scans.set(0)
+      body
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      (jobs.get, scans.get)
+    }
+    val qids = Seq(0L, 1L, 2L, 3L)
+    val m = model // trained outside the counted windows
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(scanListener)
+    try {
+      val (searchJobs, _) = counted(Ivf.search(emb, "vec_id", "embedding", m, qids, 10, 3).collect())
+      assert(searchJobs <= 3, s"search ran $searchJobs jobs")
+      val (_, passScans) = counted(Ivf.probedRescored(emb, "vec_id", "embedding", m, qids, 3).collect())
+      assert(passScans == 2, s"probedRescored scanned the corpus $passScans times")
+    } finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(scanListener)
+    }
   }
 
   test("staleness guard: in-distribution batch passes, shifted batch trips, retrain clears") {
