@@ -478,7 +478,12 @@ object Ivf {
     val spark = emb.sparkSession
     import spark.implicits._
     val book = model.codebook
-    val queries = vectors(emb.filter(col(idCol).isin(queryIds: _*)), idCol, vecCol).collect()
+    // the ids reach the filter as one referenced set, not as literals
+    // inlined into generated code, so every request reuses the same
+    // compiled lookup instead of compiling one of its own
+    val wanted = queryIds.toSet
+    val isQuery = udf((id: Long) => wanted.contains(id))
+    val queries = vectors(emb.filter(isQuery(col(idCol).cast("long"))), idCol, vecCol).collect()
     val probing: Map[Int, Array[(Long, Array[Double])]] = queries
       .flatMap { case q @ (_, qv) => book.probes(quantize(qv), nprobe).map(_ -> q) }
       .groupMap(_._1)(_._2)

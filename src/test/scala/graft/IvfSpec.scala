@@ -183,6 +183,37 @@ class IvfSpec extends AnyFunSuite {
     }
   }
 
+  test("requests for other query ids run the same generated code") {
+    // the query ids must not be inlined into the lookup's generated code:
+    // each request would then compile classes of its own and churn
+    // Spark's codegen cache
+    import org.apache.spark.sql.execution.{QueryExecution, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val helper = new AdaptiveSparkPlanHelper {}
+    val codes = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        helper.collect(qe.executedPlan) { case w: WholeStageCodegenExec => w }
+          .foreach(w => codes.add(w.doCodeGen()._2.body))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val m = model
+    def stageCode(qids: Seq[Long]): Seq[String] = {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      codes.clear()
+      Ivf.probedRescored(emb, "vec_id", "embedding", m, qids, 3).collect()
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      codes.toArray(Array.empty[String]).toSeq
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val a = stageCode(Seq(0L, 1L, 2L))
+      val b = stageCode(Seq(5L, 6L, 7L))
+      assert(a.nonEmpty && a == b)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("staleness guard: in-distribution batch passes, shifted batch trips, retrain clears") {
     for (sf <- Seq(TestSpark.sf0001, "/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
       val e = spark.read.parquet(s"$sf/embeddings.parquet")
