@@ -153,6 +153,17 @@ object Ivf {
     emb.select(col(idCol).cast("long"), col(vecCol).cast("array<double>")).as[(Long, Array[Double])]
   }
 
+  /** The rows of `df` whose `idCol` (as long) is one of `ids`: the query
+    * lookup of every search entry point. The ids reach the filter as one
+    * referenced set, not as literals inlined into generated code, so every
+    * request reuses the same compiled lookup instead of compiling one of
+    * its own. Unlike `isin`, the filter is not pushed into a parquet scan. */
+  private[graft] def withIds(df: DataFrame, idCol: String, ids: Seq[Long]): DataFrame = {
+    val wanted = ids.toSet
+    val isWanted = udf((id: Long) => wanted.contains(id))
+    df.filter(isWanted(col(idCol).cast("long")))
+  }
+
   /** Nearest-centroid assignment of every vector: (id, cluster). Ties keep
     * the lowest cluster id (strictly-greater comparison over cid order). */
   def assign(emb: DataFrame, idCol: String, vecCol: String, model: Model): DataFrame = {
@@ -478,12 +489,7 @@ object Ivf {
     val spark = emb.sparkSession
     import spark.implicits._
     val book = model.codebook
-    // the ids reach the filter as one referenced set, not as literals
-    // inlined into generated code, so every request reuses the same
-    // compiled lookup instead of compiling one of its own
-    val wanted = queryIds.toSet
-    val isQuery = udf((id: Long) => wanted.contains(id))
-    val queries = vectors(emb.filter(isQuery(col(idCol).cast("long"))), idCol, vecCol).collect()
+    val queries = vectors(withIds(emb, idCol, queryIds), idCol, vecCol).collect()
     val probing: Map[Int, Array[(Long, Array[Double])]] = queries
       .flatMap { case q @ (_, qv) => book.probes(quantize(qv), nprobe).map(_ -> q) }
       .groupMap(_._1)(_._2)

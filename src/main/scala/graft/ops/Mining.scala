@@ -45,7 +45,7 @@ object Mining {
     val cands = Ivf.probedRescored(emb, idCol, vecCol, model, queryIds, nprobe)
       .withColumn("sim_bp", floor(col("sim") * 10000).cast("long"))
     val qLabels = broadcast(
-      emb.filter(col(idCol).isin(queryIds: _*))
+      Ivf.withIds(emb, idCol, queryIds)
         .select(col(idCol).cast("long").as("query_id"), col(labelCol).as("_qlabel")))
     val nLabels = emb.select(col(idCol).cast("long").as("neighbor_id"),
       col(labelCol).as("neg_label"))
@@ -86,7 +86,7 @@ object Mining {
     val cands = Ivf.probedRescored(emb, idCol, vecCol, model, queryIds, nprobe)
       .withColumn("sim_bp", floor(col("sim") * 10000).cast("long"))
     val qLabels = broadcast(
-      emb.filter(col(idCol).isin(queryIds: _*))
+      Ivf.withIds(emb, idCol, queryIds)
         .select(col(idCol).cast("long").as("query_id"), col(labelCol).as("_qlabel")))
     val nLabels = emb.select(col(idCol).cast("long").as("neighbor_id"),
       col(labelCol).as("n_label"))

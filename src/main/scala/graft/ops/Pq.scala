@@ -125,7 +125,7 @@ object Pq {
     import spark.implicits._
     // ONE query-vector collect; the quantized form derives driver-side,
     // not via a second corpus scan
-    val qVecs = Ivf.vectors(emb.filter(col(idCol).isin(queryIds: _*)), idCol, vecCol).collect()
+    val qVecs = Ivf.vectors(Ivf.withIds(emb, idCol, queryIds), idCol, vecCol).collect()
     // per-query probe sets against the coarse book (driver-side: k×|queries|)
     val coarseBook = coarse.codebook
     val probeSets: Map[Long, Set[Int]] = qVecs.map { case (qid, qv) =>
@@ -164,7 +164,7 @@ object Pq {
                 queryIds: Seq[Long], k: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val queries = Ivf.vectors(emb.filter(col(idCol).isin(queryIds: _*)), idCol, vecCol).collect()
+    val queries = Ivf.vectors(Ivf.withIds(emb, idCol, queryIds), idCol, vecCol).collect()
     val bc = spark.sparkContext.broadcast(adcTables(queries, model))
     val scored = encode(emb, idCol, vecCol, model).as[(Long, Seq[Int])]
       .mapPartitions { iter =>

@@ -154,13 +154,13 @@ object Similarity {
     // cache: the signature flatMap feeds both the probe filter and the
     // candidate join — uncached it would run the corpus-wide hashing twice
     val sigs = signatures(emb, idCol, vecCol, dim, numTables, numBits).cache()
-    val qSigs = sigs.filter(col(idCol).isin(queryIds: _*))
+    val qSigs = Ivf.withIds(sigs, idCol, queryIds)
       .select(col(idCol).as("query_id"), col("table"), col("bucket"))
     val cands = sigs.join(broadcast(qSigs), Seq("table", "bucket"))
       .filter(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol).as("neighbor_id")).distinct()
     val vecs = emb.select(col(idCol), col(vecCol))
-    val qVecs = emb.filter(col(idCol).isin(queryIds: _*))
+    val qVecs = Ivf.withIds(emb, idCol, queryIds)
       .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
     val rescored = cands
       .join(vecs.withColumnRenamed(idCol, "neighbor_id"), "neighbor_id")

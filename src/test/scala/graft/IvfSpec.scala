@@ -199,18 +199,28 @@ class IvfSpec extends AnyFunSuite {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val m = model
-    def stageCode(qids: Seq[Long]): Seq[String] = {
+    val pq = graft.ops.Pq.train(emb, "vec_id", "embedding", m = 2, k = 4, iters = 1)
+    val requests: Seq[(String, Seq[Long] => Unit)] = Seq(
+      "Ivf.probedRescored" -> (q => Ivf.probedRescored(emb, "vec_id", "embedding", m, q, 3).collect()),
+      "Mining.hardNegatives" -> (q =>
+        graft.ops.Mining.hardNegatives(emb, "vec_id", "embedding", "label", m, q, k = 5).collect()),
+      "Pq.searchAdc" -> (q => graft.ops.Pq.searchAdc(emb, "vec_id", "embedding", pq, q, k = 5).collect()),
+      "Similarity.annCosineLsh" -> (q =>
+        graft.ops.Similarity.annCosineLsh(emb, "vec_id", "embedding", q, k = 5, dim = 64).collect()))
+    def stageCode(request: Seq[Long] => Unit, qids: Seq[Long]): Seq[String] = {
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       codes.clear()
-      Ivf.probedRescored(emb, "vec_id", "embedding", m, qids, 3).collect()
+      request(qids)
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       codes.toArray(Array.empty[String]).toSeq
     }
     spark.listenerManager.register(listener)
     try {
-      val a = stageCode(Seq(0L, 1L, 2L))
-      val b = stageCode(Seq(5L, 6L, 7L))
-      assert(a.nonEmpty && a == b)
+      for ((name, request) <- requests) {
+        val a = stageCode(request, Seq(0L, 1L, 2L))
+        val b = stageCode(request, Seq(5L, 6L, 7L))
+        assert(a.nonEmpty && a == b, name)
+      }
     } finally spark.listenerManager.unregister(listener)
   }
 

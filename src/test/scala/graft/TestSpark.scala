@@ -2,16 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM. */
+/** One shared local session for the whole test JVM, built as production
+  * builds it ([[Sessions.local]]), so the suite runs the shipped confs. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
