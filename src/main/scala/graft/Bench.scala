@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.catalog.Catalog
 object Bench {
   /** Time each prep step; a FAILED prep records -1 (the failed-query
     * convention) instead of its time-to-failure, so the bench artifact
@@ -20,17 +21,18 @@ object Bench {
       name -> (if (ok) dt else -1.0)
     }
 
-  /** Ambient drift of this run vs the BASELINE.md anchors
-    * ([[BenchAnchors.Sf01]]): (whole-run ratio, median per-query ratio)
-    * over the measured queries that HAVE an anchor (failed -1 rows and
-    * un-anchored new queries excluded). (-1, -1) when nothing anchored was
-    * measured. This is the "Ambient-load protocol" as data: a reader
-    * scales per-query gate verdicts by the median drift instead of
-    * re-deriving it by hand. */
+  /** The BASELINE.md anchor ([[graft.catalog.Query.anchor]]) of a
+    * catalog row; None for a name the catalog does not hold. */
+  private def anchorOf(name: String): Option[Double] = Catalog.byName.get(name).map(_.anchor)
+
+  /** Ambient drift of this run vs the BASELINE.md anchors: (whole-run
+    * ratio, median per-query ratio) over the measured queries that HAVE an
+    * anchor (failed -1 rows and names outside the catalog excluded).
+    * (-1, -1) when nothing anchored was measured. This is the
+    * "Ambient-load protocol" as data: a reader scales per-query gate
+    * verdicts by the median drift instead of re-deriving it by hand. */
   private[graft] def drift(results: Map[String, Double]): (Double, Double) = {
-    val anchored = results.toSeq.collect {
-      case (n, v) if v >= 0.0 && BenchAnchors.Sf01.contains(n) => (v, BenchAnchors.Sf01(n))
-    }
+    val anchored = for ((n, v) <- results.toSeq if v >= 0.0; a <- anchorOf(n)) yield (v, a)
     if (anchored.isEmpty) (-1.0, -1.0)
     else {
       val whole = anchored.map(_._1).sum / anchored.map(_._2).sum
@@ -43,20 +45,16 @@ object Bench {
   }
 
   /** Per-query 2x-gate breaches as data (VERDICT r13 task 5): the judge's
-    * acceptance gate is measured <= 2x anchor; `anchor_gaps` only says the
-    * table and query set are in sync, so a breach was previously invisible
-    * until someone recomputed 261 ratios by hand. Each entry is
+    * acceptance gate is measured <= 2x anchor, and a breach was previously
+    * invisible until someone recomputed 261 ratios by hand. Each entry is
     * "query:anchor:measured:ratio" for an anchored, successfully measured
     * row whose ratio exceeds 2.0. Empty = every row inside the gate. */
   private[graft] def gateExceedances(results: Map[String, Double]): Seq[String] =
-    results.toSeq.collect {
-      case (n, v) if v >= 0.0 && BenchAnchors.Sf01.get(n).exists(a => v / a > 2.0) =>
-        val a = BenchAnchors.Sf01(n)
-        // Locale.ROOT: the default locale would render comma decimals on
-        // e.g. de_DE hosts inside the persisted artifact of record
-        String.format(java.util.Locale.ROOT, "%s:%.2f:%.3f:%.2f",
-          n, Double.box(a), Double.box(v), Double.box(v / a))
-    }.sorted
+    (for ((n, v) <- results.toSeq if v >= 0.0; a <- anchorOf(n) if v / a > 2.0)
+      // Locale.ROOT: the default locale would render comma decimals on
+      // e.g. de_DE hosts inside the persisted artifact of record
+      yield String.format(java.util.Locale.ROOT, "%s:%.2f:%.3f:%.2f",
+        n, Double.box(a), Double.box(v), Double.box(v / a))).sorted
 
   /** Bounded stall-retry (r18). The sandbox exhibits multi-second host
     * stalls that land on arbitrary rows (BASELINE.md r16 "in-run
@@ -91,17 +89,6 @@ object Bench {
     }
     (dt, trail.toSeq)
   }
-
-  /** Anchor-table hygiene as data: a query with no anchor silently shrinks
-    * the drift denominators, an anchor naming no query is a rename that
-    * lost its pin. Computed over the FULL query map (not a scoped
-    * SPARK_GRAFT_ONLY subset) so a dev-loop run doesn't report every
-    * unselected query as a gap. Empty = table and queries in sync. */
-  private[graft] def anchorGaps: Seq[String] =
-    (SparkEntry.queries.keySet -- BenchAnchors.Sf01.keySet).toSeq.sorted
-      .map("query_without_anchor:" + _) ++
-      (BenchAnchors.Sf01.keySet -- SparkEntry.queries.keySet).toSeq.sorted
-        .map("anchor_without_query:" + _)
 
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
@@ -138,13 +125,12 @@ object Bench {
       .mkString("{", ",", "}")
     val ps = preps.map { case (k, v) => s"\"" + k + "\":" + ms3(v) }
       .mkString("{", ",", "}")
-    val gaps = anchorGaps.map(jsonStr).mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val isSf01 = sfDir.replaceAll("/+$", "").split('/').last == "sf0.1"
     val (dw, dm) = if (isSf01) drift(results) else (-1.0, -1.0)
     val exceed =
       (if (isSf01) gateExceedances(results) else Nil).map(jsonStr).mkString("[", ",", "]")
-    s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":$qs,"prep":$ps,"sf":${jsonStr(sfDir)},"drift_whole_run":$dw,"drift_median":$dm,"anchor_gaps":$gaps,"gate_exceedances":$exceed,"stall_retries":${retriesJson(retries)}}"""
+    s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":$qs,"prep":$ps,"sf":${jsonStr(sfDir)},"drift_whole_run":$dw,"drift_median":$dm,"gate_exceedances":$exceed,"stall_retries":${retriesJson(retries)}}"""
   }
 
   /** Compact verdict-bearing marker (VERDICT r16 task 2): everything the
@@ -165,7 +151,7 @@ object Bench {
       .mkString("[", ",", "]")
     val slowest = ok.toSeq.sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + ms3(v) }.mkString("{", ",", "}")
-    s"""{"metric":"summary","total":${ms3(ok.values.sum)},"n":${results.size},"sf":${jsonStr(sfDir)},"drift_whole_run":$dw,"drift_median":$dm,"anchor_gaps":${anchorGaps.size},"gate_exceedances":$exceed,"stall_retries":${retriesJson(retries)},"failed":$failed,"slowest":$slowest}"""
+    s"""{"metric":"summary","total":${ms3(ok.values.sum)},"n":${results.size},"sf":${jsonStr(sfDir)},"drift_whole_run":$dw,"drift_median":$dm,"gate_exceedances":$exceed,"stall_retries":${retriesJson(retries)},"failed":$failed,"slowest":$slowest}"""
   }
 
   /** Persist the identical JSON line to a file (default `BENCH_LOCAL.json`
@@ -184,17 +170,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // dev loop: SPARK_GRAFT_ONLY=q1_agg,dedup_incremental times just those
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
-    val queries = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
+    val queries = Catalog.selected
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -223,8 +199,8 @@ object Bench {
       System.err.println(s"[bench] WARNING: $small absent; warming up against the MEASURED dir $sfDir (bench wall-time roughly doubles)")
     else
       System.err.println(s"[bench] warmup dir: $warmDir")
-    queries.foreach { case (name, fn) =>
-      try fn(spark, warmDir).count()
+    queries.foreach { case (name, q) =>
+      try q.build(spark, warmDir).count()
       catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
     }
     // measurement hygiene: several queries pin localCheckpoint RDD blocks /
@@ -255,7 +231,7 @@ object Bench {
     // the query row times the steady-state PROBE; the build cost is
     // reported separately under "prep"
     val preps = timePreps(spark, sfDir,
-      SparkEntry.benchPrepare.filter { case (n, _) => queries.contains(n) },
+      queries.flatMap { case (n, q) => q.prep.map(n -> _) },
       afterEach = reclaim _)
     // Short-query protocol (VERDICT r13 task 9, widened r14): rows
     // anchored <= 0.25 s have shown >= 2x single-window excursions in
@@ -268,24 +244,22 @@ object Bench {
     // class, longer tail, so that band reports min-of-2 (~162 rows x
     // ~0.7 s ~= +114 s on a ~300 s run — the price of an artifact of
     // record that doesn't cry wolf once per round). Rows over 1.5 s stay
-    // single-shot: an excursion there is a real plan signal. Unanchored
-    // new queries are single-shot until their first pin. The whole
+    // single-shot: an excursion there is a real plan signal. The whole
     // protocol applies ONLY at sf0.1 — the anchors are sf0.1 seconds, and
     // at sf1+ the same rows run whole seconds each (the sub-second
     // OS-noise rationale doesn't hold and min-of-N would 2-3x the run).
     val repsApply = sfDir.replaceAll("/+$", "").split('/').last == "sf0.1"
     def repsFor(name: String): Int =
       if (!repsApply) 1
-      else BenchAnchors.Sf01.get(name) match {
-        case Some(a) if a <= 0.25 => 3
-        case Some(a) if a <= 1.5  => 2
-        case _                    => 1
+      else {
+        val a = queries(name).anchor
+        if (a <= 0.25) 3 else if (a <= 1.5) 2 else 1
       }
     val retryLog = scala.collection.mutable.Map[String, Seq[Double]]()
-    val results = queries.map { case (name, fn) =>
+    val results = queries.map { case (name, q) =>
       def oneRep(): Double = {
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
+        val ok = try { q.build(spark, sfDir).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
         // failed-query convention: -1, not time-to-failure (drift and the
@@ -305,7 +279,7 @@ object Bench {
       val dt0 = if (times.exists(_ < 0.0)) -1.0 else times.min
       // stall-retry (r18, see [[stallRetry]]): a row still past the 2x
       // gate re-measures up to twice more; the full trail is emitted
-      val anchor = if (repsApply) BenchAnchors.Sf01.get(name) else None
+      val anchor = if (repsApply) Some(q.anchor) else None
       val (dt, trail) = stallRetry(dt0, anchor, maxExtra = 2)(oneRep _)
       if (trail.nonEmpty) retryLog(name) = dt0 +: trail
       name -> dt

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.catalog.Catalog
 
 /** AQE parity check for the hot query family: times each query with
   * adaptive execution ON (plus skew-join handling, the production 100 TB
@@ -15,9 +15,9 @@ import org.apache.spark.sql.SparkSession
   * results. Recorded side-by-side in BASELINE.md.
   *
   * Since r12 this is a PER-ROUND ARTIFACT: with no args it runs the
-  * top-15-by-anchor family (derived from [[graft.BenchAnchors.Sf01]] at
+  * top-15-by-anchor family (derived from the catalog's anchors at
   * runtime, so it tracks re-pins), amortizes persisted builds through
-  * `SparkEntry.benchPrepare` exactly like `graft.Bench`, and writes the
+  * each row's `prep` exactly like `graft.Bench`, and writes the
   * full record to `AQE_LOCAL.json` (override: SPARK_GRAFT_AQE_OUT) —
   * copied to `AQE_r<N>.json` beside the round's BENCH. Drift rule (see
   * BASELINE.md): any on/off ratio outside [0.5, 1.5] in a quiet window,
@@ -32,13 +32,10 @@ import org.apache.spark.sql.SparkSession
   * `spark.sql.adaptive.coalescePartitions.enabled=false`).
   */
 object AqeParity {
-  /** The K largest-anchor queries that exist in the registry — the rows
-    * where an AQE-sensitive plan regression would cost the most. */
+  /** The K largest-anchor queries in the catalog — the rows where an
+    * AQE-sensitive plan regression would cost the most. */
   private[tools] def topByAnchor(k: Int): Seq[String] =
-    graft.BenchAnchors.Sf01.toSeq
-      .filter { case (n, _) => graft.SparkEntry.queries.contains(n) }
-      .sortBy { case (n, a) => (-a, n) }
-      .take(k).map(_._1)
+    Catalog.all.sortBy(q => (-q.anchor, q.name)).take(k).map(_.name)
 
   def main(args: Array[String]): Unit = {
     val spec = if (args.length > 0) args(0) else "top15"
@@ -47,17 +44,15 @@ object AqeParity {
       else spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     def reclaim(): Unit = { spark.catalog.clearCache(); System.gc() }
     val small = "/root/testdata/sf0.001"
     val warmDir = if (new java.io.File(small).isDirectory) small else dir
-    for (n <- names) graft.SparkEntry.queries(n)(spark, warmDir).count()
+    for (n <- names) Catalog(n).build(spark, warmDir).count()
     // amortize persisted artifacts (minhash index, IVF model, DSIR weights)
     // exactly like graft.Bench: both modes then time the steady-state probe
-    for (n <- names; prep <- graft.SparkEntry.benchPrepare.get(n)) {
+    for (n <- names; prep <- Catalog(n).prep) {
       val t0 = System.nanoTime()
       prep(spark, dir)
       println(f"PREP   $n ${(System.nanoTime() - t0) / 1e9}%.2f s")
@@ -76,7 +71,7 @@ object AqeParity {
       val counts = collection.mutable.Set.empty[Long]
       val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        counts += graft.SparkEntry.queries(n)(spark, dir).count()
+        counts += Catalog(n).build(spark, dir).count()
         val dt = (System.nanoTime() - t0) / 1e9
         reclaim()
         dt

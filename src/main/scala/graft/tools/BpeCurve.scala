@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** BPE trainer rounds-vs-wall measurement: times the sequential
   * one-job-per-merge trainer against the batched trainer at the same
   * round count over the real word table, printing per-round cost — the
@@ -19,9 +17,7 @@ object BpeCurve {
     val dir = args(0)
     val rounds = if (args.length > 1) args(1).toInt else 32
     val batch = if (args.length > 2) args(2).toInt else 8
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.io.Tables.documents(spark, dir)
     val w0 = graft.ops.Bpe.wordFrequencies(docs).localCheckpoint(false)

@@ -1,13 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Replicates the driver's entry() smoke check (rows > 0 at sf0.001). */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(4)
     spark.sparkContext.setLogLevel("WARN")
     val n = graft.SparkEntry.entry(spark).count()
     println(s"ENTRY rows=$n")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.catalog.Catalog
 
 /** Min-of-N scale-linearity audit harness: times a set of queries across a
   * set of SF directories IN THE SAME JVM AND WINDOW, so per-decade slopes
@@ -43,11 +43,9 @@ object ScaleAudit {
       require(f.sliding(2).forall(p => p.length < 2 || p(1) > p(0)),
         s"scale factors must be strictly increasing: ${f.mkString(",")}")
     }
-    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
+    val unknown = names.filterNot(Catalog.byName.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     // posture injection: SPARK_GRAFT_SESSION_CONF="k=v;k2=v2" sets session
     // confs before any query runs — how a sweep measures a row under its
@@ -71,7 +69,7 @@ object ScaleAudit {
     val small = "/root/testdata/sf0.001"
     val warmDir = if (new java.io.File(small).isDirectory) small else dirs.head
     for (n <- names) {
-      try graft.SparkEntry.queries(n)(spark, warmDir).count()
+      try Catalog(n).build(spark, warmDir).count()
       catch { case e: Throwable => System.err.println(s"[audit] warmup $n failed: ${e.getMessage}") }
     }
     reclaim()
@@ -87,7 +85,7 @@ object ScaleAudit {
       val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         val ok =
-          try { graft.SparkEntry.queries(n)(spark, dir).count(); true }
+          try { Catalog(n).build(spark, dir).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"[audit] $n @ $dir failed: ${e.getMessage}"); false }
         val dt = (System.nanoTime() - t0) / 1e9

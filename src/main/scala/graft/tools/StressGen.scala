@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Derived stress-corpus generator for the scale-linearity audit.
@@ -57,9 +56,7 @@ object StressGen {
   private def runBoiler(args: Array[String]): Unit = {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val destDir = if (args.length > 1) args(1) else "fixtures/stress/boiler"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
     val template = (0 until 360).map(t => s"boil$t").mkString(" ")
     def tailSql(idExpr: String) =
@@ -97,9 +94,7 @@ object StressGen {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val destDir = if (args.length > 1) args(1) else "fixtures/stress/sf1"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
     val parts = (0 until replicas).map { r =>

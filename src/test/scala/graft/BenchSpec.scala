@@ -18,12 +18,6 @@ class BenchSpec extends AnyFunSuite {
         "silently re-times the build")
   }
 
-  test("every bench anchor names a real query (BASELINE.md and SparkEntry stay in sync)") {
-    val unknown = BenchAnchors.Sf01.keySet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty,
-      s"anchors without a matching query (renamed or removed?): ${unknown.mkString(", ")}")
-  }
-
   test("drift ratios: whole-run and median vs anchors; failed and un-anchored rows excluded") {
     // q1_agg anchor 0.45 (re-pinned r15), jats_parse anchor 0.14 —
     // measured at exactly 2x and 4x; a failed row (-1) and a query with
@@ -111,22 +105,5 @@ class BenchSpec extends AnyFunSuite {
     val clean = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Bench.renderJson(results, Map(), "/root/testdata/sf0.1"))
     assert(clean.get("stall_retries").isObject && clean.get("stall_retries").size() == 0)
-  }
-
-  test("anchor_gaps lists the anchors<->queries symmetric difference in the JSON line") {
-    // every gap entry is labeled; with the table in sync the field is empty.
-    // The drift denominators silently shrink for any query_without_anchor
-    // row, so the gap list is the tripwire that keeps the table current.
-    val gaps = Bench.anchorGaps
-    val unanchored = SparkEntry.queries.keySet -- BenchAnchors.Sf01.keySet
-    val orphans = BenchAnchors.Sf01.keySet -- SparkEntry.queries.keySet
-    assert(gaps.size == unanchored.size + orphans.size)
-    unanchored.foreach(n => assert(gaps.contains(s"query_without_anchor:$n")))
-    orphans.foreach(n => assert(gaps.contains(s"anchor_without_query:$n")))
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.renderJson(Map("q1_agg" -> 0.5), Map(), "/root/testdata/sf0.1"))
-    val arr = root.get("anchor_gaps")
-    assert(arr.isArray && arr.size() == gaps.size,
-      "the JSON line carries every gap entry")
   }
 }

@@ -25,7 +25,7 @@ object OutputShape {
 }
 
 /** Mirrors the driver's t1 smoke: entry + every declared query must run and
-  * return rows at sf0.001, and every oracle key must name a real query. */
+  * return rows at sf0.001. */
 class EntrySmokeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -45,11 +45,6 @@ class EntrySmokeSpec extends AnyFunSuite {
 
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
-  }
-
-  test("every oracleSql key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle keys without queries: $missing")
   }
 
   SparkEntry.queries.foreach { case (name, fn) =>

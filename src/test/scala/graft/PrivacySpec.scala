@@ -187,7 +187,7 @@ class PrivacySpec extends AnyFunSuite {
   test("sf0.001 privacy ladder matches direct recomputation") {
     val dir = "/root/testdata/sf0.001"
     val c = graft.io.Tables.customer(spark, dir)
-    val stats = SparkEntry.privacyLadder
+    val stats = graft.catalog.MultimodalQueries.privacyLadder
     val rows = Privacy.ladderStats(c, stats, k = 10).orderBy("level").collect()
     assert(rows.length == 4)
     val total = c.count()

@@ -7,7 +7,7 @@ plan change shape?" is a one-screen report instead of a 16k-line diff
 (the r9 curation_full scare). RDD ids, plan ids, and stats differ every
 run by construction; only operator names/counts are compared.
 
-Usage: python3 tools/plan_diff.py PLANS_r10.txt PLANS_r11.txt
+Usage: python3 tools/plan_diff.py PLANS_r17.txt PLANS_r18.txt
 Exit code 0 = no drift, 1 = drift found (usable as a gate).
 """
 import re
