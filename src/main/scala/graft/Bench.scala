@@ -1,157 +1,72 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.catalog.Catalog
+import graft.Timing.Row
+/** The bench of record: every selected catalog row timed by [[Timing]] at
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1) on `Sessions.local(SPARK_GRAFT_CPUS)`.
+  * At sf0.1 each row's median is gated at 2x its [[graft.catalog.Query.anchor]]. */
 object Bench {
-  /** Time each prep step; a FAILED prep records -1 (the failed-query
-    * convention) instead of its time-to-failure, so the bench artifact
-    * shows when the matching query's number silently includes the build it
-    * was supposed to amortize (the query re-attempts the build inside its
-    * own timed window when the prep artifact is missing). */
-  private[graft] def timePreps(spark: SparkSession, sfDir: String,
-                               preps: Map[String, (SparkSession, String) => Unit],
-                               afterEach: () => Unit = () => ()): Map[String, Double] =
-    preps.map { case (name, prep) =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { prep(spark, sfDir); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] prep $name failed: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      afterEach()
-      name -> (if (ok) dt else -1.0)
-    }
-
-  /** The BASELINE.md anchor ([[graft.catalog.Query.anchor]]) of a
-    * catalog row; None for a name the catalog does not hold. */
-  private def anchorOf(name: String): Option[Double] = Catalog.byName.get(name).map(_.anchor)
-
-  /** Ambient drift of this run vs the BASELINE.md anchors: (whole-run
-    * ratio, median per-query ratio) over the measured queries that HAVE an
-    * anchor (failed -1 rows and names outside the catalog excluded).
-    * (-1, -1) when nothing anchored was measured. This is the
-    * "Ambient-load protocol" as data: a reader scales per-query gate
-    * verdicts by the median drift instead of re-deriving it by hand. */
-  private[graft] def drift(results: Map[String, Double]): (Double, Double) = {
-    val anchored = for ((n, v) <- results.toSeq if v >= 0.0; a <- anchorOf(n)) yield (v, a)
-    if (anchored.isEmpty) (-1.0, -1.0)
-    else {
-      val whole = anchored.map(_._1).sum / anchored.map(_._2).sum
-      val ratios = anchored.map { case (v, a) => v / a }.sorted
-      val mid = ratios.length / 2
-      val median =
-        if (ratios.length % 2 == 1) ratios(mid) else (ratios(mid - 1) + ratios(mid)) / 2
-      (whole, median)
-    }
-  }
-
-  /** Per-query 2x-gate breaches as data (VERDICT r13 task 5): the judge's
-    * acceptance gate is measured <= 2x anchor, and a breach was previously
-    * invisible until someone recomputed 261 ratios by hand. Each entry is
-    * "query:anchor:measured:ratio" for an anchored, successfully measured
-    * row whose ratio exceeds 2.0. Empty = every row inside the gate. */
-  private[graft] def gateExceedances(results: Map[String, Double]): Seq[String] =
-    (for ((n, v) <- results.toSeq if v >= 0.0; a <- anchorOf(n) if v / a > 2.0)
+  /** Per-query 2x-gate breaches as data: each entry is
+    * "query:anchor:median:ratio" for a successfully measured row whose
+    * median exceeds 2x its anchor. Empty = every row inside the gate. */
+  private[graft] def gateExceedances(rows: Seq[(String, Row)]): Seq[String] =
+    (for ((n, r) <- rows if !r.failed; q <- Catalog.byName.get(n) if r.median / q.anchor > 2.0)
       // Locale.ROOT: the default locale would render comma decimals on
       // e.g. de_DE hosts inside the persisted artifact of record
       yield String.format(java.util.Locale.ROOT, "%s:%.2f:%.3f:%.2f",
-        n, Double.box(a), Double.box(v), Double.box(v / a))).sorted
+        n, Double.box(q.anchor), Double.box(r.median), Double.box(r.median / q.anchor))).sorted
 
-  /** Bounded stall-retry (r18). The sandbox exhibits multi-second host
-    * stalls that land on arbitrary rows (BASELINE.md r16 "in-run
-    * inflation"; the r18 8-cpu run's 8-36x spikes on three untouched rows;
-    * curation_full 17.29 s in the driver's own BENCH_r17 window and
-    * 15.61 s in one r18 builder window — the same build reading 3.4-5.1 s
-    * in every scoped and adjacent full run). min-of-N already shields
-    * rows anchored <= 1.5 s, but back-to-back reps are temporally
-    * correlated (a stall spans both: dedup_snm breached THROUGH min-of-2)
-    * and heavy rows were single-shot. So: when an anchored sf0.1 row's
-    * recorded min still exceeds the 2x gate, re-measure up to `maxExtra`
-    * more times and record the min of ALL reps. Every rep recomputes the
-    * full query from the parquet inputs (the caller clears cache between
-    * reps), so the recorded number is always an honest end-to-end
-    * measurement, and a genuine plan regression breaches on EVERY rep —
-    * the gate still fires. The retry trail (initial reading plus each
-    * retry) is emitted as `stall_retries` in the artifact so the stall is
-    * on record, not papered over. A failed retry rep records -1 (the
-    * failed-query convention: a row is only as honest as its worst rep). */
-  private[graft] def stallRetry(dt0: Double, anchor: Option[Double], maxExtra: Int)
-                               (runOnce: () => Double): (Double, Seq[Double]) = {
-    var dt = dt0
-    val trail = scala.collection.mutable.ArrayBuffer[Double]()
-    anchor.foreach { a =>
-      var extra = 0
-      while (dt >= 0.0 && dt / a > 2.0 && extra < maxExtra) {
-        val t = runOnce()
-        trail += t
-        dt = if (t < 0.0) -1.0 else math.min(dt, t)
-        extra += 1
-      }
-    }
-    (dt, trail.toSeq)
-  }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < ' '  => f"\\u${c.toInt}%04x"
-      case c             => c.toString
-    } + "\""
-
-  /** The one-line bench JSON. Drift fields are only meaningful against the
-    * sf0.1 anchors (matched on the path's BASENAME, so `.../not-sf0.1`
-    * doesn't read as anchored), so any other measured dir reports -1
-    * (sentinel, not an error) — anchors are absolute seconds, not
-    * scale-free. */
-  /** Millisecond precision for the per-query echo: 9-decimal doubles made
-    * the 276-query line overflow the driver's captured tail window
-    * (BENCH_r16's marker arrived head-truncated, opening mid-key), and
-    * nothing downstream reads past the third decimal — the anchors
-    * themselves are pinned at 2-3 significant figures. -1 sentinels pass
-    * through unrounded. */
+  /** Millisecond precision: the anchors are pinned to the millisecond,
+    * and 9-decimal doubles made the full line overflow a captured console
+    * tail. -1 sentinels pass through unrounded. */
   private def ms3(v: Double): String =
     if (v < 0.0) v.toString
     else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  private def retriesJson(retries: Map[String, Seq[Double]]): String =
-    retries.toSeq.sortBy(_._1).map { case (k, vs) =>
-      "\"" + k + "\":" + vs.map(ms3).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => Verify.jsonStr(k) + ":" + v }.mkString("{", ",", "}")
 
-  private[graft] def renderJson(results: Map[String, Double],
-                                preps: Map[String, Double], sfDir: String,
-                                retries: Map[String, Seq[Double]] = Map.empty): String = {
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + ms3(v) }
-      .mkString("{", ",", "}")
-    val ps = preps.map { case (k, v) => s"\"" + k + "\":" + ms3(v) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val isSf01 = sfDir.replaceAll("/+$", "").split('/').last == "sf0.1"
-    val (dw, dm) = if (isSf01) drift(results) else (-1.0, -1.0)
-    val exceed =
-      (if (isSf01) gateExceedances(results) else Nil).map(jsonStr).mkString("[", ",", "]")
-    s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":$qs,"prep":$ps,"sf":${jsonStr(sfDir)},"drift_whole_run":$dw,"drift_median":$dm,"gate_exceedances":$exceed,"stall_retries":${retriesJson(retries)}}"""
+  /** Round r's total: the summed successful samples of round r. A later
+    * round slower than the first by more than the rounds' spread is
+    * in-run inflation. */
+  private def roundTotals(rows: Seq[(String, Row)]): String = {
+    val rounds = rows.map(_._2.samples.size).maxOption.getOrElse(0)
+    (0 until rounds).map(r => ms3(rows.flatMap(_._2.samples.lift(r)).filter(_ >= 0.0).sum))
+      .mkString("[", ",", "]")
   }
 
-  /** Compact verdict-bearing marker (VERDICT r16 task 2): everything the
-    * judge reads — total, n, drift, gate breaches, the slowest-10 — in
-    * one short line the driver's tail window can never truncate mid-key
-    * when it is printed LAST. The full per-query record still rides the
-    * "total" line and BENCH_LOCAL.json; this line exists so that even a
-    * tail that eats the big line head-first keeps the verdict fields. */
-  private[graft] def renderSummary(results: Map[String, Double],
-                                   sfDir: String,
-                                   retries: Map[String, Seq[Double]] = Map.empty): String = {
+  /** The gate applies to sf0.1 only, matched on the dir's basename so
+    * `.../not-sf0.1` is not read as anchored: anchors are absolute sf0.1
+    * seconds. */
+  private def exceedances(rows: Seq[(String, Row)], sfDir: String): String = {
     val isSf01 = sfDir.replaceAll("/+$", "").split('/').last == "sf0.1"
-    val (dw, dm) = if (isSf01) drift(results) else (-1.0, -1.0)
-    val exceed =
-      (if (isSf01) gateExceedances(results) else Nil).map(jsonStr).mkString("[", ",", "]")
-    val ok = results.filter(_._2 >= 0.0)
-    val failed = results.collect { case (n, v) if v < 0.0 => jsonStr(n) }
+    (if (isSf01) gateExceedances(rows) else Nil).map(Verify.jsonStr).mkString("[", ",", "]")
+  }
+
+  private def total(rows: Seq[(String, Row)]): Double =
+    rows.map(_._2).filterNot(_.failed).map(_.median).sum
+
+  /** The full record: each row's median (`queries`), quartiles and
+    * successful sample count, the prep times and the per-round totals. */
+  private[graft] def renderJson(run: Timing.Run, sfDir: String): String = {
+    val rows = run.rows
+    val qs = obj(rows.map { case (n, r) => n -> ms3(r.median) })
+    val iqr = obj(rows.map { case (n, r) => n -> s"[${ms3(r.q1)},${ms3(r.q3)}]" })
+    val ns = obj(rows.map { case (n, r) => n -> r.n.toString })
+    val ps = obj(run.preps.toSeq.map { case (n, v) => n -> ms3(v) })
+    s"""{"metric":"total","value":${ms3(total(rows))},"unit":"sec","queries":$qs,"quartiles":$iqr,"samples":$ns,"rounds":${roundTotals(rows)},"prep":$ps,"sf":${Verify.jsonStr(sfDir)},"gate_exceedances":${exceedances(rows, sfDir)}}"""
+  }
+
+  /** Compact summary marker: total, n, per-round totals, gate
+    * breaches, failures and the slowest 10, in one short line printed
+    * LAST so no tail window of the console truncates it. The full record
+    * rides the "total" line and BENCH_LOCAL.json. */
+  private[graft] def renderSummary(run: Timing.Run, sfDir: String): String = {
+    val rows = run.rows
+    val failed = rows.collect { case (n, r) if r.failed => Verify.jsonStr(n) }
       .mkString("[", ",", "]")
-    val slowest = ok.toSeq.sortBy(-_._2).take(10)
-      .map { case (k, v) => "\"" + k + "\":" + ms3(v) }.mkString("{", ",", "}")
-    s"""{"metric":"summary","total":${ms3(ok.values.sum)},"n":${results.size},"sf":${jsonStr(sfDir)},"drift_whole_run":$dw,"drift_median":$dm,"gate_exceedances":$exceed,"stall_retries":${retriesJson(retries)},"failed":$failed,"slowest":$slowest}"""
+    val slowest = obj(rows.filterNot(_._2.failed).sortBy(-_._2.median).take(10)
+      .map { case (n, r) => n -> ms3(r.median) })
+    s"""{"metric":"summary","total":${ms3(total(rows))},"n":${rows.size},"rounds":${roundTotals(rows)},"sf":${Verify.jsonStr(sfDir)},"gate_exceedances":${exceedances(rows, sfDir)},"failed":$failed,"slowest":$slowest}"""
   }
 
   /** Persist the identical JSON line to a file (default `BENCH_LOCAL.json`
@@ -168,138 +83,20 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // dev loop: SPARK_GRAFT_ONLY=q1_agg,dedup_incremental times just those
-    val queries = Catalog.selected
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // in-run hygiene (r16): even with the UI off, AppStatusListener
-      // retains per-job/stage/task state for every query that ran — at
-      // 274 queries/JVM that is listener-bus and heap load that the
-      // LAST rows pay and the FIRST rows don't (the in-run inflation
-      // class, BASELINE.md r16 note). Keep only a sliver.
-      .config("spark.ui.retainedJobs", "10")
-      .config("spark.ui.retainedStages", "10")
-      .config("spark.ui.retainedTasks", "100")
-      .config("spark.sql.ui.retainedExecutions", "2")
-      .config("spark.worker.ui.retainedExecutors", "2")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: run each selected query once at the smallest SF so whole-stage
-    // codegen compilation and JIT are paid before timing — measured numbers
-    // are steady-state throughput, not first-call class-generation cost
-    // (the 64-aggregate simhash alone costs ~4s of one-time codegen).
-    // Falls back to the measured dir when the small SF isn't present, so
-    // warmup never silently no-ops on a different layout.
-    val small = "/root/testdata/sf0.001"
-    val warmDir = if (new java.io.File(small).isDirectory) small else sfDir
-    if (!new java.io.File(small).isDirectory)
-      System.err.println(s"[bench] WARNING: $small absent; warming up against the MEASURED dir $sfDir (bench wall-time roughly doubles)")
-    else
-      System.err.println(s"[bench] warmup dir: $warmDir")
-    queries.foreach { case (name, q) =>
-      try q.build(spark, warmDir).count()
-      catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
-    }
-    // measurement hygiene: several queries pin localCheckpoint RDD blocks /
-    // broadcasts whose cleanup rides on DRIVER GC (ContextCleaner reclaims
-    // when the derived frames become unreachable) — under a large heap the
-    // JVM may not GC for the whole run, so block-manager state from earlier
-    // queries accumulates and inflates later measurements (observed ~4× on
-    // the checkpoint-heavy dedup queries at 93 queries/JVM). A GC between
-    // queries, OUTSIDE the timed window, keeps each measurement the query's
-    // own steady-state cost.
-    // The listener-bus drain closes the other in-run inflation channel
-    // (VERDICT r16 task 6): the async status bus queues events faster
-    // than it dispatches during a burst, and the backlog is processed on
-    // the shared driver DURING the next row's timed window. Draining
-    // outside the timed window makes each row pay only its own listener
-    // cost. clearCache also bounds ADVICE r16's per-rep leak: queries
-    // that persist (curation_full's DISK_ONLY text) re-cache per call
-    // because CacheManager matches plan fragments — without the clear,
-    // every rep both leaks a disk copy AND can silently reuse the prior
-    // rep's cache, deflating min-of-N.
-    def reclaim(): Unit = {
-      spark.catalog.clearCache()
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      System.gc()
-    }
-    reclaim()
-    // amortized setup (e.g. the minhash corpus index): built once here so
-    // the query row times the steady-state PROBE; the build cost is
-    // reported separately under "prep"
-    val preps = timePreps(spark, sfDir,
-      queries.flatMap { case (n, q) => q.prep.map(n -> _) },
-      afterEach = reclaim _)
-    // Short-query protocol (VERDICT r13 task 9, widened r14): rows
-    // anchored <= 0.25 s have shown >= 2x single-window excursions in
-    // seven straight rounds (zorder_key 6.1x in r13's otherwise-1.05x
-    // window) — at that duration one OS scheduling hiccup IS the
-    // measurement. Those report the MIN of 3 back-to-back runs. The
-    // first two r14 full runs then each produced ONE >2x excursion in the
-    // 0.25-1.5 s band (text_lm_score 2.07x, then text_winnowing 2.66x —
-    // a different row each run, both reading ~1x scoped): same noise
-    // class, longer tail, so that band reports min-of-2 (~162 rows x
-    // ~0.7 s ~= +114 s on a ~300 s run — the price of an artifact of
-    // record that doesn't cry wolf once per round). Rows over 1.5 s stay
-    // single-shot: an excursion there is a real plan signal. The whole
-    // protocol applies ONLY at sf0.1 — the anchors are sf0.1 seconds, and
-    // at sf1+ the same rows run whole seconds each (the sub-second
-    // OS-noise rationale doesn't hold and min-of-N would 2-3x the run).
-    val repsApply = sfDir.replaceAll("/+$", "").split('/').last == "sf0.1"
-    def repsFor(name: String): Int =
-      if (!repsApply) 1
-      else {
-        val a = queries(name).anchor
-        if (a <= 0.25) 3 else if (a <= 1.5) 2 else 1
-      }
-    val retryLog = scala.collection.mutable.Map[String, Seq[Double]]()
-    val results = queries.map { case (name, q) =>
-      def oneRep(): Double = {
-        val t0 = System.nanoTime()
-        val ok = try { q.build(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-        // failed-query convention: -1, not time-to-failure (drift and the
-        // gate both exclude negative rows)
-        val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        // reclaim BETWEEN reps too (ADVICE r16): without it each min-of-N
-        // rep of a persisting query leaks another cached copy and may
-        // reuse the previous rep's cache via plan-fragment matching
-        reclaim()
-        dt
-      }
-      val times = (1 to repsFor(name)).map(_ => oneRep())
-      // a row where ANY rep fails records -1 in the artifact of record —
-      // an intermittent failure hidden behind a successful rep's min
-      // would only be visible on stderr, while single-shot rows surface
-      // every failure; the protocol must not be less honest than them
-      val dt0 = if (times.exists(_ < 0.0)) -1.0 else times.min
-      // stall-retry (r18, see [[stallRetry]]): a row still past the 2x
-      // gate re-measures up to twice more; the full trail is emitted
-      val anchor = if (repsApply) Some(q.anchor) else None
-      val (dt, trail) = stallRetry(dt0, anchor, maxExtra = 2)(oneRep _)
-      if (trail.nonEmpty) retryLog(name) = dt0 +: trail
-      name -> dt
-    }
-    val json = renderJson(results, preps, sfDir, retryLog.toMap)
+    // dev loop: SPARK_GRAFT_ONLY=q1_agg,dedup_incremental times just those
+    val run = Timing.run(spark, Catalog.selected.values.toSeq, sfDir)
+    val json = renderJson(run, sfDir)
     println(json)
     writeLocal(json)
     spark.stop()
-    // Re-emit AFTER stop (r15 verdict task 3, hardened r17): the driver
-    // parses the tail of the console log, and Spark's async shutdown
-    // noise printed after the first line has pushed it out of the
-    // captured tail three rounds running. r16's re-emit then arrived
-    // HEAD-truncated — 276 queries at 9-decimal precision overflowed the
-    // window from the other side. Two-part fix: the big line now rounds
-    // to ms (above), and a compact summary marker with every verdict-
-    // bearing field prints as the VERY LAST line, so no tail window can
-    // eat the fields the judge reads.
+    // Re-emit after stop: Spark's async shutdown noise printed after the
+    // first line can push it out of a captured console tail, so the line
+    // prints again, followed by the compact summary as the very last line.
     Thread.sleep(3000)
     println(json)
-    println(renderSummary(results, sfDir, retryLog.toMap))
+    println(renderSummary(run, sfDir))
     Console.out.flush()
   }
 }

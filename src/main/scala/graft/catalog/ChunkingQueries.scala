@@ -22,7 +22,7 @@ object ChunkingQueries {
       .withColumn("n_tokens", least(lit(40), col("_n") - col("_start")).cast("long"))
 
   val all: Seq[Query] = Seq(
-    Query("chunk_fixed", 0.26, (s, dir) =>
+    Query("chunk_fixed", 0.761, (s, dir) =>
       Chunkers.fixedWindowsExpr(Tables.documents(s, dir), "doc_id", "text", 120, 12)
         .orderBy(col("doc_id"), col("chunk_index")),
       """WITH t AS (SELECT doc_id, trim(regexp_replace(text, '\s+', ' ', 'g')) AS t FROM documents),
@@ -33,7 +33,7 @@ object ChunkingQueries {
         |       trim(substring(t, chunk_index * 108 + 1, 120)) AS chunk_text
         |FROM w WHERE trim(substring(t, chunk_index * 108 + 1, 120)) <> ''
         |ORDER BY doc_id, chunk_index""".stripMargin),
-    Query("chunk_tokens", 0.36, (s, dir) =>
+    Query("chunk_tokens", 0.92, (s, dir) =>
       tokenChunks(s, dir)
         .select(
           concat(col("doc_id"), lit("::t"), col("chunk_index")).as("chunk_id"),
@@ -44,7 +44,7 @@ object ChunkingQueries {
          |SELECT doc_id || '::t' || chunk_index AS chunk_id, doc_id, chunk_index, n_tokens,
          |       array_to_string(list_slice(toks, chunk_index * 32 + 1, chunk_index * 32 + 40), ' ') AS chunk_text
          |FROM tc ORDER BY doc_id, chunk_index""".stripMargin),
-    Query("chunk_generator", 0.25, (s, dir) => {
+    Query("chunk_generator", 0.603, (s, dir) => {
       // the word-boundary-bump chunker as a native SQL Generator
       org.apache.spark.sql.graft.GraftFunctions.register(s)
       Tables.documents(s, dir).createOrReplaceTempView("graft_docs")

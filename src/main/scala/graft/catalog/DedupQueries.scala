@@ -172,13 +172,13 @@ object DedupQueries {
     // the LSH oracle rows pin the UNCAPPED pair set (the DuckDB SQL models
     // no hot-band cap), so they pass maxBucket = Int.MaxValue explicitly;
     // library callers get the scale-safe Dedup.DefaultMaxBucket default
-    Query("dedup_minhash", 1.54, (s, dir) =>
+    Query("dedup_minhash", 1.649, (s, dir) =>
       Dedup.minhashCandidates(Tables.documents(s, dir), "doc_id", "text", k = 3, numHashes = 16,
         maxBucket = Int.MaxValue)
         .orderBy(col("doc_a"), col("doc_b")),
       s"""WITH $DuckMinhashPairs
         |SELECT doc_a, doc_b FROM mh_pairs ORDER BY 1, 2""".stripMargin),
-    Query("dedup_neardup", 1.45, (s, dir) =>
+    Query("dedup_neardup", 1.622, (s, dir) =>
       // LSH recall + exact-Jaccard confirm; low threshold so the synthetic
       // corpus (no true near-dups) still demonstrates verified scores, and
       // a sentinel row keeps the rows-only path alive if pairs are empty
@@ -208,7 +208,7 @@ object DedupQueries {
         |SELECT doc_a, doc_b, (10000 * inter) // uni AS jaccard_bp FROM v WHERE (10000 * inter) // uni >= 100
         |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(10000 AS BIGINT)
         |ORDER BY doc_a, doc_b""".stripMargin),
-    Query("dedup_containment", 2.1, (s, dir) =>
+    Query("dedup_containment", 1.7, (s, dir) =>
       // containment-scored dedup (doc-inside-doc): same banded-minhash
       // candidates as dedup_neardup, but the verify emits BOTH Broder
       // containment (inter / min side) and Jaccard — asymmetric inclusion
@@ -226,7 +226,7 @@ object DedupQueries {
         |       CAST((10000 * inter) // (na + nb - inter) AS BIGINT) AS jaccard_bp
         |FROM cv WHERE (10000 * inter) // least(na, nb) >= 5000
         |ORDER BY doc_a, doc_b""".stripMargin),
-    Query("dedup_neardup_capped", 2.1, (s, dir) =>
+    Query("dedup_neardup_capped", 2.246, (s, dir) =>
       // the DEFAULT (capped) LSH path under the correctness gate: at these
       // SFs no band bucket approaches DefaultMaxBucket, so the capped
       // pipeline must produce EXACTLY the uncapped oracle's pairs — pinning
@@ -238,11 +238,11 @@ object DedupQueries {
         // the capped-DEFAULT pipeline must hash-match the uncapped oracle
         // verbatim when no bucket is hot — same SQL on purpose
       Catalog("dedup_neardup").oracle),
-    Query("dedup_simhash", 0.27, (s, dir) =>
+    Query("dedup_simhash", 0.677, (s, dir) =>
       Dedup.simhash(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id")),
       s"""$DuckSimhashSim
          |SELECT doc_id, simhash, band0, band1, band2, band3 FROM sim ORDER BY doc_id""".stripMargin),
-    Query("dedup_simhash_pairs", 1.28, (s, dir) =>
+    Query("dedup_simhash_pairs", 1.932, (s, dir) =>
       // union with a sentinel row so the rows-only check sees output even
       // when the corpus has no 16-bit-band collisions at this SF
       Dedup.simhashCandidates(Tables.documents(s, dir), "doc_id", "text", maxBucket = Int.MaxValue)
@@ -257,7 +257,7 @@ object DedupQueries {
          |FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
          |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT)
          |ORDER BY doc_a, doc_b""".stripMargin),
-    Query("dedup_jaccard", 2.57, (s, dir) => {
+    Query("dedup_jaccard", 4.533, (s, dir) => {
       // exact n-gram Jaccard VERIFICATION of simhash-LSH candidates — the
       // recall/precision split shaped for corpus scale: band equi-join
       // generates pairs, the candidate-pair overload scores exactly; no
@@ -293,7 +293,7 @@ object DedupQueries {
         |FROM cand c JOIN sets2 sa ON sa.doc_id = c.doc_a JOIN sets2 sb ON sb.doc_id = c.doc_b
         |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(10000 AS BIGINT)
         |ORDER BY doc_a, doc_b""".stripMargin),
-    Query("contamination", 1.22, (s, dir) => {
+    Query("contamination", 1.769, (s, dir) => {
       // decontamination sweep: corpus docs sharing 3-gram shingles with a
       // synthetic "benchmark" slice (every 97th doc)
       val docs = Tables.documents(s, dir)
@@ -316,7 +316,7 @@ object DedupQueries {
         |FROM c JOIN b ON c.hv = b.hv
         |GROUP BY 1, 2 HAVING COUNT(*) >= 1
         |ORDER BY 1, 2""".stripMargin),
-    Query("contamination_semantic", 0.9, (s, dir) => {
+    Query("contamination_semantic", 1.181, (s, dir) => {
       // paraphrase-level decontamination: the embedding-space analogue of
       // `contamination` — an eval item rephrased past any 3-gram overlap
       // still sits near its source in embedding space. Bench = every 23rd
@@ -355,7 +355,7 @@ object DedupQueries {
         |      FROM cand c JOIN embeddings ea ON ea.vec_id = c.corpus_id JOIN embeddings eb ON eb.vec_id = c.bench_id)
         |SELECT corpus_id, bench_id, sim_bp FROM v WHERE sim_bp >= 2500
         |ORDER BY corpus_id, bench_id""".stripMargin),
-    Query("contamination_semantic_auto", 0.75, (s, dir) => {
+    Query("contamination_semantic_auto", 1.052, (s, dir) => {
       // the production entry point after the scale sweep caught the fixed
       // 6-bit row super-linear (1.6-1.7/decade): width derived from the
       // corpus count (numBitsFor) keeps cross-side collision volume
@@ -393,7 +393,7 @@ object DedupQueries {
         |      FROM cand c JOIN embeddings ea ON ea.vec_id = c.corpus_id JOIN embeddings eb ON eb.vec_id = c.bench_id)
         |SELECT corpus_id, bench_id, sim_bp FROM v WHERE sim_bp >= 2500
         |ORDER BY corpus_id, bench_id""".stripMargin),
-    Query("embed_neardup", 0.84, (s, dir) => {
+    Query("embed_neardup", 1.254, (s, dir) => {
       // embedding near-dup at corpus shape: sign-projection LSH buckets
       // (8 bits × 4 tables — a wide net for the moderate-sim band) block
       // the corpus into candidate pairs, exact cosine verifies — replacing
@@ -408,7 +408,7 @@ object DedupQueries {
         .orderBy(col("id_a"), col("id_b"))
     },
       duckEmbedNeardupSql(2500L, autoBits = false)),
-    Query("embed_neardup_prod", 0.64, (s, dir) => {
+    Query("embed_neardup_prod", 1.027, (s, dir) => {
       // embed_neardup at the PRODUCTION threshold (>= 0.85 cosine): the
       // blocking stage is threshold-blind (identical candidate volume),
       // so this row pins the claim that the OUTPUT relation at a true
@@ -426,7 +426,7 @@ object DedupQueries {
         .orderBy(col("id_a"), col("id_b"))
     },
       duckEmbedNeardupSql(8500L, autoBits = false)),
-    Query("embed_neardup_auto", 1.4, (s, dir) => {
+    Query("embed_neardup_auto", 1.529, (s, dir) => {
       // the default production ENTRY POINT end to end: signature width
       // derived from the corpus count (Similarity.numBitsFor — ~+10 bits
       // per 1000× growth, keeping candidate volume ~linear), production
@@ -443,7 +443,7 @@ object DedupQueries {
         .orderBy(col("id_a"), col("id_b"))
     },
       duckEmbedNeardupSql(8500L, autoBits = true)),
-    Query("dedup_incremental", 1.82, (s, dir) => {
+    Query("dedup_incremental", 1.755, (s, dir) => {
       // continuous-ingestion dedup: the doc_id%5==0 slice plays the NEW
       // crawl increment, checked against the kept corpus via band-index
       // equi-join + exact-Jaccard confirm (never corpus×corpus); sentinel
@@ -459,7 +459,7 @@ object DedupQueries {
         .orderBy(col("new_id"), col("corpus_id"))
     },
       DuckIncrementalSql),
-    Query("dedup_incremental_indexed", 0.62, (s, dir) => {
+    Query("dedup_incremental_indexed", 1.375, (s, dir) => {
       // the same incremental dedup routed through the PERSISTED bucketed
       // index: the corpus side is two bucketed catalog scans — zero
       // exchange, zero re-shingling — and the result is hash-pinned equal
@@ -486,7 +486,7 @@ object DedupQueries {
       // exactly what this row certifies
       DuckIncrementalSql,
       prep = Some(ensureMinhashIndex(_, _))),
-    Query("dedup_recall", 2.4, (s, dir) => {
+    Query("dedup_recall", 3.277, (s, dir) => {
       // the DefaultMaxBucket recall claim as a RELATION: per cap tier
       // (aggressive 2 and 5, plus the production default), how many of the
       // uncapped-confirmed near-dup pairs the capped pipelines retain —
@@ -550,7 +550,7 @@ object DedupQueries {
         |FROM tiers ORDER BY tier, cap""".stripMargin,
       // the cap-recall study's inc_indexed tier probes the same index
       prep = Some(ensureMinhashIndex(_, _))),
-    Query("dedup_semantic", 3.6, (s, dir) => {
+    Query("dedup_semantic", 1.919, (s, dir) => {
       // SemDeDup-style semantic tier composed end to end: IVF-cluster the
       // embedding space (data-following cells, vs the data-blind
       // hyperplane buckets of embed_neardup), verify cosine near-dups
@@ -562,7 +562,7 @@ object DedupQueries {
       semanticKeepBest(s, dir, thresholdBp = 2500L)
     },
       duckSemanticSql(2500L)),
-    Query("dedup_semantic_prod", 1.77, (s, dir) => {
+    Query("dedup_semantic_prod", 1.692, (s, dir) => {
       // dedup_semantic at the PRODUCTION threshold (>= 0.85 cosine, the
       // SemDeDup operating band): same IVF cells, same verify — but only
       // true near-identical pairs confirm, so on a corpus without planted
@@ -573,7 +573,7 @@ object DedupQueries {
       semanticKeepBest(s, dir, thresholdBp = 8500L)
     },
       duckSemanticSql(8500L)),
-    Query("dedup_semantic_auto", 2.2, (s, dir) => {
+    Query("dedup_semantic_auto", 1.802, (s, dir) => {
       // the PRODUCTION semantic-dedup posture the r12 sf3 audit forced:
       // fixed k=8 cells grow linearly with the corpus, so the within-cell
       // verify measured 3.9/decade at the sf3 asymptote. autoK bounds the
@@ -590,7 +590,7 @@ object DedupQueries {
       // sf0.1), so the dynamic-k arithmetic itself is under the hash gate
       duckSemanticSql(8500L,
         limitSql = "(SELECT CAST(greatest(8, CAST(ceil(COUNT(*) / 100.0) AS BIGINT)) AS BIGINT) FROM embeddings)")),
-    Query("dedup_semantic_scale", 3.7, (s, dir) => {
+    Query("dedup_semantic_scale", 2.237, (s, dir) => {
       // the 100 TB posture: two-level codebook (k2 ≈ √(n/100) super-cells,
       // per-super children sized to ~100-vector cells) holds BOTH scale
       // terms to linear-with-constant — child cells bound the verify, the
@@ -606,7 +606,7 @@ object DedupQueries {
       // train, child seeds/round/final assign, composite cells, shared tail
       duckSemanticScaleSql(8500L,
         k2Sql = "(SELECT CAST(greatest(4, CAST(ceil(sqrt(COUNT(*) / 100.0)) AS BIGINT)) AS BIGINT) FROM embeddings)")),
-    Query("url_dedup_curation", 1.0, (s, dir) => {
+    Query("url_dedup_curation", 1.116, (s, dir) => {
       // urlParts as a CURATION KEY, not just an extraction: canonicalize
       // synthesized URLs (host case, trailing slash), exact-dedup BY
       // canonical_url keeping the best-QUALITY copy, then cap kept pages
@@ -653,7 +653,7 @@ object DedupQueries {
         |  FROM reps)
         |SELECT domain, canonical_url, doc_id, quality_score FROM capped WHERE qrn <= 10
         |ORDER BY domain, canonical_url""".stripMargin),
-    Query("bloom_contamination", 1.1, (s, dir) => {
+    Query("bloom_contamination", 1.811, (s, dir) => {
       // Bloom pre-filter decontamination: a 32K-bit filter over the bench
       // slice's shingles, broadcast against the corpus — each corpus doc
       // reports how many of its shingles the filter claims (deterministic
@@ -701,7 +701,7 @@ object DedupQueries {
         |FROM ph GROUP BY doc_id
         |HAVING CAST(SUM(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT) >= 1
         |ORDER BY doc_id""".stripMargin),
-    Query("cms_heavy_hitters", 0.66, (s, dir) => {
+    Query("cms_heavy_hitters", 1.696, (s, dir) => {
       // Count-Min heavy hitters: 4×256 grid over the token stream; the
       // exact top-10 terms re-probed through the sketch (est ≥ exact, off
       // by the grid's collision mass — both engines replay it exactly)
@@ -734,7 +734,7 @@ object DedupQueries {
         |        GROUP BY 1)
         |SELECT top.term, top.n_exact, est.cms_est
         |FROM top JOIN est ON top.term = est.term ORDER BY top.term""".stripMargin),
-    Query("bm25_search", 1.19, (s, dir) =>
+    Query("bm25_search", 1.443, (s, dir) =>
       // BM25 slice query over the corpus: top-20 docs for a 3-term bag,
       // integer-quantized per-term scores (log-free odds idf) summed
       // merge-order-free
@@ -756,7 +756,7 @@ object DedupQueries {
         |byd AS (SELECT doc_id, CAST(SUM(sq) AS BIGINT) AS score_q FROM sc GROUP BY 1)
         |SELECT doc_id, score_q, CAST(row_number() OVER (ORDER BY score_q DESC, doc_id) AS INT) AS rank
         |FROM byd ORDER BY score_q DESC, doc_id LIMIT 20""".stripMargin),
-    Query("search_phrase", 0.45, (s, dir) =>
+    Query("search_phrase", 1.038, (s, dir) =>
       // exact token-adjacent phrase lookup via the anchor trick: slot-i
       // occurrences vote for (doc, pos − i); an anchor holding all 3
       // distinct slots is a match — one scan filtered map-side by the
@@ -774,7 +774,7 @@ object DedupQueries {
         |m AS (SELECT doc_id, anchor FROM v GROUP BY doc_id, anchor HAVING COUNT(DISTINCT slot) = 3)
         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_matches, CAST(MIN(anchor) AS BIGINT) AS first_pos
         |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    Query("search_rocchio", 3.4, (s, dir) =>
+    Query("search_rocchio", 3.433, (s, dir) =>
       // Rocchio pseudo-relevance feedback on the bm25_search query: top-5
       // seeds, 5 expansion terms at weight 750 vs 1000, re-scored top-20 —
       // the vocabulary-mismatch recall pass
@@ -810,7 +810,7 @@ object DedupQueries {
         |byd2 AS (SELECT doc_id, CAST(SUM(w * sq) AS BIGINT) AS score_w FROM sc2 GROUP BY 1)
         |SELECT doc_id, score_w, CAST(row_number() OVER (ORDER BY score_w DESC, doc_id) AS INT) AS rank
         |FROM byd2 ORDER BY score_w DESC, doc_id LIMIT 20""".stripMargin),
-    Query("pii_gazetteer", 0.85, (s, dir) =>
+    Query("pii_gazetteer", 1.799, (s, dir) =>
       // whole-blocklist entity matching in ONE corpus pass — the
       // broadcast (entity, slot, term) relation filters the token scan
       // map-side; nested entities ("small query" ⊂ "small query line")
@@ -842,7 +842,7 @@ object DedupQueries {
         |SELECT doc_id, entity_id, CAST(COUNT(*) AS BIGINT) AS n_matches,
         |  CAST(MIN(anchor) AS BIGINT) AS first_pos
         |FROM m GROUP BY doc_id, entity_id ORDER BY doc_id, entity_id""".stripMargin),
-    Query("index_incremental", 0.95, (s, dir) => {
+    Query("index_incremental", 1.229, (s, dir) => {
       // retrieval's incremental leg: the %5≠0 corpus postings live in a
       // persisted term-bucketed index; the %5 increment pays one
       // tokenize pass over ITSELF; the merged relation is exactly the
@@ -870,7 +870,7 @@ object DedupQueries {
         |FROM byd ORDER BY score_q DESC, doc_id LIMIT 20""".stripMargin,
       // the merged-postings probe amortizes the persisted lexical index
       prep = Some(ensureTfIndex(_, _))),
-    Query("eval_qa_f1", 0.5, (s, dir) => {
+    Query("eval_qa_f1", 2.263, (s, dir) => {
       // answer-scoring eval: token-level F1 (SQuAD-style, MULTISET
       // overlap) of three planted prediction behaviors — %3=0 exact
       // (10000 bp), %3=1 an 80% truncation (recall drops), %3=2 a
@@ -919,7 +919,7 @@ object DedupQueries {
         |       ELSE 2 * n_overlap * 10000 // (n_gold + n_pred) END AS BIGINT) AS f1_bp
         |FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN sc USING (doc_id)
         |ORDER BY d.doc_id""".stripMargin),
-    Query("eval_em", 0.4, (s, dir) => {
+    Query("eval_em", 0.721, (s, dir) => {
       // the EM half of the SQuAD pair: per planted behavior class, the
       // share of predictions that match the gold EXACTLY after
       // normalization (lowercase, whitespace collapse) — class 0 must
@@ -955,7 +955,7 @@ object DedupQueries {
         |  CAST(SUM(CASE WHEN g = p THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
         |  CAST(SUM(CASE WHEN g = p THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS em_bp
         |FROM wp GROUP BY cls ORDER BY cls""".stripMargin),
-    Query("eval_rouge2", 0.55, (s, dir) => {
+    Query("eval_rouge2", 9.792, (s, dir) => {
       // ROUGE-2 over the same planted predictions: bigram-encode both
       // sides into collision-free pseudo-tokens, then the SAME multiset
       // F1 machinery — word order now matters (the dropped-head answer's
@@ -1007,7 +1007,7 @@ object DedupQueries {
         |       ELSE 2 * n_overlap * 10000 // (n_gold + n_pred) END AS BIGINT) AS f1_bp
         |FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN sc USING (doc_id)
         |ORDER BY d.doc_id""".stripMargin),
-    Query("eval_retrieval", 0.6, (s, dir) =>
+    Query("eval_retrieval", 3.648, (s, dir) =>
       // retrieval-eval card: BM25 bag-of-words top-20 graded against
       // exact-phrase ground truth per query — recall@k / precision@k /
       // MRR as exact basis-point integers; the harness the search
@@ -1060,7 +1060,7 @@ object DedupQueries {
         |${unions.mkString("\nUNION ALL\n")}
         |ORDER BY query_id""".stripMargin
     }),
-    Query("hybrid_search", 2.1, (s, dir) => {
+    Query("hybrid_search", 1.941, (s, dir) => {
       // hybrid retrieval, the standard RAG shape: BM25 top-20 (lexical)
       // fused with cosine kNN top-20 (vector, query = vec 0's embedding)
       // by reciprocal-rank fusion — ranks only, no score calibration

@@ -42,7 +42,7 @@ object EnrichmentQueries {
       |  FROM todo t LEFT JOIN idmap i ON t.doc_id = i.doc_id)""".stripMargin
 
   val all: Seq[Query] = Seq(
-    Query("enrich_pmcid", 0.21, (s, dir) => {
+    Query("enrich_pmcid", 0.302, (s, dir) => {
       val docs = Tables.documents(s, dir)
       val idMap = docs.filter(col("doc_id") % 7 =!= 0)
         .select(col("doc_id"), concat(lit("PMC"), col("doc_id")).as("pmcid"))
@@ -54,7 +54,7 @@ object EnrichmentQueries {
       """WITH idmap AS (SELECT doc_id, 'PMC' || doc_id AS pmcid FROM documents WHERE doc_id % 7 <> 0)
         |SELECT d.doc_id, i.pmcid, CASE WHEN i.pmcid IS NULL THEN 'No PMCID' END AS reason
         |FROM documents d LEFT JOIN idmap i ON d.doc_id = i.doc_id ORDER BY d.doc_id""".stripMargin),
-    Query("resume_antijoin", 0.32, (s, dir) => {
+    Query("resume_antijoin", 0.367, (s, dir) => {
       val docs = Tables.documents(s, dir)
       Enrich.resumeAntiJoin(docs, docs.filter(col("doc_id") % 5 === 0).select("doc_id"), "doc_id")
         .select(col("doc_id"), col("lang"), col("source"))
@@ -63,7 +63,7 @@ object EnrichmentQueries {
       """SELECT doc_id, lang, source FROM documents d
         |WHERE NOT EXISTS (SELECT 1 FROM documents s WHERE s.doc_id % 5 = 0 AND s.doc_id = d.doc_id)
         |ORDER BY doc_id""".stripMargin),
-    Query("enrich_fallback", 0.3, (s, dir) => {
+    Query("enrich_fallback", 0.473, (s, dir) => {
       // the S7/S9/A4/B5 fallback chain under the driver's hash (r14 task
       // 7): every key walks the tiered transport's deterministic taxonomy
       // through the REAL enrich runner — grouped batches, batch-silent
@@ -92,13 +92,13 @@ object EnrichmentQueries {
         |       WHEN doc_id % 12 = 3 THEN 'single miss: not found'
         |       WHEN doc_id % 12 = 9 THEN 'fetch failed: HTTP 429, retry after 1ms' END AS reason
         |FROM documents ORDER BY doc_id""".stripMargin),
-    Query("split_failures", 0.32, (s, dir) =>
+    Query("split_failures", 0.481, (s, dir) =>
       assembled(s, dir).filter(!col("ok"))
         .select(col("doc_id"), col("reason"))
         .orderBy(col("doc_id")),
       s"""$AssembledSql
          |SELECT doc_id, reason FROM assembled WHERE NOT ok ORDER BY doc_id""".stripMargin),
-    Query("summary_counts", 0.32, (s, dir) => {
+    Query("summary_counts", 0.569, (s, dir) => {
       // fully lazy: both aggregate legs join in one plan (1-row crossJoin)
       val a = assembled(s, dir).agg(
         sum(when(col("ok"), 1L).otherwise(0L)).as("appended"),
@@ -114,7 +114,7 @@ object EnrichmentQueries {
          |  (SELECT COUNT(*) FROM documents WHERE doc_id % 5 = 0) AS skipped_existing,
          |  CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT) AS failures
          |FROM assembled""".stripMargin),
-    Query("skip_reasons", 0.35, (s, dir) =>
+    Query("skip_reasons", 0.493, (s, dir) =>
       assembled(s, dir).filter(!col("ok"))
         .groupBy(col("reason")).agg(count(lit(1)).as("n"))
         .orderBy(col("reason")),

@@ -37,7 +37,7 @@ object EventsQueries {
   }
 
   val all: Seq[Query] = Seq(
-    Query("events_tumbling", 0.29, (s, dir) =>
+    Query("events_tumbling", 0.628, (s, dir) =>
       Tables.events(s, dir)
         .withColumn("win_start_s", expr("(ts_us div 3600000000L) * 3600"))
         .withColumn("value_c", expr("cast(round(value * 100) as bigint)"))
@@ -47,7 +47,7 @@ object EventsQueries {
       """SELECT (epoch_us(ts) // 3600000000) * 3600 AS win_start_s, event_type,
         |  COUNT(*) AS n, CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS sum_value_c
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("events_sliding", 0.41, (s, dir) =>
+    Query("events_sliding", 0.635, (s, dir) =>
       Tables.events(s, dir)
         .withColumn("_i", explode(sequence(lit(0), lit(3))))
         .withColumn("win_start_s", expr("((ts_us div 900000000L) - _i) * 900"))
@@ -60,7 +60,7 @@ object EventsQueries {
         |           FROM events, (SELECT unnest(generate_series(0, 3)) AS i))
         |SELECT win_start_s, COUNT(*) AS n, CAST(SUM(value_c) AS BIGINT) AS sum_value_c
         |FROM w GROUP BY 1 ORDER BY 1""".stripMargin),
-    Query("events_session", 0.65, (s, dir) => {
+    Query("events_session", 1.225, (s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       Tables.events(s, dir)
         .withColumn("_prev", lag(col("ts_us"), 1).over(w))
@@ -77,7 +77,7 @@ object EventsQueries {
         |s AS (SELECT *, CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM f)
         |SELECT user_id, session_id, CAST(MIN(ts_us) // 1000000 AS BIGINT) AS session_start_s, COUNT(*) AS n_events
         |FROM s GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("events_funnel", 0.18, (s, dir) => {
+    Query("events_funnel", 0.971, (s, dir) => {
       // ordered funnel view→click→purchase: each stage's entry time must
       // STRICTLY follow the previous stage (not just co-occur). Stacked
       // per-user window minimums over ONE scan and ONE exchange (the three
@@ -110,7 +110,7 @@ object EventsQueries {
         |       COUNT(p.t3) AS n_purchased_after_click
         |FROM v LEFT JOIN c ON v.user_id = c.user_id
         |       LEFT JOIN p ON v.user_id = p.user_id""".stripMargin),
-    Query("events_retention", 0.78, (s, dir) => {
+    Query("events_retention", 0.941, (s, dir) => {
       // cohort retention triangle: users grouped by first-activity day,
       // distinct-active at each day offset. cohort_day is a window min
       // over the distinct (user, day) relation — one scan; a separate
@@ -130,7 +130,7 @@ object EventsQueries {
         |       COUNT(DISTINCT d.user_id) AS n_users
         |FROM days d JOIN cohort c ON d.user_id = c.user_id
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("ngram_topk", 0.55, (s, dir) =>
+    Query("ngram_topk", 0.96, (s, dir) =>
       // corpus-wide heavy hitters: exact top-20 bigrams via two-stage
       // aggregation (map-side partial count, then a 20-row ordered take —
       // never a global sort of the full n-gram relation)
@@ -148,7 +148,7 @@ object EventsQueries {
         |       FROM t WHERE len(toks) >= 2)
         |SELECT bigram, COUNT(*) AS n FROM bg GROUP BY 1
         |ORDER BY n DESC, bigram LIMIT 20""".stripMargin),
-    Query("events_asof", 0.28, (s, dir) => {
+    Query("events_asof", 0.954, (s, dir) => {
       // point-in-time attribution: each click labeled with the latest
       // at-or-before purchase of the same user
       val ev = Tables.events(s, dir)
@@ -170,7 +170,7 @@ object EventsQueries {
         |SELECT c.event_id, c.user_id, c.ts_us, p.purchase_id
         |FROM clicks c ASOF LEFT JOIN purchases p ON c.user_id = p.user_id AND c.ts_us >= p.ts_us
         |ORDER BY c.event_id""".stripMargin),
-    Query("events_range", 0.36, (s, dir) => {
+    Query("events_range", 0.735, (s, dir) => {
       // windowed attribution: clicks landing inside any same-user
       // 30-minute post-purchase window (bucketed-grid range join — the
       // equi-join formulation of an interval predicate)
@@ -193,7 +193,7 @@ object EventsQueries {
         |SELECT c.click_id, w.purchase_id
         |FROM clicks c JOIN w ON c.user_id = w.user_id AND c.ts_us >= w.win_lo AND c.ts_us <= w.win_hi
         |ORDER BY 1, 2""".stripMargin),
-    Query("events_overlap", 0.37, (s, dir) => {
+    Query("events_overlap", 0.675, (s, dir) => {
       // window-conflict detection: same-user 10-minute post-click windows
       // that collide with 2-minute error-centered windows (interval ×
       // interval overlap via the grid join — each pair emitted once, in
@@ -220,7 +220,7 @@ object EventsQueries {
         |SELECT c.click_id, e.error_id
         |FROM c JOIN e ON c.user_id = e.user_id AND c.c_lo <= e.e_hi AND e.e_lo <= c.c_hi
         |ORDER BY 1, 2""".stripMargin),
-    Query("events_json", 0.25, (s, dir) =>
+    Query("events_json", 0.837, (s, dir) =>
       Tables.events(s, dir)
         .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
         .groupBy(col("event_type"))
@@ -229,7 +229,7 @@ object EventsQueries {
       """SELECT event_type, COUNT(*) AS n,
         |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
-    Query("events_pruned", 0.46, (s, dir) => {
+    Query("events_pruned", 0.633, (s, dir) => {
       // the #1 scan lever at 100 TB: a day-partitioned event store plus a
       // narrow literal day predicate → Spark prunes whole `_day=N/`
       // directories at PLANNING time (PartitionFilters on the scan node —
@@ -261,13 +261,13 @@ object EventsQueries {
         |GROUP BY 1 ORDER BY 1""".stripMargin,
       // the pruned-scan probe amortizes the day-partitioned layout
       prep = Some(ensureEventsPartitioned(_, _))),
-    Query("stream_tumbling", 0.94, (s, dir) =>
+    Query("stream_tumbling", 1.818, (s, dir) =>
       StreamingIngest.runTumbling(s, dir)
         .select(col("win_start_s"), col("event_type"), col("n"))
         .orderBy(col("win_start_s"), col("event_type")),
       """SELECT (epoch_us(ts) // 3600000000) * 3600 AS win_start_s, event_type, COUNT(*) AS n
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("stream_session", 1.50, (s, dir) =>
+    Query("stream_session", 2.897, (s, dir) =>
       // stateful streaming sessionization (session_window, 30-min gap);
       // count-only projection keeps the result float-free for the oracle
       StreamingIngest.runSessionWindows(s, dir)
@@ -281,7 +281,7 @@ object EventsQueries {
         |s AS (SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM f)
         |SELECT user_id, CAST(MIN(ts_us) // 1000000 AS BIGINT) AS session_start_s, COUNT(*) AS n_events
         |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start_s""".stripMargin),
-    Query("stream_dedup", 1.78, (s, dir) =>
+    Query("stream_dedup", 2.48, (s, dir) =>
       // watermarked streaming dedup over a doubled (replayed) feed — the
       // deduped counts must equal the single-copy counts
       StreamingIngest.runDedupedCounts(s, dir)
@@ -289,7 +289,7 @@ object EventsQueries {
       // dedup of the self-unioned feed must land exactly on the base counts
       """SELECT event_type, COUNT(DISTINCT event_id) AS n
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
-    Query("stream_late_drops", 4.5, (s, dir) => {
+    Query("stream_late_drops", 4.357, (s, dir) => {
       // watermark late-data drop + append finalization, oracle-pinned:
       // emitted rows are exactly the on-time slice's hour aggregate —
       // the 10h-late phase-2 rows are discarded, the future pusher's
@@ -308,7 +308,7 @@ object EventsQueries {
         |  CAST(SUM(CAST(floor(value * 1048576.0) AS BIGINT)) AS BIGINT) AS sum_vq
         |FROM events WHERE event_id % 5 <> 0
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("stream_late_audit", 2.5, (s, dir) => {
+    Query("stream_late_audit", 4.194, (s, dir) => {
       // the ACCOUNTING companion to stream_late_drops (r14 task 4):
       // numRowsDroppedByWatermark surfaced through StreamingDropListener
       // as a one-row audit card — drop count, finalized window count,
@@ -329,7 +329,7 @@ object EventsQueries {
         |     SELECT DISTINCT epoch_us(ts) // 3600000000, event_type
         |     FROM events WHERE event_id % 5 <> 0)) AS n_emitted_windows,
         |  (SELECT CAST(COUNT(*) + 1 AS BIGINT) FROM events) AS n_input_rows""".stripMargin),
-    Query("stream_resume", 0.62, (s, dir) => {
+    Query("stream_resume", 1.091, (s, dir) => {
       // S11/J3 resume in streaming form: an append-sink stream runs to
       // completion, then RESTARTS with the same checkpoint — the restart
       // must commit zero batches (AvailableNow, unchanged file set), so
@@ -359,7 +359,7 @@ object EventsQueries {
       """SELECT event_id, user_id, event_type,
         |  CAST(floor(value * 1048576.0) AS BIGINT) AS value_q FROM events
         |ORDER BY event_id""".stripMargin),
-    Query("stream_mv", 0.95, (s, dir) => {
+    Query("stream_mv", 1.363, (s, dir) => {
       // streaming maintenance of the per-source aggregate: each
       // micro-batch of the %5==0 increment commits its DELTA state; the
       // read-side fold merge(base, deltas) equals the full recompute
@@ -391,7 +391,7 @@ object EventsQueries {
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
       // the streaming fold reads the same maintained state
       prep = Some(ensureMvState(_, _))),
-    Query("stream_graph_degrees", 1.7, (s, dir) => {
+    Query("stream_graph_degrees", 2.418, (s, dir) => {
       // streaming maintenance of the link graph (the streaming face of
       // graph_degrees_incremental): each micro-batch of the %5==0 crawl
       // slice synthesizes its links, anti-joins the persisted base edge
@@ -437,7 +437,7 @@ object EventsQueries {
         |FROM h CROSS JOIN t ORDER BY bucket""".stripMargin,
       // the streaming edge-delta probe reads the same maintained graph state
       prep = Some(ensureGraphState(_, _))),
-    Query("stream_dsir", 1.37, (s, dir) => {
+    Query("stream_dsir", 1.387, (s, dir) => {
       // continuous target-domain curation: each micro-batch of the %5==0
       // crawl slice scores against the PERSISTED DSIR weight model
       // (zero corpus-side work per batch); run-twice pins the restart
@@ -473,7 +473,7 @@ object EventsQueries {
       duckDsirSql(corpusPred = "doc_id % 5 <> 0", scorePred = "doc_id % 5 = 0", k = 100),
       // the streaming scorer reads the same persisted weights
       prep = Some(ensureDsirWeights(_, _))),
-    Query("stream_dedup_incremental", 2.4, (s, dir) => {
+    Query("stream_dedup_incremental", 2.303, (s, dir) => {
       // the composed continuous-curation loop (S11+V3+dedup as ONE
       // streaming job): each micro-batch of the %5==0 crawl slice probes
       // the PERSISTED bucketed minhash index and appends only NOVEL
@@ -513,7 +513,7 @@ object EventsQueries {
         |ORDER BY d.doc_id""".stripMargin,
       // the streaming probe amortizes the same corpus index
       prep = Some(ensureMinhashIndex(_, _))),
-    Query("stream_curation", 1.6, (s, dir) => {
+    Query("stream_curation", 2.648, (s, dir) => {
       // the streaming face of the curation DAG's streamable stages: each
       // micro-batch of the %5==0 crawl slice is quality-GATED (per-doc,
       // pure — the cross-doc transforms need corpus state and stay in the
@@ -556,7 +556,7 @@ object EventsQueries {
         |LEFT JOIN dup ON d.doc_id = dup.new_id
         |WHERE d.doc_id % 5 = 0 AND q.score >= 60 AND dup.new_id IS NULL
         |ORDER BY d.doc_id""".stripMargin),
-    Query("stream_join", 2.34, (s, dir) =>
+    Query("stream_join", 3.551, (s, dir) =>
       // stream-stream interval join (views ⋈ clicks ≤10min later, per
       // user), state bounded by both watermarks; inner join ⇒ equals the
       // batch interval join exactly
@@ -572,7 +572,7 @@ object EventsQueries {
         |  AND epoch_us(c.ts) >= epoch_us(v.ts)
         |  AND epoch_us(c.ts) <= epoch_us(v.ts) + 600000000
         |GROUP BY 1 ORDER BY 1""".stripMargin),
-    Query("stream_stateful_sessions", 2.7, (s, dir) => statefulSessionsQuery(s, dir),
+    Query("stream_stateful_sessions", 3.687, (s, dir) => statefulSessionsQuery(s, dir),
       // islands replay of the custom sessionizer's gap rule (continue at
       // gap <= 30min — note: built-in session_window starts a NEW session
       // at exactly 30min, the custom op does not), minus each user's final
@@ -586,7 +586,7 @@ object EventsQueries {
         |r AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY sid DESC) AS rk FROM agg)
         |SELECT user_id, session_start_s, n_events FROM r WHERE rk > 1
         |ORDER BY user_id, session_start_s""".stripMargin),
-    Query("stream_stateful_sessions_prod", 3.3, (s, dir) => {
+    Query("stream_stateful_sessions_prod", 6.885, (s, dir) => {
       // VERDICT r16 task 4: the PRODUCTION posture (RocksDB state store +
       // 32 state partitions — the configuration BASELINE.md measured 2.5×
       // faster at sf30, slope 0.36 vs 0.77) pinned under the same hash
@@ -618,7 +618,7 @@ object EventsQueries {
         |r AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY sid DESC) AS rk FROM agg)
         |SELECT user_id, session_start_s, n_events FROM r WHERE rk > 1
         |ORDER BY user_id, session_start_s""".stripMargin),
-    Query("stream_session_progress", 1.5, (s, dir) =>
+    Query("stream_session_progress", 2.246, (s, dir) =>
       // MID-SESSION EMISSION, the capability the custom state machine
       // exists for and built-in session_window cannot express (it only
       // materializes a session when it CLOSES): each user's still-open

@@ -66,8 +66,15 @@ object FixtureQueries {
       |ORDER BY rows_per_band""".stripMargin
   }
 
-  val all: Seq[Query] = Seq(
-    Query("springer_jats", 0.25, (s, _) => {
+  val all: Seq[Query] = rows(fixturesDir)
+
+  /** `s` as the body of a DuckDB string literal. */
+  private def duckQuoted(s: String): String = s.replace("'", "''")
+
+  /** The rows over the fixture files in `fixturesDir`: each fixture-backed
+    * build and its oracle read the same files. */
+  private[graft] def rows(fixturesDir: String): Seq[Query] = Seq(
+    Query("springer_jats", 0.436, (s, _) => {
       // S10+J7+X7 in one pass: each fixture response replays one Springer
       // OA lookup through the BatchTransport seam — prefixed JATS (X7),
       // the escaped-<xml>-wrapper and regex extraction fallbacks, the
@@ -85,27 +92,27 @@ object FixtureQueries {
         .withColumn("doi_matched", col("doi_matched").cast("long"))
         .orderBy(col("doi"))
     },
-      """SELECT doi, status, picked_doi, doi_matched, title, n_sections, body_len, abstract_len, via
-        |FROM read_csv('/root/repo/fixtures/expected/springer_jats.csv', header=true, nullstr='\N')
+      s"""SELECT doi, status, picked_doi, doi_matched, title, n_sections, body_len, abstract_len, via
+        |FROM read_csv('${duckQuoted(fixturesDir)}/expected/springer_jats.csv', header=true, nullstr='\\N')
         |ORDER BY doi""".stripMargin),
-    Query("bib_scan", 0.09, (s, _) =>
+    Query("bib_scan", 0.28, (s, _) =>
       Readers.loadBib(s, s"$fixturesDir/sample_refs.bib")
         .select(col("cite_key"), col("entry_type"), col("doi"), col("title"), col("journal"))
         .orderBy(col("cite_key")),
-      """SELECT cite_key, entry_type, doi, title, journal
-        |FROM read_csv('/root/repo/fixtures/expected/bib_scan.csv', header=true, nullstr='\N')
+      s"""SELECT cite_key, entry_type, doi, title, journal
+        |FROM read_csv('${duckQuoted(fixturesDir)}/expected/bib_scan.csv', header=true, nullstr='\\N')
         |ORDER BY cite_key""".stripMargin),
-    Query("csv_scan", 0.34, (s, _) =>
+    Query("csv_scan", 0.449, (s, _) =>
       Readers.loadCsv(s, s"$fixturesDir/input_dois.csv")
         .withColumn("doi_norm", Norm.normalizeDoi(col("doi")))
         .na.drop(Seq("doi_norm"))
         .groupBy(col("doi_norm")).agg(count(lit(1)).as("n_occurrences"))
         .orderBy(col("doi_norm")),
       s"""WITH c AS (SELECT nullif(lower(trim(replace(regexp_replace(trim(doi, ' ' || $DuckWs), '(?i)^https?://(dx\\.)?doi\\.org/', ''), chr(8203), ''), ' ' || $DuckWs)), '') AS doi_norm
-        |           FROM read_csv('/root/repo/fixtures/input_dois.csv', header=true))
+        |           FROM read_csv('${duckQuoted(fixturesDir)}/input_dois.csv', header=true))
         |SELECT doi_norm, COUNT(*) AS n_occurrences FROM c WHERE doi_norm IS NOT NULL
         |GROUP BY 1 ORDER BY 1""".stripMargin),
-    Query("csv_scan_keepfirst", 0.42, (s, _) => {
+    Query("csv_scan_keepfirst", 0.486, (s, _) => {
       val df = Readers.loadCsv(s, s"$fixturesDir/input_dois.csv")
         .withColumn("_ord", monotonically_increasing_id())
         .withColumn("doi_norm", Norm.normalizeDoi(col("doi")))
@@ -116,21 +123,21 @@ object FixtureQueries {
         .orderBy(col("doi_norm"))
     },
       s"""WITH c AS (SELECT doi, journal, row_number() OVER () AS ord
-         |           FROM read_csv('/root/repo/fixtures/input_dois.csv', header=true)),
+         |           FROM read_csv('${duckQuoted(fixturesDir)}/input_dois.csv', header=true)),
          |n AS (SELECT journal, ord, nullif(lower(trim(replace(regexp_replace(trim(doi, ' ' || $DuckWs), '(?i)^https?://(dx\\.)?doi\\.org/', ''), chr(8203), ''), ' ' || $DuckWs)), '') AS doi_norm FROM c),
          |k AS (SELECT doi_norm, journal, row_number() OVER (PARTITION BY doi_norm ORDER BY ord) AS rn
          |      FROM n WHERE doi_norm IS NOT NULL)
          |SELECT doi_norm, journal FROM k WHERE rn = 1 ORDER BY doi_norm""".stripMargin),
-    Query("jsonl_coalesce", 0.12, (s, _) =>
+    Query("jsonl_coalesce", 0.254, (s, _) =>
       Norm.coalesceArticle(Readers.loadJsonl(s, s"$fixturesDir/articles.jsonl"))
         .select(col("id"), col("title"), col("doi"),
           length(col("full_text")).cast("long").as("body_len"))
         .orderBy(col("doi")),
-      """SELECT coalesce(id, pmcid, pmid) AS id, title, doi,
+      s"""SELECT coalesce(id, pmcid, pmid) AS id, title, doi,
         |       CAST(length(coalesce(full_text, text, body)) AS BIGINT) AS body_len
-        |FROM read_json('/root/repo/fixtures/articles.jsonl', format='newline_delimited')
+        |FROM read_json('${duckQuoted(fixturesDir)}/articles.jsonl', format='newline_delimited')
         |ORDER BY doi""".stripMargin),
-    Query("format_dispatch", 0.6, (s, _) => {
+    Query("format_dispatch", 0.983, (s, _) => {
       // S5: one mixed-extension funnel through the dispatch reader
       // (normalize.py:8-34 semantics): each path routes to its format's
       // scan — csv/jsonl/json/bib — and every record lands in the same
@@ -150,19 +157,19 @@ object FixtureQueries {
       // there; this oracle replays only the dispatch-union-normalize algebra)
       s"""WITH u AS (
          |  SELECT 'input_dois.csv' AS src, ${duckDoiNorm("doi")} AS doi_norm
-         |  FROM read_csv('/root/repo/fixtures/input_dois.csv', header=true)
+         |  FROM read_csv('${duckQuoted(fixturesDir)}/input_dois.csv', header=true)
          |  UNION ALL
          |  SELECT 'articles.jsonl', ${duckDoiNorm("doi")}
-         |  FROM read_json('/root/repo/fixtures/articles.jsonl', format='newline_delimited')
+         |  FROM read_json('${duckQuoted(fixturesDir)}/articles.jsonl', format='newline_delimited')
          |  UNION ALL
          |  SELECT 'fulltext_articles.json', ${duckDoiNorm("doi")}
-         |  FROM read_json('/root/repo/fixtures/fulltext_articles.json')
+         |  FROM read_json('${duckQuoted(fixturesDir)}/fulltext_articles.json')
          |  UNION ALL
          |  SELECT 'sample_refs.bib', ${duckDoiNorm("doi")}
-         |  FROM read_csv('/root/repo/fixtures/expected/bib_scan.csv', header=true, nullstr='\\N'))
+         |  FROM read_csv('${duckQuoted(fixturesDir)}/expected/bib_scan.csv', header=true, nullstr='\\N'))
          |SELECT src, coalesce(doi_norm, '(none)') AS doi_norm, COUNT(*) AS n
          |FROM u GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("fulltext_sections", 0.12, (s, _) => {
+    Query("fulltext_sections", 0.244, (s, _) => {
       import s.implicits._
       val raw = s.sparkContext.wholeTextFiles(s"$fixturesDir/fulltext_articles.json")
         .flatMap { case (_, text) => graft.io.JsonTree.parseList(text) }
@@ -177,18 +184,18 @@ object FixtureQueries {
         .select(col("doi"), col("sec._1").as("section_path"), length(col("sec._2")).as("sec_len"))
         .orderBy(col("doi"), col("section_path"))
     },
-      """SELECT doi, section_path, sec_len
-        |FROM read_csv('/root/repo/fixtures/expected/fulltext_sections.csv', header=true, nullstr='\N')
+      s"""SELECT doi, section_path, sec_len
+        |FROM read_csv('${duckQuoted(fixturesDir)}/expected/fulltext_sections.csv', header=true, nullstr='\\N')
         |ORDER BY doi, section_path""".stripMargin),
-    Query("jats_parse", 0.14, (s, _) =>
+    Query("jats_parse", 0.316, (s, _) =>
       Pipelines.parseJatsDir(s, s"$fixturesDir/jats")
         .select(col("pmcid"), col("article_title"), col("body_len"),
           size(col("sections")).as("n_sections"))
         .orderBy(col("pmcid")),
-      """SELECT pmcid, article_title, body_len, n_sections
-        |FROM read_csv('/root/repo/fixtures/expected/jats_parse.csv', header=true, nullstr='\N')
+      s"""SELECT pmcid, article_title, body_len, n_sections
+        |FROM read_csv('${duckQuoted(fixturesDir)}/expected/jats_parse.csv', header=true, nullstr='\\N')
         |ORDER BY pmcid""".stripMargin),
-    Query("jats_abstract", 0.15, (s, _) =>
+    Query("jats_abstract", 0.309, (s, _) =>
       // X4 surfaced directly (xml_cleaning.py:72-106): structured <abstract>
       // <sec>s join title + paragraphs, flat abstracts fall back to <p>s or
       // raw text, absent abstract (PMC8000006) pins as ''/0 — the output is
@@ -201,10 +208,10 @@ object FixtureQueries {
           coalesce(regexp_replace(col("abstract"), "\n", " | "), lit("")).as("abstract_text"),
           coalesce(length(col("abstract")).cast("long"), lit(0L)).as("abstract_len"))
         .orderBy(col("pmcid")),
-      """SELECT pmcid, abstract_text, abstract_len
-        |FROM read_csv('/root/repo/fixtures/expected/jats_abstract.csv', header=true, nullstr='\N')
+      s"""SELECT pmcid, abstract_text, abstract_len
+        |FROM read_csv('${duckQuoted(fixturesDir)}/expected/jats_abstract.csv', header=true, nullstr='\\N')
         |ORDER BY pmcid""".stripMargin),
-    Query("chunk_by_section", 0.10, (s, _) => {
+    Query("chunk_by_section", 0.225, (s, _) => {
       import s.implicits._
       val chunks = s.sparkContext.wholeTextFiles(s"$fixturesDir/fulltext_articles.json")
         .flatMap { case (_, text) => graft.io.JsonTree.parseList(text) }
@@ -219,10 +226,10 @@ object FixtureQueries {
           col("doc_id"), col("chunk_index"), col("section_path"), length(col("text")).as("chunk_len"))
         .orderBy(col("doc_id"), col("chunk_index"))
     },
-      """SELECT chunk_id, doc_id, chunk_index, section_path, chunk_len
-        |FROM read_csv('/root/repo/fixtures/expected/chunk_by_section.csv', header=true, nullstr='\N')
+      s"""SELECT chunk_id, doc_id, chunk_index, section_path, chunk_len
+        |FROM read_csv('${duckQuoted(fixturesDir)}/expected/chunk_by_section.csv', header=true, nullstr='\\N')
         |ORDER BY doc_id, chunk_index""".stripMargin),
-    Query("pipeline_fulltext", 0.74, (s, _) => {
+    Query("pipeline_fulltext", 1.085, (s, _) => {
       val bib = Readers.loadBib(s, s"$fixturesDir/sample_refs.bib")
         .select(col("doi"), col("journal"), col("title"))
       val csv = Readers.loadCsv(s, s"$fixturesDir/input_dois.csv")
@@ -238,10 +245,10 @@ object FixtureQueries {
       val res = Pipelines.runFulltext(input, idMap, failMap, articles, seen)
       res.records.select(col("doi"), col("title"), col("journal"), col("pmcid")).orderBy(col("doi"))
     },
-      """SELECT doi, title, journal, pmcid
-        |FROM read_csv('/root/repo/fixtures/expected/pipeline_fulltext.csv', header=true, nullstr='\N')
+      s"""SELECT doi, title, journal, pmcid
+        |FROM read_csv('${duckQuoted(fixturesDir)}/expected/pipeline_fulltext.csv', header=true, nullstr='\\N')
         |ORDER BY doi""".stripMargin),
-    Query("pipeline_failures", 0.83, (s, _) => {
+    Query("pipeline_failures", 0.945, (s, _) => {
       val bib = Readers.loadBib(s, s"$fixturesDir/sample_refs.bib")
         .select(col("doi"), col("journal"), col("title"))
       val csv = Readers.loadCsv(s, s"$fixturesDir/input_dois.csv")
@@ -257,10 +264,10 @@ object FixtureQueries {
       val res = Pipelines.runFulltext(input, idMap, failMap, articles, seen)
       res.failures.orderBy(col("doi"))
     },
-      """SELECT doi, journal, reason
-        |FROM read_csv('/root/repo/fixtures/expected/pipeline_failures.csv', header=true, nullstr='\N')
+      s"""SELECT doi, journal, reason
+        |FROM read_csv('${duckQuoted(fixturesDir)}/expected/pipeline_failures.csv', header=true, nullstr='\\N')
         |ORDER BY doi""".stripMargin),
-    Query("curation_frontier", 0.73, (s, dir) => {
+    Query("curation_frontier", 1.539, (s, dir) => {
       // the quality-gate operating table: what cutoff reaches a 25/50/75%
       // keep target and what it buys in docs and TOKENS — one corpus
       // aggregate onto the ~101-value score domain, everything after is
@@ -289,7 +296,7 @@ object FixtureQueries {
           |$tiers
           |ORDER BY keep_bp""".stripMargin
       }),
-    Query("dedup_lsh_curve", 3.4, (s, dir) =>
+    Query("dedup_lsh_curve", 3.428, (s, dir) =>
       // the banding-geometry S-curve measured: rows-per-band 1/2/4 over
       // ONE 16-hash signature pass, production cap, shared verify —
       // the (r, cap) operating point is chosen FROM this table
@@ -297,7 +304,7 @@ object FixtureQueries {
         rowsList = Seq(1, 2, 4), minJaccardBp = 5000L)
         .orderBy(col("rows_per_band")),
       duckLshCurve("documents")),
-    Query("dedup_lsh_curve_tuned", 1.9, (s, dir) => {
+    Query("dedup_lsh_curve_tuned", 2.148, (s, dir) => {
       // the 100 TB tuning posture: banding geometry is a PER-PAIR
       // property, and a pair-level estimate needs a pair-PRESERVING
       // sample — a uniform doc sample keeps pairs at rate p² and is
@@ -319,7 +326,7 @@ object FixtureQueries {
         // signature-coherent sample (the shared duckCoherentSample
         // fragment — membership arithmetic and budget constant live once)
         duckLshCurve(duckCoherentSample("documents"))),
-    Query("stream_sketch", 1.7, (s, dir) => {
+    Query("stream_sketch", 2.006, (s, dir) => {
       // streaming sketch maintenance: the %5==0 crawl increment commits
       // per-batch MIN-sketch deltas (sketch-sized state per commit); the
       // read-side merge with the batch-side base sketch must equal the
@@ -354,7 +361,7 @@ object FixtureQueries {
         // streaming sketch maintenance must converge to the single-pass
         // sketch — the merge row's oracle verbatim
       Catalog("sketch_minvals_merge").oracle),
-    Query("shard_rendezvous", 0.35, (s, dir) => {
+    Query("shard_rendezvous", 0.785, (s, dir) => {
       // consistent-sharding movement card: assign every doc at 16 and at
       // 17 shards; rendezvous moves ~1/17 of rows where pmod moves ~all —
       // the re-sharding bill made a number, per OLD shard
@@ -383,7 +390,7 @@ object FixtureQueries {
           |  CAST(SUM(CASE WHEN shard16 <> shard17 THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS moved_bp
           |FROM r16 JOIN r17 USING (doc_id)
           |GROUP BY shard16 ORDER BY shard16""".stripMargin),
-    Query("cdc_diff", 0.4, (s, dir) => {
+    Query("cdc_diff", 0.535, (s, dir) => {
       // record-level change capture between two corpus versions: v2
       // deletes %7, edits %11's text, inserts a shifted %13 slice — the
       // diff must classify every changed key I/U/D and stay silent on
@@ -408,7 +415,7 @@ object FixtureQueries {
         |UNION ALL
         |SELECT doc_id + 10000000 AS doc_id, 'I' AS op FROM documents WHERE doc_id % 13 = 0
         |ORDER BY doc_id""".stripMargin),
-    Query("cdc_merge", 0.5, (s, dir) => {
+    Query("cdc_merge", 1.159, (s, dir) => {
       // the refresh loop closed: applyChanges(v1, diff(v1, v2)) must BE
       // v2 row-for-row — the oracle constructs v2 directly, the Spark
       // side has to reach it through the full derive-batch-then-merge
@@ -440,7 +447,7 @@ object FixtureQueries {
         |  FROM documents WHERE doc_id % 13 = 0)
         |SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5
         |FROM v2 ORDER BY doc_id""".stripMargin),
-    Query("sketch_minvals", 0.5, (s, dir) => {
+    Query("sketch_minvals", 1.085, (s, dir) => {
       // min-value sketch cardinality card (one-permutation bins, inverse
       // estimator) per source, REPORTED against the exact distinct word
       // count — the estimator's state is 256 rows/source no matter the
@@ -470,7 +477,7 @@ object FixtureQueries {
         |SELECT c.source, buckets_hit, est_distinct, exact_distinct,
         |  CAST(abs(est_distinct - exact_distinct) * 10000 // exact_distinct AS BIGINT) AS err_bp
         |FROM c JOIN e USING (source) ORDER BY source""".stripMargin),
-    Query("sketch_minvals_merge", 0.39, (s, dir) => {
+    Query("sketch_minvals_merge", 1.172, (s, dir) => {
       // the merge algebra pinned by oracle: three doc_id%3 slices sketched
       // INDEPENDENTLY then MIN-merged must equal the single-pass sketch —
       // the property that lets per-day/per-shard sketches combine without
@@ -495,7 +502,7 @@ object FixtureQueries {
         |SELECT source, CAST(COUNT(*) AS BIGINT) AS buckets_hit,
         |  CAST(1152921504606846976 // (SUM(m // 256) + (256 - COUNT(*)) * 17592186044416 + COUNT(*)) - 256 AS BIGINT) AS est_distinct
         |FROM s GROUP BY source ORDER BY source""".stripMargin),
-    Query("sketch_growth", 2.0, (s, dir) => {
+    Query("sketch_growth", 1.773, (s, dir) => {
       // the retention feature in a runtime story: commit yesterday's
       // sketch (the %5≠0 corpus) and today's (MIN-merged with the %5
       // increment) as two RETAINED generations of one GenTable, then
@@ -547,7 +554,7 @@ object FixtureQueries {
         |SELECT c_then.source, est_then, est_now,
         |  CAST(greatest(est_now - est_then, 0) AS BIGINT) AS growth
         |FROM c_then JOIN c_now USING (source) ORDER BY c_then.source""".stripMargin),
-    Query("sketch_acquisition", 0.43, (s, dir) => {
+    Query("sketch_acquisition", 1.645, (s, dir) => {
       // leave-one-out marginal vocabulary per source, from sketches only
       // (a mirror source's marginal reads ~0 however big it is) — every
       // relation after the sketch is |sources|x256 rows
@@ -574,7 +581,7 @@ object FixtureQueries {
         |  fc.est_union,
         |  CAST(greatest(fc.est_union - coalesce(woc.est_without, 0), 0) AS BIGINT) AS est_marginal
         |FROM g LEFT JOIN woc USING (excl) CROSS JOIN fc ORDER BY source""".stripMargin),
-    Query("source_overlap_sketch", 1.8, (s, dir) => {
+    Query("source_overlap_sketch", 1.522, (s, dir) => {
       // the sketch path of source_overlap: pairwise vocabulary Jaccard
       // from 256-bin one-permutation signatures (matching mins over
       // co-occupied bins), beside the exact Jaccard from the vocab-sized
@@ -622,7 +629,7 @@ object FixtureQueries {
         |FROM est e JOIN inter i ON e.src_a = i.src_a AND e.src_b = i.src_b
         |JOIN sz sa ON sa.source = e.src_a JOIN sz sb ON sb.source = e.src_b
         |ORDER BY e.src_a, e.src_b""".stripMargin),
-    Query("sample_priority", 0.55, (s, dir) => {
+    Query("sample_priority", 0.79, (s, dir) => {
       // token-weighted fixed-size corpus subsample with unbiased
       // subset-sum weights (priority sampling): map-only integer
       // priorities, a TakeOrdered top-65 (no corpus shuffle), est_w =
@@ -645,7 +652,7 @@ object FixtureQueries {
         |SELECT rank, doc_id, w,
         |  CAST(greatest(w, coalesce((SELECT q FROM r WHERE rank = 65), 0)) AS BIGINT) AS est_w
         |FROM r WHERE rank <= 64 ORDER BY rank""".stripMargin),
-    Query("text_simpson", 0.6, (s, dir) =>
+    Query("text_simpson", 0.949, (s, dir) =>
       // the 20 most repetitive documents by exact-integer Simpson
       // concentration — the whole-distribution repetition signal beside
       // the windowed dup-gram scans
@@ -659,7 +666,7 @@ object FixtureQueries {
         |      FROM tc GROUP BY 1)
         |SELECT doc_id, n_tokens, vocab, top_term_n, simpson_bp
         |FROM d ORDER BY simpson_bp DESC, doc_id LIMIT 20""".stripMargin),
-    Query("text_keyphrases", 0.32, (s, dir) =>
+    Query("text_keyphrases", 0.695, (s, dir) =>
       // RAKE top-3 keyphrases per doc: stopword-split candidate runs
       // (<=4 tokens), milli-exact deg/freq word scores, identical texts
       // collapsed — the per-doc topic tags beside the corpus-level
@@ -692,7 +699,7 @@ object FixtureQueries {
         |    CAST(row_number() OVER (PARTITION BY doc_id ORDER BY score_milli DESC, phrase ASC) AS BIGINT) AS rank FROM cc)
         |SELECT doc_id, rank, phrase, score_milli FROM r WHERE rank <= 3
         |ORDER BY doc_id, rank""".stripMargin),
-    Query("text_segments", 0.48, (s, dir) =>
+    Query("text_segments", 1.432, (s, dir) =>
       // exact-integer TextTiling: 40-token blocks, distinct-vocab Jaccard
       // cohesion between neighbors, boundary under 1500 bp — the
       // topic-shift chunk boundaries the fixed/section chunkers lack
@@ -725,7 +732,7 @@ object FixtureQueries {
         |  CAST(coalesce(minj, -1) AS BIGINT) AS min_jacc_bp,
         |  CAST(CASE WHEN npairs = 0 THEN -1 ELSE sumj // npairs END AS BIGINT) AS mean_jacc_bp
         |FROM o ORDER BY doc_id""".stripMargin),
-    Query("chunk_tiling", 0.55, (s, dir) =>
+    Query("chunk_tiling", 1.948, (s, dir) =>
       // the COMPOSED row (r14 task 3): text_segments' boundary machinery
       // actually segmenting — every sub-1500bp cohesion drop starts a new
       // chunk, chunk text rebuilt from the windows' ordered tokens; one
@@ -758,7 +765,7 @@ object FixtureQueries {
         |  CAST(COUNT(*) AS BIGINT) AS n_tokens,
         |  string_agg(tok, ' ' ORDER BY pos) AS chunk_text
         |FROM z GROUP BY doc_id, seg ORDER BY doc_id, seg""".stripMargin),
-    Query("sample_uniform", 0.14, (s, dir) =>
+    Query("sample_uniform", 0.286, (s, dir) =>
       // seeded bottom-k uniform sample ("distributed reservoir"):
       // order-free MERGEABLE membership — retries, shard unions, and
       // corpus growth agree on the sample with no coordination, the
@@ -775,7 +782,7 @@ object FixtureQueries {
         |r AS (SELECT doc_id, h60,
         |    CAST(row_number() OVER (ORDER BY h60, doc_id) AS BIGINT) AS rank FROM h)
         |SELECT rank, doc_id, h60 FROM r WHERE rank <= 64 ORDER BY rank""".stripMargin),
-    Query("stats_corr", 0.32, (s, dir) => {
+    Query("stats_corr", 0.7, (s, dir) => {
       // integer Pearson card per source: does token VOLUME predict VOCAB
       // (Heaps' law)? Exact sufficient statistics + covariance/variance
       // NUMERATORS (DECIMAL-exact products); the rooted r stays a
@@ -809,7 +816,7 @@ object FixtureQueries {
         |       WHEN CAST(n AS HUGEINT) * sum_xy < CAST(sum_x AS HUGEINT) * sum_y THEN -1
         |       ELSE 0 END AS BIGINT) AS corr_sign
         |FROM a ORDER BY source""".stripMargin),
-    Query("graph_domain_rank", 1.8, (s, dir) => {
+    Query("graph_domain_rank", 2.234, (s, dir) => {
       // web-curation domain authority end to end: synthesized anchor
       // hrefs per document (the fixture corpus carries no URLs —
       // url_canonical precedent), then the REAL machinery — regexp href

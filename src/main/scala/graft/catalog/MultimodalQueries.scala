@@ -237,7 +237,7 @@ object MultimodalQueries {
   }
 
   val all: Seq[Query] = Seq(
-    Query("multimodal_meta", 0.14, (s, dir) => {
+    Query("multimodal_meta", 0.371, (s, dir) => {
       // REAL header decode: fixture payloads carry genuine PNG/JPEG/WAV
       // headers (round-robin by doc_id, dims/rate derived from doc_id),
       // built by the public-spec builders and parsed back by
@@ -258,7 +258,7 @@ object MultimodalQueries {
         |  CASE WHEN doc_id % 3 = 2 THEN CAST(8000 + (doc_id % 6) * 8000 AS INT) END AS sample_rate,
         |  CASE WHEN doc_id % 3 = 2 THEN CAST(1 + doc_id % 2 AS INT) END AS n_channels
         |FROM documents ORDER BY media_id""".stripMargin),
-    Query("multimodal_phash", 0.46, (s, dir) => {
+    Query("multimodal_phash", 1.468, (s, dir) => {
       // content-derived image fingerprint: the 63-bit gradient hash
       // (dHash) over each payload's BODY byte grid — same fixture
       // payloads as multimodal_meta (real PNG/JPEG/WAV headers, text
@@ -269,7 +269,7 @@ object MultimodalQueries {
     },
       (duckPhashSql() +
       "\nSELECT media_id, phash FROM ph ORDER BY media_id")),
-    Query("multimodal_neardup", 1.71, (s, dir) => {
+    Query("multimodal_neardup", 1.88, (s, dir) => {
       // hamming-banded image near-dedup — the multimodal analogue of
       // dedup_simhash: 3×21-bit bands block the corpus (pigeonhole: any
       // pair within the Hamming budget shares an intact band), exact
@@ -305,7 +305,7 @@ object MultimodalQueries {
         |SELECT id_a, id_b, hamming FROM cand WHERE hamming <= 6
         |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(0 AS BIGINT)
         |ORDER BY id_a, id_b""".stripMargin)),
-    Query("multimodal_audio", 0.54, (s, dir) => {
+    Query("multimodal_audio", 1.966, (s, dir) => {
       // audio frame statistics over the WAV slice of the fixture payloads
       // (media_id % 3 == 2 ⇒ buildWav, fixed 44-byte RIFF header): sampled
       // PCM16 energy/zero-cross/reversal/peak per frame + silence flag —
@@ -340,7 +340,7 @@ object MultimodalQueries {
         |  CASE WHEN energy < ${m.AudioSilenceFloor} THEN 1 ELSE 0 END AS is_silence
         |FROM y ORDER BY media_id, frame_idx""".stripMargin
     }),
-    Query("multimodal_audio_neardup", 1.61, (s, dir) => {
+    Query("multimodal_audio_neardup", 1.694, (s, dir) => {
       // hamming-banded audio near-dedup — closes the multimodal dedup
       // triangle (image multimodal_neardup, text dedup_simhash, audio
       // here): 48-bit Haitsma-Kalker energy-delta fingerprints, 3×16-bit
@@ -386,7 +386,7 @@ object MultimodalQueries {
         |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(0 AS BIGINT)
         |ORDER BY id_a, id_b""".stripMargin
     }),
-    Query("tokenize_bpe", 1.3, (s, dir) => {
+    Query("tokenize_bpe", 1.241, (s, dir) => {
       // distributed BPE merge training (Sennrich et al. 2016): ONE corpus
       // pass builds the vocab-sized word-frequency table, then each round
       // is a pair-count shuffle over that table + a map-only literal
@@ -401,7 +401,7 @@ object MultimodalQueries {
       (1 to BpeRounds).map(r =>
         s"SELECT $r AS merge_round, x, y, x || y AS merged, cnt FROM t$r")
         .mkString("", "\nUNION ALL ", "\nORDER BY merge_round"))),
-    Query("tokenize_bpe_vocab", 1.0, (s, dir) => {
+    Query("tokenize_bpe_vocab", 1.284, (s, dir) => {
       // the encode side of the learned merges: weighted symbol totals of
       // the merged word table — top-20, ties broken by symbol
       val words = graft.ops.Bpe.wordFrequencies(Tables.documents(s, dir))
@@ -413,7 +413,7 @@ object MultimodalQueries {
       |enc AS (SELECT n, unnest(string_split(seq, ' ')) AS symbol FROM s$BpeRounds)
       |SELECT symbol, CAST(SUM(n) AS BIGINT) AS total FROM enc GROUP BY symbol
       |ORDER BY total DESC, symbol LIMIT 20""".stripMargin)),
-    Query("text_html_extract", 0.16, (s, dir) => {
+    Query("text_html_extract", 0.908, (s, dir) => {
       // crawl-ingest HTML→text: script/style drop, block-tag line breaks,
       // tag strip, single-pass entity unescape, line cleanup — map-only
       // regexp expressions over the synthesized page (HtmlSynthExpr)
@@ -442,7 +442,7 @@ object MultimodalQueries {
         |  CAST(len(ls) AS BIGINT) AS n_blocks
         |FROM hl ORDER BY doc_id""".stripMargin
     }),
-    Query("dedup_soft", 2.1, (s, dir) => {
+    Query("dedup_soft", 1.457, (s, dir) => {
       // soft deduplication (the reweight-don't-drop posture of SoftDeDup,
       // He et al. 2024): every doc survives, but its sampling weight is
       // 1/cluster_size in integer bp — duplicates share one doc's worth
@@ -463,7 +463,7 @@ object MultimodalQueries {
         |SELECT l.doc_id, s.cluster_size, 10000 // s.cluster_size AS weight_bp
         |FROM lab l JOIN sz s ON l.cluster_id = s.cluster_id
         |ORDER BY l.doc_id""".stripMargin),
-    Query("mix_doremi", 1.07, (s, dir) => {
+    Query("mix_doremi", 2.397, (s, dir) => {
       // DoReMi-style one-step domain reweighting (Xie et al. 2023,
       // "DoReMi: Optimizing Data Mixtures Speeds Up Language Model
       // Pretraining") in an exact integer domain: per-domain excess loss
@@ -509,7 +509,7 @@ object MultimodalQueries {
         |SELECT source, n_docs, avg_lm_bp, excess_q,
         |  CAST((10000 * raw) // t AS BIGINT) AS weight_bp
         |FROM dq, dtot ORDER BY source""".stripMargin),
-    Query("tokenize_bpe_encode", 1.2, (s, dir) => {
+    Query("tokenize_bpe_encode", 2.39, (s, dir) => {
       // the train→tokenize step end to end: learn the merges, then encode
       // the corpus by broadcasting the vocab-sized merged word table into
       // one explode+join pass; only the per-doc agg shuffles
@@ -526,7 +526,7 @@ object MultimodalQueries {
       |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
       |  CAST(SUM(n_sym) AS BIGINT) AS bpe_tokens
       |FROM dwf JOIN wl USING (word) GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
-    Query("tokenize_fertility", 1.6, (s, dir) => {
+    Query("tokenize_fertility", 1.805, (s, dir) => {
       // tokenizer FERTILITY per source (tokens per word, the standard
       // tokenizer-quality metric a multilingual pipeline tracks per
       // language/domain — a high-fertility source is under-served by the
@@ -555,7 +555,7 @@ object MultimodalQueries {
       |  CAST(SUM(n_sym) AS BIGINT) AS bpe_tokens,
       |  CAST((SUM(n_sym) * 10000) // COUNT(*) AS BIGINT) AS fertility_bp
       |FROM j GROUP BY source ORDER BY source""".stripMargin)),
-    Query("multimodal_frames", 0.19, (s, dir) =>
+    Query("multimodal_frames", 0.397, (s, dir) =>
       // sampled_frames is serialized to CSV here (not in frameSamplePlan,
       // whose API keeps the array): the driver's comparator sorts rows with
       // pandas, which cannot hash/sort numpy array cells
@@ -569,7 +569,7 @@ object MultimodalQueries {
         |  array_to_string(generate_series(0, least(CAST(1 + doc_id % 240 AS INT) - 1, 70), 10), ',') AS sampled_frames,
         |  CAST(len(generate_series(0, least(CAST(1 + doc_id % 240 AS INT) - 1, 70), 10)) AS INT) AS n_sampled
         |FROM documents ORDER BY media_id""".stripMargin),
-    Query("multimodal_shots", 0.7, (s, dir) =>
+    Query("multimodal_shots", 1.159, (s, dir) =>
       // video temporal segmentation over the PNG-container slice: 16
       // uniformly-sampled frames → mean byte luma each → cut where the
       // frame-to-frame delta exceeds 16 — one map-only expression per
@@ -595,7 +595,7 @@ object MultimodalQueries {
         |  ${m.shotStatSql("max_delta", 16L)} AS max_delta
         |FROM v ORDER BY media_id""".stripMargin
     }),
-    Query("multimodal_keyframes", 1.1, (s, dir) =>
+    Query("multimodal_keyframes", 2.1, (s, dir) =>
       // representative-frame extraction per shot (the thumbnail/embedding
       // frame a downstream image stage consumes): map-only inline flag +
       // cumulative shot-index sums over the luma grid; the only explode
@@ -622,7 +622,7 @@ object MultimodalQueries {
         |$rows
         |ORDER BY media_id, shot_idx""".stripMargin
     }),
-    Query("multimodal_video_neardup", 0.74, (s, dir) => {
+    Query("multimodal_video_neardup", 1.662, (s, dir) => {
       // hamming-banded video near-dedup — completes the per-modality
       // dedup square (text dedup_simhash, image multimodal_neardup,
       // audio multimodal_audio_neardup, video here): 45-bit
@@ -670,7 +670,7 @@ object MultimodalQueries {
         |UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(0 AS BIGINT)
         |ORDER BY id_a, id_b""".stripMargin
     }),
-    Query("curation_pipeline", 0.71, (s, dir) => {
+    Query("curation_pipeline", 1.03, (s, dir) => {
       // the operators composed as one curation DAG: quality gate →
       // length gate → exact dedup (keep canonical) → deterministic split
       val docs = Tables.documents(s, dir)
@@ -696,7 +696,7 @@ object MultimodalQueries {
         |       FROM (SELECT g.source, CAST('0x' || substring(md5(CAST(g.doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000 AS bp
         |             FROM gated g JOIN canon c ON g.doc_id = c.doc_id))
         |SELECT source, split, COUNT(*) AS n FROM sp GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("pipeline_e2e", 1.5, (s, dir) => {
+    Query("pipeline_e2e", 2.009, (s, dir) => {
       // the A5+dedup composition as ONE job — ingest (length gate) →
       // fixed-window chunk → embed (mapPartitions, not prunable) → exact
       // chunk dedup (canonical = min chunk_id per text digest) → keyed
@@ -746,7 +746,7 @@ object MultimodalQueries {
         |SELECT source, version, COUNT(*) AS n_chunks, COUNT(DISTINCT doc_id) AS n_docs,
         |       CAST(64 AS INT) AS dim
         |FROM up GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("text_redact", 0.12, (s, dir) =>
+    Query("text_redact", 1.231, (s, dir) =>
       // PII scrub over text with synthesized email/URL/phone (the fixture
       // corpus carries none); redacted content compared via md5
       TextAnalysis.redactPii(
@@ -770,7 +770,7 @@ object MultimodalQueries {
         |  CAST(len(regexp_extract_all(red, '<PHONE>')) AS BIGINT) AS n_phones,
         |  md5(red) AS redacted_md5
         |FROM r ORDER BY doc_id""".stripMargin),
-    Query("text_repetition", 0.16, (s, dir) =>
+    Query("text_repetition", 2.285, (s, dir) =>
       // Gopher-style repetition filters over sentence-split lines
       TextAnalysis.repetition(
         Tables.documents(s, dir).withColumn("text", expr("replace(text, '. ', '\n')")),
@@ -788,7 +788,7 @@ object MultimodalQueries {
         |bm AS (SELECT doc_id, CAST(10000 * MAX(c) // SUM(c) AS BIGINT) AS top_bigram_bp FROM bc GROUP BY 1)
         |SELECT lm.doc_id, lm.n_lines, lm.dup_line_bp, coalesce(bm.top_bigram_bp, 0) AS top_bigram_bp
         |FROM lm LEFT JOIN bm ON lm.doc_id = bm.doc_id ORDER BY lm.doc_id""".stripMargin),
-    Query("optout_filter", 0.55, (s, dir) => {
+    Query("optout_filter", 0.734, (s, dir) => {
       // publisher opt-out / takedown gate over synthesized crawl URLs
       // (the url_canonical corpus): SUFFIX semantics — example3.com
       // blocks every subdomain; nested entries resolve to the DEEPEST
@@ -820,7 +820,7 @@ object MultimodalQueries {
         |      FROM sfx s JOIN opt o ON s.sfx = o.domain)
         |SELECT doc_id, host, sfx AS matched_domain FROM m WHERE rn = 1
         |ORDER BY doc_id""".stripMargin),
-    Query("crawl_robots", 0.2, (s, dir) =>
+    Query("crawl_robots", 0.595, (s, dir) =>
       // robots-exclusion path gate over synthesized crawl paths: the
       // rule battery exercises longest-match override (/s0/public/
       // allows inside disallowed /s0/), the same-length allow-wins tie
@@ -856,7 +856,7 @@ object MultimodalQueries {
         |  coalesce(w.rule_path, '') AS rule_path,
         |  CAST(coalesce(w.rule_len, -1) AS BIGINT) AS rule_len
         |FROM u LEFT JOIN w USING (doc_id) ORDER BY u.doc_id""".stripMargin),
-    Query("url_canonical", 0.2, (s, dir) =>
+    Query("url_canonical", 0.466, (s, dir) =>
       // crawl-curation URL normalization over synthesized URLs (the
       // fixture corpus carries none, like text_redact): mixed-case
       // scheme/host, a %3-of-docs trailing slash, and utm/fbclid tracking
@@ -890,7 +890,7 @@ object MultimodalQueries {
         |  scheme || '://' || host || clean_path ||
         |  (CASE WHEN clean_query <> '' THEN '?' || clean_query ELSE '' END) AS canonical_url
         |FROM s ORDER BY doc_id""".stripMargin),
-    Query("text_dup_spans", 1.8, (s, dir) =>
+    Query("text_dup_spans", 2.347, (s, dir) =>
       // exact-substring duplication diagnostic (Lee et al.): per doc, the
       // fraction of 5-token span occurrences shared verbatim with any
       // other document — catches quoted/copied passages that
@@ -912,7 +912,7 @@ object MultimodalQueries {
         |  (10000 * CAST(SUM(CASE WHEN span_df >= 2 THEN 1 ELSE 0 END) AS BIGINT)) // CAST(COUNT(*) AS BIGINT) AS dup_span_bp
         |FROM h JOIN dfx USING (hv)
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    Query("dedup_cdc_chunks", 2.2, (s, dir) =>
+    Query("dedup_cdc_chunks", 1.817, (s, dir) =>
       // storage-tier dedup: content-defined chunk boundaries (local
       // bigram hash clears the 63-mask → ~64-token chunks) are
       // insertion-resistant, so shared bulk between edited revisions
@@ -945,7 +945,7 @@ object MultimodalQueries {
         |SELECT doc_id, n_tokens, n_chunks, dup_chunks, dup_tokens,
         |  CAST(dup_tokens * 10000 // n_tokens AS BIGINT) AS dup_bp
         |FROM o ORDER BY doc_id""".stripMargin),
-    Query("dedup_span_removal", 0.35, (s, dir) =>
+    Query("dedup_span_removal", 1.973, (s, dir) =>
       // the action half of text_dup_spans: tokens covered by any
       // cross-document verbatim 5-gram are REMOVED and the survivors
       // reassembled in order — sub-document dedup where whole-doc dedup
@@ -977,7 +977,7 @@ object MultimodalQueries {
         |  CAST(SUM(CASE WHEN isdup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_tokens,
         |  md5(coalesce(string_agg(CASE WHEN NOT isdup THEN tok END, ' ' ORDER BY tpos), '')) AS clean_md5
         |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    Query("orc_roundtrip", 0.44, (s, dir) => {
+    Query("orc_roundtrip", 0.817, (s, dir) => {
       // the ORC source/sink pair oracle-gated: projected documents written
       // ORC partitioned by lang, read back, aggregated — round-trip
       // identity the oracle replays straight from the parquet table
@@ -994,7 +994,7 @@ object MultimodalQueries {
       """SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(length(text)) AS BIGINT) AS sum_chars
         |FROM documents GROUP BY 1, 2 ORDER BY lang, source""".stripMargin),
-    Query("compact_roundtrip", 0.81, (s, dir) => {
+    Query("compact_roundtrip", 1.625, (s, dir) => {
       // small-file compaction oracle-gated: 40 tiny files committed as a
       // generation-marker table, compacted as the NEXT generation
       // (GenTable — the one crash-safe maintenance protocol), content
@@ -1014,7 +1014,7 @@ object MultimodalQueries {
       """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
         |  CAST(SUM(length(text)) AS BIGINT) AS sum_chars
         |FROM documents""".stripMargin),
-    Query("join_salted", 0.38, (s, dir) => {
+    Query("join_salted", 0.592, (s, dir) => {
       // skew-salted join oracle-gated: salting must be RESULT-INVISIBLE
       // (the oracle is the plain join) while the plan replicates the dim
       // side by the salt factor — ScaleSpec owns the plan assertions
@@ -1031,7 +1031,7 @@ object MultimodalQueries {
         |SELECT d.source, m.n_langs, CAST(COUNT(*) AS BIGINT) AS n_docs
         |FROM documents d JOIN dims m USING (source)
         |GROUP BY 1, 2 ORDER BY d.source""".stripMargin),
-    Query("join_bucketed", 0.89, (s, dir) => {
+    Query("join_bucketed", 1.562, (s, dir) => {
       // bucketed co-located join oracle-gated: both sides written
       // bucketBy(16, doc_id) sorted, joined zero-exchange (K9 / the
       // co-location claim — WritersSpec asserts the exchange-free plan);
@@ -1050,7 +1050,7 @@ object MultimodalQueries {
       """SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(length(text)) AS BIGINT) AS sum_chars
         |FROM documents GROUP BY 1 ORDER BY source""".stripMargin),
-    Query("join_runtime_filter", 0.95, (s, dir) => {
+    Query("join_runtime_filter", 1.666, (s, dir) => {
       // the 100 TB fact-join posture: NEITHER side broadcastable, so opt
       // in to Catalyst's runtime bloom-filter semi-join reduction
       // (InjectRuntimeFilter): the selective order-priority filter builds
@@ -1080,7 +1080,7 @@ object MultimodalQueries {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT'
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("dedup_paragraphs", 0.4, (s, dir) =>
+    Query("dedup_paragraphs", 0.801, (s, dir) =>
       // the middle granularity tier (MassiveText's exact-paragraph dedup):
       // every paragraph keeps exactly its FIRST occurrence in global
       // (doc, position) order — later verbatim copies drop, unique content
@@ -1105,7 +1105,7 @@ object MultimodalQueries {
         |  CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
         |  md5(coalesce(string_agg(CASE WHEN rn = 1 THEN para END, chr(10) ORDER BY para_idx), '')) AS clean_md5
         |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    Query("profile_columns", 0.12, (s, dir) =>
+    Query("profile_columns", 0.794, (s, dir) =>
       // dataset profiling (the data-card surface): per column — rows,
       // nulls, EXACT distinct count, min/max rendered as strings; all
       // columns in ONE scan (single agg, one Expand for the distincts)
@@ -1126,7 +1126,7 @@ object MultimodalQueries {
         |  CAST(COUNT(DISTINCT source) AS BIGINT), CAST(MIN(source) AS VARCHAR), CAST(MAX(source) AS VARCHAR)
         |FROM documents
         |ORDER BY col_name""".stripMargin),
-    Query("text_boilerplate", 0.41, (s, dir) => {
+    Query("text_boilerplate", 1.161, (s, dir) => {
       // CCNet-style cross-document line dedup: lines shared by more than
       // 10 docs of the same source are boilerplate (banners, footers) and
       // are removed with original line order preserved. The fixture text
@@ -1163,7 +1163,7 @@ object MultimodalQueries {
         |SELECT doc_id, n_lines, n_boiler_lines,
         |  CAST(length(clean) AS BIGINT) AS n_chars_clean, md5(clean) AS clean_md5
         |FROM r ORDER BY doc_id""".stripMargin),
-    Query("curation_adaptive", 0.5, (s, dir) => {
+    Query("curation_adaptive", 0.892, (s, dir) => {
       // adaptive per-source quality gate: each source keeps its own top
       // 75% by ITS quality distribution (threshold = exact per-source
       // 25th-percentile score, nearest-rank) — the per-domain adaptive
@@ -1193,7 +1193,7 @@ object MultimodalQueries {
         |  CAST(SUM(CASE WHEN j.score >= th.q25_score THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
         |FROM j JOIN th USING (source)
         |GROUP BY 1, 2 ORDER BY j.source""".stripMargin),
-    Query("quota_per_source", 0.50, (s, dir) =>
+    Query("quota_per_source", 0.41, (s, dir) =>
       // data-mixing quota: at most 30 docs per source, chosen by hash
       // order (reproducible, not input-order-dependent)
       graft.ops.Sampling.capPerKey(Tables.documents(s, dir), "source", "doc_id", 30)
@@ -1204,7 +1204,7 @@ object MultimodalQueries {
         |    ORDER BY CAST('0x' || substring(md5(coalesce(CAST(doc_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000, doc_id) AS rn
         |  FROM documents)
         |SELECT doc_id, source FROM r WHERE rn <= 30 ORDER BY source, doc_id""".stripMargin),
-    Query("curation_budget", 0.5, (s, dir) => {
+    Query("curation_budget", 0.872, (s, dir) => {
       // token-budget mix assembly: per source, admit docs best-quality-
       // first until 1000 whitespace tokens — the "N tokens per source"
       // step of a training-mix builder (quotas in tokens, not documents)
@@ -1227,7 +1227,7 @@ object MultimodalQueries {
         |        ORDER BY quality_score DESC, doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens FROM j)
         |SELECT source, doc_id, n_tokens, quality_score, cum_tokens
         |FROM w WHERE cum_tokens <= 1000 ORDER BY source, cum_tokens""".stripMargin),
-    Query("curation_modern", 2.84, (s, dir) => {
+    Query("curation_modern", 3.666, (s, dir) => {
       // the 2023-25-era curation recipe as ONE funnel: quality gate →
       // exact dedup keep-first → DSIR target-domain selection (top-200) →
       // leakage-safe cluster-level split, reported as per-stage counts.
@@ -1296,7 +1296,7 @@ object MultimodalQueries {
         |UNION ALL SELECT 's3_dsir', COUNT(*) FROM s3
         |UNION ALL SELECT 's4_split_' || split, COUNT(*) FROM spl GROUP BY split
         |ORDER BY stage""".stripMargin),
-    Query("curation_full", 4.54, (s, dir) => {
+    Query("curation_full", 5.387, (s, dir) => {
       // the full production curation DAG as ONE job — cross-doc
       // boilerplate-line removal → duplicated-span removal → quality gate
       // → near-dedup (minhash-LSH → connected components) → keep-best
@@ -1395,7 +1395,7 @@ object MultimodalQueries {
         |      FROM rep WHERE rn = 1)
         |SELECT source, doc_id, CAST(cluster_size AS BIGINT) AS cluster_size, n_tokens, quality_score, cum_tokens
         |FROM w WHERE cum_tokens <= 1000 ORDER BY source, cum_tokens""".stripMargin),
-    Query("curation_cdc", 1.3, (s, dir) => {
+    Query("curation_cdc", 2.387, (s, dir) => {
       // the OTHER composed tile of VERDICT r14 task 3 (chunk_tiling wires
       // TextTiling into the chunker; this wires cdcChunkStats into a
       // curation gate): per-doc content-defined-chunk duplicate coverage
@@ -1451,7 +1451,7 @@ object MultimodalQueries {
         |  CAST(SUM(CASE WHEN kept THEN nt ELSE 0 END) AS BIGINT) AS kept_tokens,
         |  CAST(SUM(dup_bp) // COUNT(*) AS BIGINT) AS mean_dup_bp
         |FROM k GROUP BY source ORDER BY source""".stripMargin),
-    Query("pack_sequences", 0.27, (s, dir) => {
+    Query("pack_sequences", 0.762, (s, dir) => {
       // sequence packing over the shared token chunks: per source, chunks
       // ordered by (doc_id, chunk_index) land in 2048-token sequences
       val chunks = tokenChunks(s, dir)
@@ -1469,7 +1469,7 @@ object MultimodalQueries {
          |  CAST(cum_before // 2048 AS BIGINT) AS seq_id,
          |  CAST(cum_before % 2048 AS BIGINT) AS seq_offset
          |FROM p ORDER BY source, doc_id, chunk_index""".stripMargin),
-    Query("pack_concat", 0.49, (s, dir) => {
+    Query("pack_concat", 0.635, (s, dir) => {
       // the GPT-style pretraining layout: concatenate each source's token
       // stream (doc order) and slice into 512-token examples — every
       // (example, doc) span materialized, boundary-straddling docs split
@@ -1497,7 +1497,7 @@ object MultimodalQueries {
         |  CAST(greatest(0, ex * 512 - off) AS BIGINT) AS tok_start,
         |  CAST(least(n, (ex + 1) * 512 - off) - greatest(0, ex * 512 - off) AS BIGINT) AS span_len
         |FROM e ORDER BY source, example_idx, doc_id""".stripMargin),
-    Query("mix_epochs", 0.32, (s, dir) => {
+    Query("mix_epochs", 0.358, (s, dir) => {
       // fractional epoch repetition: src0 repeats 2.3×, src1 1.5×, the
       // mid sources exactly once, the tail 0.4× — each doc's copy count a
       // pure function of (id, seed)
@@ -1521,7 +1521,7 @@ object MultimodalQueries {
         |c AS (SELECT doc_id, source, fbp // 10000 + CASE WHEN bp < fbp % 10000 THEN 1 ELSE 0 END AS n FROM f)
         |SELECT source, doc_id, CAST(unnest(generate_series(0, n - 1)) AS BIGINT) AS copy_idx
         |FROM c WHERE n > 0 ORDER BY source, doc_id, copy_idx""".stripMargin),
-    Query("mix_unimax", 0.39, (s, dir) => {
+    Query("mix_unimax", 0.721, (s, dir) => {
       // UniMax language sampling: budget = one corpus-pass of documents,
       // cap = 1.2 epochs — on this corpus's 42%-en skew the waterfill
       // caps every minority language at 1.2 epochs and hands en the
@@ -1559,7 +1559,7 @@ object MultimodalQueries {
         |SELECT lang, n_key, alloc, factor_bp, doc_id,
         |  CAST(unnest(generate_series(0, nc - 1)) AS BIGINT) AS copy_idx
         |FROM c WHERE nc > 0 ORDER BY lang, doc_id, copy_idx""".stripMargin),
-    Query("pack_greedy", 0.31, (s, dir) =>
+    Query("pack_greedy", 0.493, (s, dir) =>
       // NO-SPLIT greedy bin packing (items stay whole, a non-associative
       // sequential fold): flatMapSortedGroups — sequential within a
       // source, all sources in parallel, sort pushed into the shuffle;
@@ -1584,7 +1584,7 @@ object MultimodalQueries {
         |  FROM d JOIN p ON d.source = p.source AND d.rn = p.rn + 1)
         |SELECT source, doc_id, bin_idx, bin_fill FROM p
         |ORDER BY source, doc_id""".stripMargin),
-    Query("train_batches", 0.35, (s, dir) =>
+    Query("train_batches", 0.558, (s, dir) =>
       // dynamic-batching audit: length-band buckets, longest-first fill
       // of 8-doc batches, per-bucket pad-waste in bp — the table a
       // fine-tuning loader's bucketing config is chosen from
@@ -1613,7 +1613,7 @@ object MultimodalQueries {
         |  CAST(CASE WHEN padded_tokens = 0 THEN 0
         |       ELSE (10000 * (padded_tokens - real_tokens)) // padded_tokens END AS BIGINT) AS waste_bp
         |FROM a ORDER BY bucket""".stripMargin),
-    Query("train_shards", 0.65, (s, dir) =>
+    Query("train_shards", 1.068, (s, dir) =>
       // token-budgeted shard manifest: global concat-then-chunk
       // assignment at file granularity via the scale-honest cumulative
       // sum (range partitions + per-partition running sum + offset
@@ -1636,7 +1636,7 @@ object MultimodalQueries {
         |  CAST((10000 * SUM(w)) // 2000 AS BIGINT) AS fill_bp,
         |  MIN(doc_id) AS first_id, MAX(doc_id) AS last_id
         |FROM a GROUP BY 1 ORDER BY 1""".stripMargin),
-    Query("split_hash", 0.24, (s, dir) =>
+    Query("split_hash", 0.431, (s, dir) =>
       // deterministic 90/5/5 curation split: content-hash buckets, so
       // assignments are stable under reruns, retries, and corpus growth
       graft.ops.Sampling.hashSplit(Tables.documents(s, dir), "doc_id")
@@ -1650,7 +1650,7 @@ object MultimodalQueries {
         |  CASE WHEN bp < 9000 THEN 'train' WHEN bp < 9500 THEN 'val' ELSE 'test' END AS split,
         |  COUNT(*) AS n
         |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("mv_incremental", 0.46, (s, dir) => {
+    Query("mv_incremental", 0.605, (s, dir) => {
       // incremental materialized-aggregate maintenance: the per-source
       // stats table built once over the corpus slice (bench prep), an
       // increment (doc_id%5==0) merged in with ONE pass over the delta —
@@ -1671,7 +1671,7 @@ object MultimodalQueries {
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
       // the increment-merge probe amortizes the maintained aggregate
       prep = Some(ensureMvState(_, _))),
-    Query("train_order", 0.18, (s, dir) =>
+    Query("train_order", 0.401, (s, dir) =>
       // reproducible epoch shuffle: seeded 60-bit permutation key →
       // shard + in-shard position, so a trainer's data order is a pure
       // function of (corpus, seed). The only shuffle is the per-shard
@@ -1688,7 +1688,7 @@ object MultimodalQueries {
         |SELECT doc_id, pk % 8 AS shard,
         |  CAST(row_number() OVER (PARTITION BY pk % 8 ORDER BY pk, doc_id) AS BIGINT) AS pos
         |FROM k ORDER BY shard, pos""".stripMargin),
-    Query("train_curriculum", 0.21, (s, dir) => {
+    Query("train_curriculum", 0.803, (s, dir) => {
       // easy-first curriculum schedule: quality-score VALUE bands pick the
       // phase (map-only — never an ntile's global sort), then the
       // train_order per-(phase, shard) seeded window positions rows; the
@@ -1712,7 +1712,7 @@ object MultimodalQueries {
         |  pk % 8 AS shard,
         |  CAST(row_number() OVER (PARTITION BY phase, pk % 8 ORDER BY pk, doc_id) AS BIGINT) AS pos
         |FROM ck ORDER BY phase, shard, pos""".stripMargin),
-    Query("sketch_hll", 0.35, (s, dir) => {
+    Query("sketch_hll", 1.138, (s, dir) => {
       // distinct-token HLL sketch per source: integer register state is the
       // (hash-exact) comparison surface; the float estimate derives locally
       val toks = Tables.documents(s, dir)
@@ -1725,7 +1725,7 @@ object MultimodalQueries {
       // integer rank via bin()-length, same MAX registers and scaled
       // integer denominator — the float estimate never crosses engines
       DuckHllSketch),
-    Query("sketch_hll_merge", 0.52, (s, dir) => {
+    Query("sketch_hll_merge", 1.002, (s, dir) => {
       // incremental sketching: registers built separately over the even/odd
       // doc slices, merged (per-register max), then collapsed — the result
       // must hash-equal the single-pass sketch, which is exactly what the
@@ -1743,7 +1743,7 @@ object MultimodalQueries {
       // registers must land on the single-pass state exactly — the
       // hash-equality IS the mergeability proof
       DuckHllSketch),
-    Query("dedup_clusters", 2.53, (s, dir) => {
+    Query("dedup_clusters", 1.706, (s, dir) => {
       // LSH pairs → connected components → canonical representative: the
       // step that turns candidate PAIRS into dedup CLUSTERS (A~B, B~C ⇒
       // {A,B,C}, keep min id). Iterative min-label propagation with
@@ -1760,7 +1760,7 @@ object MultimodalQueries {
         |  CAST(CASE WHEN l.doc_id = l.cluster_id THEN 1 ELSE 0 END AS INT) AS is_canonical
         |FROM lab l JOIN sz s ON l.cluster_id = s.cluster_id
         |ORDER BY l.doc_id""".stripMargin),
-    Query("dedup_cluster_sizes", 2.6, (s, dir) => {
+    Query("dedup_cluster_sizes", 2.1, (s, dir) => {
       // the governance histogram over the same LSH→components clustering
       // as dedup_clusters: clusters per size, docs per size, corpus share
       // in bp — the mega-cluster / template-spam early-warning view
@@ -1780,7 +1780,7 @@ object MultimodalQueries {
         |  CAST(cluster_size * n_clusters AS BIGINT) AS n_docs,
         |  CAST((10000 * cluster_size * n_clusters) // n_total AS BIGINT) AS docs_bp
         |FROM cs_hist, cs_tot ORDER BY cluster_size""".stripMargin),
-    Query("dedup_snm", 0.77, (s, dir) => {
+    Query("dedup_snm", 0.817, (s, dir) => {
       // sorted-neighborhood blocking: corpus ordered by a 12-char
       // normalized-prefix key, every record paired with its 3 successors —
       // the sort-based candidate generator beside the LSH families; rank
@@ -1799,7 +1799,7 @@ object MultimodalQueries {
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(b.rn - a.rn AS BIGINT) AS gap
         |FROM r a JOIN r b ON b.rn - a.rn BETWEEN 1 AND 3
         |ORDER BY doc_a, doc_b""".stripMargin),
-    Query("attribute_spans", 2.1, (s, dir) => {
+    Query("attribute_spans", 1.553, (s, dir) => {
       // quote attribution: the %101 "answers" are 300-char extracts of
       // real corpus docs (offset 30) re-ingested at +10^7 — provenance
       // must point back at the extracted-from doc with a high share;
@@ -1828,7 +1828,7 @@ object MultimodalQueries {
         |SELECT t.answer_id, t.source_id, t.shared, tot.n_fp,
         |  CAST((10000 * t.shared) // tot.n_fp AS BIGINT) AS share_bp
         |FROM topa t JOIN tot USING (answer_id) ORDER BY t.answer_id""".stripMargin),
-    Query("dedup_norm_ladder", 0.85, (s, dir) => {
+    Query("dedup_norm_ladder", 1.158, (s, dir) => {
       // normalization ablation card over planted variant mirrors: %40
       // trailing-space copies (whitespace tier catches), %30 uppercase
       // mirrors (lowercase tier), %70 punctuation-suffixed copies
@@ -1866,7 +1866,7 @@ object MultimodalQueries {
         |UNION ALL SELECT 'c_lowercase', n, d3, n - d3 FROM a
         |UNION ALL SELECT 'd_alnum', n, d4, n - d4 FROM a
         |ORDER BY tier""".stripMargin),
-    Query("code_clones", 1.25, (s, dir) => {
+    Query("code_clones", 2.68, (s, dir) => {
       // type-2 clone detection: the %50 slice re-ingests at +10^7 with a
       // BIJECTIVE identifier rename (spark/join/table → tokens absent
       // from the corpus) — invisible to byte hashing, exactly what
@@ -1905,7 +1905,7 @@ object MultimodalQueries {
         |      FROM cn GROUP BY 1 HAVING COUNT(*) > 1)
         |SELECT cn.doc_id, clone_rep, group_size
         |FROM cn JOIN g USING (ch) ORDER BY cn.doc_id""".stripMargin),
-    Query("dedup_edit", 1.5, (s, dir) => {
+    Query("dedup_edit", 3.288, (s, dir) => {
       // record-linkage fuzzy tier: SNM window-3 candidates verified by
       // Levenshtein over the 64-char normalized prefix — the
       // character-level matcher token-set measures can't express;
@@ -1933,7 +1933,7 @@ object MultimodalQueries {
         |         ELSE CAST((10000 * (ml - dist)) // ml AS BIGINT) END AS sim_bp FROM p)
         |SELECT doc_a, doc_b, dist, sim_bp FROM s WHERE sim_bp >= 5000
         |ORDER BY doc_a, doc_b""".stripMargin),
-    Query("graph_pagerank", 2.0, (s, dir) => {
+    Query("graph_pagerank", 2.473, (s, dir) => {
       // link-graph centrality over the synthesized citation graph
       // (i → i÷2 and i → i÷4 form a binary-ancestor lattice, i → i%97 the
       // 97 hub sinks whose in-degree grows with the corpus): exact-integer
@@ -1959,7 +1959,7 @@ object MultimodalQueries {
         |${duckPrIter(4)}
         |SELECT r.node, CAST(coalesce(o.odeg, 0) AS BIGINT) AS out_degree, r.pr AS pr_nano
         |FROM g_r4 r LEFT JOIN g_odeg o ON o.src = r.node ORDER BY r.node""".stripMargin),
-    Query("graph_lpa", 1.7, (s, dir) => {
+    Query("graph_lpa", 2.857, (s, dir) => {
       // dense-community detection over the same citation lattice:
       // 4 synchronous deterministic LPA rounds (min-label ties) — the
       // DENSITY companion to components' reachability
@@ -1994,7 +1994,7 @@ object MultimodalQueries {
           |  ON s.lbl = l4.lbl
           |ORDER BY node""".stripMargin
       }),
-    Query("graph_ppr", 2.2, (s, dir) => {
+    Query("graph_ppr", 2.447, (s, dir) => {
       // personalized PageRank from the %10 seed slice over the same
       // graph: teleport AND dangling mass land only on seeds, so nodes
       // outside the seeds' neighborhood rank exactly 0
@@ -2021,7 +2021,7 @@ object MultimodalQueries {
         |${duckPprIter(4)}
         |SELECT node, CAST(is_seed AS BIGINT) AS is_seed, pr AS pr_nano
         |FROM g_pr4 ORDER BY node""".stripMargin),
-    Query("graph_degrees", 0.5, (s, dir) => {
+    Query("graph_degrees", 0.737, (s, dir) => {
       // the power-law audit card over the same graph: log2-bucketed
       // degree histogram via bit arithmetic, shuffle state = buckets
       val docs = Tables.documents(s, dir)
@@ -2042,7 +2042,7 @@ object MultimodalQueries {
         |SELECT bucket, n_nodes, min_deg, max_deg,
         |  CAST((10000 * n_nodes) // n_total AS BIGINT) AS share_bp
         |FROM h CROSS JOIN t ORDER BY bucket""".stripMargin),
-    Query("graph_degrees_incremental", 1.3, (s, dir) => {
+    Query("graph_degrees_incremental", 1.183, (s, dir) => {
       // the incremental leg of the graph family (VERDICT r16 task 7, the
       // mv_incremental pattern): the maintained (undirected edges, degree
       // state) pair was built once over the base slice (bench prep); a
@@ -2080,7 +2080,7 @@ object MultimodalQueries {
         |  CAST((10000 * n_nodes) // n_total AS BIGINT) AS share_bp
         |FROM h CROSS JOIN t ORDER BY bucket""".stripMargin,
       prep = Some(ensureGraphState(_, _))),
-    Query("graph_pagerank_incremental", 2.2, (s, dir) => {
+    Query("graph_pagerank_incremental", 2.789, (s, dir) => {
       // PageRank's incremental leg: the maintained (directed edges,
       // out-degree state) absorbs the delta batch with delta-sized work
       // (anti-join + additive out-degree merge), then the fixed-iteration
@@ -2121,7 +2121,7 @@ object MultimodalQueries {
         |FROM g_r4 r LEFT JOIN g_odeg o ON o.src = r.node ORDER BY r.node""".stripMargin,
       // the delta-edge probes amortize the maintained link-graph state
       prep = Some(ensureGraphState(_, _))),
-    Query("graph_triangles", 0.55, (s, dir) => {
+    Query("graph_triangles", 1.381, (s, dir) => {
       // local cohesion over the same graph: (i, i÷2, i÷4) closes a
       // triangle for every i ≥ 4 (since (i÷2)÷2 = i÷4), so counts are
       // dense, while the %97 hubs carry corpus-sized degree but — degree
@@ -2150,7 +2150,7 @@ object MultimodalQueries {
         |SELECT d.node, d.deg AS degree, CAST(coalesce(p.tri, 0) AS BIGINT) AS n_triangles,
         |  CAST(CASE WHEN d.deg >= 2 THEN (2 * coalesce(p.tri, 0) * 10000) // (d.deg * (d.deg - 1)) ELSE 0 END AS BIGINT) AS clustering_bp
         |FROM g_deg d LEFT JOIN g_pt p USING (node) ORDER BY d.node""".stripMargin),
-    Query("graph_triangles_incremental", 1.0, (s, dir) => {
+    Query("graph_triangles_incremental", 1.976, (s, dir) => {
       // the third incremental graph leg: per-node triangle counts
       // maintained as node-sized state; a delta batch counts ONLY the
       // triangles it creates (each fresh edge probes the merged
@@ -2197,7 +2197,7 @@ object MultimodalQueries {
         |  CAST(CASE WHEN d.deg >= 2 THEN (2 * coalesce(p.tri, 0) * 10000) // (d.deg * (d.deg - 1)) ELSE 0 END AS BIGINT) AS clustering_bp
         |FROM g_deg d LEFT JOIN g_pt p USING (node) ORDER BY d.node""".stripMargin,
       prep = Some(ensureGraphState(_, _))),
-    Query("split_leakage_safe", 1.5, (s, dir) => {
+    Query("split_leakage_safe", 1.659, (s, dir) => {
       // leakage-safe curation split: assign train/val/test at near-dup
       // CLUSTER granularity — the whole component hash-splits on its
       // cluster id, so a near-duplicate pair can never straddle the
@@ -2223,7 +2223,7 @@ object MultimodalQueries {
         |SELECT doc_id, cluster_id,
         |  CASE WHEN bp < 9000 THEN 'train' WHEN bp < 9500 THEN 'val' ELSE 'test' END AS split
         |FROM bkt ORDER BY doc_id""".stripMargin),
-    Query("dedup_keep_best", 2.4, (s, dir) => {
+    Query("dedup_keep_best", 1.86, (s, dir) => {
       // cluster near-dups (LSH pairs → components) and keep the BEST copy
       // per cluster by quality score — the production alternative to
       // keep-min-id: near-dup copies differ (noise, truncation), so the
@@ -2251,7 +2251,7 @@ object MultimodalQueries {
         |                   JOIN qsc ON qsc.doc_id = l.doc_id)
         |SELECT cluster_id, doc_id AS rep_id, cluster_size, score AS quality_score
         |FROM rep WHERE rn = 1 ORDER BY cluster_id""".stripMargin),
-    Query("scd2_history", 0.54, (s, dir) => {
+    Query("scd2_history", 0.699, (s, dir) => {
       // SCD2 fold of four synthetic metadata snapshots: v2 changes lang for
       // doc_id%3, v3 repeats it (no-op — must compress away), v4 reverts
       // for doc_id%5 (change-back reopens an interval)
@@ -2280,7 +2280,7 @@ object MultimodalQueries {
         |  CASE WHEN lead(version) OVER (PARTITION BY doc_id ORDER BY version) IS NULL
         |       THEN 1 ELSE 0 END AS is_current
         |FROM kept ORDER BY doc_id, version_from""".stripMargin),
-    Query("tfidf_terms", 0.80, (s, dir) =>
+    Query("tfidf_terms", 1.341, (s, dir) =>
       // per-doc top-3 keywords by integer (tf DESC, df ASC, term) rank —
       // the tf·idf order without a float in the comparison surface
       TextAnalysis.tfidfTopK(Tables.documents(s, dir), "doc_id", "text", k = 3)
@@ -2295,7 +2295,7 @@ object MultimodalQueries {
         |      FROM tf JOIN dfq USING (term))
         |SELECT doc_id, term, tf, df, CAST(term_rank AS INT) AS term_rank
         |FROM r WHERE term_rank <= 3 ORDER BY doc_id, term_rank""".stripMargin),
-    Query("mix_temperature", 0.39, (s, dir) =>
+    Query("mix_temperature", 0.825, (s, dir) =>
       // τ=0.5 temperature-flattened source mixing at a 50% corpus budget:
       // small sources keep a larger fraction (∝ sqrt weight), integer-
       // exact end to end
@@ -2313,7 +2313,7 @@ object MultimodalQueries {
         |kept AS (SELECT d.source FROM documents d JOIN bp ON d.source = bp.source
         |         WHERE CAST('0x' || substring(md5(coalesce(CAST(d.doc_id AS VARCHAR), '')), 1, 15) AS BIGINT) % 10000 < bp.keep_bp)
         |SELECT source, COUNT(*) AS n_kept FROM kept GROUP BY source ORDER BY source""".stripMargin),
-    Query("mix_gini", 0.52, (s, dir) => {
+    Query("mix_gini", 1.021, (s, dir) => {
       // the mixture's Gini before and after τ=0.5 at a 50% budget, as
       // two exact-bp rows; both statistics run on source-sized count
       // relations. On this driver's UNIFORM synthetic mixture raw is
@@ -2351,7 +2351,7 @@ object MultimodalQueries {
         |SELECT 'temperature' AS mixture, ng AS n_groups, tot AS total,
         |  CAST(((s - ng * tot) * 10000) // (ng * tot) AS BIGINT) AS gini_bp FROM gkc
         |ORDER BY mixture""".stripMargin),
-    Query("sample_stratified", 0.26, (s, dir) =>
+    Query("sample_stratified", 0.319, (s, dir) =>
       // per-source training mix: 100%/50%/25% named strata, 10% default —
       // row-hash keep decision, so strata stay uniform and nested
       graft.ops.Sampling.hashSampleStratified(Tables.documents(s, dir),
@@ -2366,7 +2366,7 @@ object MultimodalQueries {
         |WHERE bp < (CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 5000
         |            WHEN 'src2' THEN 2500 ELSE 1000 END)
         |GROUP BY source ORDER BY source""".stripMargin),
-    Query("privacy_kanon", 0.55, (s, dir) =>
+    Query("privacy_kanon", 0.532, (s, dir) =>
       // k-anonymity suppression (Sweeney 2002) over the banded QI
       // (nation, segment, 5000-wide balance band): rows whose tuple
       // isolates fewer than k=3 customers are dropped. One QI aggregate
@@ -2392,7 +2392,7 @@ object MultimodalQueries {
         |  ON b.c_nationkey = s.c_nationkey AND b.c_mktsegment = s.c_mktsegment
         | AND b.bal_band = s.bal_band
         |ORDER BY c_custkey""".stripMargin),
-    Query("privacy_ldiv", 0.38, (s, dir) =>
+    Query("privacy_ldiv", 0.909, (s, dir) =>
       // distinct l-diversity report (Machanavajjhala 2007) per
       // (event_type, day): group size + sensitive-attribute (user_id)
       // cardinality; a big group whose members share one user still fails
@@ -2406,7 +2406,7 @@ object MultimodalQueries {
         |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS sens_card,
         |  CAST(CASE WHEN COUNT(DISTINCT user_id) >= 53 THEN 1 ELSE 0 END AS INT) AS diverse
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("privacy_risk", 0.41, (s, dir) =>
+    Query("privacy_risk", 0.557, (s, dir) =>
       // prosecutor re-identification risk histogram over the banded QI:
       // rows at risk_bp = floor(10000/group size) — "N rows re-identifiable
       // at >= X%" as one two-collapse aggregate, corpus never joined
@@ -2420,7 +2420,7 @@ object MultimodalQueries {
         |SELECT 10000 // n AS risk_bp, CAST(SUM(n) AS BIGINT) AS n_rows,
         |  COUNT(*) AS n_groups
         |FROM g GROUP BY 1 ORDER BY risk_bp""".stripMargin),
-    Query("privacy_tclose", 0.45, (s, dir) =>
+    Query("privacy_tclose", 1.185, (s, dir) =>
       // t-closeness (Li et al. 2007), the third release gate: per
       // (nation, segment) group, exact integer EMD between the group's
       // 1000-wide balance-band distribution and the corpus's, in basis
@@ -2457,7 +2457,7 @@ object MultimodalQueries {
         |SELECT c_nationkey, c_mktsegment, grp_rows, emd_bp,
         |  CAST(CASE WHEN emd_bp <= 1500 THEN 1 ELSE 0 END AS INT) AS close
         |FROM r ORDER BY c_nationkey, c_mktsegment""".stripMargin),
-    Query("privacy_generalize", 0.37, (s, dir) =>
+    Query("privacy_generalize", 0.748, (s, dir) =>
       // generalization-lattice suppression audit at k=10: balance bands
       // 100 → 1000 → 5000 → dropped. generalizeToK walks these stats to
       // the first level under a suppression budget (pinned in PrivacySpec);
@@ -2493,7 +2493,7 @@ object MultimodalQueries {
         |    CAST(COALESCE(SUM(CASE WHEN n < 10 THEN n END), 0) * 10000 // SUM(n) AS BIGINT)
         |  FROM g3)
         |SELECT * FROM s ORDER BY level""".stripMargin),
-    Query("data_card", 0.4, (s, dir) =>
+    Query("data_card", 0.935, (s, dir) =>
       // per-source dataset datasheet (Gebru et al. 2021): volume, per-doc
       // means, exact-dup rows (distinct content hash), mojibake and
       // under-length counts — ONE corpus scan + a |sources|-sized collapse
@@ -2520,7 +2520,7 @@ object MultimodalQueries {
         |  CAST(n_docs - nh AS BIGINT) AS exact_dup_rows,
         |  corrupt_docs, short_docs
         |FROM a JOIN d USING (source) ORDER BY source""".stripMargin),
-    Query("source_overlap", 1.8, (s, dir) =>
+    Query("source_overlap", 2.684, (s, dir) =>
       // pairwise cross-source 8-gram fingerprint overlap matrix: shared
       // distinct grams + bp share of each side — the double-count audit
       // run before mixing weights are set; per-gram source sets are
@@ -2543,7 +2543,7 @@ object MultimodalQueries {
         |  CAST(sg.shared_grams * 10000 // tb.n AS BIGINT) AS overlap_b_bp
         |FROM sg JOIN tot ta ON ta.source = sg.src_a JOIN tot tb ON tb.source = sg.src_b
         |ORDER BY src_a, src_b""".stripMargin),
-    Query("label_vote", 0.8, (s, dir) => {
+    Query("label_vote", 1.208, (s, dir) => {
       // Snorkel-style LF agreement card over the Gopher battery as 7
       // noisy keep/reject labeling functions (same plants as
       // filter_attribution so several LFs discriminate), quorum 4 of 7
@@ -2579,7 +2579,7 @@ object MultimodalQueries {
         |$unions
         |ORDER BY lf""".stripMargin
     }),
-    Query("filter_attribution", 0.9, (s, dir) => {
+    Query("filter_attribution", 1.067, (s, dir) => {
       // the ablation table behind the Gopher gate, over a corpus planted
       // so more than two rules discriminate: %41 gains seven '###' tokens
       // (symbol gate: 10000·7/n just over the 1000 bp line), %43 ten
@@ -2621,7 +2621,7 @@ object MultimodalQueries {
         |  CAST((10000 * n_unique_fail) // n_docs AS BIGINT) AS unique_fail_bp
         |FROM u ORDER BY rule""".stripMargin
     }),
-    Query("stats_drift", 1.0, (s, dir) => {
+    Query("stats_drift", 1.466, (s, dir) => {
       // batch-over-batch drift gate: the %5 slice is the NEW batch and
       // its %35 docs (⊂ %5) gain the mojibake artifact, so the corruption
       // delta registers against a clean old side
@@ -2672,7 +2672,7 @@ object MultimodalQueries {
         |  CAST(old_corrupt_bp AS BIGINT) AS old_corrupt_bp, CAST(new_corrupt_bp AS BIGINT) AS new_corrupt_bp,
         |  CAST(new_corrupt_bp - old_corrupt_bp AS BIGINT) AS corrupt_delta_bp
         |FROM f ORDER BY source""".stripMargin),
-    Query("snapshot_diff", 0.55, (s, dir) => {
+    Query("snapshot_diff", 0.67, (s, dir) => {
       // content-addressed snapshot audit: old = %5≠0 slice of the
       // original table, new = %11≠0 slice with the %7 docs edited — all
       // four statuses populate (added %5=0∧%11≠0, removed %11=0∧%5≠0,
@@ -2698,7 +2698,7 @@ object MultimodalQueries {
         |t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS tot FROM a)
         |SELECT status, n_docs, CAST((10000 * n_docs) // tot AS BIGINT) AS share_bp
         |FROM a CROSS JOIN t ORDER BY status""".stripMargin),
-    Query("stats_mad", 0.55, (s, dir) => {
+    Query("stats_mad", 0.657, (s, dir) => {
       // robust spread per source: exact nearest-rank median, then the
       // median of absolute deviations from it — the outlier-immune
       // spread a length-anomaly gate thresholds on (stddev is dragged
@@ -2733,7 +2733,7 @@ object MultimodalQueries {
         |        WHERE rn = (n * 5000 + 9999) // 10000)
         |SELECT med.source, median, mad FROM med JOIN mad USING (source)
         |ORDER BY med.source""".stripMargin),
-    Query("stats_outliers", 1.0, (s, dir) => {
+    Query("stats_outliers", 0.912, (s, dir) => {
       // the Hampel identifier the MAD exists FOR: per source, flag docs
       // with |len − median| > 3·MAD (integer threshold — the 1.4826
       // normal-consistency float is a calibration constant, not a
@@ -2777,7 +2777,7 @@ object MultimodalQueries {
         |  CAST(SUM(CASE WHEN d.adev > 3 * mad.mad THEN 1 ELSE 0 END) * 10000 // COUNT(*) AS BIGINT) AS flagged_bp
         |FROM d JOIN mad USING (source)
         |GROUP BY 1, 2, 3 ORDER BY d.source""".stripMargin),
-    Query("stats_quantiles", 0.35, (s, dir) =>
+    Query("stats_quantiles", 0.432, (s, dir) =>
       // exact discrete length quantiles per source (nearest-rank, pure
       // integer rank arithmetic — no approx sketch, no interpolation)
       graft.ops.Stats.quantilesDisc(Tables.documents(s, dir), Seq("source"),
@@ -2791,7 +2791,7 @@ object MultimodalQueries {
         |SELECT source, CAST(q_bp AS INT) AS q_bp, v AS value FROM q
         |WHERE rn = (n * q_bp + 9999) // 10000
         |ORDER BY source, q_bp""".stripMargin),
-    Query("quantile_sketch", 0.50, (s, dir) =>
+    Query("quantile_sketch", 0.553, (s, dir) =>
       // mergeable histogram-sketch quantiles (the t-digest-shaped scale
       // path: bounded integer state, merge-order-free) — binWidth=100
       // over doc lengths
@@ -2807,7 +2807,7 @@ object MultimodalQueries {
         |FROM q
         |WHERE cum >= (n * q_bp + 9999) // 10000 AND cum - cnt < (n * q_bp + 9999) // 10000
         |ORDER BY source, q_bp""".stripMargin),
-    Query("zorder_key", 0.17, (s, dir) =>
+    Query("zorder_key", 0.363, (s, dir) =>
       // Morton-interleaved layout key over (length, id-bucket): the sort
       // key that makes min/max file stats prune BOTH dimensions
       Tables.documents(s, dir)
@@ -2816,7 +2816,7 @@ object MultimodalQueries {
       // the SAME generated bit-interleave expression text runs in both
       // dialects — one derivation, zero drift
       s"SELECT doc_id, ${graft.ops.ZOrder.zKeySql("n_chars", "doc_id % 1024", 16)} AS zkey FROM documents ORDER BY doc_id"),
-    Query("layout_skipping", 0.5, (s, dir) => {
+    Query("layout_skipping", 0.676, (s, dir) => {
       // the zorder claim as a NUMBER: bucket the corpus two ways —
       // z-prefix cells (a Morton prefix IS a quadtree cell, so bucketing
       // is map-only, no sort) vs insertion-order id ranges — and count
@@ -2857,7 +2857,7 @@ object MultimodalQueries {
         |SELECT 'insertion' AS layout, n_buckets, n_pruned,
         |  CAST(n_pruned * 10000 // n_buckets AS BIGINT) AS pruned_bp FROM ic
         |ORDER BY layout""".stripMargin),
-    Query("inverted_index", 0.57, (s, dir) => {
+    Query("inverted_index", 1.734, (s, dir) => {
       // posting-list construction: distinct (term, doc) → df + the first 8
       // postings per frequent term (df ≥ 25), numerically ordered
       val t = Tables.documents(s, dir)
@@ -2880,7 +2880,7 @@ object MultimodalQueries {
         |          string_agg(CASE WHEN rn <= 8 THEN CAST(doc_id AS VARCHAR) END, ',' ORDER BY doc_id) AS postings
         |        FROM tt GROUP BY term)
         |SELECT term, df, postings FROM agg WHERE df >= 25 ORDER BY term""".stripMargin),
-    Query("multimodal_resize", 0.23, (s, dir) =>
+    Query("multimodal_resize", 0.333, (s, dir) =>
       // aspect-fit resize geometry into a 224×224 box over the shared
       // synthetic media dims
       Multimodal.resizePlan(
@@ -2896,7 +2896,7 @@ object MultimodalQueries {
         |  CAST((224 - greatest(1, CASE WHEN width * 224 >= height * 224 THEN 224 ELSE (width * 224) // height END)) // 2 AS INT) AS pad_x,
         |  CAST((224 - greatest(1, CASE WHEN width * 224 >= height * 224 THEN (height * 224) // width ELSE 224 END)) // 2 AS INT) AS pad_y
         |FROM m ORDER BY media_id""".stripMargin),
-    Query("curation_percentile", 0.35, (s, dir) => {
+    Query("curation_percentile", 0.918, (s, dir) => {
       // cross-source score calibration: quality_score → per-source
       // percentile in bp, so one global "bottom 20%" gate means the
       // same thing under every source's score distribution
@@ -2931,7 +2931,7 @@ object MultimodalQueries {
         |SELECT doc_id, source, quality_score, rnk,
         |  CAST((10000 * (rnk - 1)) // n AS BIGINT) AS pct_below_bp
         |FROM r ORDER BY doc_id""".stripMargin),
-    Query("text_watermark", 0.25, (s, dir) =>
+    Query("text_watermark", 2.24, (s, dir) =>
       // green-list watermark screen: per doc, the green-bigram rate
       // (parity of the canonical 60-bit md5 word over each bigram) in
       // bp vs the ~5000 natural baseline; one map-only fold per doc
@@ -2950,7 +2950,7 @@ object MultimodalQueries {
         |  CAST(CASE WHEN n_bigrams = 0 THEN 0 ELSE (10000 * greens) // n_bigrams END AS BIGINT) AS green_bp,
         |  CAST(CASE WHEN n_bigrams > 0 AND (10000 * greens) // n_bigrams >= 5800 THEN 1 ELSE 0 END AS BIGINT) AS suspected
         |FROM b ORDER BY doc_id""".stripMargin),
-    Query("text_ttr", 0.4, (s, dir) =>
+    Query("text_ttr", 0.686, (s, dir) =>
       // lexical-diversity card: per-source type-token ratio + hapax
       // share in bp — the vocabulary-collapse detector for synthetic/
       // templated corpora; the shuffle carries the vocab, never the
@@ -2967,7 +2967,7 @@ object MultimodalQueries {
         |  CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
         |  CAST((10000 * SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)) // COUNT(*) AS BIGINT) AS hapax_bp
         |FROM tc GROUP BY source ORDER BY source""".stripMargin),
-    Query("text_stats_by_source", 0.30, (s, dir) =>
+    Query("text_stats_by_source", 0.436, (s, dir) =>
       Tables.documents(s, dir)
         .withColumn("_t", trim(regexp_replace(col("text"), "\\s+", " ")))
         .groupBy(col("source"))

@@ -26,14 +26,14 @@ object NormalizationQueries {
   private val DuckNormalizeDoi = duckDoiNorm("doi_raw")
 
   val all: Seq[Query] = Seq(
-    Query("doi_normalize", 0.13, (s, dir) =>
+    Query("doi_normalize", 0.407, (s, dir) =>
       Tables.documents(s, dir)
         .withColumn("doi_raw", expr(DoiRawSql))
         .select(col("doc_id"), Norm.normalizeDoi(col("doi_raw")).as("doi_norm"))
         .orderBy(col("doc_id")),
       s"""WITH d AS (SELECT doc_id, $DoiRawSql AS doi_raw FROM documents)
          |SELECT doc_id, $DuckNormalizeDoi AS doi_norm FROM d ORDER BY doc_id""".stripMargin),
-    Query("normalize_funnel", 0.12, (s, dir) =>
+    Query("normalize_funnel", 0.663, (s, dir) =>
       Tables.documents(s, dir)
         .withColumn("doi_raw", expr(DoiRawSql))
         .withColumn("journal_raw", expr(JournalRawSql))
@@ -48,7 +48,7 @@ object NormalizationQueries {
          |  nullif(trim(regexp_replace(regexp_replace(journal_raw, '[{}]', '', 'g'), ' +', ' ', 'g')), '') AS journal_clean,
          |  nullif(trim(regexp_replace(regexp_replace(substring(text, 1, 40), '[{}]', '', 'g'), ' +', ' ', 'g')), '') AS title_clean
          |FROM d ORDER BY doc_id""".stripMargin),
-    Query("doc_id_derive", 0.16, (s, dir) =>
+    Query("doc_id_derive", 0.476, (s, dir) =>
       Tables.documents(s, dir)
         .withColumn("doi_raw", expr(DoiRawSql))
         .withColumn("doi_norm",
@@ -63,7 +63,7 @@ object NormalizationQueries {
          |  CASE WHEN doi_norm IS NOT NULL THEN doi_norm
          |       ELSE 'hash:' || substring(sha256(substring(text, 1, 30) || '|' || upper(source)), 1, 16) END AS doc_key
          |FROM n ORDER BY doc_id""".stripMargin),
-    Query("json_roundtrip", 0.42, (s, dir) => {
+    Query("json_roundtrip", 0.47, (s, dir) => {
       // K1/K2 as a correctness gate, not just a side effect: a documents
       // slice goes OUT through the JSONL sink and comes back via a
       // schema-pinned read; the oracle replays the selection straight from
@@ -81,7 +81,7 @@ object NormalizationQueries {
     },
       """SELECT doc_id, source, lang, text FROM documents
         |WHERE doc_id % 13 = 0 ORDER BY doc_id""".stripMargin),
-    Query("pmcid_canonical", 0.15, (s, dir) =>
+    Query("pmcid_canonical", 0.297, (s, dir) =>
       // P9 over a synthesized raw-id funnel covering the forms the
       // reference's idconv responses carry (sources/pmc.py:162,245-251):
       // canonical "PMC<digits>", lowercase, bare digits, padded
@@ -103,7 +103,7 @@ object NormalizationQueries {
         |SELECT doc_id, pmcid_raw,
         |       'PMC' || regexp_replace(pmcid_raw, '[^0-9]', '', 'g') AS pmcid
         |FROM r ORDER BY doc_id""".stripMargin),
-    Query("html_unescape", 0.22, (s, dir) => {
+    Query("html_unescape", 0.318, (s, dir) => {
       // P10 (sources/springer.py:108-116): multi-round entity unescape to
       // fixpoint over a synthesized escaped-payload funnel — named core
       // set, double-escaped nesting, decimal and hex numeric references.
@@ -144,13 +144,13 @@ object NormalizationQueries {
         |u3 AS (SELECT doc_id, raw, replace(replace(replace(replace(replace(replace(replace(s2,
         |         '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&apos;', ''''), '&#x3C;', '<'), '&#38;', '&'), '&amp;', '&') AS s3 FROM u2)
         |SELECT doc_id, raw, s3 AS unescaped FROM u3 ORDER BY doc_id""".stripMargin),
-    Query("dedup_exact", 0.21, (s, dir) =>
+    Query("dedup_exact", 0.381, (s, dir) =>
       Dedup.exact(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id")),
       """SELECT doc_id, md5(text) AS text_hash,
         |  MIN(doc_id) OVER (PARTITION BY md5(text)) AS canonical_id,
         |  CASE WHEN doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text)) THEN 1 ELSE 0 END AS is_dup
         |FROM documents ORDER BY doc_id""".stripMargin),
-    Query("filter_min_fulltext", 0.14, (s, dir) =>
+    Query("filter_min_fulltext", 0.303, (s, dir) =>
       Tables.documents(s, dir)
         .filter(Norm.minFulltextChars(col("text"), 200))
         .select(col("doc_id"), length(col("text")).cast("long").as("body_len"))

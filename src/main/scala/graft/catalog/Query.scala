@@ -8,12 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * @param name   the row's key in the driver contract
   *               (`SparkEntry.queries` / `SparkEntry.oracleSql`)
-  * @param anchor the row's pinned bench time in seconds at sf0.1,
-  *               local[32], on a quiet host (BASELINE.md). `graft.Bench`
-  *               gates each sf0.1 measurement at 2x this figure and
-  *               reports the run's drift against it. It changes ONLY
-  *               with a BASELINE.md re-pin, in the same change, which
-  *               records the old and new value.
+  * @param anchor the row's pinned bench time in seconds: the median of
+  *               the `noop`-sink reps [[graft.Timing]] runs at sf0.1 on
+  *               `nproc` cores (BASELINE.md). `graft.Bench` gates each
+  *               sf0.1 median at 2x this figure. It changes ONLY with a
+  *               BASELINE.md re-pin, in the same change, which records
+  *               the old and new value.
   * @param build  the query over the tables of an sf dir
   * @param oracle the DuckDB SQL whose result the query must match exactly,
   *               over the same tables, columns and order keys. Evaluated

@@ -9,7 +9,7 @@ import graft.io.Tables
 object RelationalQueries {
 
   val all: Seq[Query] = Seq(
-    Query("q1_agg", 0.45, (s, dir) => {
+    Query("q1_agg", 1.002, (s, dir) => {
       Tables.lineitem(s, dir)
         .filter(expr("l_shipdate < TIMESTAMP_NTZ '1998-09-03 00:00:00'"))
         .withColumn("qty_c", expr("cast(round(l_quantity * 100) as bigint)"))
@@ -40,7 +40,7 @@ object RelationalQueries {
         |  CAST(SUM(price_c*(100-disc_c)*(100+tax_c)) AS BIGINT) AS sum_charge_c6,
         |  CAST(SUM(qty_c) // COUNT(*) AS BIGINT) AS avg_qty_c
         |FROM c GROUP BY 1,2 ORDER BY 1,2""".stripMargin),
-    Query("q3_top_orders", 0.68, (s, dir) => {
+    Query("q3_top_orders", 1.238, (s, dir) => {
       val li = Tables.lineitem(s, dir)
         .withColumn("price_c", expr("cast(round(l_extendedprice * 100) as bigint)"))
         .withColumn("disc_c", expr("cast(round(l_discount * 100) as bigint)"))
@@ -58,7 +58,7 @@ object RelationalQueries {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderstatus = 'O'
         |GROUP BY o_orderkey ORDER BY revenue_c4 DESC, o_orderkey LIMIT 10""".stripMargin),
-    Query("q5_revenue_nation", 0.96, (s, dir) => {
+    Query("q5_revenue_nation", 1.949, (s, dir) => {
       val li = Tables.lineitem(s, dir)
         .withColumn("price_c", expr("cast(round(l_extendedprice * 100) as bigint)"))
         .withColumn("disc_c", expr("cast(round(l_discount * 100) as bigint)"))
@@ -85,7 +85,7 @@ object RelationalQueries {
         |JOIN region ON n_regionkey = r_regionkey
         |WHERE r_regionkey < 3
         |GROUP BY n_name ORDER BY n_name""".stripMargin),
-    Query("q6_running_window", 1.07, (s, dir) => {
+    Query("q6_running_window", 2.28, (s, dir) => {
       val w = Window.partitionBy(col("l_suppkey"))
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
       Tables.lineitem(s, dir)
@@ -103,7 +103,7 @@ object RelationalQueries {
         |  FROM lineitem)
         |SELECT l_suppkey, rn, qty_c, running_qty_c FROM w WHERE rn <= 20
         |ORDER BY l_suppkey, rn""".stripMargin),
-    Query("q7_distinct_agg", 0.26, (s, dir) =>
+    Query("q7_distinct_agg", 1.353, (s, dir) =>
       Tables.lineitem(s, dir)
         .groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_suppkey")).as("n_supps"),
@@ -113,7 +113,7 @@ object RelationalQueries {
       """SELECT l_returnflag, COUNT(DISTINCT l_suppkey) AS n_supps,
         |  COUNT(DISTINCT l_partkey) AS n_parts, COUNT(*) AS n_rows
         |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
-    Query("q8_rollup", 0.41, (s, dir) =>
+    Query("q8_rollup", 1.09, (s, dir) =>
       Tables.lineitem(s, dir)
         .withColumn("qty_c", expr("cast(round(l_quantity * 100) as bigint)"))
         .rollup(col("l_returnflag"), col("l_linestatus"))
@@ -128,7 +128,7 @@ object RelationalQueries {
         |  COUNT(*) AS n
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
         |ORDER BY 1, 2""".stripMargin),
-    Query("q10_above_avg", 0.82, (s, dir) => {
+    Query("q10_above_avg", 1.123, (s, dir) => {
       // decorrelated form of: orders above their customer's average price
       val o = Tables.orders(s, dir)
         .withColumn("price_c", expr("cast(round(o_totalprice * 100) as bigint)"))
@@ -144,7 +144,7 @@ object RelationalQueries {
         |  (SELECT CAST(SUM(CAST(ROUND(o2.o_totalprice*100) AS BIGINT)) // COUNT(*) AS BIGINT)
         |   FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
         |GROUP BY 1 ORDER BY 1""".stripMargin),
-    Query("q11_pivot", 0.21, (s, dir) =>
+    Query("q11_pivot", 0.677, (s, dir) =>
       // pivot = groupBy + explicit value list (never value-discovery, which
       // costs an extra distinct job and nondeterministic column order):
       // order counts and cents revenue per priority × status
@@ -166,7 +166,7 @@ object RelationalQueries {
         |  COUNT(*) FILTER (o_orderstatus = 'P') AS p_n,
         |  coalesce(CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) FILTER (o_orderstatus = 'P') AS BIGINT), 0) AS p_rev_c
         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
-    Query("q15_grouping_sets", 0.5, (s, dir) =>
+    Query("q15_grouping_sets", 0.994, (s, dir) =>
       // ARBITRARY grouping sets — the general form rollup/cube are
       // special cases of: {(returnflag), (linestatus), ()} in ONE Expand
       // pass, where a union of three aggregates would scan three times
@@ -188,7 +188,7 @@ object RelationalQueries {
         |  COUNT(*) AS n
         |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         |ORDER BY gid, 1, 2""".stripMargin),
-    Query("q12_cube", 0.55, (s, dir) =>
+    Query("q12_cube", 1.241, (s, dir) =>
       // full cube over (returnflag, linestatus) with the grouping-set id
       // exposed — all four grouping sets in ONE pass (Expand, not a union
       // of four aggregates)
@@ -211,7 +211,7 @@ object RelationalQueries {
         |  COUNT(*) AS n
         |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
         |ORDER BY 1, 2, gid""".stripMargin),
-    Query("topk_per_key", 0.76, (s, dir) => {
+    Query("topk_per_key", 1.192, (s, dir) => {
       // grouped top-k via the bounded-heap typed aggregator: the exchange
       // carries ≤ keys×k rows per input partition (map-side partials),
       // nothing is fully sorted — vs the window form that shuffles and
@@ -229,7 +229,7 @@ object RelationalQueries {
         |  FROM orders)
         |SELECT o_custkey, o_orderkey, price_c, CAST(rk AS INT) AS rank
         |FROM r WHERE rk <= 3 ORDER BY o_custkey, rank""".stripMargin),
-    Query("q13_full_outer", 0.44, (s, dir) => {
+    Query("q13_full_outer", 0.595, (s, dir) => {
       // full outer join: per-nation supplier vs customer counts, keeping
       // nations present on either side only (sentinel-coalesced keys)
       val sup = Tables.supplier(s, dir).filter(col("s_acctbal") > 5000)
@@ -249,7 +249,7 @@ object RelationalQueries {
         |SELECT nationkey, coalesce(n_sup, 0) AS n_sup, coalesce(n_cust, 0) AS n_cust
         |FROM s FULL JOIN c USING (nationkey)
         |ORDER BY nationkey""".stripMargin),
-    Query("q14_window_suite", 0.16, (s, dir) => {
+    Query("q14_window_suite", 0.541, (s, dir) => {
       // the window-function breadth pack in ONE pass over one shuffle:
       // ranking (rank/dense_rank/ntile), offset (lag/lead), and frame
       // (first/last value) functions share a single window partition
@@ -279,7 +279,7 @@ object RelationalQueries {
         |FROM orders WHERE o_custkey % 50 = 0
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey)
         |ORDER BY o_custkey, o_orderkey""".stripMargin),
-    Query("q9_setops", 0.36, (s, dir) => {
+    Query("q9_setops", 0.68, (s, dir) => {
       val docs = Tables.documents(s, dir)
       val longDocs = docs.filter(length(col("text")) >= 200).select("doc_id")
       val seen = docs.filter(col("doc_id") % 5 === 0).select("doc_id")
@@ -293,7 +293,7 @@ object RelationalQueries {
         |UNION ALL
         |SELECT doc_id, 'intersect' AS op FROM (SELECT doc_id FROM ld INTERSECT SELECT doc_id FROM sn)
         |ORDER BY op, doc_id""".stripMargin),
-    Query("q4_order_priority", 0.45, (s, dir) => {
+    Query("q4_order_priority", 0.633, (s, dir) => {
       val big = Tables.lineitem(s, dir).filter(col("l_quantity") > 45).select("l_orderkey")
       Tables.orders(s, dir)
         .join(big, col("o_orderkey") === col("l_orderkey"), "left_semi")

@@ -101,7 +101,7 @@ object TextQueries {
       |       LEFT JOIN hits h ON h.doc_id = n2.doc_id AND h.cls = nm.cls)""".stripMargin
 
   val all: Seq[Query] = Seq(
-    Query("text_langid", 0.15, (s, dir) =>
+    Query("text_langid", 1.508, (s, dir) =>
       TextAnalysis.langId(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id")),
       """SELECT doc_id, lang AS labeled_lang,
         |  CAST(len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is','that'], t))) AS BIGINT) AS s_en,
@@ -142,7 +142,7 @@ object TextQueries {
         |       ELSE 'zh' END AS predicted_lang
         |FROM (SELECT doc_id, lang, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents)
         |ORDER BY doc_id""".stripMargin),
-    Query("text_quality", 0.17, (s, dir) =>
+    Query("text_quality", 1.067, (s, dir) =>
       TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id")),
       """WITH q AS (SELECT doc_id,
         |  trim(regexp_replace(text, '\s+', ' ', 'g')) AS t,
@@ -163,14 +163,14 @@ object TextQueries {
         |    + (CASE WHEN (10000 * stop_count) // n_tokens BETWEEN 200 AND 6000 THEN 30 ELSE 0 END)
         |    + (CASE WHEN (1000 * (n_chars_c - (n_tokens - 1))) // n_tokens BETWEEN 2500 AND 9000 THEN 30 ELSE 0 END) AS quality_score
         |FROM m ORDER BY doc_id""".stripMargin),
-    Query("text_tokens", 0.17, (s, dir) =>
+    Query("text_tokens", 0.992, (s, dir) =>
       TextAnalysis.tokenCounts(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id")),
       """WITH q AS (SELECT doc_id, trim(regexp_replace(text, '\s+', ' ', 'g')) AS t FROM documents)
         |SELECT doc_id,
         |  CAST(len(string_split(t, ' ')) AS BIGINT) AS n_ws_tokens,
         |  CAST(len(regexp_extract_all(t, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]')) AS BIGINT) AS n_bpe_tokens
         |FROM q ORDER BY doc_id""".stripMargin),
-    Query("text_fingerprint", 0.14, (s, dir) =>
+    Query("text_fingerprint", 2.007, (s, dir) =>
       TextAnalysis.fingerprint(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id")),
       """WITH t AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks FROM documents)
         |SELECT doc_id,
@@ -178,7 +178,7 @@ object TextQueries {
         |    THEN list_min(list_transform(generate_series(0, len(toks) - 5), i -> md5(array_to_string(list_slice(toks, i + 1, i + 5), ' '))))
         |    ELSE md5(array_to_string(toks, ' ')) END AS fingerprint
         |FROM t ORDER BY doc_id""".stripMargin),
-    Query("text_winnowing", 0.35, (s, dir) =>
+    Query("text_winnowing", 0.74, (s, dir) =>
       // winnowed fingerprint sets (Schleimer et al. 2003): every w-window
       // of k-gram hashes contributes its rightmost min, so any shared
       // >= k+w-1-token substring is guaranteed a shared fingerprint —
@@ -191,7 +191,7 @@ object TextQueries {
       // (list_distinct), compared exploded and sorted
       s"""WITH ${duckWinnowCtes("documents")}
         |SELECT doc_id, pos, fp FROM wfp ORDER BY doc_id, pos""".stripMargin),
-    Query("dedup_winnow", 1.73, (s, dir) => {
+    Query("dedup_winnow", 1.86, (s, dir) => {
       // partial-overlap candidate pairs from the winnow inverted index:
       // posting-capped fingerprint join (boilerplate-hot grams dropped, the
       // LSH-cap idiom), pairs confirmed by >= 2 shared fingerprints —
@@ -212,7 +212,7 @@ object TextQueries {
         |          JOIN wkeep k ON k.fp = a.fp)
         |SELECT id_a, id_b, CAST(COUNT(*) AS BIGINT) AS n_shared
         |FROM wpair GROUP BY 1, 2 HAVING COUNT(*) >= 2 ORDER BY id_a, id_b""".stripMargin),
-    Query("dedup_winnow_incremental", 0.59, (s, dir) => {
+    Query("dedup_winnow_incremental", 1.14, (s, dir) => {
       // the crawl-increment partial-overlap probe: the %5 batch
       // fingerprints itself and joins the PERSISTED posting index (two
       // bucketed scans, zero corpus re-fingerprinting) — dedup_incremental
@@ -239,7 +239,7 @@ object TextQueries {
         |GROUP BY 1, 2 HAVING COUNT(*) >= 1 ORDER BY new_id, corpus_id""".stripMargin,
       // the winnow-overlap probe amortizes the persisted posting index
       prep = Some(ensureWinnowIndex(_, _))),
-    Query("dedup_winnow_tuned", 1.9, (s, dir) => {
+    Query("dedup_winnow_tuned", 1.606, (s, dir) => {
       // the winnow family's production TUNING posture (r15 verdict task
       // 4, the dedup_lsh_curve_tuned move): the posting-cap operating
       // point is chosen from a posting-df curve over the signature-
@@ -282,7 +282,7 @@ object TextQueries {
         |  coalesce(pr.n_pairs, 0) AS n_pairs, coalesce(pr.shared_total, 0) AS shared_total
         |FROM tiers t LEFT JOIN vol v USING (max_posting) LEFT JOIN pr USING (max_posting)
         |ORDER BY t.max_posting""".stripMargin),
-    Query("text_mojibake", 0.18, (s, dir) => {
+    Query("text_mojibake", 1.008, (s, dir) => {
       // encoding-corruption gate: the synthetic corpus is clean ASCII, so
       // a deterministic slice (%7) gets a planted double-encoding suffix
       // (the multimodal synthesize-then-operate idiom) and the detector
@@ -302,7 +302,7 @@ object TextQueries {
         |  CAST(len(regexp_extract_all(t, '${TextAnalysis.MojibakePattern}')) AS BIGINT) AS mojibake_hits,
         |  CAST(CASE WHEN len(regexp_extract_all(t, '${TextAnalysis.MojibakePattern}')) > 0 THEN 1 ELSE 0 END AS BIGINT) AS corrupt
         |FROM m ORDER BY doc_id""".stripMargin),
-    Query("text_scripts", 0.3, (s, dir) => {
+    Query("text_scripts", 1.372, (s, dir) => {
       // script-mix gate over a deterministically multilingual-ized corpus
       // (the mojibake plant discipline — the raw synthetic corpus is pure
       // ASCII): %7 gains Han, %11 Cyrillic, %13 Greek, and %19 becomes a
@@ -343,7 +343,7 @@ object TextQueries {
         |    THEN 1 ELSE 0 END AS BIGINT) AS is_mixed
         |FROM c ORDER BY doc_id""".stripMargin
     }),
-    Query("pii_luhn", 0.25, (s, dir) => {
+    Query("pii_luhn", 0.441, (s, dir) => {
       // checksum-tier card detection over planted numbers: %53 gains the
       // Luhn-valid 4111111111111111 plus a 10-digit decoy run, %59 a
       // 16-digit run that FAILS the checksum — the detector must count
@@ -381,7 +381,7 @@ object TextQueries {
         |        ELSE CAST(substring(s, CAST(i AS INT), 1) AS BIGINT) END)) % 10 = 0
         |    THEN 1 ELSE 0 END)), 0) > 0 THEN 1 ELSE 0 END AS BIGINT) AS has_card
         |FROM c ORDER BY doc_id""".stripMargin),
-    Query("text_readability", 0.25, (s, dir) =>
+    Query("text_readability", 0.942, (s, dir) =>
       // integer Flesch over the raw corpus: vowel-group syllables,
       // terminator-run sentences (floored at 1), milli-domain divisions
       TextAnalysis.readability(Tables.documents(s, dir), "doc_id", "text")
@@ -401,7 +401,7 @@ object TextQueries {
         |  CAST(CASE WHEN n_words = 0 THEN 0
         |    ELSE 206835 - (1015 * n_words) // n_sentences - (84600 * n_syllables) // n_words END AS BIGINT) AS flesch_milli
         |FROM m ORDER BY doc_id""".stripMargin),
-    Query("chat_qa", 0.3, (s, dir) =>
+    Query("chat_qa", 0.711, (s, dir) =>
       // instruction-data admission gates over synthesized conversations
       // (sentences become alternating user/assistant turns; %7 docs open
       // with the assistant, %11 docs double the opening user turn —
@@ -430,7 +430,7 @@ object TextQueries {
         |  CAST(CASE WHEN user_tokens + assistant_tokens = 0 THEN 0
         |    ELSE (10000 * assistant_tokens) // (user_tokens + assistant_tokens) END AS BIGINT) AS assistant_share_bp
         |FROM m ORDER BY doc_id""".stripMargin),
-    Query("chat_render", 0.2, (s, dir) =>
+    Query("chat_render", 0.728, (s, dir) =>
       // the same conversations rendered to the ChatML-framed training
       // string the tokenizer sees — hash-pinned bytes plus tag-free
       // token counts for packing budgets
@@ -447,7 +447,7 @@ object TextQueries {
         |  FROM ch)
         |SELECT doc_id, rendered, CAST(length(rendered) AS BIGINT) AS rendered_chars, content_tokens
         |FROM r ORDER BY doc_id""".stripMargin),
-    Query("chat_pipeline", 2.8, (s, dir) => {
+    Query("chat_pipeline", 4.924, (s, dir) => {
       // the SFT path composed as ONE job (r15 verdict task 7, the
       // instruction-tuning counterpart of curation_full's pretraining
       // funnel): structural QA gate (strict alternation, user-opening,
@@ -524,7 +524,7 @@ object TextQueries {
         |SELECT source, doc_id, rendered_chars, content_tokens,
         |  cum // 1024 AS seq_id, cum % 1024 AS seq_offset
         |FROM o ORDER BY source, doc_id""".stripMargin),
-    Query("pref_qa", 0.25, (s, dir) => {
+    Query("pref_qa", 1.071, (s, dir) => {
       // DPO-pair QA over synthesized preference pairs: chosen = first 60%
       // of chars, rejected = last 60% (overlapping windows share words, so
       // the Jaccard column carries signal); %13 pairs are identical
@@ -545,7 +545,7 @@ object TextQueries {
         |  identical,
         |  CAST(CASE WHEN uni = 0 THEN 0 ELSE (10000 * inter) // uni END AS BIGINT) AS overlap_bp
         |FROM m ORDER BY doc_id""".stripMargin),
-    Query("pref_best_of_n", 0.54, (s, dir) => {
+    Query("pref_best_of_n", 1.29, (s, dir) => {
       // rejection sampling (best-of-n) pair building: four deterministic
       // candidate "completions" per prompt (10/40/70/100% prefix slices —
       // the planted quality gradient), each scored by the SAME integer
@@ -595,7 +595,7 @@ object TextQueries {
         |  chosen_score - rejected_score AS margin,
         |  CAST(CASE WHEN chosen_score - rejected_score >= 10 THEN 1 ELSE 0 END AS BIGINT) AS kept
         |FROM b JOIN w USING (doc_id) ORDER BY b.doc_id""".stripMargin),
-    Query("pref_bias_card", 0.3, (s, dir) => {
+    Query("pref_bias_card", 0.789, (s, dir) => {
       // the one-row DPO governance card over the same synthesized pairs:
       // identical/chosen-longer/near-identical shares in bp plus the
       // signed token-delta sum
@@ -619,7 +619,7 @@ object TextQueries {
         |  CAST(sum(len_delta) AS BIGINT) AS len_delta_sum,
         |  CAST((10000 * sum(CASE WHEN overlap_bp >= 8000 THEN 1 ELSE 0 END)) // count(*) AS BIGINT) AS high_overlap_bp
         |FROM q""".stripMargin),
-    Query("code_fim", 0.2, (s, dir) =>
+    Query("code_fim", 0.378, (s, dir) =>
       // fill-in-middle at FIM-rate 1/2 over the corpus: PSM reframing at
       // the third offsets, md5-pinned output text
       TextAnalysis.fimTransform(Tables.documents(s, dir), "doc_id", "text")
@@ -642,7 +642,7 @@ object TextQueries {
         |SELECT doc_id, CAST(transformed AS BIGINT) AS transformed, n_chars,
         |  CAST(length(fim_text) AS BIGINT) AS fim_chars, md5(fim_text) AS fim_md5
         |FROM f ORDER BY doc_id""".stripMargin),
-    Query("text_novelty", 0.34, (s, dir) => {
+    Query("text_novelty", 1.568, (s, dir) => {
       // per-doc novelty of the %3 batch against the rest of the corpus as
       // reference: distinct 8-gram fingerprints, one corpus-wide reference
       // distinct, fingerprint-keyed left join — planted dups score low,
@@ -668,7 +668,7 @@ object TextQueries {
         |SELECT doc_id, n_grams, n_seen,
         |  CAST((10000 * (n_grams - n_seen)) // n_grams AS BIGINT) AS novel_bp
         |FROM j ORDER BY doc_id""".stripMargin),
-    Query("text_code_filters", 0.25, (s, dir) => {
+    Query("text_code_filters", 1.818, (s, dir) => {
       // StarCoder-family code gates over a deterministically code-ified
       // corpus (the plant discipline): %23 gains a 1200-char line (max
       // line gate), %29 an 80-char base64 blob run, %31 an auto-generated
@@ -707,7 +707,7 @@ object TextQueries {
         |  CAST(CASE WHEN max_line_len <= 1000 AND avg_line_len <= 100 AND alnum_bp >= 2500
         |    AND n_blobs = 0 AND autogen = 0 THEN 1 ELSE 0 END AS BIGINT) AS code_pass
         |FROM m ORDER BY doc_id""".stripMargin),
-    Query("text_collocations", 1.1, (s, dir) =>
+    Query("text_collocations", 1.53, (s, dir) =>
       // phrase-mining table: top-20 adjacent pairs by discounted integer
       // PMI score — ranks replay exactly because the score is a single
       // floor division in the shared (count · N · 10^4) domain
@@ -727,7 +727,7 @@ object TextQueries {
         |      WHERE n_pair >= 5)
         |SELECT w1, w2, n_pair, n_w1, n_w2, score_q FROM s
         |ORDER BY score_q DESC, w1, w2 LIMIT 20""".stripMargin),
-    Query("text_lm_score", 0.55, (s, dir) =>
+    Query("text_lm_score", 2.148, (s, dir) =>
       // CCNet-tier fluency scoring: self-trained bigram LM, integer
       // conditional-probability mean (log-free for cross-engine replay)
       TextAnalysis.lmScore(Tables.documents(s, dir), "doc_id", "text").orderBy(col("doc_id")),
@@ -735,7 +735,7 @@ object TextQueries {
       // Laplace-smoothed arithmetic (10000·(c2+1) // (c1+V), integer mean)
       s"""WITH ${duckLmCtes("documents")}
         |SELECT doc_id, n_bigrams, lm_bp FROM lms ORDER BY 1""".stripMargin),
-    Query("text_lm_kn", 1.1, (s, dir) =>
+    Query("text_lm_kn", 3.014, (s, dir) =>
       // the KenLM-family smoothing beside the Laplace tier: interpolated
       // Kneser–Ney with the canonical d = 3/4 carried as an exact
       // rational — continuation probability is the signal Laplace can't
@@ -757,7 +757,7 @@ object TextQueries {
         |    CAST(SUM(kn_bp) // COUNT(*) AS BIGINT) AS kn_bp
         |  FROM lbg2 JOIN knp USING (w1, w2) GROUP BY 1)
         |SELECT doc_id, n_bigrams, kn_bp FROM kms ORDER BY 1""".stripMargin),
-    Query("text_gopher_rules", 0.25, (s, dir) => {
+    Query("text_gopher_rules", 1.558, (s, dir) => {
       // Gopher rule battery (rule booleans as 0/1 for hash-stable parity)
       val rules = Seq("r_word_count", "r_word_len", "r_symbol", "r_bullet",
         "r_ellipsis", "r_alpha", "r_stop", "gopher_pass")
@@ -781,7 +781,7 @@ object TextQueries {
         |    AND symbol_bp <= 1000 AND bullet_bp <= 9000 AND ellipsis_bp <= 3000
         |    AND alpha_bp >= 8000 AND stop_hits >= 2 AS BIGINT) AS gopher_pass
         |FROM gm ORDER BY doc_id""".stripMargin),
-    Query("mix_ccnet", 1.4, (s, dir) => {
+    Query("mix_ccnet", 2.703, (s, dir) => {
       // CCNet's head/middle/tail mixture (Wenzek et al. 2019 §4.3): per
       // source, tertile buckets of the LM fluency score — head = the most
       // fluent third of THAT source's distribution (per-source nearest-
@@ -819,7 +819,7 @@ object TextQueries {
         |      FROM j JOIN th USING (source))
         |SELECT source, bucket, CAST(COUNT(*) AS BIGINT) AS n, MIN(lm_bp) AS min_bp, MAX(lm_bp) AS max_bp
         |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("curation_dsir", 0.93, (s, dir) => {
+    Query("curation_dsir", 1.219, (s, dir) => {
       // DSIR importance resampling (Xie et al. 2023): hashed-bigram
       // target-vs-raw likelihood ratios in the exact fixed-point log2
       // domain; top-100 raw documents most target-like. Two corpus
@@ -836,7 +836,7 @@ object TextQueries {
       // ratio weights — only the shift spelling differs by dialect, so
       // every score is an integer both engines agree on
       duckDsirSql(corpusPred = "TRUE", scorePred = "TRUE", k = 100)),
-    Query("classify_nb", 1.6, (s, dir) => {
+    Query("classify_nb", 2.444, (s, dir) => {
       // the classifier tier of the curation stack: multinomial Naive
       // Bayes (log-prior + likelihood, all exact-integer log2) over
       // hashed bigrams — bounded state (classes × 8192 counts + one doc
@@ -860,7 +860,7 @@ object TextQueries {
         |pred AS (SELECT doc_id, source, cls AS predicted FROM (
         |    SELECT sc.*, row_number() OVER (PARTITION BY doc_id ORDER BY score_q DESC, cls) AS rn FROM sc) WHERE rn = 1)
         |SELECT source, predicted, COUNT(*) AS n FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    Query("classify_nb_pr", 1.8, (s, dir) => {
+    Query("classify_nb_pr", 2.444, (s, dir) => {
       // classifier CALIBRATION: the one-vs-rest margin threshold sweep
       // for class src7 over the same held-out slice — per score band the
       // cumulative tp/fp and precision/recall in bp, i.e. the table a
@@ -894,7 +894,7 @@ object TextQueries {
         |  CAST(10000 * tp // (tp + fp) AS BIGINT) AS precision_bp,
         |  CAST(10000 * tp // greatest(np, 1) AS BIGINT) AS recall_bp
         |FROM cum, prt ORDER BY band""".stripMargin),
-    Query("dsir_incremental", 0.41, (s, dir) => {
+    Query("dsir_incremental", 0.695, (s, dir) => {
       // the crawl-increment form of curation_dsir: weights built ONCE
       // over the persisted corpus slice (bench prep amortizes it, same
       // as the minhash/IVF artifacts), each new batch scored against the
@@ -911,7 +911,7 @@ object TextQueries {
       duckDsirSql(corpusPred = "doc_id % 5 <> 0", scorePred = "doc_id % 5 = 0", k = 100),
       // the increment-scoring probe amortizes the persisted weight table
       prep = Some(ensureDsirWeights(_, _))),
-    Query("text_c4_lines", 0.16, (s, dir) => {
+    Query("text_c4_lines", 2.063, (s, dir) => {
       // C4 page/line heuristics (map-only array-expression pass). The
       // synthetic corpus is single-line prose with no sentence
       // punctuation, so the rules would be degenerate on it; like the
@@ -956,7 +956,7 @@ object TextQueries {
         |  array_to_string(kept_lines, chr(10)) AS clean_text,
         |  CAST(len(kept_lines) >= 3 AND NOT has_brace AND NOT has_lorem AS BIGINT) AS c4_kept
         |FROM k ORDER BY doc_id""".stripMargin),
-    Query("curation_rules", 3.2, (s, dir) => {
+    Query("curation_rules", 4.359, (s, dir) => {
       // rule-first curation as ONE job: Gopher battery (corpus-tuned
       // subset — the 8-word stop-list rule is off for this synthetic
       // corpus, minWords relaxed to 20) → self-trained LM fluency floor

@@ -268,7 +268,7 @@ object VectorQueries {
   }
 
   val all: Seq[Query] = Seq(
-    Query("knn_cosine", 0.31, (s, dir) => {
+    Query("knn_cosine", 0.411, (s, dir) => {
       // the declared EXACT tier: brute-force over the corpus with the
       // (small) query side broadcast — deliberately O(corpus × queries),
       // kept as the 100%-recall baseline the ANN paths (ann_lsh/ann_ivf/
@@ -281,7 +281,7 @@ object VectorQueries {
         .orderBy(col("query_id"), col("rank"))
     },
       duckKnnSql()),
-    Query("ann_sq8", 0.54, (s, dir) => {
+    Query("ann_sq8", 0.867, (s, dir) => {
       // search over the COMPRESSED store: top-10 cosine runs entirely on
       // SQ8-dequantized vectors (the 4× storage tier the int8 row pins),
       // with an in_exact flag against the float brute-force truth — so
@@ -322,7 +322,7 @@ object VectorQueries {
         |  CAST(CASE WHEN ex.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS in_exact
         |FROM rsq r LEFT JOIN ex ON ex.query_id = r.qid AND ex.neighbor_id = r.vec_id
         |WHERE r.rank <= 10 ORDER BY query_id, rank""".stripMargin),
-    Query("search_mmr", 0.4, (s, dir) => {
+    Query("search_mmr", 0.849, (s, dir) => {
       // diversity-aware retrieval (Maximal Marginal Relevance): top-20
       // brute-force candidates per query, then the greedy λ=0.5 tradeoff
       // picks 5 that are relevant AND mutually non-redundant. The greedy
@@ -336,7 +336,7 @@ object VectorQueries {
         .orderBy(col("query_id"), col("mmr_rank"))
     },
       duckMmrSql(candK = 20, selectK = 5, lambdaBp = 5000)),
-    Query("vector_upsert", 0.34, (s, dir) => {
+    Query("vector_upsert", 0.466, (s, dir) => {
       val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("label"))
       val updates = emb.filter(col("vec_id") % 10 === 0)
         .withColumn("label", col("label") + 100)
@@ -344,7 +344,7 @@ object VectorQueries {
     },
       """SELECT vec_id, CASE WHEN vec_id % 10 = 0 THEN label + 100 ELSE label END AS label
         |FROM embeddings ORDER BY vec_id""".stripMargin),
-    Query("ann_lsh", 0.90, (s, dir) =>
+    Query("ann_lsh", 1.263, (s, dir) =>
       Similarity.annCosineLsh(Tables.embeddings(s, dir), "vec_id", "embedding",
         queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10, dim = 64)
         .orderBy(col("query_id"), col("rank")),
@@ -371,7 +371,7 @@ object VectorQueries {
          |ranked AS (SELECT query_id, neighbor_id, CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rank FROM resc)
          |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 10
          |ORDER BY query_id, rank""".stripMargin),
-    Query("ann_ivf", 1.28, (s, dir) => {
+    Query("ann_ivf", 0.779, (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = graft.ops.Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
       graft.ops.Ivf.search(emb, "vec_id", "embedding", model,
@@ -379,7 +379,7 @@ object VectorQueries {
         .orderBy(col("query_id"), col("rank"))
     },
       duckIvfSearchSql()),
-    Query("ann_nprobe_curve", 2.4, (s, dir) => {
+    Query("ann_nprobe_curve", 2.2, (s, dir) => {
       // the IVF tuning curve — recall@10 vs nprobe ∈ {1,2,4} against the
       // pinned brute-force truth: the operating table an index's probe
       // budget is chosen from (classify_nb_pr's analogue for the ANN
@@ -428,7 +428,7 @@ object VectorQueries {
           |${unions.mkString("\nUNION ALL\n")}
           |ORDER BY nprobe""".stripMargin
       }),
-    Query("mix_topic", 1.3, (s, dir) => {
+    Query("mix_topic", 0.93, (s, dir) => {
       // topic-balanced mixing (the diversity-sampling step of the D4/DCLM
       // recipe family): IVF cells are the topics, each capped at a
       // deterministic-hash-order quota — the semantic analogue of
@@ -460,7 +460,7 @@ object VectorQueries {
         |SELECT CAST(cid AS INT) AS cluster, vec_id, n_cell, pick_rank,
         |  CAST(pick_rank <= $MixTopicQuota AS BIGINT) AS kept
         |FROM tr ORDER BY cluster, pick_rank""".stripMargin),
-    Query("mine_bitext", 2.37, (s, dir) => {
+    Query("mine_bitext", 2.93, (s, dir) => {
       // margin-based bitext mining (Artetxe & Schwenk 2019, the LASER /
       // CCMatrix parallel-corpus recipe): vec_id parity splits the space
       // into two "languages"; pairs are scored by the ratio margin
@@ -484,7 +484,7 @@ object VectorQueries {
         |      FROM a CROSS JOIN b),
         |pp AS (SELECT * FROM p WHERE q > 0),
         |${duckBitextTail()}""".stripMargin),
-    Query("mine_bitext_cell", 2.6, (s, dir) => {
+    Query("mine_bitext_cell", 2.22, (s, dir) => {
       // the blocked 100 TB posture of mine_bitext: both sides assigned to
       // the shared 8-cell IVF codebook (ann_ivf's train), pairs form
       // within cells only — the A x B pass becomes a bounded-key
@@ -512,7 +512,7 @@ object VectorQueries {
         |      FROM a JOIN b ON a.cid = b.cid),
         |pp AS (SELECT * FROM p WHERE q > 0),
         |${duckBitextTail()}""".stripMargin),
-    Query("mine_bitext_auto", 3.1, (s, dir) => {
+    Query("mine_bitext_auto", 2.852, (s, dir) => {
       // the production posture the r13 sf3 audit forced: at FIXED 8
       // cells the within-cell bitext pair volume is quadratic (measured
       // 1.55/decade at the sf3 asymptote); Ivf.autoK bounds the expected
@@ -541,7 +541,7 @@ object VectorQueries {
         |      FROM a JOIN b ON a.cid = b.cid),
         |pp AS (SELECT * FROM p WHERE q > 0),
         |${duckBitextTail()}""".stripMargin),
-    Query("mine_bitext_scale", 3.6, (s, dir) => {
+    Query("mine_bitext_scale", 2.541, (s, dir) => {
       // the full ladder's top tier AND the production default entry point
       // (Mining.bitextMineAuto — this row oracle-pins the default path):
       // flat autoK still pays the n*k assignment term (mine_bitext_auto
@@ -570,7 +570,7 @@ object VectorQueries {
         |      FROM a JOIN b ON a.cluster = b.cluster),
         |pp AS (SELECT * FROM p WHERE q > 0),
         |${duckBitextTail()}""".stripMargin),
-    Query("mine_bitext_incremental", 2.1, (s, dir) => {
+    Query("mine_bitext_incremental", 2.976, (s, dir) => {
       // the ladder's PRODUCTION posture (VERDICT r16 task 1 shape (b)):
       // mine_bitext_scale re-pays the hierarchical codebook's Θ(n^1.5)
       // train+assign every epoch; here the codebook, the corpus cell
@@ -619,7 +619,7 @@ object VectorQueries {
         |${duckBitextTail()}""".stripMargin,
       // the per-batch mining probe amortizes the epoch codebook + base pairs
       prep = Some(ensureBitextState(_, _))),
-    Query("ann_matryoshka", 0.9, (s, dir) => {
+    Query("ann_matryoshka", 1.237, (s, dir) => {
       // Matryoshka (MRL) funnel quality gate: recall@10 of the 16-of-64
       // prefix-dimension space, raw and with the full-dimension rescore
       // of a 30-candidate shortlist, against the exact baseline — the
@@ -673,7 +673,7 @@ object VectorQueries {
         |  CAST((10000 * (SELECT COUNT(*) FROM rr JOIN tr USING (qid, vec_id)))
         |       // (SELECT n FROM nt) AS BIGINT)
         |ORDER BY tier""".stripMargin),
-    Query("mine_hard_negatives", 2.2, (s, dir) => {
+    Query("mine_hard_negatives", 1.072, (s, dir) => {
       // ANCE-style hard-negative mining for contrastive training pairs: a
       // bounded query batch (20 fixed ids — mining is per training batch,
       // so |Q| is a loop constant, not a corpus fraction) probes the same
@@ -707,7 +707,7 @@ object VectorQueries {
         |  FROM mres WHERE neg_label <> qlabel AND sim_bp >= 0 AND sim_bp < 9800)
         |SELECT query_id, neg_id, neg_label, rank, sim_bp
         |FROM mrank WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-    Query("mine_triplets", 1.4, (s, dir) => {
+    Query("mine_triplets", 1.324, (s, dir) => {
       // hard negatives completed into (anchor, positive, negative)
       // training rows from the SAME probed candidate set: positive =
       // nearest same-labeled sub-dup neighbor, negatives = top-3
@@ -745,7 +745,7 @@ object VectorQueries {
         |  pos_sim_bp - neg_sim_bp AS margin_bp
         |FROM mpos p JOIN mneg n USING (query_id) WHERE rank <= 3
         |ORDER BY query_id, rank""".stripMargin),
-    Query("embed_ood", 1.2, (s, dir) =>
+    Query("embed_ood", 0.775, (s, dir) =>
       // per-cell OOD audit — prune_prototypes' complement: count the far
       // tail (winning-centroid cosine < 0.15 — the corpus's own p10 under
       // the hash embedder) per cell; a climbing OOD
@@ -764,7 +764,7 @@ object VectorQueries {
         |  CAST(MIN(sim_bp) AS BIGINT) AS min_sim_bp,
         |  CAST((10000 * SUM(CASE WHEN sim_bp < 1500 THEN 1 ELSE 0 END)) // COUNT(*) AS BIGINT) AS ood_bp
         |FROM simw GROUP BY cid ORDER BY cluster""".stripMargin),
-    Query("prune_prototypes", 1.2, (s, dir) => {
+    Query("prune_prototypes", 0.888, (s, dir) => {
       // SSL-prototypes / D4 semantic pruning: rank every vector by
       // closeness to its IVF centroid and drop the most prototypical 25%
       // per cell. Same 8-cell 2-round codebook as ann_ivf, so the oracle
@@ -788,7 +788,7 @@ object VectorQueries {
         |SELECT CAST(cid AS INT) AS cluster, vec_id, n_cell, proto_rank,
         |  CAST(proto_rank <= (n_cell * 2500 + 9999) // 10000 AS BIGINT) AS dropped
         |FROM r ORDER BY cluster, proto_rank""".stripMargin),
-    Query("ann_pq", 0.76, (s, dir) => {
+    Query("ann_pq", 0.89, (s, dir) => {
       // product-quantization ANN: 4×16-dim subspace codebooks (integer
       // k-means, 1 Lloyd round), one-pass encoding to 4 code ids, ADC
       // top-10 from per-query lookup tables
@@ -820,7 +820,7 @@ object VectorQueries {
          |  FROM adc)
          |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 10
          |ORDER BY query_id, rank""".stripMargin),
-    Query("ann_ivfpq", 1.74, (s, dir) => {
+    Query("ann_ivfpq", 1.291, (s, dir) => {
       // the composed billion-scale index: IVF coarse quantizer prunes to
       // 3 probed clusters per query, PQ codes ADC-score only those
       // members — one corpus pass computes cluster + codes together
@@ -853,7 +853,7 @@ object VectorQueries {
          |  FROM adc)
          |SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 10
          |ORDER BY query_id, rank""".stripMargin),
-    Query("ann_recall", 4.3, (s, dir) => {
+    Query("ann_recall", 5.084, (s, dir) => {
       // index-quality regression gate: recall@10 of each ANN tier against
       // the exact brute-force baseline, as a relational (tier, recall_bp)
       // row oracled in DuckDB — a bucketing/centroid/pruning regression
@@ -902,7 +902,7 @@ object VectorQueries {
         .orderBy(col("tier"))
     },
       annRecallSql),
-    Query("ann_ivf_incremental", 0.35, (s, dir) => {
+    Query("ann_ivf_incremental", 0.39, (s, dir) => {
       // the persisted-model increment path: the coarse quantizer is
       // trained ONCE on the kept corpus (vec_id % 5 =!= 0) and persisted
       // as exact integer state (the row's prep amortizes the build); each
@@ -937,7 +937,7 @@ object VectorQueries {
           |ORDER BY vec_id""".stripMargin,
       // the incremental-assign probe amortizes the persisted IVF model
       prep = Some(ensureIvfModel(_, _))),
-    Query("ann_ivf_drift", 1.5, (s, dir) => {
+    Query("ann_ivf_drift", 1.446, (s, dir) => {
       // codebook-staleness guard on the persisted-model increment path:
       // every assign batch also measures its mean nearest-centroid
       // distance (k-means inertia, integer 2^-20 units — a byproduct of
@@ -978,7 +978,7 @@ object VectorQueries {
       annIvfDriftSql,
       // the staleness-guard probe reads the same persisted model
       prep = Some(ensureIvfModel(_, _))),
-    Query("embed_quant_int8", 0.22, (s, dir) =>
+    Query("embed_quant_int8", 0.595, (s, dir) =>
       // SQ8 storage tier: per-vector scale + int8 codes, summarized as
       // index-free integer stats per vector (engine-portable, hash-exact)
       graft.ops.Quantize.int8Stats(Tables.embeddings(s, dir), "vec_id", "embedding")
@@ -991,7 +991,7 @@ object VectorQueries {
           |  CAST(list_aggregate(codes, 'max') AS BIGINT) AS code_max,
           |  CAST(list_sum(list_transform(codes, v -> CASE WHEN v = 0 THEN 0 ELSE 1 END)) AS BIGINT) AS nnz
           |FROM c ORDER BY vec_id""".stripMargin),
-    Query("embed_jl", 0.66, (s, dir) =>
+    Query("embed_jl", 2.922, (s, dir) =>
       // 64→16 seeded ±1 JL projection (4× dim cut before indexing): the
       // sign matrix is a plan literal from the hyperplanes convention,
       // the projection one codegen'd zip_with/aggregate chain — map-only.
@@ -1017,7 +1017,7 @@ object VectorQueries {
           |        CAST(list_sum(list_transform(range(0, 64), i -> e.vq[i + 1] * s.w[i + 1])) AS BIGINT) AS o
           |      FROM e CROSS JOIN s)
           |SELECT vec_id, CAST(j AS BIGINT) AS j, o AS coord FROM p ORDER BY vec_id, j""".stripMargin),
-    Query("embed_jl_search", 1.03, (s, dir) => {
+    Query("embed_jl_search", 1.473, (s, dir) => {
       // search at 1/4 the dims: integer JL-dot shortlist-40 over the
       // 16-dim codes, exact-cosine rescore ranks top-10; jl_dot rides out
       // so the projected coordinates are hash-covered
@@ -1053,7 +1053,7 @@ object VectorQueries {
           |ranked AS (SELECT qid, vec_id, jl_dot, CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS INT) AS rank FROM resc)
           |SELECT qid AS query_id, vec_id AS neighbor_id, rank, jl_dot FROM ranked WHERE rank <= 10
           |ORDER BY query_id, rank""".stripMargin),
-    Query("embed_quant_binary", 0.55, (s, dir) => {
+    Query("embed_quant_binary", 0.834, (s, dir) => {
       // search over the 1-bit store (32× tier below SQ8): Hamming
       // shortlist of 40 on packed sign codes — the corpus pass reads
       // 1/32 the vector bytes — then exact-cosine rescore ranks top-10;
@@ -1087,7 +1087,7 @@ object VectorQueries {
           |ranked AS (SELECT qid, vec_id, ham, CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS INT) AS rank FROM resc)
           |SELECT qid AS query_id, vec_id AS neighbor_id, rank, ham FROM ranked WHERE rank <= 10
           |ORDER BY query_id, rank""".stripMargin),
-    Query("embed_card", 0.28, (s, dir) => {
+    Query("embed_card", 1.14, (s, dir) => {
       // embedding-store QA card over a deterministically degraded batch
       // (the plant discipline — the synthetic vectors are clean): %31
       // becomes the zero vector (encoder-collapse symptom), %37 gets a
@@ -1131,7 +1131,7 @@ object VectorQueries {
           |SELECT a.label, n_vecs, n_nan, n_zero, n_low_norm, nsq_min, nsq_max, nsq_mean,
           |  coalesce(d.n_distinct, 0) AS n_distinct
           |FROM a LEFT JOIN d USING (label) ORDER BY label""".stripMargin),
-    Query("embed_chunks", 0.58, (s, dir) =>
+    Query("embed_chunks", 1.564, (s, dir) =>
       Pipelines.chunkAndEmbedDocuments(s, dir, 120, 12)
         .select(col("chunk_id"), col("doc_id"), col("chunk_index"), col("embedding_dim"),
           size(col("embedding")).as("dim_check"))

@@ -73,21 +73,6 @@ object Readers {
         col("fields")("journal"), col("fields")("journaltitle"), col("fields")("booktitle"))))
   }
 
-  /** `read_bib_to_df` equivalent (doi_utils.py:30-48): DOI-bearing entries
-    * only, normalized and deduplicated keep-first. */
-  def bibToInput(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("doi_norm")).orderBy(col("_ord"))
-    loadBib(spark, path)
-      .filter(col("doi").isNotNull)
-      .withColumn("_ord", monotonically_increasing_id())
-      .withColumn("doi_norm", Norm.normalizeDoi(col("doi")))
-      .na.drop(Seq("doi_norm"))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select("doi", "journal", "title", "doi_norm")
-  }
-
   /** Shape sniff for the resume source: does `path` hold a pretty-printed
     * JSON ARRAY (the reference's single-file output,
     * fulltext_enricher.py:97-101) or JSONL (this engine's own

@@ -1,10 +1,11 @@
 package graft.tools
 
+import graft.Timing
 import graft.catalog.Catalog
 
 /** AQE parity check for the hot query family: times each query with
   * adaptive execution ON (plus skew-join handling, the production 100 TB
-  * posture) and OFF, in the same JVM and window, min-of-N per cell.
+  * posture) and OFF, in the same JVM and window.
   *
   * Why this exists: PlanShapeSpec pins the static plan shapes with AQE
   * DISABLED (exchange counts are inspectable there), and `graft.Bench`
@@ -14,21 +15,21 @@ import graft.catalog.Catalog
   * skewedJoin splitting, neither degrades the hot family nor changes its
   * results. Recorded side-by-side in BASELINE.md.
   *
-  * Since r12 this is a PER-ROUND ARTIFACT: with no args it runs the
-  * top-15-by-anchor family (derived from the catalog's anchors at
-  * runtime, so it tracks re-pins), amortizes persisted builds through
-  * each row's `prep` exactly like `graft.Bench`, and writes the
-  * full record to `AQE_LOCAL.json` (override: SPARK_GRAFT_AQE_OUT) —
-  * copied to `AQE_r<N>.json` beside the round's BENCH. Drift rule (see
-  * BASELINE.md): any on/off ratio outside [0.5, 1.5] in a quiet window,
-  * or any row-count inequality (the tool throws), is an AQE-sensitive
-  * plan regression — diff against the previous round's AQE_r*.json.
+  * With no args it runs the top-15-by-anchor family (derived from the
+  * catalog's anchors at runtime, so it tracks re-pins). Each mode is timed
+  * by [[graft.Timing]], the rule `graft.Bench` uses, so both modes time the
+  * materialized result after the same warm-up and preps; each cell reports
+  * its median. Before timing, each mode counts each row's result once,
+  * untimed: AQE must not change it (the tool throws). The full record
+  * goes to `AQE_LOCAL.json` (override: SPARK_GRAFT_AQE_OUT). Drift rule
+  * (see BASELINE.md): any on/off ratio outside [0.5, 1.5] in a quiet
+  * window, or any row-count inequality, is an AQE-sensitive plan
+  * regression — diff against the previous AQE_*.json.
   *
-  * Usage: runMain graft.tools.AqeParity [q1,q2,... | top<K>] [sfDir] [reps]
-  *          [k=v,k=v...]
-  * Defaults: top15 at sf0.1, 3 reps. The optional 4th arg is a list of
-  * extra SQL confs applied in the ON mode only — the isolation knob for
-  * chasing an AQE-sensitive row (e.g.
+  * Usage: runMain graft.tools.AqeParity [q1,q2,... | top<K>] [sfDir] [k=v,k=v...]
+  * Defaults: top15 at sf0.1. The optional 3rd arg is a list of extra SQL
+  * confs applied in the ON mode only — the isolation knob for chasing an
+  * AQE-sensitive row (e.g.
   * `spark.sql.adaptive.coalescePartitions.enabled=false`).
   */
 object AqeParity {
@@ -43,55 +44,37 @@ object AqeParity {
       if (spec.matches("top\\d+")) topByAnchor(spec.drop(3).toInt)
       else spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val reps = if (args.length > 2) args(2).toInt else 3
+    val onConfs: Seq[(String, String)] =
+      (if (args.length > 2) args(2) else "").split(",").filter(_.contains("="))
+        .map { kv => val Array(k, v) = kv.split("=", 2); (k.trim, v.trim) }.toSeq
     val spark = graft.Sessions.local(32)
     spark.sparkContext.setLogLevel("ERROR")
-    def reclaim(): Unit = { spark.catalog.clearCache(); System.gc() }
-    val small = "/root/testdata/sf0.001"
-    val warmDir = if (new java.io.File(small).isDirectory) small else dir
-    for (n <- names) Catalog(n).build(spark, warmDir).count()
-    // amortize persisted artifacts (minhash index, IVF model, DSIR weights)
-    // exactly like graft.Bench: both modes then time the steady-state probe
-    for (n <- names; prep <- Catalog(n).prep) {
-      val t0 = System.nanoTime()
-      prep(spark, dir)
-      println(f"PREP   $n ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-    reclaim()
     // AQE off first, then on: if ambient load ramps DURING the run it
     // inflates the on-mode (the mode under test), never flatters it
-    val onConfs: Seq[(String, String)] =
-      (if (args.length > 3) args(3) else "").split(",").filter(_.contains("="))
-        .map { kv => val Array(k, v) = kv.split("=", 2); (k.trim, v.trim) }.toSeq
-    val results = for (aqe <- Seq(false, true); n <- names) yield {
+    val modes = for (aqe <- Seq(false, true)) yield {
       spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", aqe.toString)
       onConfs.foreach { case (k, v) =>
         if (aqe) spark.conf.set(k, v) else spark.conf.unset(k) }
-      val counts = collection.mutable.Set.empty[Long]
-      val ts = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        counts += Catalog(n).build(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        reclaim()
-        dt
-      }
-      require(counts.size == 1, s"$n row count unstable across reps: $counts")
-      println(f"AQE ${if (aqe) "on " else "off"} $n%-24s reps=${ts.map(t => f"$t%.2f").mkString(",")} min=${ts.min}%.2f rows=${counts.head}")
-      (n, aqe, ts.min, counts.head)
+      val counts = names.map(n => n -> Catalog(n).build(spark, dir).count()).toMap
+      val run = Timing.run(spark, names.map(Catalog(_)), dir)
+      run.preps.foreach { case (n, t) => println(f"PREP   $n $t%.2f s") }
+      val mode = if (aqe) "on " else "off"
+      val medians = run.rows.map { case (n, r) =>
+        println(f"AQE $mode $n%-24s reps=${r.samples.map(t => f"$t%.2f").mkString(",")} median=${r.median}%.2f rows=${counts(n)}")
+        n -> r.median
+      }.toMap
+      (medians, counts)
     }
-    val rows = for (n <- names) yield {
-      val off = results.find(r => r._1 == n && !r._2).get
-      val on = results.find(r => r._1 == n && r._2).get
-      require(off._4 == on._4, s"$n: AQE changed the row count ${off._4} -> ${on._4}")
-      println(f"PARITY $n%-24s off=${off._3}%.2f on=${on._3}%.2f ratio=${on._3 / off._3}%.2f rows_equal=true")
-      (n, off._3, on._3, off._4)
+    val Seq((off, offRows), (on, onRows)) = modes
+    for (n <- names) {
+      require(offRows(n) == onRows(n), s"$n: AQE changed the row count ${offRows(n)} -> ${onRows(n)}")
+      println(f"PARITY $n%-24s off=${off(n)}%.2f on=${on(n)}%.2f ratio=${on(n) / off(n)}%.2f rows_equal=true")
     }
-    val qs = rows.map { case (n, off, on, cnt) =>
-      f""""$n":{"off":$off%.3f,"on":$on%.3f,"ratio":${on / off}%.3f,"rows":$cnt}"""
+    val qs = names.map { n =>
+      f""""$n":{"off":${off(n)}%.3f,"on":${on(n)}%.3f,"ratio":${on(n) / off(n)}%.3f,"rows":${offRows(n)}}"""
     }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"aqe_parity","sf":"$dir","reps":$reps,"queries":$qs}"""
+    val json = s"""{"metric":"aqe_parity","sf":${graft.Verify.jsonStr(dir)},"queries":$qs}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_AQE_OUT", "AQE_LOCAL.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
     catch { case e: Exception =>

@@ -1,44 +1,41 @@
 package graft.tools
 
+import graft.Timing
 import graft.catalog.Catalog
 
-/** Min-of-N scale-linearity audit harness: times a set of queries across a
-  * set of SF directories IN THE SAME JVM AND WINDOW, so per-decade slopes
-  * are computed from table-comparable numbers (the r10 audit's protocol,
-  * now as a tool instead of a hand-driven loop).
+/** Scale-linearity audit: times a set of queries across a set of SF
+  * directories IN THE SAME JVM AND WINDOW, so per-decade slopes are
+  * computed from table-comparable numbers.
   *
   * Usage:
-  *   runMain graft.tools.ScaleAudit <q1,q2,...> <dir1,dir2,...> [reps]
+  *   runMain graft.tools.ScaleAudit <q1,q2,...> <dir1,dir2,...> [sf1,sf2,...]
   * e.g.
   *   runMain graft.tools.ScaleAudit dedup_neardup,curation_full \
-  *     /root/testdata/sf0.1,fixtures/stress/sf1 3
+  *     .../testdata/sf0.1,fixtures/stress/sf1
   *
-  * Protocol (same as graft.Bench): one untimed warmup pass per query at
-  * sf0.001 (codegen/JIT), clearCache+GC between every timed run (the
-  * localCheckpoint-block accumulation hazard), min-of-reps reported per
-  * (query, dir). Output: one `AUDIT` line per cell with all reps and the
-  * min, then a `SLOPES` block of per-decade log10 exponents between
-  * consecutive dirs (assumed 10× apart).
+  * Each dir is timed by [[graft.Timing]], the rule `graft.Bench` uses.
+  * Output: one `AUDIT` line per (query, dir) cell with its samples, median
+  * and quartiles, then a `SLOPES` block of per-decade log10 exponents of
+  * the medians between consecutive dirs: 10x apart, or as far apart as the
+  * optional scale-factor list says.
   */
 object ScaleAudit {
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
-      System.err.println("usage: runMain graft.tools.ScaleAudit <q1,...> <dir1,...> [reps]")
+      System.err.println("usage: runMain graft.tools.ScaleAudit <q1,...> <dir1,...> [sf1,...]")
       sys.exit(2)
     }
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val dirs = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val reps = if (args.length > 2) args(2).toInt else 3
-    // optional 4th arg: comma list of the dirs' numeric scale factors
+    // optional 3rd arg: comma list of the dirs' numeric scale factors
     // (e.g. "0.1,1,3") — slopes then normalize by the TRUE spacing
     // log(sf_hi/sf_lo) instead of assuming consecutive dirs are 10×
     // apart (the sf1→sf3 cells of the r11 asymptote check read ~0.43×
     // low under that assumption)
     val sfs: Option[Array[Double]] =
-      if (args.length > 3) Some(args(3).split(",").map(_.trim.toDouble)) else None
+      if (args.length > 2) Some(args(2).split(",").map(_.trim.toDouble)) else None
     sfs.foreach { f =>
-      require(f.length == args(1).split(",").count(_.trim.nonEmpty),
-        "scale-factor list must align with the dir list")
+      require(f.length == dirs.length, "scale-factor list must align with the dir list")
       require(f.forall(_ > 0.0), s"scale factors must be positive: ${f.mkString(",")}")
       require(f.sliding(2).forall(p => p.length < 2 || p(1) > p(0)),
         s"scale factors must be strictly increasing: ${f.mkString(",")}")
@@ -61,48 +58,22 @@ object ScaleAudit {
         case _ => sys.error(s"SPARK_GRAFT_SESSION_CONF segment has no '=': '$kv'")
       }
     })
-    def reclaim(): Unit = {
-      spark.catalog.clearCache()
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      System.gc()
-    }
-    val small = "/root/testdata/sf0.001"
-    val warmDir = if (new java.io.File(small).isDirectory) small else dirs.head
-    for (n <- names) {
-      try Catalog(n).build(spark, warmDir).count()
-      catch { case e: Throwable => System.err.println(s"[audit] warmup $n failed: ${e.getMessage}") }
-    }
-    reclaim()
-    // dirs outermost so each (query, dir) cell's reps are contiguous — the
-    // min-of-N is over one quiet-or-not micro-window, not three spread ones
-    // a failed rep records -1, NEVER its time-to-failure: a fail-fast
-    // query reading as "fast at the bigger SF" is exactly the artifact
-    // corruption the r9 bench taught (its 16 broken queries deflated the
-    // round total) — a cell with any failure is reported FAILED and
-    // excluded from the slope table
-    val mins = collection.mutable.Map.empty[(String, String), Double]
-    for (dir <- dirs; n <- names) {
-      val ts = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { Catalog(n).build(spark, dir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[audit] $n @ $dir failed: ${e.getMessage}"); false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        reclaim()
-        if (ok) dt else -1.0
-      }
-      if (ts.contains(-1.0)) {
-        mins((n, dir)) = -1.0
-        println(f"AUDIT $n%-28s $dir%-40s FAILED (${ts.count(_ < 0)}/$reps reps threw)")
-      } else {
-        mins((n, dir)) = ts.min
-        println(f"AUDIT $n%-28s $dir%-40s reps=${ts.map(t => f"$t%.2f").mkString(",")} min=${ts.min}%.2f")
-      }
-    }
+    // a cell with any failed rep reads -1 and is left out of the slopes:
+    // a fail-fast query must never read as "fast at the bigger SF"
+    val medians = (for {
+      dir <- dirs.toSeq
+      (n, r) <- Timing.run(spark, names.toSeq.map(Catalog(_)), dir).rows
+    } yield {
+      val reps = r.samples.map(t => f"$t%.2f").mkString(",")
+      if (r.failed)
+        println(f"AUDIT $n%-28s $dir%-40s FAILED (${r.samples.size - r.n}/${r.samples.size} reps threw)")
+      else
+        println(f"AUDIT $n%-28s $dir%-40s reps=$reps median=${r.median}%.2f q1=${r.q1}%.2f q3=${r.q3}%.2f")
+      (n, dir) -> r.median
+    }).toMap
     println("SLOPES (per-decade log10 exponent between consecutive dirs; 1.00 = linear)")
     for (n <- names; i <- 1 until dirs.length) {
-      val (lo, hi) = (mins((n, dirs(i - 1))), mins((n, dirs(i))))
+      val (lo, hi) = (medians((n, dirs(i - 1))), medians((n, dirs(i))))
       val decades = sfs.map(f => math.log10(f(i) / f(i - 1))).getOrElse(1.0)
       if (lo < 0 || hi < 0)
         println(f"SLOPE $n%-28s ${dirs(i - 1)}→${dirs(i)} SKIPPED (failed cell)")

@@ -24,12 +24,6 @@ object VectorOps {
   /** L2 norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Squared L2 distance. */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Cosine similarity — the reference collection's `hnsw:space=cosine`
     * (vectorstores/chroma_store.py:13,28-31). Uses the native codegen
     * expression ([[org.apache.spark.sql.graft.CosineSimilarity]]): one fused

@@ -9,27 +9,21 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * access. */
 object GraftFunctions {
 
-  val cosineBuilder: Seq[Expression] => Expression =
-    exprs => CosineSimilarity(exprs(0), exprs(1))
-
-  val chunkWindowsBuilder: Seq[Expression] => Expression =
-    exprs => ChunkWindows(exprs(0), exprs(1), exprs(2))
-
-  val mortonBuilder: Seq[Expression] => Expression =
-    exprs => MortonInterleave(exprs(0), exprs(1), exprs(2))
-
-  val sortedIntersectBuilder: Seq[Expression] => Expression =
-    exprs => SortedIntersectCount(exprs(0), exprs(1))
+  /** The native SQL functions, declared once for both registration
+    * routes: name, expression class and builder. */
+  val all: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("cosine_similarity", classOf[CosineSimilarity], e => CosineSimilarity(e(0), e(1))),
+    ("chunk_windows", classOf[ChunkWindows], e => ChunkWindows(e(0), e(1), e(2))),
+    ("morton_interleave", classOf[MortonInterleave], e => MortonInterleave(e(0), e(1), e(2))),
+    ("sorted_intersect_count", classOf[SortedIntersectCount], e => SortedIntersectCount(e(0), e(1))))
 
   /** Make `cosine_similarity(a, b)`, `chunk_windows(text, size, ov)`,
     * `morton_interleave(x, y, bits)` and `sorted_intersect_count(a, b)`
     * available to SQL in this session. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("cosine_similarity", cosineBuilder, "scala_udf")
-    registry.createOrReplaceTempFunction("chunk_windows", chunkWindowsBuilder, "scala_udf")
-    registry.createOrReplaceTempFunction("morton_interleave", mortonBuilder, "scala_udf")
-    registry.createOrReplaceTempFunction("sorted_intersect_count", sortedIntersectBuilder, "scala_udf")
+    all.foreach { case (name, _, builder) =>
+      registry.createOrReplaceTempFunction(name, builder, "scala_udf") }
   }
 
   def info(name: String, clazz: Class[_]): ExpressionInfo =

@@ -1,13 +1,21 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, V2WriteCommand}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import graft.Timing.{Row, Run}
+import graft.catalog.Catalog
 
 class BenchSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   test("timePreps records -1 for a failed prep, elapsed seconds for a good one") {
     var ran = 0
-    val out = Bench.timePreps(spark, "unused-dir", Map(
+    val out = Timing.timePreps(spark, "unused-dir", Map(
       "good" -> ((_, _) => { ran += 1; () }),
       "bad" -> ((_, _) => sys.error("synthetic prep failure"))))
     assert(ran == 1, "good prep executed")
@@ -18,92 +26,102 @@ class BenchSpec extends AnyFunSuite {
         "silently re-times the build")
   }
 
-  test("drift ratios: whole-run and median vs anchors; failed and un-anchored rows excluded") {
-    // q1_agg anchor 0.45 (re-pinned r15), jats_parse anchor 0.14 —
-    // measured at exactly 2x and 4x; a failed row (-1) and a query with
-    // no anchor must not skew it
-    val (whole, median) = Bench.drift(Map(
-      "q1_agg" -> 0.90, "jats_parse" -> 0.56,
-      "bib_scan" -> -1.0, "some_new_query" -> 99.0))
-    assert(math.abs(whole - (0.90 + 0.56) / (0.45 + 0.14)) < 1e-9)
-    assert(math.abs(median - 3.0) < 1e-9, "median of (2x, 4x) is 3x")
-    assert(Bench.drift(Map("no_anchor" -> 1.0)) == ((-1.0, -1.0)),
-      "nothing anchored measured -> sentinel, not a crash")
+  test("a row reports its samples' median and quartiles; any failed rep fails the row") {
+    // two stalled samples out of five move neither the median nor the quartiles far
+    val stalled = Row(Seq(0.50, 9.0, 0.40, 0.45, 12.0))
+    assert(stalled.median == 0.50 && stalled.q1 == 0.45 && stalled.q3 == 9.0 && stalled.n == 5)
+    // quartiles interpolate between order statistics
+    val even = Row(Seq(4.0, 1.0, 3.0, 2.0))
+    assert(even.median == 2.5 && even.q1 == 1.75 && even.q3 == 3.25)
+    val failed = Row(Seq(0.5, -1.0, 0.5, 0.5, 0.5))
+    assert(failed.failed && failed.median == -1.0 && failed.q1 == -1.0 && failed.q3 == -1.0)
+    assert(failed.n == 4, "the sample count is the successful reps")
   }
 
-  test("bench JSON persists to a file, parses, and covers every query with drift fields") {
-    // the r6 failure mode: the driver's console capture clipped 40/105
-    // per-query rows. The file is the durable record — synthesize a result
-    // for EVERY SparkEntry query, render, write, parse back with Jackson.
-    val results = SparkEntry.queries.keySet.map(_ -> 0.5).toMap
-    val preps = Map("dedup_incremental_indexed" -> 1.0)
-    val json = Bench.renderJson(results, preps, "/root/testdata/sf0.1")
+  test("the 2x gate applies to each row's median against its anchor") {
+    val a = Catalog("q1_agg").anchor
+    val stalls = Row(Seq(a, 10 * a, a, 10 * a, a))
+    val slow = Row(Seq(3 * a, 3 * a, a, 3 * a, 3 * a))
+    assert(Bench.gateExceedances(Seq("q1_agg" -> stalls)).isEmpty,
+      "two stalled samples do not breach: the median is the anchor")
+    val Seq(breach) = Bench.gateExceedances(Seq("q1_agg" -> slow))
+    assert(breach.startsWith("q1_agg:") && breach.endsWith(":3.00"), breach)
+    assert(Bench.gateExceedances(Seq(
+      "q1_agg" -> Row(Seq(9 * a, -1.0, 9 * a)), "not_a_query" -> slow)).isEmpty,
+      "failed rows and names outside the catalog are not gated")
+  }
+
+  test("bench JSON persists to a file and covers each query's median, quartiles, samples") {
+    // the durable record: synthesize a result for EVERY catalog row,
+    // render, write, parse back with Jackson
+    val rows = SparkEntry.queries.keySet.toSeq.sorted.map(_ -> Row(Seq(0.4, 0.5, 0.6)))
+    val run = Run(Map("dedup_incremental_indexed" -> 1.0), rows)
+    val json = Bench.renderJson(run, "data/sf0.1")
     val path = java.nio.file.Files.createTempDirectory("graft_bench_local")
       .resolve("BENCH_LOCAL.json").toString
     Bench.writeLocal(json, path)
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
+    val root = mapper.readTree(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
     assert(root.get("metric").asText() == "total")
-    val qs = root.get("queries")
-    SparkEntry.queries.keySet.foreach(n =>
-      assert(qs.has(n) && qs.get(n).isNumber, s"query $n missing from the persisted bench JSON"))
+    SparkEntry.queries.keySet.foreach { n =>
+      assert(root.get("queries").get(n).asDouble() == 0.5, s"query $n missing its median")
+      val iqr = root.get("quartiles").get(n)
+      assert(iqr.get(0).asDouble() == 0.45 && iqr.get(1).asDouble() == 0.55, s"query $n quartiles")
+      assert(root.get("samples").get(n).asInt() == 3, s"query $n sample count")
+    }
     assert(root.get("prep").get("dedup_incremental_indexed").asDouble() == 1.0)
-    assert(root.get("drift_whole_run").asDouble() > 0.0, "sf0.1 run self-reports drift")
-    assert(root.get("drift_median").asDouble() > 0.0)
-    // a non-anchored scale factor must NOT report drift against sf0.1 anchors
-    val other = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.renderJson(results, preps, "/root/testdata/sf0.01"))
-    assert(other.get("drift_whole_run").asDouble() == -1.0)
-    // basename match, not suffix match: .../not-sf0.1 is NOT the anchored dir
-    val sneaky = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.renderJson(results, preps, "/root/testdata/not-sf0.1"))
-    assert(sneaky.get("drift_whole_run").asDouble() == -1.0,
-      "a dir merely ENDING in sf0.1 must not report drift vs the sf0.1 anchors")
+    assert(root.get("rounds").size() == 3)
+    assert(math.abs(root.get("rounds").get(1).asDouble() - 0.5 * rows.size) < 1e-3)
+    assert(root.get("gate_exceedances").isArray)
     // a path containing JSON-hostile characters must still render valid JSON
-    val hostile = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.renderJson(results, preps, """/tmp/we"ird\dir"""))
+    val hostile = mapper.readTree(Bench.renderJson(run, """/tmp/we"ird\dir"""))
     assert(hostile.get("sf").asText() == """/tmp/we"ird\dir""")
+    val summary = mapper.readTree(Bench.renderSummary(run, "data/sf0.1"))
+    assert(summary.get("n").asInt() == rows.size && summary.get("failed").size() == 0)
   }
 
-  test("stallRetry: re-measures only anchored 2x-gate breaches, records the min, keeps the trail") {
-    // no anchor -> never retries (unanchored and non-sf0.1 rows)
-    assert(Bench.stallRetry(9.0, None, maxExtra = 2)(() => fail("must not run")) == ((9.0, Seq.empty)))
-    // under the gate -> never retries (steady-state rows stay single-shot)
-    assert(Bench.stallRetry(0.9, Some(0.5), 2)(() => fail("must not run")) == ((0.9, Seq.empty)))
-    // a failed row (-1) is not retried: the failure is the record
-    assert(Bench.stallRetry(-1.0, Some(0.5), 2)(() => fail("must not run")) == ((-1.0, Seq.empty)))
-    // one stalled reading, clean retry -> min recorded, trail keeps the retry
-    assert(Bench.stallRetry(15.6, Some(4.54), 2)(() => 4.3) == ((4.3, Seq(4.3))))
-    // a GENUINE regression breaches on every rep: after maxExtra retries the
-    // recorded min still exceeds the gate, so gateExceedances still fires
-    var n = 0
-    val (dt, trail) = Bench.stallRetry(12.0, Some(1.0), 2)(() => { n += 1; 11.0 + n })
-    assert(dt == 12.0 && trail == Seq(12.0, 13.0) && n == 2,
-      "bounded: a real slowdown costs at most maxExtra extra reps and STAYS a breach")
-    // second retry wins when the stall spans the first retry too
-    var k = 0
-    assert(Bench.stallRetry(15.0, Some(4.0), 2)(() => { k += 1; if (k == 1) 14.0 else 4.2 })
-      == ((4.2, Seq(14.0, 4.2))))
-    // a retry rep that FAILS records -1 (failed-query convention): the row
-    // is only as honest as its worst rep, same as min-of-N rows
-    assert(Bench.stallRetry(15.0, Some(4.0), 2)(() => -1.0) == ((-1.0, Seq(-1.0))))
+  test("the gate reads sf0.1 anchors only in a dir named sf0.1") {
+    val run = Run(Map.empty, Seq("q1_agg" -> Row(Seq.fill(5)(100.0))))
+    def exceedances(dir: String) =
+      mapper.readTree(Bench.renderSummary(run, dir)).get("gate_exceedances").size()
+    assert(exceedances("data/sf0.1") == 1)
+    assert(exceedances("data/sf0.01") == 0)
+    assert(exceedances("data/not-sf0.1") == 0,
+      "a dir merely ENDING in sf0.1 is not the anchored dir")
   }
 
-  test("stall_retries rides both JSON markers and parses back") {
-    val results = Map("q1_agg" -> 0.45, "curation_full" -> 4.3)
-    val retries = Map("curation_full" -> Seq(15.605, 4.3))
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.renderJson(results, Map(), "/root/testdata/sf0.1", retries))
-    val tr = root.get("stall_retries").get("curation_full")
-    assert(tr.isArray && tr.size() == 2 && tr.get(0).asDouble() == 15.605 &&
-      tr.get(1).asDouble() == 4.3,
-      "the full trail (stalled reading first) is on record in the artifact")
-    val sroot = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.renderSummary(results, "/root/testdata/sf0.1", retries))
-    assert(sroot.get("stall_retries").get("curation_full").size() == 2)
-    // no retries -> empty object, field always present
-    val clean = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.renderJson(results, Map(), "/root/testdata/sf0.1"))
-    assert(clean.get("stall_retries").isObject && clean.get("stall_retries").size() == 0)
+  test("the timed run writes each row's full plan: root operator, Sort and every column") {
+    // at sf0.001 the timing rule runs these rows; a listener captures the
+    // plan each run writes. A count() writes nothing: it runs an Aggregate
+    // root without the Sort (q1_agg), most of the plan (eval_retrieval) and
+    // the byte_at expressions (multimodal_phash).
+    val names = Seq("q1_agg", "eval_retrieval", "multimodal_phash")
+    val writes = ArrayBuffer.empty[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        Seq(qe.optimizedPlan, qe.analyzed).flatMap(_.collect { case w: V2WriteCommand => w.query })
+          .headOption.foreach(q => writes.synchronized(writes += q))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      for (n <- names) {
+        writes.synchronized(writes.clear())
+        val Seq((_, row)) = Timing.run(spark, Seq(Catalog(n)), TestSpark.sf0001).rows
+        assert(!row.failed && row.n >= 3, s"$n: $row")
+        val expected = Catalog(n).build(spark, TestSpark.sf0001).queryExecution.optimizedPlan
+        val seen = writes.synchronized(writes.toList)
+        // the warm-up and every timed rep write the result
+        assert(seen.size == 1 + row.samples.size, s"$n: ${seen.size} result writes captured")
+        seen.foreach { plan =>
+          assert(plan.nodeName == expected.nodeName,
+            s"$n: the timed plan's root is ${plan.nodeName}, the query's is ${expected.nodeName}")
+          assert(plan.nodeName == "Sort", s"$n: the final orderBy was pruned")
+          assert(plan.output.map(_.name) == expected.output.map(_.name), s"$n lost columns")
+          assert(!plan.isInstanceOf[Aggregate], s"$n: the timed plan is a count")
+          assert(plan.treeString.length >= expected.treeString.length * 9 / 10,
+            s"$n: the timed plan is smaller than the query's")
+        }
+      }
+    } finally spark.listenerManager.unregister(listener)
   }
 }
