@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory encoding the engine's deployment posture.
+/** Session factory encoding the engine's deployment posture. Every
+  * session it builds carries the native SQL functions ([[GraftExtensions]]).
   *
   * Local mode gets core-matched shuffle partitions; cluster mode leans on
   * AQE to coalesce/split at runtime (initial partition count high, skew
@@ -56,6 +57,7 @@ object Sessions {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .withExtensions(new GraftExtensions)
     if (master != null) b.master(master) else b
   }
 }

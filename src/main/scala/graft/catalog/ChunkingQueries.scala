@@ -46,7 +46,6 @@ object ChunkingQueries {
          |FROM tc ORDER BY doc_id, chunk_index""".stripMargin),
     Query("chunk_generator", 0.603, (s, dir) => {
       // the word-boundary-bump chunker as a native SQL Generator
-      org.apache.spark.sql.graft.GraftFunctions.register(s)
       Tables.documents(s, dir).createOrReplaceTempView("graft_docs")
       s.sql(
         """SELECT concat(doc_id, '::g', w.chunk_index) AS chunk_id, doc_id,

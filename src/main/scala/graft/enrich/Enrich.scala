@@ -1,6 +1,6 @@
 package graft.enrich
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Enrichment-join operators (SURVEY.md §2.4 J2-J5, §2.8 A3/G1/G2, §2.1 S11).
@@ -24,11 +24,8 @@ object Enrich {
   def enrichJoin(input: DataFrame, idMap: DataFrame, key: String): DataFrame =
     input.join(broadcast(idMap), Seq(key), "left")
 
-  /** J5: failure-reason lookup with default — left join against a reasons
-    * relation, `coalesce(reason, 'No PMCID')` (fulltext_enricher.py:198). */
-  def reasonLookup(misses: DataFrame, reasons: DataFrame, key: String): DataFrame =
-    misses.join(broadcast(reasons), Seq(key), "left")
-      .withColumn("reason", coalesce(col("reason"), lit("No PMCID")))
+  // J5 (failure-reason lookup with default) is Pipelines.runFulltext's
+  // broadcast left join against failMap, with the 'No PMCID' coalesce.
 
   /** A3: one-pass success/failure split (fulltext_enricher.py:196-222).
     * Returns (successes, failures-with-reason); callers should cache the
@@ -43,10 +40,6 @@ object Enrich {
   }
 
   // G1 (run-summary aggregation, fulltext_enricher.py:234-248) lives in
-  // Pipelines.runFulltext as a lazy one-row plan over the assembled frame.
-
-  /** G2: failure-reason distribution (the natural oracle query over the
-    * failures side-channel, data/processed/fulltext_skipped.csv). */
-  def reasonHistogram(failures: DataFrame): DataFrame =
-    failures.groupBy(col("reason")).agg(count(lit(1)).as("n")).orderBy(col("reason"))
+  // Pipelines.runFulltext as a lazy one-row plan over the assembled frame;
+  // G2 (failure-reason histogram) is the `skip_reasons` catalog row.
 }

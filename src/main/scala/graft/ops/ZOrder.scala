@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) interleaving — multi-dimensional data LAYOUT for scan
@@ -34,22 +34,4 @@ object ZOrder {
   /** The interleaved key as a Column (Spark side of [[zKeySql]]). */
   def zKey(xExpr: String, yExpr: String, bits: Int = 16): Column =
     expr(zKeySql(xExpr, yExpr, bits))
-
-  /** Cluster `df` for writing: range-partition on the z-key (so each
-    * output file covers a compact z-range → tight min/max stats on BOTH
-    * dimensions), then sort within partitions. `numFiles` sizes the
-    * output; pass the target file count for the table's volume.
-    *
-    * The key here is the NATIVE [[org.apache.spark.sql.graft.MortonInterleave]]
-    * expression (one codegen loop) rather than [[zKey]]'s generated
-    * 2·bits-term sum — same bits (test-asserted), tighter generated code
-    * on the writer's hot path. */
-  def clusterByZ(df: DataFrame, xExpr: String, yExpr: String,
-                 numFiles: Int, bits: Int = 16): DataFrame = {
-    val keyed = df.withColumn("_zkey", org.apache.spark.sql.graft.MortonInterleave(
-      expr(xExpr).cast("long"), expr(yExpr).cast("long"), bits))
-    keyed.repartitionByRange(numFiles, col("_zkey"))
-      .sortWithinPartitions(col("_zkey"))
-      .drop("_zkey")
-  }
 }

@@ -1,66 +1,50 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Inline}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.chunk.Chunkers
 
-/** Native table-generating expression for the reference's char-window
-  * chunker WITH word-boundary bump (chunking/chunkers.py:48-77) — the
-  * full semantics as a Catalyst `Generator`, usable from SQL:
+/** The SQL generator for the reference's char-window chunker WITH
+  * word-boundary bump (chunking/chunkers.py:48-77):
   *
   *   SELECT doc_id, w.chunk_index, w.chunk_text
   *   FROM documents LATERAL VIEW chunk_windows(text, 1200, 120) w
   *
-  * Catalyst plans it as a `Generate` node — streaming, narrow,
-  * null-skipping — instead of an opaque typed flatMap, so column pruning
-  * and filter pushdown still see through the scan below it.
-  */
-case class ChunkWindows(text: Expression, chunkSize: Expression, overlap: Expression)
-    extends Expression with Generator with CodegenFallback {
+  * Spark's `Inline` over the window structs [[windows]] returns, so
+  * Catalyst plans a `Generate` node — streaming, narrow, inside
+  * whole-stage codegen — instead of an opaque typed flatMap, and column
+  * pruning and filter pushdown still see through the scan below it. Null
+  * text or a null size/overlap yields no rows. */
+object ChunkWindows {
 
-  override def children: Seq[Expression] = Seq(text, chunkSize, overlap)
-
-  override def elementSchema: StructType = StructType(Seq(
+  private val Window = StructType(Seq(
     StructField("chunk_index", IntegerType, nullable = false),
     StructField("chunk_text", StringType, nullable = false)))
 
-  override def prettyName: String = "chunk_windows"
+  def windows(text: UTF8String, size: Int, overlap: Int): ArrayData =
+    new GenericArrayData(Chunkers.splitTextWindows(text.toString, size, overlap)
+      .zipWithIndex.map { case (chunk, i) => InternalRow(i, UTF8String.fromString(chunk)) }
+      .toArray[Any])
 
-  override def checkInputDataTypes(): TypeCheckResult = {
+  /** `chunk_windows(text, size, overlap)`: text must be STRING and
+    * size/overlap integral, checked when the call is analyzed. */
+  def apply(text: Expression, size: Expression, overlap: Expression): Expression = {
     def integral(dt: DataType): Boolean = dt match {
-      case _: IntegerType | _: LongType | _: ShortType | _: ByteType => true
+      case IntegerType | LongType | ShortType | ByteType => true
       case _ => false
     }
-    if (text.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"chunk_windows first argument must be STRING, got ${text.dataType.sql}")
-    else if (!integral(chunkSize.dataType) || !integral(overlap.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        s"chunk_windows size/overlap must be integral, got ${chunkSize.dataType.sql}, ${overlap.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
+    if (text.dataType != StringType || !integral(size.dataType) || !integral(overlap.dataType))
+      throw new AnalysisException("DATATYPE_MISMATCH.TYPE_CHECK_FAILURE_WITH_HINT", Map(
+        "sqlExpr" -> "chunk_windows",
+        "msg" -> ("chunk_windows takes (STRING, integral, integral), got " +
+          s"(${text.dataType.sql}, ${size.dataType.sql}, ${overlap.dataType.sql})"),
+        "hint" -> ""))
+    def int(e: Expression): Expression = if (e.dataType == IntegerType) e else Cast(e, IntegerType)
+    Inline(Kernels.invoke(this, ArrayType(Window, containsNull = false), "windows",
+      Seq(text -> StringType, int(size) -> IntegerType, int(overlap) -> IntegerType)))
   }
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val t = text.eval(input)
-    val sz = chunkSize.eval(input)
-    val ovr = overlap.eval(input)
-    // null text OR null size/overlap → no rows (generator analogue of
-    // SQL null propagation), never an NPE at execution time
-    if (t == null || sz == null || ovr == null) Nil
-    else {
-      val size = sz.asInstanceOf[Number].intValue()
-      val ov = ovr.asInstanceOf[Number].intValue()
-      Chunkers.splitTextWindows(t.toString, size, ov).zipWithIndex.map {
-        case (chunk, i) => InternalRow(i, UTF8String.fromString(chunk))
-      }
-    }
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(text = newChildren(0), chunkSize = newChildren(1), overlap = newChildren(2))
 }

@@ -1,34 +1,32 @@
-// Hosted under org.apache.spark.sql so the expression can implement the
-// private[sql] ImplicitCastInputTypes/AbstractDataType contract — the
-// standard packaging for third-party Catalyst expressions.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression for cosine similarity over two
-  * `array<float>` or `array<double>` columns.
-  *
-  * One fused loop computes dot product and both squared norms — inside
-  * whole-stage codegen, no intermediate `zip_with` array allocation, no
-  * lambda-function interpretation. Result is bit-identical to the
-  * `aggregate(zip_with(...))` formulation in [[VectorOps.cosine]]: each
-  * accumulator is the same left-to-right IEEE double fold, and a zero
+/** `cosine_similarity(a, b)` over two `array<float>` or `array<double>`
+  * columns: [[CosineSimilarity.cosine]], one fused loop over dot product
+  * and both squared norms, with no intermediate `zip_with` array and no
+  * lambda interpretation. The result is bit-identical to the
+  * `aggregate(zip_with(...))` formulation in [[graft.vector.VectorOps]]:
+  * each accumulator is the same left-to-right IEEE double fold, and a zero
   * denominator yields null exactly like Spark's fractional Divide.
   *
-  * r17 optimization: `array<float>` is read NATIVELY (each element widened
-  * float→double in-register — the exact value the old implicit
-  * `cast(array<float> as array<double>)` produced, since float→double
-  * widening is lossless). The cast mattered: under a nested-loop join the
-  * implicit cast re-allocated and re-converted a 64-element double array
-  * for BOTH sides of EVERY pair — it alone roughly doubled the exact
-  * bitext tier's A×B pass. Other numeric array types still implicitly
-  * cast to array<double> (TypeCollection order), as before. */
+  * `array<float>` is read natively, each element widened float→double in
+  * the loop (the exact value an implicit `cast(array<float> as
+  * array<double>)` would produce, since the widening is lossless). The
+  * cast mattered: under a nested-loop join it re-allocated and
+  * re-converted a 64-element double array for both sides of every pair,
+  * which alone roughly doubled the exact bitext tier's A×B pass. Other
+  * numeric array types implicitly cast to array<double>.
+  *
+  * The call depends on each side's resolved element type, so this stays an
+  * expression: a `RuntimeReplaceable` whose replacement is the static
+  * call. */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends RuntimeReplaceable with ImplicitCastInputTypes with BinaryLike[Expression] {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(TypeCollection(ArrayType(DoubleType), ArrayType(FloatType)),
@@ -42,47 +40,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
     case _                       => false
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CosineSimilarity.fold(doubles(a.asInstanceOf[ArrayData], left),
-      doubles(b.asInstanceOf[ArrayData], right))
-
-  /** The array widened to doubles: float→double is lossless, so these are
-    * exactly the values the generated code reads element by element. */
-  private def doubles(d: ArrayData, e: Expression): Array[Double] =
-    if (isFloat(e)) d.toFloatArray().map(_.toDouble) else d.toDoubleArray()
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val denom = ctx.freshName("denom")
-      val getX = if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getY = if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $xv = $getX;
-         |    double $yv = $getY;
-         |    $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |  }
-         |  double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |  if ($denom == 0.0) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / $denom;
-         |  }
-         |}
-       """.stripMargin
-    })
+  override lazy val replacement: Expression =
+    Kernels.invoke(CosineSimilarity, DoubleType, "cosine",
+      Seq(left -> left.dataType, right -> right.dataType),
+      Seq(Literal(isFloat(left)), Literal(isFloat(right))), returnNullable = true)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -91,14 +52,28 @@ case class CosineSimilarity(left: Expression, right: Expression)
 object CosineSimilarity {
   import org.apache.spark.sql.classic.ExpressionUtils
 
-  /** The scalar fold behind the interpreted `eval` and behind
-    * [[graft.ops.Ivf.probedRescored]]'s corpus pass: dot product and both
-    * squared norms accumulated left to right in one loop, the arithmetic
-    * the generated code repeats. Null (SQL null) on a dimension mismatch or
-    * a zero denominator. */
-  def fold(x: Array[Double], y: Array[Double]): java.lang.Double = {
+  /** Cosine of two arrays, each read as float or double elements: null
+    * (SQL null) on a dimension mismatch or a zero denominator. */
+  def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): java.lang.Double = {
     // dimension mismatch → null, matching the builtins form (zip_with pads
     // with null, which poisons the fold)
+    val n = a.numElements()
+    if (n != b.numElements()) return null
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val yv = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      dot += xv * yv; na += xv * xv; nb += yv * yv
+      i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
+  }
+
+  /** [[cosine]]'s fold over plain double arrays, for
+    * [[graft.ops.Ivf.probedRescored]]'s corpus pass. */
+  def fold(x: Array[Double], y: Array[Double]): java.lang.Double = {
     if (x.length != y.length) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0

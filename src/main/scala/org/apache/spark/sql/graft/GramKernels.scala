@@ -1,15 +1,8 @@
-// Hosted under org.apache.spark.sql so the expressions can implement the
-// private[sql] ImplicitCastInputTypes/AbstractDataType contract — the
-// standard packaging for third-party Catalyst expressions.
 package org.apache.spark.sql.graft
-
-import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -69,20 +62,24 @@ object GramKernel {
     out
   }
 
+  /** [[gramHashes]] as an array; never null. A null token array keeps the
+    * old relational null-text shape: `explode` of the single null shingle
+    * produced one (id, NULL) row, so it maps to a one-NULL-element array
+    * and downstream explodes see the same row. */
   def gramHashArray(toks: ArrayData, k: Int): ArrayData =
-    ArrayData.toArrayData(gramHashes(toks, k))
-
-  /** The old relational null-text shape: `explode` of the single null
-    * shingle produced one (id, NULL) row; a null child here maps to a
-    * one-NULL-element array so downstream explodes see the same row. */
-  def nullGramHashArray(): ArrayData = new GenericArrayData(Array[Any](null))
+    if (toks == null) new GenericArrayData(Array[Any](null))
+    else ArrayData.toArrayData(gramHashes(toks, k))
 
   /** Robust winnowing picks over the gram-hash array of `text`
     * ([[graft.ops.Winnow.fingerprints]]' selection, Schleimer et al.
     * 2003): for every window of `least(w, m)` consecutive grams, the
     * RIGHTMOST position attaining the window minimum; distinct picks in
-    * first-appearance order as struct(pos BIGINT, fp BIGINT). */
+    * first-appearance order as struct(pos BIGINT, fp BIGINT). Never null:
+    * a null text keeps the old higher-order chain's shape, ONE pick with
+    * null pos/fp. */
   def winnowPicks(text: UTF8String, k: Int, w: Int): ArrayData = {
+    if (text == null)
+      return new GenericArrayData(Array[Any](new GenericInternalRow(Array[Any](null, null))))
     val toks = TextHashKernel.tokenBytes(text)
     val g = gramHashesOfBytes(toks, k)
     val m = g.length
@@ -111,90 +108,31 @@ object GramKernel {
     }
     new GenericArrayData(rows)
   }
-
-  /** The old relational null-text shape for the winnow chain: the
-    * higher-order pipeline folded a null text into ONE pick with null
-    * pos/fp. */
-  def nullWinnowPicks(): ArrayData =
-    new GenericArrayData(Array[Any](new GenericInternalRow(Array[Any](null, null))))
 }
 
-/** Catalyst wrapper for [[GramKernel.gramHashArray]] over a token-array
-  * column. Null input yields the old explode shape's single-NULL array
-  * (see [[GramKernel.nullGramHashArray]]), so the expression itself is
-  * never null. */
-case class GramHash60(child: Expression, k: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(k >= 1, s"k-gram width must be >= 1, got $k")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullable: Boolean = false
-  override def prettyName: String = "gram_hash60"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) GramKernel.nullGramHashArray()
-    else GramKernel.gramHashArray(v.asInstanceOf[ArrayData], k)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = c.code + code"""
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = ${c.isNull}
-        ? org.apache.spark.sql.graft.GramKernel.nullGramHashArray()
-        : org.apache.spark.sql.graft.GramKernel.gramHashArray(${c.value}, $k);""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** `gram_hash60(toks)` — [[GramKernel.gramHashArray]] over a token-array
+  * column; never null. */
 object GramHash60 {
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def apply(toks: Column, k: Int): Column =
-    ExpressionUtils.column(GramHash60(ExpressionUtils.expression(toks), k))
+  def apply(toks: Column, k: Int): Column = {
+    require(k >= 1, s"k-gram width must be >= 1, got $k")
+    Kernels.column(GramKernel, ArrayType(LongType, containsNull = true), "gramHashArray",
+      Seq(toks -> ArrayType(StringType)), Seq(Literal(k)), propagateNull = false)
+  }
 }
 
-/** Catalyst wrapper for [[GramKernel.winnowPicks]] over a text column.
-  * Null input yields the old chain's single (null, null) pick, so the
-  * expression itself is never null. */
-case class WinnowPicks(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(k >= 1, s"k-gram width must be >= 1, got $k")
-  require(w >= 1, s"winnow window must be >= 1, got $w")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
+/** `winnow_picks(text)` — [[GramKernel.winnowPicks]] over a text column;
+  * never null. */
+object WinnowPicks {
+  private val Picks = ArrayType(StructType(Seq(
     StructField("pos", LongType, nullable = true),
     StructField("fp", LongType, nullable = true))), containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "winnow_picks"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) GramKernel.nullWinnowPicks()
-    else GramKernel.winnowPicks(v.asInstanceOf[UTF8String], k, w)
+  def apply(text: Column, k: Int, w: Int): Column = {
+    require(k >= 1, s"k-gram width must be >= 1, got $k")
+    require(w >= 1, s"winnow window must be >= 1, got $w")
+    Kernels.column(GramKernel, Picks, "winnowPicks",
+      Seq(text -> StringType), Seq(Literal(k), Literal(w)), propagateNull = false)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = c.code + code"""
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = ${c.isNull}
-        ? org.apache.spark.sql.graft.GramKernel.nullWinnowPicks()
-        : org.apache.spark.sql.graft.GramKernel.winnowPicks(${c.value}, $k, $w);""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WinnowPicks {
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def apply(text: Column, k: Int, w: Int): Column =
-    ExpressionUtils.column(WinnowPicks(ExpressionUtils.expression(text), k, w))
 }
 
 /** Per-document Bloom shingle probe (r18 optimization): the DISTINCT
@@ -266,47 +204,18 @@ object BloomShingleKernel {
 /** `bloom_shingle_hits(text, words)` — struct(n_shingles, n_hits) of the
   * document's distinct k-shingles against the Bloom word array; never
   * null (null text → (1, 0), the old single-NULL-shingle shape). */
-case class BloomShingleHits(left: Expression, right: Expression, k: Int,
-                            numBits: Int, numHashes: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ImplicitCastInputTypes {
-  require(k >= 1, s"k must be >= 1, got $k")
-  require(numBits >= 64 && (numBits & (numBits - 1)) == 0,
-    s"numBits must be a power of two >= 64, got $numBits")
-  require(numHashes >= 1 && numHashes <= 4, s"numHashes in [1,4], got $numHashes")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, ArrayType(LongType))
-  override def dataType: DataType = StructType(Seq(
+object BloomShingleHits {
+  private val Counts = StructType(Seq(
     StructField("n_shingles", LongType, nullable = false),
     StructField("n_hits", LongType, nullable = false)))
-  override def nullable: Boolean = false
-  override def prettyName: String = "bloom_shingle_hits"
 
-  override def eval(input: InternalRow): Any = {
-    val t = left.eval(input)
-    val w = right.eval(input)
-    BloomShingleKernel.hits(
-      if (t == null) null else t.asInstanceOf[UTF8String],
-      w.asInstanceOf[ArrayData], k, numBits, numHashes)
+  def apply(text: Column, words: Column, k: Int, numBits: Int, numHashes: Int): Column = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(numBits >= 64 && (numBits & (numBits - 1)) == 0,
+      s"numBits must be a power of two >= 64, got $numBits")
+    require(numHashes >= 1 && numHashes <= 4, s"numHashes in [1,4], got $numHashes")
+    Kernels.column(BloomShingleKernel, Counts, "hits",
+      Seq(text -> StringType, words -> ArrayType(LongType)),
+      Seq(Literal(k), Literal(numBits), Literal(numHashes)), propagateNull = false)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(code = l.code + r.code + code"""
-      InternalRow ${ev.value} = org.apache.spark.sql.graft.BloomShingleKernel.hits(
-        ${l.isNull} ? null : ${l.value}, ${r.value}, $k, $numBits, $numHashes);""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object BloomShingleHits {
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def apply(text: Column, words: Column, k: Int, numBits: Int, numHashes: Int): Column =
-    ExpressionUtils.column(BloomShingleHits(ExpressionUtils.expression(text),
-      ExpressionUtils.expression(words), k, numBits, numHashes))
 }

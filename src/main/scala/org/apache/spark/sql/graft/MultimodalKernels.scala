@@ -1,13 +1,8 @@
-// Hosted under org.apache.spark.sql so the expression can implement the
-// private[sql] ImplicitCastInputTypes/AbstractDataType contract — the
-// standard packaging for third-party Catalyst expressions.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.functions.{coalesce, lit, when}
 import org.apache.spark.sql.types._
 
 /** Byte sampler for the multimodal payload kernels (r18 optimization):
@@ -29,41 +24,12 @@ object ByteAtKernel {
 
 /** `byte_at(bin, pos)` — unsigned byte of `bin` at 0-based `pos`, 0 when
   * out of range; never null (the old hex chain's COALESCE(..., 0) shape,
-  * including null binary / null pos inputs). */
-case class ByteAt(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, LongType)
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = false
-  override def prettyName: String = "byte_at"
-
-  override def eval(input: InternalRow): Any = {
-    val b = left.eval(input)
-    val p = right.eval(input)
-    if (b == null || p == null) 0
-    else ByteAtKernel.byteAt(b.asInstanceOf[Array[Byte]], p.asInstanceOf[Long])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(code = l.code + r.code + code"""
-      int ${ev.value} = (${l.isNull} || ${r.isNull}) ? 0
-        : org.apache.spark.sql.graft.ByteAtKernel.byteAt(${l.value}, ${r.value});""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
+  * including null binary / null pos inputs). A null pos becomes -1 before
+  * the call: a primitive argument cannot carry the null. */
 object ByteAt {
-  import org.apache.spark.sql.classic.ExpressionUtils
   def apply(bin: Column, pos: Column): Column =
-    ExpressionUtils.column(ByteAt(ExpressionUtils.expression(bin),
-      ExpressionUtils.expression(pos)))
+    Kernels.column(ByteAtKernel, IntegerType, "byteAt",
+      Seq(bin -> BinaryType, coalesce(pos, lit(-1L)) -> LongType), propagateNull = false)
 }
 
 /** The 64 signed PCM16-LE grid samples of a payload body in ONE compiled
@@ -94,45 +60,15 @@ object AudioPcm16Kernel {
 
 /** `audio_pcm16(bin, hdr)` — the n-sample signed PCM16 grid as
   * array<int>; never null (null/short inputs sample 0s, the old
-  * per-sample COALESCE shape). */
-case class AudioPcm16(left: Expression, right: Expression, n: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  require(n >= 1, s"sample count must be >= 1, got $n")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, LongType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "audio_pcm16"
-
-  override def eval(input: InternalRow): Any = {
-    val b = left.eval(input)
-    val h = right.eval(input)
-    // null header behaves like a null body (the old chain's substring
-    // with a null start produced a null body → all-0 samples)
-    val bin = if (b == null || h == null) null else b.asInstanceOf[Array[Byte]]
-    val hdr = if (h == null) 0L else h.asInstanceOf[Long]
-    AudioPcm16Kernel.samples(bin, hdr, n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(code = l.code + r.code + code"""
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        org.apache.spark.sql.graft.AudioPcm16Kernel.samples(
-          (${l.isNull} || ${r.isNull}) ? null : ${l.value},
-          ${r.isNull} ? 0L : ${r.value}, $n);""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
+  * per-sample COALESCE shape). A null header behaves like a null body
+  * (the old chain's substring with a null start produced a null body →
+  * all-0 samples); it is resolved before the call, since a primitive
+  * argument cannot carry the null. */
 object AudioPcm16 {
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def apply(bin: Column, hdr: Column, n: Int): Column =
-    ExpressionUtils.column(AudioPcm16(ExpressionUtils.expression(bin),
-      ExpressionUtils.expression(hdr), n))
+  def apply(bin: Column, hdr: Column, n: Int): Column = {
+    require(n >= 1, s"sample count must be >= 1, got $n")
+    Kernels.column(AudioPcm16Kernel, ArrayType(IntegerType, containsNull = false), "samples",
+      Seq(when(hdr.isNotNull, bin) -> BinaryType, coalesce(hdr, lit(0L)) -> LongType),
+      Seq(Literal(n)), propagateNull = false)
+  }
 }

@@ -1,14 +1,9 @@
-// Hosted under org.apache.spark.sql for the private[sql] expression
-// contracts — the standard packaging for third-party Catalyst expressions.
 package org.apache.spark.sql.graft
 
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -122,50 +117,22 @@ object RakeKernel {
 /** `rake_topk(text)` — array<struct<rank, phrase, score_milli>> of the
   * document's top-k RAKE keyphrases; empty array (never null) for
   * null/empty/all-stopword documents, so `explode` drops them exactly
-  * like the relational form's empty groups. */
-case class RakeTopK(child: Expression, stopwords: Seq[String], maxLen: Int, k: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(maxLen >= 1 && k >= 1, s"maxLen/k must be >= 1, got $maxLen/$k")
-
-  @transient private lazy val stopSet: java.util.HashSet[String] = {
-    val hs = new java.util.HashSet[String]()
-    stopwords.foreach(hs.add)
-    hs
-  }
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  * like the relational form's empty groups. The stop-word set travels as
+  * an object literal, so generated code references it once and is the
+  * same on every run. */
+object RakeTopK {
+  private val Phrases = ArrayType(StructType(Seq(
     StructField("rank", LongType, nullable = false),
     StructField("phrase", StringType, nullable = false),
     StructField("score_milli", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "rake_topk"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    RakeKernel.rakeTopK(
-      if (v == null) null else v.asInstanceOf[UTF8String], stopSet, maxLen, k)
+  def apply(text: Column, stopwords: Seq[String], maxLen: Int, k: Int): Column = {
+    require(maxLen >= 1 && k >= 1, s"maxLen/k must be >= 1, got $maxLen/$k")
+    val stops = new java.util.HashSet[String]()
+    stopwords.foreach(stops.add)
+    Kernels.column(RakeKernel, Phrases, "rakeTopK", Seq(text -> StringType),
+      Seq(Literal.fromObject(stops), Literal(maxLen), Literal(k)), propagateNull = false)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val stopsRef = ctx.addReferenceObj("stopSet", stopSet, "java.util.HashSet<String>")
-    val c = child.genCode(ctx)
-    ev.copy(code = c.code + code"""
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        org.apache.spark.sql.graft.RakeKernel.rakeTopK(
-          ${c.isNull} ? null : ${c.value}, $stopsRef, $maxLen, $k);""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object RakeTopK {
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def apply(text: Column, stopwords: Seq[String], maxLen: Int, k: Int): Column =
-    ExpressionUtils.column(RakeTopK(ExpressionUtils.expression(text),
-      stopwords, maxLen, k))
 }
 
 /** Per-document term-frequency map (r18 optimization): the values of
@@ -216,36 +183,12 @@ object TermCountsKernel {
   * non-empty SQL-chain tokens with counts; empty array (never null) for
   * null/empty documents, so `explode` drops them exactly like the old
   * filter + groupBy shape. */
-case class TermCounts(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
+object TermCounts {
+  private val Counts = ArrayType(StructType(Seq(
     StructField("term", StringType, nullable = false),
     StructField("tf", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "term_counts"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    TermCountsKernel.termCounts(if (v == null) null else v.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = c.code + code"""
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        org.apache.spark.sql.graft.TermCountsKernel.termCounts(
-          ${c.isNull} ? null : ${c.value});""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object TermCounts {
-  import org.apache.spark.sql.classic.ExpressionUtils
   def apply(text: Column): Column =
-    ExpressionUtils.column(TermCounts(ExpressionUtils.expression(text)))
+    Kernels.column(TermCountsKernel, Counts, "termCounts", Seq(text -> StringType),
+      propagateNull = false)
 }

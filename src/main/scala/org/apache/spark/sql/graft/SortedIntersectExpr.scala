@@ -1,17 +1,13 @@
-// Hosted under org.apache.spark.sql so the expression can implement the
-// private[sql] ImplicitCastInputTypes/AbstractDataType contract — the
-// standard packaging for third-party Catalyst expressions.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: |a ∩ b| for two ASCENDING-SORTED
+/** `sorted_intersect_count(a, b)`: |a ∩ b| for two ASCENDING-SORTED
   * `array<bigint>` columns with distinct, non-null elements, as one
-  * two-pointer merge inside whole-stage codegen.
+  * two-pointer merge; null when either side is null.
   *
   * This is the hot inner operation of exact-Jaccard verification
   * ([[graft.ops.Dedup]]): `size(array_intersect(a, b))` builds a hash set
@@ -25,17 +21,9 @@ import org.apache.spark.sql.types._
   * ascending with unique elements — the producer is always
   * `sort_array(collect_set(...))`. Unsorted input undercounts silently.
   */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+object SortedIntersectCount {
 
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sorted_intersect_count"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def intersectCount(x: ArrayData, y: ArrayData): Long = {
     val n = x.numElements(); val m = y.numElements()
     var i = 0; var j = 0; var c = 0L
     while (i < n && j < m) {
@@ -47,36 +35,11 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |int $n = $a.numElements();
-         |int $m = $b.numElements();
-         |int $i = 0, $j = 0;
-         |long $c = 0L;
-         |while ($i < $n && $j < $m) {
-         |  long $xv = $a.getLong($i);
-         |  long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $c++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; }
-         |  else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+  private val Sets = ArrayType(LongType)
 
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
+  def apply(a: Expression, b: Expression): Expression =
+    Kernels.invoke(this, LongType, "intersectCount", Seq(a -> Sets, b -> Sets))
 
-object SortedIntersectCount {
-  import org.apache.spark.sql.classic.ExpressionUtils
-  /** Column API for the native expression. */
   def apply(a: Column, b: Column): Column =
-    ExpressionUtils.column(
-      SortedIntersectCount(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+    Kernels.column(this, LongType, "intersectCount", Seq(a -> Sets, b -> Sets))
 }

@@ -1,23 +1,19 @@
-// Hosted under org.apache.spark.sql so the expression can implement the
-// private[sql] ImplicitCastInputTypes/AbstractDataType contract — the
-// standard packaging for third-party Catalyst expressions.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: the merged-interval rebuild of
+/** The merged-interval rebuild of
   * [[graft.ops.Dedup.removeDuplicatedSpans]] — given a document's token
   * array and the ASCENDING-SORTED 0-based start positions of its
   * duplicated k-gram spans, emit `struct(n_dup_tokens, clean_text)` where
   * each start s covers token positions [s, min(s+k−1, n−1)], overlaps
   * merge (never double-counted), and clean_text is the uncovered tokens
-  * rejoined in order with single spaces.
+  * rejoined in order with single spaces. Null when either input is null.
   *
   * Why native: this is a per-DOCUMENT state machine (a running coverage
   * frontier) over two arrays. The SQL formulations both measured slow at
@@ -26,41 +22,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * join and a per-doc collect_list sort: 121 s of a 154 s funnel), and a
   * higher-order `aggregate` fold evaluates its lambda interpreted per
   * element and copies the accumulator array per step (~1.5 ms/doc on
-  * boilerplate-dense docs). Here the whole rebuild is one compiled loop;
-  * codegen emits a single static call so the surrounding stage stays in
-  * whole-stage codegen.
+  * boilerplate-dense docs). Here the whole rebuild is one compiled loop,
+  * called from whole-stage code as a single static call.
   *
   * PRECONDITION (caller-enforced, not checked): starts sorted ascending,
   * each in [0, n−1]. The producer is always `array_sort(collect_set(p))`
   * over per-doc span positions. */
-case class SpanRebuild(toks: Expression, starts: Expression, k: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  require(k >= 1, s"k-gram width must be >= 1, got $k")
-
-  override def left: Expression = toks
-  override def right: Expression = starts
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType), ArrayType(IntegerType))
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_dup_tokens", LongType, nullable = false),
-    StructField("clean_text", StringType, nullable = false)))
-  override def prettyName: String = "span_rebuild"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SpanRebuild.rebuild(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = org.apache.spark.sql.graft.SpanRebuild.rebuild($a, $b, $k);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(toks = newLeft, starts = newRight)
-}
-
 object SpanRebuild {
   private val Sep = UTF8String.fromString(" ")
 
-  /** The compiled rebuild loop; called from both eval and generated code. */
   def rebuild(toksAd: ArrayData, startsAd: ArrayData, k: Int): InternalRow = {
     val n = toksAd.numElements()
     val m = startsAd.numElements()
@@ -86,9 +56,13 @@ object SpanRebuild {
     new GenericInternalRow(Array[Any](dup, clean))
   }
 
-  import org.apache.spark.sql.classic.ExpressionUtils
-  /** Column API for the native expression. */
-  def apply(toks: Column, starts: Column, k: Int): Column =
-    ExpressionUtils.column(
-      SpanRebuild(ExpressionUtils.expression(toks), ExpressionUtils.expression(starts), k))
+  private val Result = StructType(Seq(
+    StructField("n_dup_tokens", LongType, nullable = false),
+    StructField("clean_text", StringType, nullable = false)))
+
+  def apply(toks: Column, starts: Column, k: Int): Column = {
+    require(k >= 1, s"k-gram width must be >= 1, got $k")
+    Kernels.column(this, Result, "rebuild",
+      Seq(toks -> ArrayType(StringType), starts -> ArrayType(IntegerType)), Seq(Literal(k)))
+  }
 }

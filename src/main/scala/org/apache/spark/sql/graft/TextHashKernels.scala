@@ -1,6 +1,3 @@
-// Hosted under org.apache.spark.sql so the expressions can implement the
-// private[sql] ImplicitCastInputTypes/AbstractDataType contract — the
-// standard packaging for third-party Catalyst expressions.
 package org.apache.spark.sql.graft
 
 import java.nio.charset.StandardCharsets
@@ -8,8 +5,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -244,132 +240,61 @@ object TextHashKernel {
   }
 }
 
-/** Catalyst wrapper for [[TextHashKernel.minhashFeatures]]. */
-case class MinhashFeatures(child: Expression, k: Int, numHashes: Int,
-                           withSet: Boolean)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(k >= 1, s"k-gram width must be >= 1, got $k")
-  require(numHashes >= 0 && (numHashes > 0 || withSet),
-    s"need numHashes > 0 or withSet, got numHashes=$numHashes withSet=$withSet")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StructType(
-    (if (numHashes > 0)
-       Seq(StructField("h", ArrayType(LongType, containsNull = false), nullable = false))
-     else Nil) ++
-      (if (withSet)
-         Seq(StructField("sh", ArrayType(LongType, containsNull = false), nullable = false))
-       else Nil))
-  override def prettyName: String = "minhash_features"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashKernel.minhashFeatures(input.asInstanceOf[UTF8String], k, numHashes, withSet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = org.apache.spark.sql.graft.TextHashKernel.minhashFeatures($c, $k, $numHashes, $withSet);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** `minhash_features(text)` — [[TextHashKernel.minhashFeatures]]; null
+  * for null text. */
 object MinhashFeatures {
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def apply(text: Column, k: Int, numHashes: Int, withSet: Boolean): Column =
-    ExpressionUtils.column(
-      MinhashFeatures(ExpressionUtils.expression(text), k, numHashes, withSet))
+  def apply(text: Column, k: Int, numHashes: Int, withSet: Boolean): Column = {
+    require(k >= 1, s"k-gram width must be >= 1, got $k")
+    require(numHashes >= 0 && (numHashes > 0 || withSet),
+      s"need numHashes > 0 or withSet, got numHashes=$numHashes withSet=$withSet")
+    val features = StructType(
+      (if (numHashes > 0)
+         Seq(StructField("h", ArrayType(LongType, containsNull = false), nullable = false))
+       else Nil) ++
+        (if (withSet)
+           Seq(StructField("sh", ArrayType(LongType, containsNull = false), nullable = false))
+         else Nil))
+    Kernels.column(TextHashKernel, features, "minhashFeatures", Seq(text -> StringType),
+      Seq(Literal(k), Literal(numHashes), Literal(withSet)))
+  }
 }
 
-/** Catalyst wrapper for [[TextHashKernel.simhashFp]]. */
-case class SimhashFp(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash_fp"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashKernel.simhashFp(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = org.apache.spark.sql.graft.TextHashKernel.simhashFp($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** `simhash_fp(text)` — [[TextHashKernel.simhashFp]]; null for null text. */
 object SimhashFp {
-  import org.apache.spark.sql.classic.ExpressionUtils
   def apply(text: Column): Column =
-    ExpressionUtils.column(SimhashFp(ExpressionUtils.expression(text)))
+    Kernels.column(TextHashKernel, LongType, "simhashFp", Seq(text -> StringType))
 }
 
 /** Native md5 hex-slice word: the value of
   * `CAST(conv(substring(md5(c), startNibble+1, nNibbles), 16, 10) AS BIGINT)`
   * computed straight from the digest bytes — no hex string, no substring,
-  * no radix parse. The engine's canonical md5→BIGINT derivations
-  * ([[graft.util.Hash]]) all route through this expression; the DuckDB
+  * no radix parse; null for null input. The engine's canonical md5→BIGINT
+  * derivations ([[graft.util.Hash]]) all route through it; the DuckDB
   * oracles keep replaying the hex-slice formulation, which is equal by
   * construction (a hex digit IS a digest nibble). nNibbles <= 15 keeps the
-  * value non-negative in a long. */
-case class Md5Word(child: Expression, startNibble: Int, nNibbles: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(startNibble >= 0 && nNibbles >= 1 && startNibble + nNibbles <= 32,
-    s"md5 has 32 nibbles: got start=$startNibble n=$nNibbles")
-  require(nNibbles <= 15, s"nNibbles must be <= 15 to stay in a signed long, got $nNibbles")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "md5_word"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashKernel.md5Word(input.asInstanceOf[Array[Byte]], startNibble, nNibbles)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = org.apache.spark.sql.graft.TextHashKernel.md5Word($c, $startNibble, $nNibbles);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+  * value non-negative in a long. The input is implicitly cast to binary,
+  * as `md5` casts it. */
 object Md5Word {
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def apply(c: Column, startNibble: Int, nNibbles: Int): Column =
-    ExpressionUtils.column(Md5Word(ExpressionUtils.expression(c), startNibble, nNibbles))
+  def apply(c: Column, startNibble: Int, nNibbles: Int): Column = {
+    require(startNibble >= 0 && nNibbles >= 1 && startNibble + nNibbles <= 32,
+      s"md5 has 32 nibbles: got start=$startNibble n=$nNibbles")
+    require(nNibbles <= 15, s"nNibbles must be <= 15 to stay in a signed long, got $nNibbles")
+    Kernels.column(TextHashKernel, LongType, "md5Word", Seq(c -> BinaryType),
+      Seq(Literal(startNibble), Literal(nNibbles)))
+  }
 }
 
-/** Catalyst wrapper for [[TextHashKernel.bigramBuckets]]: the fused
+/** `bigram_buckets(text)` — [[TextHashKernel.bigramBuckets]]: the fused
   * tokenize → bigram → seeded-md5-bucket stream (r18 optimization — the
   * relational chain paid interpreted filter/zip_with lambdas plus a
   * bigram string and digest per pair). Null text stays null, preserving
-  * the old chain's explode_outer/explode shapes. */
-case class BigramBuckets(child: Expression, seed: Int, mod: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(mod > 0, s"mod must be positive, got $mod")
-
-  private val seedPrefix: Array[Byte] =
-    s"$seed:".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "bigram_buckets"
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashKernel.bigramBuckets(input.asInstanceOf[UTF8String], seedPrefix, mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pref = ctx.addReferenceObj("seedPrefix", seedPrefix, "byte[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = org.apache.spark.sql.graft.TextHashKernel.bigramBuckets($c, $pref, ${mod}L);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+  * the old chain's explode_outer/explode shapes. The seed prefix travels
+  * as a binary literal, so generated code is the same on every run. */
 object BigramBuckets {
-  import org.apache.spark.sql.classic.ExpressionUtils
-  def apply(text: Column, seed: Int, mod: Long): Column =
-    ExpressionUtils.column(BigramBuckets(ExpressionUtils.expression(text), seed, mod))
+  def apply(text: Column, seed: Int, mod: Long): Column = {
+    require(mod > 0, s"mod must be positive, got $mod")
+    Kernels.column(TextHashKernel, ArrayType(LongType, containsNull = false), "bigramBuckets",
+      Seq(text -> StringType),
+      Seq(Literal(s"$seed:".getBytes(StandardCharsets.UTF_8)), Literal(mod)))
+  }
 }

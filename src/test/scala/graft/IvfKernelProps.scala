@@ -119,29 +119,17 @@ object IvfKernelProps extends Properties("graft.ivf") {
     val model = Ivf.Model(Map(0 -> (Array.fill(dim)(1L), 1L)))
     val ids = df.select("id").collect().map(_.getLong(0)).toSeq
     val pass = simBits(Ivf.probedRescored(df, "id", "v", model, ids, nprobe = 1))
-    val cross = df.select(col("id").as("neighbor_id"), col("v").as("_nv"))
+    def cross = df.select(col("id").as("neighbor_id"), col("v").as("_nv"))
       .crossJoin(df.select(col("id").as("query_id"), col("v").as("_qv")))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"), VectorOps.cosine(col("_nv"), col("_qv")))
     val codegen = simBits(cross)
-    val interpreted = withoutCodegen(simBits(cross))
+    val interpreted = TestSpark.withoutCodegen(simBits(cross))
     val vecs = Ivf.vectors(df, "id", "v").collect().toMap
     val folded = codegen.keys.map { case k @ (q, n) =>
       k -> Option(CosineSimilarity.fold(vecs(n), vecs(q))).map(d => java.lang.Double.doubleToLongBits(d))
     }.toMap
     pass == codegen && interpreted == codegen && folded == codegen
-  }
-
-  private def withoutCodegen[T](body: => T): T = {
-    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 
   property("pass rescore equals VectorOps.cosine bit for bit on array<float>") =

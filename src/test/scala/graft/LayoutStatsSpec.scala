@@ -54,52 +54,6 @@ class LayoutStatsSpec extends AnyFunSuite {
     for ((x, y, z) <- got) assert(z == mortonRef(x, y, 16), s"($x,$y)")
   }
 
-  test("native morton_interleave expression equals the generated SQL form and the reference") {
-    val df = (0L until 512L).map(i => (i * 131 % 60000, i * 7919 % 60000)).toDF("x", "y")
-    val both = df.select(
-      ZOrder.zKey("x", "y", 16).as("sqlz"),
-      org.apache.spark.sql.graft.MortonInterleave(col("x"), col("y"), 16).as("natz"),
-      col("x"), col("y"))
-      .collect()
-    for (r <- both) {
-      assert(r.getLong(0) == r.getLong(1), s"(${r.getLong(2)},${r.getLong(3)})")
-      assert(r.getLong(1) == mortonRef(r.getLong(2), r.getLong(3), 16))
-    }
-    // SQL registration route
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
-    val viaSql = spark.sql("SELECT morton_interleave(3L, 5L, 16)").head().getLong(0)
-    assert(viaSql == mortonRef(3L, 5L, 16))
-    // out-of-range bits rejected at analysis time, not silently wrapped
-    intercept[Exception] { spark.sql("SELECT morton_interleave(3L, 5L, 40)").collect() }
-    intercept[Exception] { spark.sql("SELECT morton_interleave(3L, 5L, 0)").collect() }
-  }
-
-  test("z-clustering tightens per-partition 2-D bounding boxes vs single-column sort") {
-    val pts = for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y)
-    val df = pts.toDF("x", "y")
-    // perimeter (dx+dy) is the discriminator: an s×s range predicate
-    // overlaps O(perimeter/s) files, so 16×16 squares (z) beat 4×64
-    // slivers (linear) even though both tile the same total area
-    def perimeter(clustered: org.apache.spark.sql.DataFrame): Long = {
-      val parts = clustered.withColumn("_pid", spark_partition_id())
-        .groupBy("_pid")
-        .agg((max("x") - min("x") + 1).as("dx"), (max("y") - min("y") + 1).as("dy"))
-        .collect()
-      parts.map(r => r.getLong(1) + r.getLong(2)).sum
-    }
-    val z = perimeter(ZOrder.clusterByZ(df, "x", "y", numFiles = 16, bits = 6))
-    val linear = perimeter(df.repartitionByRange(16, col("x")).sortWithinPartitions("x"))
-    assert(z < linear, s"z=$z linear=$linear")
-  }
-
-  test("clusterByZ preserves rows exactly and drops the internal key") {
-    val df = Seq((5L, 9L), (1L, 2L), (7L, 7L)).toDF("x", "y")
-    val out = ZOrder.clusterByZ(df, "x", "y", numFiles = 2, bits = 4)
-    assert(out.columns.toSeq == Seq("x", "y"))
-    assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
-      Set((5L, 9L), (1L, 2L), (7L, 7L)))
-  }
-
   test("dataCard: per-source datasheet fields, hand-computed") {
     val docs = Seq(
       (0L, "src0", "one two three"),

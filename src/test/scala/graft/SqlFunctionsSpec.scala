@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.graft.GraftFunctions
 import graft.chunk.Chunkers
 
 class SqlFunctionsSpec extends AnyFunSuite {
@@ -9,7 +8,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("cosine_similarity is callable from SQL after registration") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT cosine_similarity(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS s," +
         " cosine_similarity(array(1.0D, 0.0D), array(0.0D, 3.0D)) AS o")
@@ -19,7 +17,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("chunk_windows generator matches the Scala chunker via LATERAL VIEW") {
-    GraftFunctions.register(spark)
     val text = ("word " * 60).trim
     Seq((1L, text)).toDF("doc_id", "text").createOrReplaceTempView("t_cw")
     val sqlChunks = spark.sql(
@@ -32,7 +29,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("chunk_windows skips null text rows") {
-    GraftFunctions.register(spark)
     Seq((1L, Option("abc def ghi")), (2L, None: Option[String]))
       .toDF("doc_id", "text").createOrReplaceTempView("t_cw_null")
     val n = spark.sql(
@@ -45,7 +41,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("chunk_windows yields no rows for null size/overlap, not an NPE") {
-    GraftFunctions.register(spark)
     Seq((1L, "abc def ghi")).toDF("doc_id", "text").createOrReplaceTempView("t_cw_nullargs")
     val n = spark.sql(
       "SELECT w.chunk_text FROM t_cw_nullargs " +
@@ -58,7 +53,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("chunk_windows rejects non-integral size at analysis time") {
-    GraftFunctions.register(spark)
     Seq((1L, "abc")).toDF("doc_id", "text").createOrReplaceTempView("t_cw_badtype")
     val e = intercept[Exception] {
       spark.sql(
@@ -70,7 +64,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("sorted_intersect_count matches size(array_intersect) on sorted distinct arrays") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(42)
     val rows = (0 until 200).map { i =>
       val a = Seq.fill(rnd.nextInt(50))(rnd.nextInt(40).toLong).distinct.sorted

@@ -1,11 +1,19 @@
 #!/usr/bin/env python3
 """Plan-drift differ over two PLANS_r*.txt dumps (graft.Explain output).
 
-Per query, compares the PHYSICAL plan's operator-name multiset and op
-count between rounds and prints one line per drifted query — so "did any
-plan change shape?" is a one-screen report instead of a 16k-line diff
-(the r9 curation_full scare). RDD ids, plan ids, and stats differ every
-run by construction; only operator names/counts are compared.
+Per query, compares the PHYSICAL plan's operator multiset and op count
+between rounds and prints one line per drifted query — so "did any plan
+change shape?" is a one-screen report instead of a 16k-line diff (the r9
+curation_full scare). RDD ids, plan ids, and stats differ every run by
+construction; only operators and their counts are compared.
+
+Each operator is counted together with its whole-stage codegen marker:
+`Project*` is a Project inside a WholeStageCodegen stage (the tree line
+reads `* Project (n)`), `Project` one outside it. A query whose operator
+leaves (or joins) whole-stage codegen therefore shows as drift, e.g.
+`Project*-1, Project+1`. Formatted explain marks codegen stages only
+where the stage is planned: an unexecuted AdaptiveSparkPlan's tree
+carries no markers.
 
 Usage: python3 tools/plan_diff.py PLANS_r17.txt PLANS_r18.txt
 Exit code 0 = no drift, 1 = drift found (usable as a gate).
@@ -16,15 +24,17 @@ from collections import Counter
 
 
 def parse(path):
-    """-> {query: Counter(operator name -> count)} from an Explain dump."""
+    """-> {query: Counter(operator -> count)} from an Explain dump; an
+    operator inside whole-stage codegen is keyed with a trailing '*'."""
     plans, name, in_phys, ops = {}, None, False, Counter()
     # exactly the Explain delimiter (10 '='): formatted explain emits its
     # own '===== Subqueries =====' section headers, which must NOT start a
     # new query (the bloom-filter runtime subquery introduced one)
     hdr = re.compile(r"^========== (\S+) ==========$")
     # tree lines: optional indent of ':', '+', '-', ' ', then '* Op (id)'
-    # or 'Op (id)'; detail sections '(id) Op' are skipped (same names)
-    tree = re.compile(r"^[-+*:\s]*(\*\s*)?([A-Za-z][A-Za-z0-9_.]*)\s+\((\d+)\)\s*$")
+    # (inside whole-stage codegen) or 'Op (id)'; detail sections
+    # '(id) Op' are skipped (same names)
+    tree = re.compile(r"^[-+:\s]*(\*\s*)?([A-Za-z][A-Za-z0-9_.]*)\s+\((\d+)\)\s*$")
     with open(path, encoding="utf-8", errors="replace") as f:
         for line in f:
             line = line.rstrip("\n")
@@ -43,7 +53,7 @@ def parse(path):
                     continue
                 t = tree.match(line)
                 if t:
-                    ops[t.group(2)] += 1
+                    ops[t.group(2) + ("*" if t.group(1) else "")] += 1
     if name is not None:
         plans[name] = ops
     return plans
