@@ -32,13 +32,25 @@ object Chunkers {
     * reference algorithm (chunking/chunkers.py:48-77): windows advance by
     * `end - overlap` where `end` may have been bumped to the next
     * whitespace; chunks stripped; empties dropped; `overlap` clamped to
-    * `[0, chunk_size-1]`; step ≥ 1. */
+    * `[0, chunk_size-1]`; step ≥ 1. Sizes, the bump and the overlap count
+    * code points, as Python's `str` indexes do, so an astral character is
+    * never split into a lone surrogate. */
   def splitTextWindows(raw: String, chunkSize: Int, overlap: Int): List[String] = {
     val text = collapseWs(raw)
     if (text.isEmpty) return Nil
     if (chunkSize <= 0) return List(text)
     val ov = math.max(0, math.min(overlap, math.max(0, chunkSize - 1)))
-    val n = text.length
+    val n = text.codePointCount(0, text.length)
+    // UTF-16 offset of code point i: the identity unless the text holds
+    // astral characters
+    val at: Int => Int =
+      if (n == text.length) identity
+      else {
+        val offsets = new Array[Int](n + 1)
+        var i = 0
+        while (i < n) { offsets(i + 1) = text.offsetByCodePoints(offsets(i), 1); i += 1 }
+        offsets(_)
+      }
     val out = scala.collection.mutable.ListBuffer.empty[String]
     var start = 0
     var done = false
@@ -46,11 +58,11 @@ object Chunkers {
       var end = math.min(n, start + chunkSize)
       if (end < n) {
         // bump end to the next whitespace within 40 chars (no mid-word cuts)
-        val window = text.substring(end, math.min(n, end + 40))
+        val window = text.substring(at(end), at(math.min(n, end + 40)))
         val m = WsOne.matcher(window)
-        if (m.find()) end += m.start()
+        if (m.find()) end += window.codePointCount(0, m.start())
       }
-      out += text.substring(start, end).trim
+      out += text.substring(at(start), at(end)).trim
       if (end == n) done = true
       else start = end - ov
     }

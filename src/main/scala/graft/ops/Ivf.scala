@@ -1,6 +1,10 @@
 package graft.ops
 
+import scala.collection.mutable
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CosineSimilarity
@@ -154,10 +158,11 @@ object Ivf {
   }
 
   /** The rows of `df` whose `idCol` (as long) is one of `ids`: the query
-    * lookup of every search entry point. The ids reach the filter as one
-    * referenced set, not as literals inlined into generated code, so every
-    * request reuses the same compiled lookup instead of compiling one of
-    * its own. Unlike `isin`, the filter is not pushed into a parquet scan. */
+    * lookup of the plan-level search entry points (Mining, Pq,
+    * Similarity). The ids reach the filter as one referenced set, not as
+    * literals inlined into generated code, so every request reuses the
+    * same compiled lookup instead of compiling one of its own. Unlike
+    * `isin`, the filter is not pushed into a parquet scan. */
   private[graft] def withIds(df: DataFrame, idCol: String, ids: Seq[Long]): DataFrame = {
     val wanted = ids.toSet
     val isWanted = udf((id: Long) => wanted.contains(id))
@@ -319,18 +324,6 @@ object Ivf {
     model
   }
 
-  /** ANN search: queries (subset of the corpus by id) probe their `nprobe`
-    * nearest clusters; exact cosine over the ORIGINAL float vectors
-    * re-ranks within probed clusters only. */
-  def search(emb: DataFrame, idCol: String, vecCol: String, model: Model,
-             queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    probedRescored(emb, idCol, vecCol, model, queryIds, nprobe)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank")
-  }
-
   /** Two-level (hierarchical) codebook: a k2-cell SUPER quantizer over
     * the corpus plus an independent child codebook per super-cell, each
     * sized to its cell's population (`ceil(n_s / targetCell)` children).
@@ -466,41 +459,138 @@ object Ivf {
       }.toDF(idCol, "cluster")
   }
 
-  /** The shared candidate pass of [[search]], [[graft.ops.Mining.hardNegatives]]
-    * and [[graft.ops.Mining.triplets]]: `(query_id, neighbor_id, sim)` for
-    * every member of each query's `nprobe` nearest cells, rescored by exact
-    * cosine against the ORIGINAL vectors. No ranking/truncation here —
-    * consumers apply their own.
+  /** ANN search: the top `k` neighbours of each query id (a corpus row),
+    * ranked among the members of its `nprobe` nearest cells by exact cosine
+    * over the ORIGINAL float vectors. Returns `(query_id, neighbor_id,
+    * rank)` rows, rank 1 the nearest.
     *
-    * Two steps. One lookup collects each query row's id and vector; the
-    * driver quantizes it and picks its probes (quantized centroid cosine
-    * over the small codebook). Then one map-only pass over the corpus
-    * quantizes each vector, assigns it against the broadcast codebook, and
-    * rescores it against the broadcast vectors of the queries probing its
-    * cell, with the fold [[graft.vector.VectorOps.cosine]] evaluates
-    * ([[org.apache.spark.sql.graft.CosineSimilarity.fold]]): two jobs and
-    * two corpus scans, no join and no shuffle.
+    * Runs its jobs when called and returns the ranked rows as a local
+    * frame. The corpus read is planned once and serves both jobs: the
+    * query lookup ([[probing]]) and the ranking pass, in which each
+    * partition keeps a bounded top-k per query id ([[TopHits]]) and
+    * `treeAggregate` merges those. Per request: one planning, 2 jobs, 2
+    * corpus scans and no shuffle at a small partition count (many
+    * partitions add `treeAggregate`'s reduce stage, which moves only the
+    * per-partition top-k); at most |Q|·k rows per partition reach the
+    * driver.
+    *
+    * The ranking is Spark's order for `orderBy(sim.desc, neighbor_id)`
+    * over [[probedRescored]]'s rows, numbered per query id: a null sim
+    * ranks last, NaN first, -0.0 equals 0.0, and equal sims rank by
+    * neighbor id ascending. Duplicated corpus rows of one query id merge
+    * into one ranking. Absent ids and `k <= 0` give no rows. */
+  def search(emb: DataFrame, idCol: String, vecCol: String, model: Model,
+             queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame = {
+    import emb.sparkSession.implicits._
+    val corpus = vectors(emb, idCol, vecCol).rdd
+    val bc = probing(corpus, model, queryIds, nprobe)
+    val top = corpus.mapPartitions(rescored(bc))
+      .treeAggregate(new TopHits(k))(
+        (t: TopHits, r: (Long, Long, java.lang.Double)) => t.add(r._1, Hit(r._2, r._3)),
+        (a: TopHits, b: TopHits) => a.merge(b))
+    bc.unpersist(blocking = false)
+    top.ranked.toDF("query_id", "neighbor_id", "rank")
+  }
+
+  /** The candidate pass of [[graft.ops.Mining.hardNegatives]] and
+    * [[graft.ops.Mining.triplets]], and the rows [[search]] ranks:
+    * `(query_id, neighbor_id, sim)` for every member of each query's
+    * `nprobe` nearest cells, rescored by exact cosine against the ORIGINAL
+    * vectors. No ranking/truncation here — consumers apply their own.
+    *
+    * The query lookup ([[probing]]) runs its job when called; the returned
+    * frame is the lazy pass: one map-only pass over the corpus quantizes
+    * each vector, assigns it against the broadcast codebook, and rescores
+    * it against the broadcast vectors of the queries probing its cell,
+    * with the fold [[graft.vector.VectorOps.cosine]] evaluates
+    * ([[org.apache.spark.sql.graft.CosineSimilarity.fold]]). Per request:
+    * two jobs and two corpus scans, no join and no shuffle.
     *
     * Each corpus row is scored once per query row probing its cell. With
     * duplicated ids that differs from a join back to the corpus by
     * neighbor id, which fanned out over every row sharing the id. */
   def probedRescored(emb: DataFrame, idCol: String, vecCol: String, model: Model,
                      queryIds: Seq[Long], nprobe: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
+    import emb.sparkSession.implicits._
+    val bc = probing(vectors(emb, idCol, vecCol).rdd, model, queryIds, nprobe)
+    vectors(emb, idCol, vecCol).mapPartitions(rescored(bc)).toDF("query_id", "neighbor_id", "sim")
+  }
+
+  /** The codebook and, per probed cell, the `(id, vector)` query rows that
+    * probe it. */
+  private type Probing = (Codebook, Map[Int, Array[(Long, Array[Double])]])
+
+  /** The query lookup of [[search]] and [[probedRescored]]: one job
+    * collects the corpus rows whose id is one of `queryIds`, the driver
+    * quantizes each and picks its `nprobe` cells (quantized centroid cosine
+    * over the small codebook), and the codebook and the query rows by cell
+    * are broadcast. The ids reach the filter as one captured set, so every
+    * request runs the same generated code for the read. */
+  private def probing(corpus: RDD[(Long, Array[Double])], model: Model,
+                      queryIds: Seq[Long], nprobe: Int): Broadcast[Probing] = {
+    val wanted = queryIds.toSet
     val book = model.codebook
-    val queries = vectors(withIds(emb, idCol, queryIds), idCol, vecCol).collect()
-    val probing: Map[Int, Array[(Long, Array[Double])]] = queries
+    val cells = corpus.filter { case (id, _) => wanted.contains(id) }.collect()
       .flatMap { case q @ (_, qv) => book.probes(quantize(qv), nprobe).map(_ -> q) }
       .groupMap(_._1)(_._2)
-    val bc = spark.sparkContext.broadcast((book, probing))
-    vectors(emb, idCol, vecCol)
-      .mapPartitions { iter =>
-        val (cb, cells) = bc.value
-        iter.flatMap { case (id, v) =>
-          cells.getOrElse(cb.nearest(quantize(v)), Array.empty[(Long, Array[Double])]).iterator
-            .collect { case (qid, qv) if qid != id => (qid, id, CosineSimilarity.fold(v, qv)) }
-        }
-      }.toDF("query_id", "neighbor_id", "sim")
+    corpus.sparkContext.broadcast((book, cells))
+  }
+
+  /** `(query_id, neighbor_id, sim)` for each corpus row against every
+    * query row probing its cell; a row is never its own neighbour. */
+  private def rescored(bc: Broadcast[Probing])(
+      iter: Iterator[(Long, Array[Double])]): Iterator[(Long, Long, java.lang.Double)] = {
+    val (book, cells) = bc.value
+    iter.flatMap { case (id, v) =>
+      cells.getOrElse(book.nearest(quantize(v)), Array.empty[(Long, Array[Double])]).iterator
+        .collect { case (qid, qv) if qid != id => (qid, id, CosineSimilarity.fold(v, qv)) }
+    }
+  }
+
+  /** A candidate neighbour and its cosine, null where the cosine is. */
+  private final case class Hit(nid: Long, sim: java.lang.Double)
+
+  /** Spark's order for `orderBy(sim.desc, neighbor_id)`: a null sim last,
+    * NaN first, -0.0 equal to 0.0 (`SQLOrderingUtil.compareDoubles`), ties
+    * by neighbor id ascending. Smaller ranks first. */
+  private object RankOrder extends Ordering[Hit] {
+    def compare(a: Hit, b: Hit): Int = {
+      val bySim =
+        if (a.sim == null) { if (b.sim == null) 0 else 1 }
+        else if (b.sim == null) -1
+        else SQLOrderingUtil.compareDoubles(b.sim, a.sim)
+      if (bySim != 0) bySim else java.lang.Long.compare(a.nid, b.nid)
+    }
+  }
+
+  /** The `k` first hits of each query id by [[RankOrder]]: a heap per
+    * query id whose head is its last kept hit. Merging adds one side's hits
+    * to the other, so partitions combine in any order to the same rows;
+    * hits that tie in the order have the same neighbour id, so which of
+    * them is kept does not change the rows. [[TopK]]'s aggregator does not
+    * fit: it runs behind a `groupByKey` exchange and ranks long ordinals,
+    * dropping nulls. */
+  private final class TopHits(k: Int) extends Serializable {
+    private val heaps = mutable.HashMap.empty[Long, mutable.PriorityQueue[Hit]]
+
+    def add(qid: Long, hit: Hit): TopHits = {
+      if (k > 0) {
+        val h = heaps.getOrElseUpdate(qid, mutable.PriorityQueue.empty[Hit](RankOrder))
+        if (h.size < k) h.enqueue(hit)
+        else if (RankOrder.lt(hit, h.head)) { h.dequeue(); h.enqueue(hit) }
+      }
+      this
+    }
+
+    def merge(other: TopHits): TopHits = {
+      for ((qid, h) <- other.heaps; hit <- h) add(qid, hit)
+      this
+    }
+
+    /** `(query_id, neighbor_id, rank)`, by query id then rank. */
+    def ranked: Seq[(Long, Long, Int)] =
+      heaps.toSeq.sortBy(_._1).flatMap { case (qid, h) =>
+        h.toSeq.sorted(RankOrder).zipWithIndex.map { case (hit, i) => (qid, hit.nid, i + 1) }
+      }
   }
 }

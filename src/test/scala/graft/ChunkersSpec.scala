@@ -52,6 +52,17 @@ class ChunkersSpec extends AnyFunSuite {
     chunks.dropRight(1).foreach(c => assert(c.endsWith("word"), s"'$c' cut mid-word"))
   }
 
+  test("C2 windows count code points, so an astral character is never split") {
+    // 𝒳 (U+1D4B3) is one code point and two UTF-16 units; the expected
+    // windows are the reference's over a Python str
+    val x = "𝒳"
+    assert(Chunkers.splitTextWindows(s"${x}y", 1, 0) == List(x, "y"))
+    // the overlap steps back one code point
+    assert(Chunkers.splitTextWindows(s"a $x$x b", 3, 1) == List(s"a $x$x", s"$x b"))
+    // the bump looks 40 code points ahead: the space after 39 of them
+    assert(Chunkers.splitTextWindows("a" + x * 39 + " b", 1, 0) == List("a" + x * 39, "b"))
+  }
+
   test("C2 clamps overlap and degenerate sizes like the reference") {
     assert(Chunkers.splitTextWindows("abc def", 0, 10) == List("abc def"))
     assert(Chunkers.splitTextWindows("", 10, 2) == Nil)

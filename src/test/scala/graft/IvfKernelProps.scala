@@ -12,8 +12,9 @@ import org.apache.spark.sql.graft.CosineSimilarity
   * ([[IvfReference]], [[VectorOps.cosine]]) on generated vectors that hold
   * negatives, ±0, subnormals, large magnitudes and a zero vector: the
   * Scala quantizer against the in-plan transform, the primitive codebook
-  * against the tuple-array loops (ties included), and the rescore fold
-  * against the native cosine expression under codegen and interpreted. */
+  * against the tuple-array loops (ties included), the rescore fold
+  * against the native cosine expression under codegen and interpreted,
+  * and the search's per-partition top-k against the Window ranking. */
 object IvfKernelProps extends Properties("graft.ivf") {
 
   // each Spark-backed sample runs a few jobs over a whole generated batch
@@ -148,4 +149,59 @@ object IvfKernelProps extends Properties("graft.ivf") {
       Ivf.Model(Map(0 -> (Array(1L, 1L), 1L))), Seq(0L), nprobe = 1))
     pass == Map((0L, 1L) -> None, (0L, 2L) -> None)
   }
+
+  /** A corpus for the ranking, as (id, vector) rows: ids from a small
+    * range, so some repeat (a repeated query id is a duplicated query
+    * row); vectors drawn often from a small pool (equal sims) and the
+    * zero vector (null sims) besides fresh ones. */
+  private def rankCorpus[T](elem: Gen[T], zero: T)(
+      implicit ct: scala.reflect.ClassTag[T]): Gen[Seq[(Long, Array[T])]] = for {
+    dim <- Gen.choose(1, 4)
+    pool <- Gen.listOfN(2, Gen.containerOfN[Array, T](dim, elem))
+    n <- Gen.choose(1, 30)
+    rows <- Gen.listOfN(n, Gen.zip(Gen.choose(0L, 20L), Gen.frequency(
+      4 -> Gen.oneOf(pool), 1 -> Gen.const(Array.fill(dim)(zero)),
+      3 -> Gen.containerOfN[Array, T](dim, elem))))
+  } yield rows
+
+  /** A request against `rows`: query ids present or absent (-1), some
+    * repeated; a codebook of 1-4 corpus vectors; `k` from 0 past the
+    * candidate count; `nprobe` from 1 to two past the cell count. */
+  private def request[T](rows: Seq[(Long, Array[T])], toDouble: T => Double): Gen[(Seq[Long], Ivf.Model, Int, Int)] = for {
+    qids <- Gen.choose(0, 5).flatMap(Gen.listOfN(_, Gen.frequency(
+      5 -> Gen.oneOf(rows.map(_._1)), 1 -> Gen.const(-1L))))
+    cells <- Gen.choose(1, math.min(4, rows.size))
+    k <- Gen.frequency(3 -> Gen.choose(0, 4), 1 -> Gen.choose(0, 2 * rows.size + 2))
+    nprobe <- Gen.choose(1, cells + 2)
+  } yield (qids,
+    Ivf.Model(rows.take(cells).zipWithIndex.map { case ((_, v), c) =>
+      c -> (Ivf.quantize(v.map(toDouble)), 1L) }.toMap),
+    k, nprobe)
+
+  /** `search` and the Window reference give equal row multisets and equal
+    * schemas, nullability included, with `int` or `long` ids. */
+  private def rankingAgrees(df: DataFrame, req: (Seq[Long], Ivf.Model, Int, Int), idType: String): Boolean = {
+    val (qids, model, k, nprobe) = req
+    val e = df.withColumn("id", col("id").cast(idType))
+    def rows(r: DataFrame) = r.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val got = Ivf.search(e, "id", "v", model, qids, k, nprobe)
+    val ref = IvfReference.searchWindow(e, "id", "v", model, qids, k, nprobe)
+    got.schema == ref.schema && rows(got) == rows(ref)
+  }
+
+  private val idType = Gen.oneOf("int", "long")
+
+  property("search ranks as probedRescored + row_number on array<float>") =
+    forAllNoShrink(rankCorpus(floatElem, 0f).flatMap(rs =>
+      Gen.zip(Gen.const(rs), request[Float](rs, _.toDouble), idType))) { case (rs, req, t) =>
+      val s = spark; import s.implicits._
+      rankingAgrees(rs.map { case (id, v) => (id, v.toSeq) }.toDF("id", "v"), req, t)
+    }
+
+  property("search ranks as probedRescored + row_number on array<double>") =
+    forAllNoShrink(rankCorpus(doubleElem, 0.0).flatMap(rs =>
+      Gen.zip(Gen.const(rs), request[Double](rs, identity), idType))) { case (rs, req, t) =>
+      val s = spark; import s.implicits._
+      rankingAgrees(rs.map { case (id, v) => (id, v.toSeq) }.toDF("id", "v"), req, t)
+    }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Ivf
 import graft.vector.VectorOps
@@ -8,8 +9,9 @@ import graft.vector.VectorOps
 /** The IVF kernels in the form they had before the primitive codebook and
   * the single corpus pass, kept as the references the specs compare
   * against: the in-plan quantizer, the tuple-array centroid loops that
-  * divide `s(i) / n` per vector × centroid × dimension, and the candidate
-  * pass as a join of the assignments back to the corpus. */
+  * divide `s(i) / n` per vector × centroid × dimension, the candidate
+  * pass as a join of the assignments back to the corpus, and the search
+  * ranking as a `row_number` Window over the candidate pass. */
 object IvfReference {
 
   /** floor(x * 2^20) per component, as a SQL transform. */
@@ -99,5 +101,17 @@ object IvfReference {
       .join(broadcast(qVecs), "query_id")
       .withColumn("sim", VectorOps.cosine(col("_nv"), col("_qv")))
       .select(col("query_id"), col("neighbor_id"), col("sim"))
+  }
+
+  /** [[Ivf.search]] ranked by a Window: each query id's candidates from
+    * [[Ivf.probedRescored]] numbered by `(sim DESC, neighbor_id)`, the
+    * first `k` kept. */
+  def searchWindow(emb: DataFrame, idCol: String, vecCol: String, model: Ivf.Model,
+                   queryIds: Seq[Long], k: Int, nprobe: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
+    Ivf.probedRescored(emb, idCol, vecCol, model, queryIds, nprobe)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", "rank")
   }
 }

@@ -145,42 +145,39 @@ class IvfSpec extends AnyFunSuite {
     assert(got == ref)
   }
 
-  test("exact counts: search collects in <= 3 jobs; probedRescored scans the corpus twice") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.util.QueryExecutionListener
+  test("exact counts: <= 2 jobs and no shuffle per search; 2 corpus reads per request") {
+    // task metrics see every read, also the lookups, which run outside SQL
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val scans = new java.util.concurrent.atomic.AtomicInteger()
-    val jobListener = new SparkListener {
+    val shuffled = new java.util.concurrent.atomic.AtomicLong()
+    val read = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
+        shuffled.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+        read.addAndGet(m.inputMetrics.recordsRead)
+      }
     }
-    val helper = new AdaptiveSparkPlanHelper {}
-    val scanListener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        scans.addAndGet(helper.collect(qe.executedPlan) { case s: FileSourceScanExec => s }.size)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    def counted(body: => Unit): (Int, Int) = {
+    def counted(body: => Unit): (Int, Long, Long) = {
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      jobs.set(0); scans.set(0)
+      jobs.set(0); shuffled.set(0); read.set(0)
       body
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      (jobs.get, scans.get)
+      (jobs.get, shuffled.get, read.get)
     }
     val qids = Seq(0L, 1L, 2L, 3L)
     val m = model // trained outside the counted windows
-    spark.sparkContext.addSparkListener(jobListener)
-    spark.listenerManager.register(scanListener)
+    val n = emb.count()
+    spark.sparkContext.addSparkListener(listener)
     try {
-      val (searchJobs, _) = counted(Ivf.search(emb, "vec_id", "embedding", m, qids, 10, 3).collect())
-      assert(searchJobs <= 3, s"search ran $searchJobs jobs")
-      val (_, passScans) = counted(Ivf.probedRescored(emb, "vec_id", "embedding", m, qids, 3).collect())
-      assert(passScans == 2, s"probedRescored scanned the corpus $passScans times")
-    } finally {
-      spark.sparkContext.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(scanListener)
-    }
+      val (searchJobs, searchShuffled, searchRead) =
+        counted(Ivf.search(emb, "vec_id", "embedding", m, qids, 10, 3).collect())
+      assert(searchJobs <= 2, s"search ran $searchJobs jobs")
+      assert(searchShuffled == 0, s"search shuffled $searchShuffled records")
+      assert(searchRead == 2 * n, s"search read $searchRead rows of a $n-row corpus")
+      val (_, _, passRead) = counted(Ivf.probedRescored(emb, "vec_id", "embedding", m, qids, 3).collect())
+      assert(passRead == 2 * n, s"probedRescored read $passRead rows of a $n-row corpus")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("requests for other query ids run the same generated code") {
@@ -222,6 +219,13 @@ class IvfSpec extends AnyFunSuite {
         assert(a.nonEmpty && a == b, name)
       }
     } finally spark.listenerManager.unregister(listener)
+    // Ivf.search runs its jobs outside any SQL action, so count compiles:
+    // a request for other ids compiles no class
+    import org.apache.spark.metrics.source.CodegenMetrics
+    Ivf.search(emb, "vec_id", "embedding", m, Seq(0L, 1L, 2L), 10, 3).collect()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Ivf.search(emb, "vec_id", "embedding", m, Seq(5L, 6L, 7L), 10, 3).collect()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles == 0, "Ivf.search")
   }
 
   test("staleness guard: in-distribution batch passes, shifted batch trips, retrain clears") {

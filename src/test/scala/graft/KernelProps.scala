@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAllNoShrink
 import graft.chunk.Chunkers
@@ -331,10 +330,7 @@ object KernelProps extends Properties("graft.native") with AdaptiveSparkPlanHelp
       }
       agree(sql, rows.zipWithIndex.flatMap {
         case ((t, n), i) if t != null && n != null =>
-          // as a Spark string stores it: a window edge that splits a
-          // surrogate pair leaves a lone surrogate, which UTF-8 encodes as '?'
-          Chunkers.splitTextWindows(t, n, ov).zipWithIndex.map { case (c, j) =>
-            Row(i.toLong, j, UTF8String.fromString(c).toString) }
+          Chunkers.splitTextWindows(t, n, ov).zipWithIndex.map { case (c, j) => Row(i.toLong, j, c) }
         case _ => Nil
       }.groupBy(identity).view.mapValues(_.size).toMap)
     }

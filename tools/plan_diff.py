@@ -7,6 +7,11 @@ change shape?" is a one-screen report instead of a 16k-line diff (the r9
 curation_full scare). RDD ids, plan ids, and stats differ every run by
 construction; only operators and their counts are compared.
 
+An operator is its tree line's name, spaces included: `Scan parquet`,
+`Scan ExistingRDD`, `BroadcastHashJoin Inner BuildRight` (a join counts
+with its type and build side). A scan of a catalog table drops the table
+name, which carries a per-run suffix, so it counts as `Scan parquet`.
+
 Each operator is counted together with its whole-stage codegen marker:
 `Project*` is a Project inside a WholeStageCodegen stage (the tree line
 reads `* Project (n)`), `Project` one outside it. A query whose operator
@@ -15,7 +20,11 @@ leaves (or joins) whole-stage codegen therefore shows as drift, e.g.
 where the stage is planned: an unexecuted AdaptiveSparkPlan's tree
 carries no markers.
 
+A file with no '========== name ==========' headers (one plan, as in
+plans/r18/*_before.txt) is one query named '-'.
+
 Usage: python3 tools/plan_diff.py PLANS_r17.txt PLANS_r18.txt
+       python3 tools/plan_diff.py plans/r18/q_before.txt plans/r18/q_after.txt
 Exit code 0 = no drift, 1 = drift found (usable as a gate).
 """
 import re
@@ -26,21 +35,25 @@ from collections import Counter
 def parse(path):
     """-> {query: Counter(operator -> count)} from an Explain dump; an
     operator inside whole-stage codegen is keyed with a trailing '*'."""
-    plans, name, in_phys, ops = {}, None, False, Counter()
+    plans, name, in_phys, ops = {}, "-", False, Counter()
     # exactly the Explain delimiter (10 '='): formatted explain emits its
     # own '===== Subqueries =====' section headers, which must NOT start a
     # new query (the bloom-filter runtime subquery introduced one)
     hdr = re.compile(r"^========== (\S+) ==========$")
     # tree lines: optional indent of ':', '+', '-', ' ', then '* Op (id)'
-    # (inside whole-stage codegen) or 'Op (id)'; detail sections
+    # (inside whole-stage codegen) or 'Op (id)', where Op may hold spaces
+    # ('Scan parquet', 'SortMergeJoin Inner') and the id may be followed by
+    # arguments ('InMemoryTableScan (1) (columnarIn=...)'); detail sections
     # '(id) Op' are skipped (same names)
-    tree = re.compile(r"^[-+:\s]*(\*\s*)?([A-Za-z][A-Za-z0-9_.]*)\s+\((\d+)\)\s*$")
+    tree = re.compile(r"^[-+:\s]*(\*\s*)?([A-Za-z][^()]*?)\s+\((\d+)\)(\s+\(.*\))?\s*$")
+    # 'Scan parquet spark_catalog.default.t_123' -> 'Scan parquet'
+    table_scan = re.compile(r"^(Scan \S+) .*$")
     with open(path, encoding="utf-8", errors="replace") as f:
         for line in f:
             line = line.rstrip("\n")
             m = hdr.match(line)
             if m:
-                if name is not None:
+                if name != "-" or ops:
                     plans[name] = ops
                 name, in_phys, ops = m.group(1), False, Counter()
                 continue
@@ -53,8 +66,9 @@ def parse(path):
                     continue
                 t = tree.match(line)
                 if t:
-                    ops[t.group(2) + ("*" if t.group(1) else "")] += 1
-    if name is not None:
+                    op = table_scan.sub(r"\1", t.group(2))
+                    ops[op + ("*" if t.group(1) else "")] += 1
+    if name != "-" or ops:
         plans[name] = ops
     return plans
 
