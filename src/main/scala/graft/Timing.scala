@@ -110,7 +110,7 @@ object Timing {
     *    run could reuse that cache through plan-fragment matching;
     *  - the listener-bus drain: events queued by one run would otherwise
     *    be dispatched on the driver during the next run's timed window;
-    *  - `System.gc()`: `localCheckpoint` blocks and broadcasts are released
+    *  - `System.gc()`: pinned blocks (`Pin`) and broadcasts are released
     *    by the `ContextCleaner` only when driver GC collects their frames,
     *    and under a large heap that may not happen for the whole run. */
   private def reclaim(spark: SparkSession): Unit = {

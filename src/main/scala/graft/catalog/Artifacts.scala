@@ -3,6 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
+import org.apache.spark.sql.graft.Pin
 
 /** Idempotent builders of the persisted artifacts that catalog rows probe
   * (corpus indexes, trained models, maintained state). Each is a build-if-missing
@@ -149,12 +150,12 @@ object Artifacts {
         .select(col("doc_id").as("src"),
           explode(array(expr("doc_id div 2"), expr("doc_id div 4"),
             expr("doc_id % 97"))).as("dst"))
-      val e = graft.ops.Graph.canonicalDirected(base).localCheckpoint()
+      val e = Pin(graft.ops.Graph.canonicalDirected(base))
       graft.io.GenTable.replace(s, eR, e)
       graft.io.GenTable.replace(s, odegR, graft.ops.Graph.outDegreesOf(e))
-      val und = graft.ops.Graph.canonicalUndirected(base).localCheckpoint()
+      val und = Pin(graft.ops.Graph.canonicalUndirected(base))
       graft.io.GenTable.replace(s, undR, und)
-      val deg = graft.ops.Graph.degreesOf(und).localCheckpoint()
+      val deg = Pin(graft.ops.Graph.degreesOf(und))
       graft.io.GenTable.replace(s, degR, deg)
       graft.io.GenTable.replace(s, triR, graft.ops.Graph.triangleStateOf(und, deg))
     }
@@ -193,13 +194,12 @@ object Artifacts {
     if (!built) {
       val emb = Tables.embeddings(s, dir)
       val m = bitextDeltaMod(emb.count())
-      val base = emb.filter(col("vec_id") % m =!= 0).localCheckpoint(false)
+      val base = Pin(emb.filter(col("vec_id") % m =!= 0))
       val k2 = math.max(4, math.ceil(math.sqrt(base.count().toDouble / 100)).toInt)
       val m2 = graft.ops.Ivf.trainHierarchical(base, "vec_id", "embedding",
         k2 = k2, targetCell = 100)
       graft.ops.Ivf.writeModel2(s, m2, mT)
-      val asn = graft.ops.Ivf.assignHierarchical(base, "vec_id", "embedding", m2)
-        .localCheckpoint(false)
+      val asn = Pin(graft.ops.Ivf.assignHierarchical(base, "vec_id", "embedding", m2))
       graft.io.GenTable.replace(s, asnR, asn)
       graft.io.GenTable.replace(s, pairsR,
         graft.ops.Mining.bitextPairsWithCells(base, "vec_id", "embedding",

@@ -7,6 +7,7 @@ import graft.ops.{Dedup, TextAnalysis}
 import graft.vector.VectorOps
 import graft.catalog.Artifacts._
 import graft.catalog.Duck._
+import org.apache.spark.sql.graft.Pin
 
 /** Dedup family: exact, minhash, simhash, semantic and incremental
   * near-dedup and contamination, plus the lexical search and eval rows that
@@ -707,14 +708,12 @@ object DedupQueries {
       // by the grid's collision mass — both engines replay it exactly)
       // toks feeds the sketch AND the exact counts; top feeds the probe
       // side AND the join — pinned so the explode pipeline runs once
-      val toks = Tables.documents(s, dir)
+      val toks = Pin(Tables.documents(s, dir)
         .select(explode(Dedup.tokensCol(col("text"))).as("term"))
-        .filter(col("term") =!= "")
-        .localCheckpoint(false)
+        .filter(col("term") =!= ""))
       val counters = graft.ops.Cms.sketch(toks, col("term"), depth = 4, width = 256)
-      val top = toks.groupBy(col("term")).agg(count(lit(1)).as("n_exact"))
-        .orderBy(col("n_exact").desc, col("term")).limit(10)
-        .localCheckpoint(false)
+      val top = Pin(toks.groupBy(col("term")).agg(count(lit(1)).as("n_exact"))
+        .orderBy(col("n_exact").desc, col("term")).limit(10))
       top.join(graft.ops.Cms.estimate(counters, top, "term", depth = 4, width = 256), "term")
         .select(col("term"), col("n_exact"), col("cms_est"))
         .orderBy(col("term"))

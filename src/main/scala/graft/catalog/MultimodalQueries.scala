@@ -12,6 +12,7 @@ import graft.vector.VectorOps
 import graft.catalog.Artifacts._
 import graft.catalog.Duck._
 import graft.catalog.ChunkingQueries.tokenChunks
+import org.apache.spark.sql.graft.Pin
 
 /** Multimodal plumbing (media headers, phash, audio, video) and the
   * curation operators declared after it: tokenization, filters, joins,
@@ -480,10 +481,9 @@ object MultimodalQueries {
       // pin the ≤n_sources-row aggregate: best/tot/q all derive from it,
       // and without the pin each crossJoin replicates the whole LM-scoring
       // corpus subtree (~8 corpus scans in the unpinned plan)
-      val per = scored.groupBy("source").agg(
+      val per = Pin(scored.groupBy("source").agg(
         count(lit(1)).as("n_docs"),
-        expr("sum(lm_bp) div count(1)").as("avg_lm_bp"))
-        .localCheckpoint(false)
+        expr("sum(lm_bp) div count(1)").as("avg_lm_bp")))
       val best = per.agg(max("avg_lm_bp").as("_best"))
       val q = per.crossJoin(broadcast(best))
         .withColumn("excess_q", least(lit(7L), expr("(_best - avg_lm_bp) div 200")))
@@ -713,10 +713,9 @@ object MultimodalQueries {
           carryCols = Seq("source")), "chunk_text")
       // canonical chunk per distinct text; pinned so the chunk+embed DAG
       // runs once for both upsert sides (the nearDuplicates rationale)
-      val canon = embedded
+      val canon = Pin(embedded
         .withColumn("_cid", min(col("chunk_id")).over(Window.partitionBy(md5(col("chunk_text")))))
-        .filter(col("chunk_id") === col("_cid")).drop("_cid")
-        .localCheckpoint(false)
+        .filter(col("chunk_id") === col("_cid")).drop("_cid"))
       val upserted = VectorOps.upsert(
         canon.withColumn("version", lit(1)),
         canon.filter(col("doc_id") % 3 === 0).withColumn("version", lit(2)),
@@ -1242,8 +1241,7 @@ object MultimodalQueries {
         .join(docs, "doc_id")
       val wd = org.apache.spark.sql.expressions.Window
         .partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-      // pin the deduped set (the curation_full localCheckpoint idiom):
-      // five downstream consumers (two DSIR passes, the s3 join, two
+      // pin the deduped set: five downstream consumers (two DSIR passes, the s3 join, two
       // counts) must not each re-run the quality pass + dedup window.
       // Scale note (r16): this is a TEXT-sized memory-pool pin — the
       // footprint class that went superlinear on curation_full at sf30.
@@ -1251,14 +1249,13 @@ object MultimodalQueries {
       // (3.99 → 5.54 s at sf0.1: five consumers each pay the columnar
       // decompress); if this row ever joins the sf30 frontier, re-run
       // that A/B there, where the pool pressure flips the trade.
-      val s2 = s1.withColumn("_rn", row_number().over(wd))
-        .filter(col("_rn") === 1).drop("_rn")
-        .localCheckpoint(false)
+      val s2 = Pin(s1.withColumn("_rn", row_number().over(wd))
+        .filter(col("_rn") === 1).drop("_rn"))
       val s3ids = graft.ops.Dsir.selectTop(
         graft.ops.Dsir.importanceScores(s2, "doc_id", "text",
           col("source").isin(DsirTargetSources: _*)), "doc_id", 200)
         .select(col("doc_id"))
-      val s3 = s3ids.join(s2, "doc_id").localCheckpoint(false)
+      val s3 = Pin(s3ids.join(s2, "doc_id"))
       val pairs = Dedup.minhashCandidates(s3, "doc_id", "text", k = 3,
         numHashes = 16, maxBucket = Int.MaxValue)
       val split = graft.ops.Sampling.hashSplit(
@@ -1303,7 +1300,7 @@ object MultimodalQueries {
       // representative → per-source token-budget mix. The r7 sub-document
       // text transforms run UPSTREAM of scoring/dedup/mixing, the order a
       // production curation run applies them; each text reassembly is one
-      // aggregate, and the gated METADATA is pinned (localCheckpoint) so
+      // aggregate, and the gated METADATA is pinned so
       // the multi-consumer stages downstream never re-run the quality
       // pass — see the pin-budget note below for why text is NOT pinned.
       val docs = Tables.documents(s, dir).withColumn("text", expr(BoilerSynthExpr))
@@ -1311,7 +1308,7 @@ object MultimodalQueries {
           "source", maxDocFreq = 10L)
         .select(col("doc_id"), col("clean_text"))
       // Pin-budget posture (r15 sf30 audit → r16 fix), two halves:
-      // (1) the HOT checkpoint pins ONLY (doc_id, source, n_tokens,
+      // (1) the HOT pin holds ONLY (doc_id, source, n_tokens,
       // quality_score) — what every downstream consumer except shingling
       // reads — so the memory-pool pin no longer grows with document
       // LENGTH, only COUNT (~30x fewer hot bytes than the old full-text
@@ -1325,12 +1322,12 @@ object MultimodalQueries {
       // disk tier is per-executor local space — the cheap resource.
       val cleanedText = Dedup.removeDuplicatedSpans(noBoiler, "doc_id", "clean_text", k = 5)
         .select(col("doc_id"), col("clean_text").as("text"))
+        // not a Pin: DISK_ONLY keeps this text off the heap (half (2) above)
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val gatedMeta = TextAnalysis.quality(cleanedText, "doc_id", "text")
+      val gatedMeta = Pin(TextAnalysis.quality(cleanedText, "doc_id", "text")
         .select(col("doc_id"), col("n_tokens"), col("quality_score"))
         .filter(col("quality_score") >= 45)
-        .join(Tables.documents(s, dir).select(col("doc_id"), col("source")), "doc_id")
-        .localCheckpoint(false)
+        .join(Tables.documents(s, dir).select(col("doc_id"), col("source")), "doc_id"))
       // broadcast the pinned id set into the text probe: the disk-tier
       // text relation is read map-side, never shuffled (at sf30 an SMJ
       // here would shuffle ~4.5 GB of cleaned text to join 12 MB of ids)
@@ -1747,7 +1744,7 @@ object MultimodalQueries {
       // LSH pairs → connected components → canonical representative: the
       // step that turns candidate PAIRS into dedup CLUSTERS (A~B, B~C ⇒
       // {A,B,C}, keep min id). Iterative min-label propagation with
-      // per-round localCheckpoint; oracle replays it as a recursive CTE.
+      // per-round lineage truncation; oracle replays it as a recursive CTE.
       val docs = Tables.documents(s, dir)
       val pairs = Dedup.minhashCandidates(docs, "doc_id", "text", k = 3, numHashes = 16,
         maxBucket = Int.MaxValue)
@@ -2097,9 +2094,9 @@ object MultimodalQueries {
         .select(col("doc_id").as("src"),
           explode(array(expr("doc_id div 2"), expr("doc_id div 4"),
             expr("doc_id % 97"))).as("dst"))
-      val fresh = graft.ops.Graph.newDirectedEdges(e, delta).localCheckpoint()
+      val fresh = Pin(graft.ops.Graph.newDirectedEdges(e, delta))
       // pinned: the merged edge table is probed every rank iteration
-      val eAll = e.unionByName(fresh).localCheckpoint()
+      val eAll = Pin(e.unionByName(fresh))
       val odegAll = graft.ops.Graph.mergeOutDegrees(
         odeg, graft.ops.Graph.outDegreesOf(fresh))
       graft.ops.Graph.pageRankOnState(
@@ -2161,16 +2158,15 @@ object MultimodalQueries {
       // into the state. Nothing re-enumerates the base graph's wedges.
       // Same oracle as graph_triangles — the full recompute.
       val Seq(_, _, undR, degR, triR) = ensureGraphState(s, dir)
-      val und = graft.io.GenTable.read(s, undR).get.localCheckpoint(false)
+      val und = Pin(graft.io.GenTable.read(s, undR).get)
       val deg = graft.io.GenTable.read(s, degR).get
       val tri = graft.io.GenTable.read(s, triR).get
       val delta = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
         .select(col("doc_id").as("src"),
           explode(array(expr("doc_id div 2"), expr("doc_id div 4"),
             expr("doc_id % 97"))).as("dst"))
-      val fresh = graft.ops.Graph.newUndirectedEdges(und, delta).localCheckpoint(false)
-      val degAll = graft.ops.Graph.mergeDegrees(deg, graft.ops.Graph.degreesOf(fresh))
-        .localCheckpoint(false) // orientation AND the output card
+      val fresh = Pin(graft.ops.Graph.newUndirectedEdges(und, delta))
+      val degAll = Pin(graft.ops.Graph.mergeDegrees(deg, graft.ops.Graph.degreesOf(fresh))) // orientation AND the output card
       graft.ops.Graph.triangleOutput(degAll,
         graft.ops.Graph.mergeTriangles(tri,
           graft.ops.Graph.newTriangleCounts(und, fresh, degAll)))

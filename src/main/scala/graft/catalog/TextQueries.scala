@@ -6,6 +6,7 @@ import graft.io.Tables
 import graft.ops.{Chat, Dedup, TextAnalysis}
 import graft.catalog.Artifacts._
 import graft.catalog.Duck._
+import org.apache.spark.sql.graft.Pin
 
 /** Text analysis: language id, quality, winnowing, PII, chat and
   * preference data, LM scoring, classifiers and DSIR. */
@@ -457,8 +458,8 @@ object TextQueries {
       // synthesis yields single-turn conversations on this corpus — a
       // gate over those is vacuous); roles carry the same %7/%11 plants,
       // so the gate provably rejects real structural defects. Pin-budget
-      // posture from the start: only the ADMITTED ids pin
-      // (localCheckpoint of a one-column relation); the conversation
+      // posture from the start: only the ADMITTED ids pin (a one-column
+      // relation); the conversation
       // synthesis is a map-only projection that re-derives for the
       // render pass instead of pinning turns arrays corpus-wide — no
       // stage past the pin re-scans the unfiltered corpus.
@@ -477,11 +478,10 @@ object TextQueries {
           |        ELSE 'assistant' END,
           |      'content', array_join(slice(ts, i * 7 + 1, 7), ' ')))), 1)""".stripMargin)
         .as("turns"))
-      val keptIds = Chat.chatQa(convs, "doc_id", "turns")
+      val keptIds = Pin(Chat.chatQa(convs, "doc_id", "turns")
         .filter(col("alternates") === 1 && col("starts_user") === 1 &&
           col("ends_assistant") === 1)
-        .select(col("doc_id"))
-        .localCheckpoint(false)
+        .select(col("doc_id")))
       // broadcast the pinned id set into BOTH probe joins: the gate and
       // the source lookup stay map-side, so the synthesized turns arrays
       // never ride a shuffle
@@ -970,7 +970,7 @@ object TextQueries {
         .filter(col("r_word_count") && col("r_word_len") && col("r_symbol") &&
           col("r_bullet") && col("r_ellipsis") && col("r_alpha"))
         .select(col("doc_id"))
-      val gated = docs.join(gate, "doc_id").localCheckpoint(false)
+      val gated = Pin(docs.join(gate, "doc_id"))
       val scored = TextAnalysis.lmScore(gated, "doc_id", "text")
         .filter(col("lm_bp") >= 335L).select(col("doc_id"), col("lm_bp"))
       val kept = gated.join(scored, "doc_id")

@@ -9,6 +9,7 @@ import graft.pipelines.Pipelines
 import graft.vector.VectorOps
 import graft.catalog.Artifacts._
 import graft.catalog.Duck._
+import org.apache.spark.sql.graft.Pin
 
 /** Vector ops (V1-V3, K7): exact and approximate nearest-neighbour search,
   * quantization, bitext and hard-negative mining, embedding cards. */
@@ -385,8 +386,8 @@ object VectorQueries {
       // budget is chosen from (classify_nb_pr's analogue for the ANN
       // family); one codebook, one truth pass, three probe tiers
       val emb = Tables.embeddings(s, dir)
-      val truth = Catalog("knn_cosine").build(s, dir)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
+      val truth = Pin(Catalog("knn_cosine").build(s, dir)
+        .select(col("query_id"), col("neighbor_id")))
       val nTruth = truth.count()
       val model = graft.ops.Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
       Seq(1, 2, 4).map { np =>
@@ -627,9 +628,9 @@ object VectorQueries {
       val emb = Tables.embeddings(s, dir)
       val q = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val truth = graft.vector.VectorOps.knnCosine(emb, "vec_id", "embedding",
+      val truth = Pin(graft.vector.VectorOps.knnCosine(emb, "vec_id", "embedding",
         q, "qid", "qvec", 10)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
+        .select(col("query_id"), col("neighbor_id")))
       val nTruth = truth.count()
       def recallRow(label: String, df: org.apache.spark.sql.DataFrame) =
         df.select(col("query_id"), col("neighbor_id"))
@@ -859,11 +860,11 @@ object VectorQueries {
       // row oracled in DuckDB — a bucketing/centroid/pruning regression
       // now surfaces as an oracle hash failure instead of silent quality
       // drift. Integer basis points ((10000*hits) div |truth|) keep the
-      // cross-engine compare exact. The truth relation is pinned with a
-      // lazy localCheckpoint so the three tier joins reuse one brute-force
-      // pass instead of re-scoring the corpus per tier.
-      val truth = Catalog("knn_cosine").build(s, dir)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
+      // cross-engine compare exact. The truth relation is pinned so the
+      // three tier joins reuse one brute-force pass instead of re-scoring
+      // the corpus per tier.
+      val truth = Pin(Catalog("knn_cosine").build(s, dir)
+        .select(col("query_id"), col("neighbor_id")))
       val nTruth = truth.count()
       def recallRow(label: String, df: DataFrame) =
         df.select(col("query_id"), col("neighbor_id"))
@@ -881,11 +882,11 @@ object VectorQueries {
       // SHIFTED corpus — proving the re-train restores a healthy index
       val shiftEmb = Tables.embeddings(s, dir)
         .withColumn("embedding", expr("transform(embedding, x -> x + CAST(0.5 AS FLOAT))"))
-      val truthShift = VectorOps.knnCosine(shiftEmb, "vec_id", "embedding",
+      val truthShift = Pin(VectorOps.knnCosine(shiftEmb, "vec_id", "embedding",
         shiftEmb.filter(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
         "qid", "qvec", k = 10)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
+        .select(col("query_id"), col("neighbor_id")))
       val nTruthShift = truthShift.count()
       val shiftModel = graft.ops.Ivf.train(shiftEmb, "vec_id", "embedding", k = 8, iters = 2)
       val shiftTier = graft.ops.Ivf.search(shiftEmb, "vec_id", "embedding", shiftModel,

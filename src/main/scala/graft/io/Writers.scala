@@ -1,7 +1,6 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
 
 /** Sink operators (SURVEY.md §2.2 K1-K6).
   *
@@ -74,17 +73,4 @@ object Writers {
   /** K6: JSON summary sink — one-row metrics record. */
   def summarySink(summary: DataFrame, path: String): Unit =
     summary.coalesce(1).write.mode(SaveMode.Overwrite).json(path)
-
-  /** A3 split-write: one pass, two sinks. The assembled frame is cached so
-    * the upstream (scans, joins, parses) runs once, not once per sink
-    * (SURVEY.md §4 item 3). */
-  def splitWrite(assembled: DataFrame, okCol: String,
-                 successPath: String, failurePath: String): Unit = {
-    val cached = assembled.cache()
-    val okFlag = coalesce(col(okCol), lit(false)) // NULL ok → failure side
-    try {
-      jsonSink(cached.filter(okFlag).drop(okCol), successPath)
-      csvFailureSink(cached.filter(!okFlag).drop(okCol), failurePath)
-    } finally cached.unpersist()
-  }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** BM25 ranked retrieval over a tokenized corpus — the scoring layer on
   * top of [[graft.ops.TextAnalysis]]'s term statistics and the
@@ -62,11 +63,9 @@ object Bm25 {
     * floor(2^20 · idf_odds · tf·(k1+1) / (tf + k1·(1−b+b·dl·N/Σdl))). */
   def search(docs: DataFrame, idCol: String, textCol: String,
              queryTerms: Seq[String], k: Int): DataFrame = {
-    // tf feeds three consumers (scores, df, corpus constants) — pinned
-    // with a lazy localCheckpoint so the tokenize/explode/aggregate
-    // pipeline runs ONCE, not three times (same fan-out discipline as
-    // Dedup.nearDuplicates; ContextCleaner reclaims the blocks)
-    val tf = termFrequencies(docs, idCol, textCol).localCheckpoint(false)
+    // tf feeds three consumers (scores, df, corpus constants) — pinned so
+    // the tokenize/explode/aggregate pipeline runs ONCE, not three times
+    val tf = Pin(termFrequencies(docs, idCol, textCol))
     searchWithTf(tf, idCol, queryTerms, k)
   }
 
@@ -137,7 +136,7 @@ object Bm25 {
                         queryTerms: Seq[String], k: Int): DataFrame = {
     val indexed = spark.table(tfTable)
     val delta = termFrequencies(newBatch, idCol, textCol)
-    searchWithTf(indexed.unionByName(delta).localCheckpoint(false), idCol, queryTerms, k)
+    searchWithTf(Pin(indexed.unionByName(delta)), idCol, queryTerms, k)
   }
 
   /** Rocchio pseudo-relevance feedback (Rocchio 1971, the classic query
@@ -168,10 +167,9 @@ object Bm25 {
       s"rocchioSearch needs k0/k >= 1 and expandTerms >= 0, got k0=$k0 expandTerms=$expandTerms k=$k")
     val spark = docs.sparkSession
     import spark.implicits._
-    val tf = termFrequencies(docs, idCol, textCol).localCheckpoint(false)
-    val consts = tf.groupBy().agg(
-      countDistinct(col(idCol)).as("n_docs"), sum(col("tf")).as("sum_dl"))
-      .localCheckpoint(false) // one row, probed by every scoring stage
+    val tf = Pin(termFrequencies(docs, idCol, textCol))
+    val consts = Pin(tf.groupBy().agg(
+      countDistinct(col(idCol)).as("n_docs"), sum(col("tf")).as("sum_dl"))) // one row, probed by every scoring stage
     val bmScore =
       s"""cast(floor($ScoreScale *
          |  ((cast(n_docs as double) - cast(df as double) + 0.5D) / (cast(df as double) + 0.5D)) *
@@ -237,7 +235,7 @@ object Bm25 {
     // map-side-filtered scans (their shuffles are phrase-selectivity-
     // sized, and a pinned positional stream would cost corpus-sized
     // storage to save map-only scans)
-    val tf = termFrequencies(docs, idCol, textCol).localCheckpoint(false)
+    val tf = Pin(termFrequencies(docs, idCol, textCol))
     val cards = queries.map { case (qid, phrase) =>
       val ranked = searchWithTf(tf, idCol, phrase, k)
       val truth = phraseSearch(docs, idCol, textCol, phrase)
@@ -291,7 +289,7 @@ object Bm25 {
       "query ids must be unique — the card is one row per query id")
     val spark = docs.sparkSession
     import spark.implicits._
-    val tf = termFrequencies(docs, idCol, textCol).localCheckpoint(false)
+    val tf = Pin(termFrequencies(docs, idCol, textCol))
     val qidx = queries.zipWithIndex
     // ranking side takes the terms VERBATIM (searchWithTf's contract);
     // the truth side lowercases inside gazetteerMatch (phraseSearch's)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** Distributed byte-pair-encoding merge training — the tokenizer-side
   * operator of a training-data pipeline (Sennrich et al. 2016, "Neural
@@ -85,7 +86,7 @@ object Bpe {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // pin the corpus pass; each round's table is vocab-sized, so the
     // per-round pin is one small materialization, not a corpus write
-    var words = words0.localCheckpoint(false)
+    var words = Pin.truncate(words0)
     val out = Seq.newBuilder[(Int, String, String, Long)]
     var r = 1
     var drained = false
@@ -96,7 +97,7 @@ object Bpe {
       else {
         val (x, y, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         out += ((r, x, y, cnt))
-        words = applyMerge(words, x, y).localCheckpoint(false)
+        words = Pin.truncate(applyMerge(words, x, y))
         r += 1
       }
     }
@@ -129,7 +130,7 @@ object Bpe {
                          batch: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(batch >= 1, s"batch must be >= 1, got $batch")
-    var words = words0.localCheckpoint(false)
+    var words = Pin.truncate(words0)
     val out = Seq.newBuilder[(Int, String, String, Long)]
     var done = 0
     var drained = false
@@ -163,7 +164,7 @@ object Bpe {
           }
           // one pin per BATCH, not per merge — the chained literal
           // replaces stay a single map-only stage
-          words = words.localCheckpoint(false)
+          words = Pin.truncate(words)
         }
       }
     }

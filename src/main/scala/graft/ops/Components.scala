@@ -154,7 +154,7 @@ object Components {
           .map { case (_, (u, l2)) => (u, l2) }
         val next = labels.union(prop).union(jump)
           .reduceByKey(part, math.min(_: Long, _: Long))
-          .localCheckpoint() // truncate per-round lineage growth
+          .localCheckpoint() // RDD loop, so not Pin.truncate: cuts per-round lineage
         // exact convergence witness: count of moved labels via a narrow
         // self-partitioned join (no float sums, no overflow)
         val changed = next.join(labels)
@@ -286,9 +286,9 @@ object Components {
     * Scale shape: (cluster_id, size) distinct is cluster-count-sized,
     * the histogram is distinct-size-sized, and the 1-row corpus total is
     * broadcast — nothing after the input's own labeling touches
-    * corpus-width rows. The input's per-round localCheckpoint pins mean
-    * the two consumers (histogram + total) re-read a materialized label
-    * relation, not the iterative propagation. */
+    * corpus-width rows. The input's labels come from the truncated
+    * propagation rounds, so the two consumers (histogram + total) re-read
+    * a materialized label relation, not the iterative propagation. */
   def clusterSizeHistogram(clustered: DataFrame,
                            clusterCol: String = "cluster_id",
                            sizeCol: String = "cluster_size"): DataFrame = {

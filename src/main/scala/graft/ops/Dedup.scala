@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.vector.VectorOps
+import org.apache.spark.sql.graft.Pin
 
 /** Large-scale deduplication operators (north-star extensions, SURVEY.md §7
   * step 6). Every variant is shuffle-conscious:
@@ -238,9 +239,8 @@ object Dedup {
   /** ONE shingle explode + ONE per-doc aggregate producing BOTH the
     * minhash signature mins (h0..hN) and the distinct shingle-hash set
     * (`sh`) — the fused frame the near-dup paths band AND verify from.
-    * Pinned with a lazy localCheckpoint so column pruning can't split the
-    * consumers into per-branch re-scans (see [[nearDuplicates]] for the
-    * cache-vs-checkpoint rationale). */
+    * Pinned so column pruning can't split the consumers into per-branch
+    * re-scans. */
   private def fusedSigAndSets(df: DataFrame, idCol: String, textCol: String,
                               k: Int, numHashes: Int): DataFrame = {
     // sh is SORTED ascending with unique elements: the verify tail
@@ -260,7 +260,7 @@ object Dedup {
         col("_mh.sh").as("_shr"): _*)
     val aggs = (0 until numHashes).map(i => min(col(s"h$i")).as(s"h$i")) :+
       sort_array(array_distinct(flatten(collect_list(col("_shr"))))).as("sh")
-    perRow.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*).localCheckpoint(false)
+    Pin(perRow.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*))
   }
 
   private def hashedShingleSets(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
@@ -353,18 +353,8 @@ object Dedup {
     // ONE shingle explode + ONE corpus shuffle for BOTH stages: the per-doc
     // aggregate computes the minhash signature mins AND the distinct
     // shingle-hash set (collect_set is duplicate-insensitive, so no
-    // pre-distinct) in the same groupBy. The fused frame is pinned with a
-    // lazy localCheckpoint because column pruning would otherwise split
-    // the three consumers (band keys, verify-join doc_a, verify-join
-    // doc_b) into per-branch aggregates that each re-scan and re-explode
-    // the corpus. localCheckpoint (not Dataset.persist) on purpose: its
-    // blocks are RDD-level, so the ContextCleaner reclaims them once the
-    // result frame is garbage-collected — persist would register in the
-    // session CacheManager and pin a corpus-sized relation until an
-    // explicit unpersist this lazy operator has no place to issue.
-    // Tradeoff: a lost executor fails the job (checkpointed blocks aren't
-    // recomputable) — acceptable for a batch dedup pass, which simply
-    // retries.
+    // pre-distinct) in the same groupBy. The fused frame is pinned: its
+    // three consumers are band keys, verify-join doc_a and verify-join doc_b.
     val combined = fusedSigAndSets(df, idCol, textCol, k, numHashes)
     val cands = bandsToPairs(
       minhashBands(combined.drop("sh"), idCol, numHashes), idCol, maxBucket)
@@ -652,14 +642,12 @@ object Dedup {
     val combined = fusedSigAndSets(df, idCol, textCol, k, numHashes)
     val sets = combined.select(col(idCol), col("sh"))
     val tiers = rowsList.map { r =>
-      val cands = bandsToPairs(
-        minhashBandsWide(combined.drop("sh"), idCol, numHashes, r), idCol, maxBucket)
-        .localCheckpoint(false) // counted once, verified once, tier-sized
-      val confirmed = jaccardVerify(cands, "doc_a", "doc_b",
+      val cands = Pin(bandsToPairs(
+        minhashBandsWide(combined.drop("sh"), idCol, numHashes, r), idCol, maxBucket)) // counted once, verified once, tier-sized
+      val confirmed = Pin(jaccardVerify(cands, "doc_a", "doc_b",
         sets.select(col(idCol).as("doc_a"), col("sh").as("sh_a")),
         sets.select(col(idCol).as("doc_b"), col("sh").as("sh_b")), minJaccardBp)
-        .select(col("doc_a"), col("doc_b"))
-        .localCheckpoint(false) // counted once + joins the union truth
+        .select(col("doc_a"), col("doc_b"))) // counted once + joins the union truth
       (r, cands, confirmed)
     }
     val truth = tiers.map(_._3).reduce(_.unionByName(_)).distinct()
@@ -680,17 +668,16 @@ object Dedup {
                      caps: Seq[Int], k: Int = 3, numHashes: Int = 16,
                      minJaccardBp: Long = 5000L): DataFrame = {
     val combined = fusedSigAndSets(df, idCol, textCol, k, numHashes)
-    val pairMin = minhashBands(combined.drop("sh"), idCol, numHashes)
+    // pair-count-sized; pinned so the verify join and the min_n re-join
+    // below don't re-run the bucket expansion
+    val pairMin = Pin(minhashBands(combined.drop("sh"), idCol, numHashes)
       .groupBy(col("band_idx"), col("band_val"))
       .agg(collect_list(col(idCol)).as("ids"))
       .filter(size(col("ids")) >= 2)
       .select(size(col("ids")).cast("long").as("n"), explode(expr(
         "filter(flatten(transform(ids, x -> transform(ids, y -> struct(x AS doc_a, y AS doc_b)))), p -> p.doc_a < p.doc_b)")).as("p"))
       .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(min(col("n")).as("min_n"))
-      // pair-count-sized; pinned so the verify join and the min_n re-join
-      // below don't re-run the bucket expansion
-      .localCheckpoint(false)
+      .agg(min(col("n")).as("min_n")))
     val sets = combined.select(col(idCol), col("sh"))
     val verified = jaccardVerify(pairMin.select("doc_a", "doc_b"), "doc_a", "doc_b",
       sets.select(col(idCol).as("doc_a"), col("sh").as("sh_a")),
@@ -719,11 +706,10 @@ object Dedup {
     val corpusBands = spark.table(bandsTable)
       .select(col("band_key"), col(idCol).as("corpus_id"))
       .withColumn("n_corp", count(lit(1)).over(Window.partitionBy(col("band_key"))))
-    val pairMin = newBands.join(corpusBands, "band_key")
+    val pairMin = Pin(newBands.join(corpusBands, "band_key")
       .filter(col("new_id") =!= col("corpus_id"))
       .groupBy(col("new_id"), col("corpus_id"))
-      .agg(min(greatest(col("n_new"), col("n_corp"))).as("min_n"))
-      .localCheckpoint(false)
+      .agg(min(greatest(col("n_new"), col("n_corp"))).as("min_n")))
     val verified = jaccardVerify(pairMin.select("new_id", "corpus_id"), "new_id", "corpus_id",
       newSide.select(col(idCol).as("new_id"), col("sh").as("sh_a")),
       spark.table(setsTable).select(col(idCol).as("corpus_id"), col("sh").as("sh_b")),
@@ -790,16 +776,15 @@ object Dedup {
     * join), `corpus` carries (id, text). Shingle sets are computed only
     * for documents that appear in some pair (semi-join pushdown), and
     * every join is an equi-join — cost scales with the candidate set,
-    * never corpus². Pairs and sets are each pinned with a lazy
-    * localCheckpoint (the [[nearDuplicates]] rationale: the pair relation
+    * never corpus². Pairs and sets are each pinned: the pair relation
     * feeds the id semi-join and the verify join; the set aggregate feeds
-    * both pair sides). */
+    * both pair sides. */
   def ngramJaccard(pairs: DataFrame, corpus: DataFrame, idCol: String,
                    textCol: String, k: Int): DataFrame = {
-    val p = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint(false)
+    val p = Pin(pairs.select(col("doc_a"), col("doc_b")))
     val ids = p.select(explode(array(col("doc_a"), col("doc_b"))).as(idCol)).distinct()
-    val sets = hashedShingleSets(corpus.join(ids, Seq(idCol), "left_semi"),
-      idCol, textCol, k).localCheckpoint(false)
+    val sets = Pin(hashedShingleSets(corpus.join(ids, Seq(idCol), "left_semi"),
+      idCol, textCol, k))
     jaccardVerify(p, "doc_a", "doc_b",
       sets.select(col(idCol).as("doc_a"), col("sh").as("sh_a")),
       sets.select(col(idCol).as("doc_b"), col("sh").as("sh_b")), minJaccardBp = 0L)
@@ -861,12 +846,11 @@ object Dedup {
         pmod(bh, lit((mask + 1).toLong)) === 0L, 1L).otherwise(0L))
       .withColumn("seg", sum(col("_b"))
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val chunks = seg.groupBy(col(idCol), col("seg"))
+    val chunks = Pin(seg.groupBy(col(idCol), col("seg"))
       .agg(count(lit(1)).as("ctok"),
         md5(array_join(transform(
           array_sort(collect_list(struct(col("i"), col("tok")))),
-          s => s.getField("tok")), " ")).as("digest"))
-      .localCheckpoint(false) // feeds both the spread agg and the back-join
+          s => s.getField("tok")), " ")).as("digest"))) // feeds both the spread agg and the back-join
     val spread = chunks.groupBy(col("digest"))
       .agg(countDistinct(col(idCol)).as("ndocs"))
     chunks.join(spread, "digest")
@@ -897,9 +881,8 @@ object Dedup {
     // r17: gram hashes via the native per-row kernel (one md5 per gram
     // straight from token bytes — no k-gram string, no hex/conv); the
     // null-text explode row shape is preserved by the kernel contract
-    val occ = df.select(col(idCol), explode(org.apache.spark.sql.graft.GramHash60(
-        tokensCol(col(textCol)), k)).as("hv"))
-      .localCheckpoint(false)
+    val occ = Pin(df.select(col(idCol), explode(org.apache.spark.sql.graft.GramHash60(
+        tokensCol(col(textCol)), k)).as("hv")))
     val spanDf = occ.distinct()
       .groupBy(col("hv")).agg(count(lit(1)).as("span_df"))
     occ.join(spanDf, "hv")
@@ -968,9 +951,8 @@ object Dedup {
 
   def removeDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
                             k: Int = 5): DataFrame = {
-    val toks = df.select(col(idCol), tokensCol(col(textCol)).as("_toks"))
-      .filter(size(col("_toks")) > 0)
-      .localCheckpoint(false) // feeds the span pass (x2) and the rebuild join
+    val toks = Pin(df.select(col(idCol), tokensCol(col(textCol)).as("_toks"))
+      .filter(size(col("_toks")) > 0)) // feeds the span pass (x2) and the rebuild join
     // NOT pinned (r16): the exploded span relation is gram-volume-sized
     // (~12 GB at sf30 against a 4.6 GB pool — the pin churned more than
     // the ~1.4 s/32-core md5 recompute it saved); it is map-only from the
@@ -1230,11 +1212,9 @@ object Dedup {
                              thresholdBp: Long = 2500L,
                              maxCluster: Int = Int.MaxValue): DataFrame = {
     val model = Ivf.train(emb, idCol, vecCol, numClusters, iters)
-    // pinned like bucketCandidatePairs' signature relation: both self-join
-    // sides read one materialized assignment pass instead of re-running
-    // the codebook map per side (the lazy-localCheckpoint idiom — blocks
-    // reclaimed by the ContextCleaner with the result frame)
-    val assigned = Ivf.assign(emb, idCol, vecCol, model).localCheckpoint(false)
+    // pinned: both self-join sides read one materialized assignment pass
+    // instead of re-running the codebook map per side
+    val assigned = Pin(Ivf.assign(emb, idCol, vecCol, model))
     val capped =
       if (maxCluster == Int.MaxValue) assigned
       else assigned.withColumn("_cn",
@@ -1262,7 +1242,7 @@ object Dedup {
                                          k2: Int, targetCell: Int = 100,
                                          thresholdBp: Long = 8500L): DataFrame = {
     val m2 = Ivf.trainHierarchical(emb, idCol, vecCol, k2, targetCell)
-    val assigned = Ivf.assignHierarchical(emb, idCol, vecCol, m2).localCheckpoint(false)
+    val assigned = Pin(Ivf.assignHierarchical(emb, idCol, vecCol, m2))
     val a = assigned.select(col(idCol).as("id_a"), col("cluster"))
     val b = assigned.select(col(idCol).as("id_b"), col("cluster"))
     val pairs = a.join(b, "cluster")
@@ -1288,10 +1268,13 @@ object Dedup {
     * a #partitions-sized collect (a bounded model artifact, same class as
     * the IVF centroid pulls — NOT `Window.orderBy` without partitioning,
     * which would funnel the corpus through one task). The ranked relation
-    * is localCheckpoint-pinned before the offset collect: the pin is
-    * CORRECTNESS-load-bearing, not just a perf idiom — range boundaries
-    * are sampled per execution, so an unpinned plan could count offsets
-    * against one boundary draw and rank against another.
+    * is pinned before the offset collect: the pin is CORRECTNESS-load-
+    * bearing, not just a perf idiom — range boundaries are sampled per
+    * execution, so an unpinned plan could count offsets against one
+    * boundary draw and rank against another. The pin's range shuffle runs
+    * once, at the `Pin` call, and a partition recomputed after a lost
+    * block reuses that shuffle's partitioner, so offsets and ranks read
+    * one draw.
     *
     * Returns (doc_a, doc_b, gap) with gap ∈ [1, window], doc_a preceding
     * doc_b in (key, id) order. Rank is boundary-placement-independent, so
@@ -1306,18 +1289,16 @@ object Dedup {
         col(keyCol).cast("string").as("snm_key"))
       .repartitionByRange(p, col("snm_key"), col("snm_id"))
       .withColumn("pid", spark_partition_id())
-    val local = keyed.withColumn("lrn",
-        row_number().over(Window.partitionBy("pid").orderBy("snm_key", "snm_id")))
-      .localCheckpoint()
+    val local = Pin(keyed.withColumn("lrn",
+        row_number().over(Window.partitionBy("pid").orderBy("snm_key", "snm_id"))))
     val counts = local.groupBy("pid").agg(count(lit(1)).as("c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val offsets = counts.map(_._1).zip(
       counts.map(_._2).scanLeft(0L)(_ + _).dropRight(1))
     import spark.implicits._
     val offDf = offsets.toSeq.toDF("pid", "off")
-    val ranked = local.join(broadcast(offDf), "pid")
-      .select(col("snm_id"), (col("off") + col("lrn")).as("rn"))
-      .localCheckpoint() // probe side AND build side of the gap join
+    val ranked = Pin(local.join(broadcast(offDf), "pid")
+      .select(col("snm_id"), (col("off") + col("lrn")).as("rn"))) // probe side AND build side of the gap join
     val left = ranked.select(col("snm_id").as("doc_a"), col("rn"),
         explode(expr(s"sequence(1, $window)")).as("gap"))
       .withColumn("rn_b", col("rn") + col("gap"))
@@ -1388,12 +1369,11 @@ object Dedup {
       .withColumn("cid", dense_rank().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col(idCol)).orderBy(col("_fp"))).cast("long"))
-    val canon = toks.join(firstSeen.select(col(idCol), col("term"), col("cid")),
+    val canon = Pin(toks.join(firstSeen.select(col(idCol), col("term"), col("cid")),
         Seq(idCol, "term"))
       .groupBy(col(idCol))
       .agg(md5(array_join(expr("transform(array_sort(collect_list(struct(pos, cid))), s -> s.cid)"), " "))
-        .as("_ch"))
-      .localCheckpoint(false) // group stats + member join both read it
+        .as("_ch"))) // group stats + member join both read it
     val groups = canon.groupBy(col("_ch"))
       .agg(count(lit(1)).as("group_size"), min(col(idCol)).as("clone_rep"))
       .filter(col("group_size") > 1L)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** Link-graph analytics over document/host graphs — the centrality and
   * cohesion tier beside [[Components]]' connectivity: PageRank ranks a
@@ -34,11 +35,11 @@ object Graph {
     * (rank ⋈ out-degree), one edge-sized join feeding a partial-aggregated
     * shuffle on `dst` (map-side combine absorbs hub in-degree skew before
     * the exchange), and a 1-row dangling aggregate crossed back in as a
-    * broadcast literal. The rank table is localCheckpoint-pinned every
-    * iteration — it is referenced twice per step (contribution join and
-    * dangling anti-join), and unpinned the whole lineage would re-run per
-    * reference and per iteration (the dedup_winnow lesson, compounding
-    * exponentially here).
+    * broadcast literal. The rank table is pinned with its lineage cut
+    * (`Pin.truncate`) every iteration — it is referenced twice per step
+    * (contribution join and dangling anti-join), and unpinned the whole
+    * lineage would re-run per reference and per iteration (the
+    * dedup_winnow lesson, compounding exponentially here).
     *
     * Output: one row per node — (node, out_degree, pr_nano). Rank columns
     * sum to ~S (floor-division loss only).
@@ -48,8 +49,7 @@ object Graph {
                iters: Int = 4, scale: Long = 1000000000L): DataFrame = {
     // self-loops contribute nothing to ranking and duplicates would double
     // mass; both engines drop them before degree counting
-    val e = canonicalDirected(edges, srcCol, dstCol)
-      .localCheckpoint() // probed every iteration; unpinned, the edge synthesis re-runs per iteration
+    val e = Pin(canonicalDirected(edges, srcCol, dstCol)) // probed every iteration; unpinned, the edge synthesis re-runs per iteration
     pageRankOnState(nodes, e, outDegreesOf(e), nodeCol, iters, scale)
   }
 
@@ -69,14 +69,13 @@ object Graph {
                       iters: Int = 4, scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1, s"pageRank needs at least 1 iteration, got $iters")
     require(scale > 0, s"pageRank scale must be positive, got $scale")
-    val nd = nodes.select(col(nodeCol).cast("long").as("node")).localCheckpoint()
-    val odeg = outDeg.localCheckpoint() // referenced every iteration + the output join
+    val nd = Pin(nodes.select(col(nodeCol).cast("long").as("node")))
+    val odeg = Pin(outDeg) // referenced every iteration + the output join
     // N enters the plan as a broadcast 1-row aggregate, not a driver
     // collect — pinned because every iteration references it
-    val nRow = nd.agg(count(lit(1)).as("n")).localCheckpoint()
-    var ranks = nd.crossJoin(broadcast(nRow))
-      .select(col("node"), expr(s"CAST(${scale}L div n AS BIGINT)").as("pr"))
-      .localCheckpoint()
+    val nRow = Pin(nd.agg(count(lit(1)).as("n")))
+    var ranks = Pin.truncate(nd.crossJoin(broadcast(nRow))
+      .select(col("node"), expr(s"CAST(${scale}L div n AS BIGINT)").as("pr")))
     for (_ <- 1 to iters) {
       // node-sized join first (rank ⋈ odeg), THEN the edge-sized probe:
       // contributions partial-aggregate on dst before the shuffle, so hub
@@ -86,12 +85,11 @@ object Graph {
       val contribs = e.join(perSrc, "src").groupBy("dst").agg(sum("c").as("cin"))
       val dangling = ranks.join(odeg, ranks("node") === odeg("src"), "left_anti")
         .agg(coalesce(sum("pr"), lit(0L)).as("dmass"))
-      ranks = nd.join(contribs, nd("node") === contribs("dst"), "left")
+      ranks = Pin.truncate(nd.join(contribs, nd("node") === contribs("dst"), "left")
         .crossJoin(broadcast(dangling)).crossJoin(broadcast(nRow))
         .select(nd("node"), expr(
           s"CAST((15 * ${scale}L div 100) div n" +
-            " + (85 * (coalesce(cin, 0L) + dmass div n)) div 100 AS BIGINT)").as("pr"))
-        .localCheckpoint()
+            " + (85 * (coalesce(cin, 0L) + dmass div n)) div 100 AS BIGINT)").as("pr")))
     }
     ranks.join(odeg, ranks("node") === odeg("src"), "left")
       .select(col("node"), coalesce(col("odeg"), lit(0L)).as("out_degree"),
@@ -190,15 +188,14 @@ object Graph {
                        nodeCol: String = "node", srcCol: String = "src", dstCol: String = "dst",
                        iters: Int = 4): DataFrame = {
     require(iters >= 1, s"labelPropagation needs at least 1 round, got $iters")
-    val nd = nodes.select(col(nodeCol).cast("long").as("node")).localCheckpoint()
+    val nd = Pin(nodes.select(col(nodeCol).cast("long").as("node")))
     val directed = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-    val ue = directed
+    val ue = Pin(directed
       .unionByName(directed.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint() // probed every round
-    var labels = nd.select(col("node"), col("node").as("lbl")).localCheckpoint()
+      .distinct()) // probed every round
+    var labels = Pin.truncate(nd.select(col("node"), col("node").as("lbl")))
     for (_ <- 1 to iters) {
       // neighbor label counts: edge-sized probe, combined map-side on
       // (dst, lbl); argmax-with-min-tie as max of struct(cnt, -lbl) —
@@ -209,9 +206,8 @@ object Graph {
         .groupBy(col("dst"))
         .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("dst"), (-col("m.nl")).as("new_lbl"))
-      labels = labels.join(picked, labels("node") === picked("dst"), "left")
-        .select(col("node"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-        .localCheckpoint()
+      labels = Pin.truncate(labels.join(picked, labels("node") === picked("dst"), "left")
+        .select(col("node"), coalesce(col("new_lbl"), col("lbl")).as("lbl")))
     }
     val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("community_size"))
     labels.join(sizes, "lbl")
@@ -227,7 +223,7 @@ object Graph {
     * rather than everywhere — the standard treatment, keeping non-seed
     * rank purely link-derived. Identical scale shape: node-sized state,
     * edge-sized contribution shuffle, 1-row broadcast dangling aggregate,
-    * per-iteration localCheckpoint pin.
+    * per-iteration truncated rank table.
     *
     * Output: (node, is_seed, pr_nano). Nodes unreachable from the seed set
     * rank exactly 0 — an integer-exact "outside the neighborhood" signal
@@ -239,33 +235,29 @@ object Graph {
     require(iters >= 1, s"personalizedPageRank needs at least 1 iteration, got $iters")
     require(scale > 0, s"personalizedPageRank scale must be positive, got $scale")
     val sd = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-    val nd = nodes.select(col(nodeCol).cast("long").as("node"))
+    val nd = Pin(nodes.select(col(nodeCol).cast("long").as("node"))
       .join(sd.withColumn("is_seed", lit(1L)), Seq("node"), "left")
-      .na.fill(0L, Seq("is_seed"))
-      .localCheckpoint()
-    val e = edges
+      .na.fill(0L, Seq("is_seed")))
+    val e = Pin(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("odeg")).localCheckpoint()
-    val nsRow = nd.agg(sum("is_seed").as("ns")).localCheckpoint()
-    var ranks = nd.crossJoin(broadcast(nsRow))
+      .filter(col("src") =!= col("dst")).distinct())
+    val outDeg = Pin(e.groupBy("src").agg(count(lit(1)).as("odeg")))
+    val nsRow = Pin(nd.agg(sum("is_seed").as("ns")))
+    var ranks = Pin.truncate(nd.crossJoin(broadcast(nsRow))
       .select(col("node"), col("is_seed"),
-        expr(s"CAST(CASE WHEN is_seed = 1 THEN ${scale}L div ns ELSE 0L END AS BIGINT)").as("pr"))
-      .localCheckpoint()
+        expr(s"CAST(CASE WHEN is_seed = 1 THEN ${scale}L div ns ELSE 0L END AS BIGINT)").as("pr")))
     for (_ <- 1 to iters) {
       val perSrc = ranks.join(outDeg, ranks("node") === outDeg("src"))
         .select(col("src"), expr("pr div odeg").as("c"))
       val contribs = e.join(perSrc, "src").groupBy("dst").agg(sum("c").as("cin"))
       val dangling = ranks.join(outDeg, ranks("node") === outDeg("src"), "left_anti")
         .agg(coalesce(sum("pr"), lit(0L)).as("dmass"))
-      ranks = nd.join(contribs, nd("node") === contribs("dst"), "left")
+      ranks = Pin.truncate(nd.join(contribs, nd("node") === contribs("dst"), "left")
         .crossJoin(broadcast(dangling)).crossJoin(broadcast(nsRow))
         .select(nd("node"), nd("is_seed"), expr(
           s"CAST(CASE WHEN is_seed = 1 THEN (15 * ${scale}L div 100) div ns ELSE 0L END" +
             " + (85 * (coalesce(cin, 0L)" +
-            " + CASE WHEN is_seed = 1 THEN dmass div ns ELSE 0L END)) div 100 AS BIGINT)").as("pr"))
-        .localCheckpoint()
+            " + CASE WHEN is_seed = 1 THEN dmass div ns ELSE 0L END)) div 100 AS BIGINT)").as("pr")))
     }
     ranks.select(col("node"), col("is_seed"), col("pr").as("pr_nano"))
   }
@@ -287,7 +279,7 @@ object Graph {
     * the two legs cannot drift. Input is node-sized; everything below is
     * ≤ 64 bucket rows. */
   def histogramOfDegrees(degState: DataFrame): DataFrame = {
-    val deg = degState.localCheckpoint() // histogram side and totals side
+    val deg = Pin(degState) // histogram side and totals side
     val tot = deg.agg(count(lit(1)).as("n_total"))
     deg.withColumn("bucket", expr("CAST(length(bin(deg)) - 1 AS BIGINT)"))
       .groupBy("bucket").agg(count(lit(1)).as("n_nodes"), min("deg").as("min_deg"),
@@ -315,10 +307,8 @@ object Graph {
     */
   def triangleCounts(edges: DataFrame,
                      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val und = canonicalUndirected(edges, srcCol, dstCol)
-      .localCheckpoint() // feeds both the degree count and the orientation join
-    val deg = degreesOf(und)
-      .localCheckpoint() // referenced by both orientation sides, the wedge order and the output
+    val und = Pin(canonicalUndirected(edges, srcCol, dstCol)) // feeds both the degree count and the orientation join
+    val deg = Pin(degreesOf(und)) // referenced by both orientation sides, the wedge order and the output
     triangleOutput(deg, triangleStateOf(und, deg))
   }
 
@@ -329,11 +319,10 @@ object Graph {
   def triangleStateOf(und: DataFrame, deg: DataFrame): DataFrame = {
     val da = deg.select(col("node").as("a"), col("deg").as("da"))
     val db = deg.select(col("node").as("b"), col("deg").as("db"))
-    val o = und.join(da, "a").join(db, "b")
+    val o = Pin(und.join(da, "a").join(db, "b")
       .select(
         expr("CASE WHEN da < db OR (da = db AND a < b) THEN a ELSE b END").as("u"),
-        expr("CASE WHEN da < db OR (da = db AND a < b) THEN b ELSE a END").as("v"))
-      .localCheckpoint() // wedge base AND closing-edge probe
+        expr("CASE WHEN da < db OR (da = db AND a < b) THEN b ELSE a END").as("v"))) // wedge base AND closing-edge probe
     val ov = o.join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
       .select(col("u"), col("v"), col("dv"))
     // wedge (u; v1 ≺ v2) in the SAME (deg, id) total order the orientation
@@ -386,7 +375,7 @@ object Graph {
     * the base graph's wedges. */
   def newTriangleCounts(und: DataFrame, fresh: DataFrame,
                         degAll: DataFrame): DataFrame = {
-    val all = und.unionByName(fresh).localCheckpoint() // adjacency AND closing-edge probe
+    val all = Pin(und.unionByName(fresh)) // adjacency AND closing-edge probe
     val adj = all.select(col("a").as("u"), col("b").as("w"))
       .unionByName(all.select(col("b").as("u"), col("a").as("w")))
     // orient each fresh edge so the probe endpoint (u) has the smaller

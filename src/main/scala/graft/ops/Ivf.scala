@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CosineSimilarity
+import org.apache.spark.sql.graft.Pin
 
 /** IVF (inverted-file) approximate nearest neighbor — the codebook-based
   * scale path next to [[Similarity.annCosineLsh]]'s hash-based one.
@@ -362,12 +363,11 @@ object Ivf {
     // one materialized (id, super, vq) pass feeds seeding and every round;
     // each corpus row appears once, also under a duplicated id
     val bcS = spark.sparkContext.broadcast(superModel.codebook)
-    val sv = vectors(emb, idCol, vecCol)
+    val sv = Pin(vectors(emb, idCol, vecCol)
       .mapPartitions { iter =>
         val book = bcS.value
         iter.map { case (id, v) => val q = quantize(v); (id, book.nearest(q), q) }
-      }
-      .localCheckpoint(false)
+      })
     val wSeed = Window.partitionBy(col("_sc")).orderBy(col("_id"))
     val seedRows = sv.toDF("_id", "_sc", "_v")
       .withColumn("_rn", row_number().over(wSeed))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** Hard-negative mining for embedding-model training data — the
   * contrastive-pair construction step of the 2023-25 retrieval-model
@@ -90,9 +91,8 @@ object Mining {
         .select(col(idCol).cast("long").as("query_id"), col(labelCol).as("_qlabel")))
     val nLabels = emb.select(col(idCol).cast("long").as("neighbor_id"),
       col(labelCol).as("n_label"))
-    val labeled = cands.join(qLabels, "query_id").join(nLabels, "neighbor_id")
-      .filter(col("sim_bp") < dupBp)
-      .localCheckpoint(false) // positive AND negative legs rank this
+    val labeled = Pin(cands.join(qLabels, "query_id").join(nLabels, "neighbor_id")
+      .filter(col("sim_bp") < dupBp)) // positive AND negative legs rank this
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim_bp").desc, col("neighbor_id"))
     val pos = labeled.filter(col("n_label") === col("_qlabel"))
@@ -144,12 +144,11 @@ object Mining {
     // q > 0: a non-positive cosine is never a translation candidate, and
     // keeping every quantity strictly positive makes `div` truncation
     // and floor division identical — the cross-engine exactness hinge
-    val pairs = a.crossJoin(b)
+    val pairs = Pin(a.crossJoin(b)
       .select(col("id_a"), col("id_b"),
         floor(graft.vector.VectorOps.cosine(col("_va"), col("_vb")) *
           lit(1048576.0)).cast("long").as("q"))
-      .filter(col("q") > 0)
-      .localCheckpoint(false)
+      .filter(col("q") > 0))
     marginTail(pairs, k, minMarginBp)
   }
 
@@ -206,12 +205,11 @@ object Mining {
     val b = emb.filter(!sideACol)
       .select(col(idCol).cast("long").as("id_b"), col(vecCol).as("_vb"))
       .join(cells.select(col(idCol).cast("long").as("id_b"), col("cluster")), "id_b")
-    val pairs = a.join(b, "cluster")
+    val pairs = Pin(a.join(b, "cluster")
       .select(col("id_a"), col("id_b"),
         floor(graft.vector.VectorOps.cosine(col("_va"), col("_vb")) *
           lit(1048576.0)).cast("long").as("q"))
-      .filter(col("q") > 0)
-      .localCheckpoint(false)
+      .filter(col("q") > 0))
     marginTail(pairs, k, minMarginBp)
   }
 
@@ -252,8 +250,7 @@ object Mining {
                             sideACol: Column, m2: Ivf.Model2,
                             baseCells: DataFrame, basePairs: DataFrame,
                             delta: DataFrame, k: Int, minMarginBp: Long): DataFrame = {
-    val asnDelta = Ivf.assignHierarchical(delta, idCol, vecCol, m2)
-      .localCheckpoint(false) // feeds the affected set AND the member union
+    val asnDelta = Pin(Ivf.assignHierarchical(delta, idCol, vecCol, m2)) // feeds the affected set AND the member union
     // the touched-cell set is ≤ |Δ| rows — broadcast into both probes so
     // neither the assignment table nor the pair table ever shuffles
     val affected = asnDelta.select(col("cluster")).distinct()
@@ -296,11 +293,10 @@ object Mining {
     val sB = topB.groupBy(col("id_b")).agg(sum(col("q")).as("sb"), count(lit(1)).as("cb"))
     // ONE pin of the post-margin relation (≤ 2k rows per id, vs the old
     // full-width ranked checkpoint): the fwd and bwd legs both rank it
-    val scored = ranked.join(sA, "id_a").join(sB, "id_b")
+    val scored = Pin(ranked.join(sA, "id_a").join(sB, "id_b")
       .filter(col("sa") * col("cb") + col("sb") * col("ca") > 0)
       .withColumn("margin_bp",
-        expr("(2 * q * 10000 * ca * cb) div (sa * cb + sb * ca)"))
-      .localCheckpoint(false)
+        expr("(2 * q * 10000 * ca * cb) div (sa * cb + sb * ca)")))
     val wFm = Window.partitionBy(col("id_a")).orderBy(col("margin_bp").desc, col("id_b"))
     val wBm = Window.partitionBy(col("id_b")).orderBy(col("margin_bp").desc, col("id_a"))
     val fwd = scored.filter(col("_ia") === 1)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.Pin
 
 /** Multimodal-column plumbing (north-star extension): image/audio/video as
   * opaque `binary` payloads plus typed metadata, with decode / feature
@@ -382,7 +383,7 @@ object Multimodal {
     require(nBands >= 1 && bandBits >= 1 && nBands * bandBits < 64,
       s"bad band geometry: $nBands x $bandBits bits")
     val mask = (1L << bandBits) - 1L
-    val bands = hashes.select(col(idCol), col(hashCol)).localCheckpoint(false)
+    val bands = Pin(hashes.select(col(idCol), col(hashCol)))
       .select(col(idCol), col(hashCol),
         explode(expr(s"transform(sequence(0, ${nBands - 1}), " +
           s"i -> struct(i AS band_idx, shiftright($hashCol, i * $bandBits) & $mask AS band_val))")).as("_b"))

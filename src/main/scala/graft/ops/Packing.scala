@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** Sequence packing for pretraining: assign token-counted chunks to
   * fixed-budget training sequences, concat-then-chunk style — the
@@ -162,7 +163,9 @@ object Packing {
     * #partitions-sized collect (bounded model artifact). The pin before
     * the offset collect is CORRECTNESS-load-bearing — range boundaries
     * are sampled per execution, so an unpinned plan could compute offsets
-    * against one boundary draw and assign against another. */
+    * against one boundary draw and assign against another. The pin's
+    * range shuffle runs once, at the `Pin` call, and a partition
+    * recomputed after a lost block reuses its partitioner. */
   def shardPlan(df: DataFrame, idCol: String, nTokensCol: String,
                 targetTokens: Long, numPartitions: Int = 0): DataFrame = {
     require(targetTokens >= 1, s"targetTokens must be >= 1, got $targetTokens")
@@ -175,8 +178,7 @@ object Packing {
       .withColumn("pid", spark_partition_id())
     val wloc = Window.partitionBy("pid").orderBy("_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = keyed.withColumn("lcum", sum(col("_w")).over(wloc))
-      .localCheckpoint()
+    val local = Pin(keyed.withColumn("lcum", sum(col("_w")).over(wloc)))
     // per-partition total = the last running sum (lcum is monotone in id)
     val totals = local.groupBy("pid").agg(max(col("lcum")).as("t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.vector.VectorOps
+import org.apache.spark.sql.graft.Pin
 
 /** Approximate-nearest-neighbor search over an embedding column (north-star
   * extension). Two tiers:
@@ -87,8 +88,7 @@ object Similarity {
                            dim: Int, numTables: Int = 4, numBits: Int = 12,
                            seed: Long = 42L,
                            maxBucket: Int = graft.ops.Dedup.DefaultMaxBucket): DataFrame = {
-    val sigs = signatures(emb, idCol, vecCol, dim, numTables, numBits, seed)
-      .localCheckpoint(false)
+    val sigs = Pin(signatures(emb, idCol, vecCol, dim, numTables, numBits, seed))
     // `maxBucket` is the runtime backstop against degenerate buckets (a
     // cluster of near-identical vectors lands in one bucket no matter how
     // many bits): buckets over the cap are dropped before the join. The
@@ -151,9 +151,9 @@ object Similarity {
   def annCosineLsh(emb: DataFrame, idCol: String, vecCol: String,
                    queryIds: Seq[Long], k: Int, dim: Int,
                    numTables: Int = 4, numBits: Int = 12): DataFrame = {
-    // cache: the signature flatMap feeds both the probe filter and the
-    // candidate join — uncached it would run the corpus-wide hashing twice
-    val sigs = signatures(emb, idCol, vecCol, dim, numTables, numBits).cache()
+    // pinned: the signature flatMap feeds both the probe filter and the
+    // candidate join — unpinned it would run the corpus-wide hashing twice
+    val sigs = Pin(signatures(emb, idCol, vecCol, dim, numTables, numBits))
     val qSigs = Ivf.withIds(sigs, idCol, queryIds)
       .select(col(idCol).as("query_id"), col("table"), col("bucket"))
     val cands = sigs.join(broadcast(qSigs), Seq("table", "bucket"))

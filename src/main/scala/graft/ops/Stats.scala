@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** Exact corpus statistics operators.
   *
@@ -169,7 +170,7 @@ object Stats {
   def driftCard(oldDf: DataFrame, newDf: DataFrame, srcCol: String,
                 textCol: String): DataFrame = {
     def side(df: DataFrame, tag: String): DataFrame =
-      df.select(col(srcCol).as("source"),
+      Pin(df.select(col(srcCol).as("source"),
           size(split(col(textCol), "\\s+")).cast("long").as("_toks"),
           (regexp_count(col(textCol), lit(TextAnalysis.MojibakePattern)) > 0)
             .cast("long").as("_corrupt"))
@@ -177,8 +178,7 @@ object Stats {
           count(lit(1)).as(s"${tag}_docs"),
           sum(col("_toks")).as(s"${tag}_toks"),
           sum(col("_corrupt")).as(s"${tag}_corrupt"))
-        .withColumn(s"${tag}_tokens_per_doc", expr(s"${tag}_toks div ${tag}_docs"))
-        .localCheckpoint(false) // source-sized; join + total consumers
+        .withColumn(s"${tag}_tokens_per_doc", expr(s"${tag}_toks div ${tag}_docs"))) // source-sized; join + total consumers
     val o = side(oldDf, "old")
     val n = side(newDf, "new")
     val ot = o.agg(sum(col("old_docs")).as("old_total"))
@@ -252,14 +252,13 @@ object Stats {
                    textCol: String): DataFrame = {
     val o = oldDf.select(col(idCol).as("_id"), md5(col(textCol)).as("_ho"))
     val n = newDf.select(col(idCol).as("_id"), md5(col(textCol)).as("_hn"))
-    val agg = o.join(n, Seq("_id"), "full_outer")
+    val agg = Pin(o.join(n, Seq("_id"), "full_outer")
       .withColumn("status",
         when(col("_ho").isNull, lit("added"))
           .when(col("_hn").isNull, lit("removed"))
           .when(col("_ho") === col("_hn"), lit("unchanged"))
           .otherwise(lit("changed")))
-      .groupBy(col("status")).agg(count(lit(1)).as("n_docs"))
-      .localCheckpoint(false) // ≤4 rows; total + projection consumers
+      .groupBy(col("status")).agg(count(lit(1)).as("n_docs"))) // ≤4 rows; total + projection consumers
     val tot = agg.agg(sum(col("n_docs")).as("_tot"))
     agg.crossJoin(broadcast(tot))
       .select(col("status"), col("n_docs"),
@@ -363,14 +362,13 @@ object Stats {
     // pinned: gh feeds THREE consumers (the pair matrix + both totals
     // joins) — unpinned, Catalyst replicates the shingle-explode+distinct
     // subtree into three full corpus passes (the dedup_winnow r12 lesson);
-    // the lazy localCheckpoint runs it once
+    // the pin runs it once
     // r17: gram hashes via the native per-row kernel (same md5-hex [1,15]
     // values, no k-gram string / hex / conv materialization per gram)
-    val gh = df.select(col(srcCol).as("source"),
+    val gh = Pin(df.select(col(srcCol).as("source"),
         explode(org.apache.spark.sql.graft.GramHash60(
           Dedup.tokensCol(col(textCol)), k)).as("_gh"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
     val totals = gh.groupBy(col("source")).agg(count(lit(1)).as("_n"))
     val pairs = gh.groupBy(col("_gh"))
       .agg(sort_array(collect_set(col("source"))).as("_s"))
@@ -431,16 +429,14 @@ object Stats {
                     keepBps: Seq[Int]): DataFrame = {
     require(keepBps.nonEmpty && keepBps.forall(bp => bp >= 0 && bp <= 10000),
       s"keep fractions must be bp in [0, 10000]: ${keepBps.mkString(",")}")
-    val hist = df.groupBy(col(scoreCol).as("score"))
-      .agg(count(lit(1)).as("n"), sum(col(weightCol)).as("w"))
-      .localCheckpoint(false) // histogram-sized; feeds the window + every tier
+    val hist = Pin(df.groupBy(col(scoreCol).as("score"))
+      .agg(count(lit(1)).as("n"), sum(col(weightCol)).as("w"))) // histogram-sized; feeds the window + every tier
     val w = Window.orderBy(col("score").desc)
-    val cum = hist
+    val cum = Pin(hist
       .withColumn("cum_n", sum(col("n")).over(w))
-      .withColumn("cum_w", sum(col("w")).over(w))
-      .localCheckpoint(false)
-    val totals = df.agg(count(lit(1)).as("n_total"),
-      sum(col(weightCol)).as("w_total")).localCheckpoint(false)
+      .withColumn("cum_w", sum(col("w")).over(w)))
+    val totals = Pin(df.agg(count(lit(1)).as("n_total"),
+      sum(col(weightCol)).as("w_total")))
     keepBps.map { bp =>
       val cutoff = cum.crossJoin(broadcast(totals))
         .filter(col("cum_n") >= expr(s"(n_total * $bp) div 10000"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** Text-analysis operators for a training-data pipeline (north-star
   * extensions): language ID, quality scoring, token counting, document
@@ -630,14 +631,13 @@ object TextAnalysis {
         org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)))
       .filter(!isStop)
-    val phrases = seg.groupBy(col(idCol), col("seg"))
+    val phrases = Pin(seg.groupBy(col(idCol), col("seg"))
       .agg(count(lit(1)).as("plen"),
         array_join(transform(
           array_sort(collect_list(struct(col("i"), col("tok")))),
           s => s.getField("tok")), " ").as("phrase"),
         collect_list(col("tok")).as("words"))
-      .filter(col("plen") <= maxLen)
-      .localCheckpoint(false) // feeds BOTH the word stats and the rescore
+      .filter(col("plen") <= maxLen)) // feeds BOTH the word stats and the rescore
     val wordStats = phrases
       .select(col(idCol), col("plen"), explode(col("words")).as("word"))
       .groupBy(col(idCol), col("word"))
@@ -840,8 +840,8 @@ object TextAnalysis {
     * mean / log-perplexity, so extreme bigrams are damped rather than
     * dominant.
     *
-    * Scale shape: the tokenize→explode bigram stream is pinned
-    * (lazy localCheckpoint) and feeds all three consumers — the bigram
+    * Scale shape: the tokenize→explode bigram stream is pinned and
+    * feeds all three consumers — the bigram
     * counts, the context counts, and the per-doc scoring join — one
     * corpus scan, not three. Both count relations are map-side-combined
     * aggregates; the probability table is VOCAB²-bounded (far smaller
@@ -857,13 +857,12 @@ object TextAnalysis {
   def lmScore(df: DataFrame, idCol: String, textCol: String,
               minCount: Long = 1L): DataFrame = {
     require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
-    val bigrams = df
+    val bigrams = Pin(df
       .withColumn("_toks", toks(col(textCol)))
       .filter(size(col("_toks")) >= 2)
       .select(col(idCol), explode(expr(
         "transform(sequence(0, size(_toks) - 2), i -> struct(_toks[i] AS w1, _toks[i+1] AS w2))")).as("_b"))
-      .select(col(idCol), col("_b.w1").as("w1"), col("_b.w2").as("w2"))
-      .localCheckpoint(false)
+      .select(col(idCol), col("_b.w1").as("w1"), col("_b.w2").as("w2")))
     val c2 = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("n2"))
       .filter(col("n2") >= minCount)
     val c1 = bigrams.groupBy("w1").agg(count(lit(1)).as("n1"))
@@ -953,13 +952,12 @@ object TextAnalysis {
   def lmScoreKneserNey(df: DataFrame, idCol: String, textCol: String,
                        minCount: Long = 1L): DataFrame = {
     require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
-    val bigrams = df
+    val bigrams = Pin(df
       .withColumn("_toks", toks(col(textCol)))
       .filter(size(col("_toks")) >= 2)
       .select(col(idCol), explode(expr(
         "transform(sequence(0, size(_toks) - 2), i -> struct(_toks[i] AS w1, _toks[i+1] AS w2))")).as("_b"))
-      .select(col(idCol), col("_b.w1").as("w1"), col("_b.w2").as("w2"))
-      .localCheckpoint(false)
+      .select(col(idCol), col("_b.w1").as("w1"), col("_b.w2").as("w2")))
     val c2 = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("n2"))
       .filter(col("n2") >= minCount)
     val c1 = bigrams.groupBy("w1").agg(count(lit(1)).as("n1"),
@@ -1131,9 +1129,8 @@ object TextAnalysis {
         |    i -> named_struct('kind', 'b', 'w1', get(_toks, i), 'w2', get(_toks, i + 1))))""".stripMargin)).as("e"))
       .select(col("e.kind").as("kind"), col("e.w1").as("w1"), col("e.w2").as("w2"))
       .filter(col("kind") === "u" || col("w2").isNotNull)
-    val counts = events.groupBy(col("kind"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(false) // vocab-sized; unigram + bigram consumers
+    val counts = Pin(events.groupBy(col("kind"), col("w1"), col("w2"))
+      .agg(count(lit(1)).as("n"))) // vocab-sized; unigram + bigram consumers
     val uni = counts.filter(col("kind") === "u").select(col("w1").as("w"), col("n"))
     val totals = uni.agg(sum(col("n")).as("n_tokens"))
     counts.filter(col("kind") === "b" && col("n") >= minCount)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
   * "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
@@ -139,12 +140,10 @@ object Winnow {
                      maxPosting: Int = 50, minShared: Int = 2): DataFrame = {
     require(maxPosting >= 2, s"maxPosting must be >= 2, got $maxPosting")
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    // pinned like the dedup family's signature relations: the posting
-    // relation feeds the cap aggregate AND both self-join sides — without
+    // pinned: the posting relation feeds the cap aggregate AND both self-join sides — without
     // the pin the whole fingerprint pass re-runs four times (plan-audited:
     // 4 replicated Generate subtrees, 16 shuffles instead of ~5)
-    val posts = fps.select(col(idCol).as("_wid"), col("fp")).distinct()
-      .localCheckpoint(false)
+    val posts = Pin(fps.select(col(idCol).as("_wid"), col("fp")).distinct())
     val keep = posts.groupBy(col("fp"))
       .agg(count(lit(1)).as("_df"))
       .filter(col("_df").between(2, maxPosting))
@@ -181,11 +180,9 @@ object Winnow {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     // same pin discipline as candidatePairs: the posting relation feeds
     // the df aggregate AND both self-join sides
-    val posts = fps.select(col(idCol).as("_wid"), col("fp")).distinct()
-      .localCheckpoint(false)
-    val dfs = posts.groupBy(col("fp")).agg(count(lit(1)).as("_df"))
-      .filter(col("_df") >= 2)
-      .localCheckpoint(false) // volume aggregate + the kept-postings join
+    val posts = Pin(fps.select(col(idCol).as("_wid"), col("fp")).distinct())
+    val dfs = Pin(posts.groupBy(col("fp")).agg(count(lit(1)).as("_df"))
+      .filter(col("_df") >= 2)) // volume aggregate + the kept-postings join
     val tiers = explode(lit(maxPostings.toArray)).as("max_posting")
     // counts formulation: candidate volume per tier without pairs
     val vol = dfs.select(col("fp"), col("_df"), tiers)
@@ -243,13 +240,11 @@ object Winnow {
                      textCol: String, k: Int = 5, w: Int = 4,
                      maxPosting: Int = 50): DataFrame = {
     require(maxPosting >= 1, s"maxPosting must be >= 1, got $maxPosting")
-    val pPosts = indexRelation(probe, idCol, textCol, k, w)
-      .select(col("fp"), col(idCol).as("answer_id"))
-      .localCheckpoint(false) // totals + the attribution join
+    val pPosts = Pin(indexRelation(probe, idCol, textCol, k, w)
+      .select(col("fp"), col(idCol).as("answer_id"))) // totals + the attribution join
     val pTotals = pPosts.groupBy(col("answer_id")).agg(count(lit(1)).as("n_fp"))
-    val cPosts = indexRelation(corpus, idCol, textCol, k, w)
-      .select(col("fp"), col(idCol).as("source_id"))
-      .localCheckpoint(false) // cap aggregate + the attribution join
+    val cPosts = Pin(indexRelation(corpus, idCol, textCol, k, w)
+      .select(col("fp"), col(idCol).as("source_id"))) // cap aggregate + the attribution join
     val keep = cPosts.groupBy(col("fp")).agg(count(lit(1)).as("_df"))
       .filter(col("_df") <= maxPosting).select(col("fp"))
     val shared = pPosts.join(cPosts.join(keep, Seq("fp")), Seq("fp"))

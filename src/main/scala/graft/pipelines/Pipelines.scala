@@ -9,6 +9,7 @@ import graft.chunk.{Chunk, Chunkers, SectionText}
 import graft.embed.Embedders
 import graft.jats.Jats
 import graft.vector.VectorOps
+import org.apache.spark.sql.graft.Pin
 
 /** The reference's three entry-point lifecycles (SURVEY.md §3), composed
   * from the operator library as single declarative DAGs.
@@ -38,10 +39,9 @@ object Pipelines {
       .withColumn("_ord", monotonically_increasing_id())
       .withColumn("doi_norm", Norm.normalizeDoi(col("doi")))
       .na.drop(Seq("doi_norm"))
-    val deduped = normalized
+    val deduped = Pin(normalized
       .withColumn("_rn", row_number().over(Window.partitionBy(col("doi_norm")).orderBy(col("_ord"))))
-      .filter(col("_rn") === 1).drop("_rn")
-      .cache()
+      .filter(col("_rn") === 1).drop("_rn"))
 
     // 2. resume anti-join (J3)
     val todo = Enrich.resumeAntiJoin(deduped, seen, "doi_norm")
@@ -51,7 +51,7 @@ object Pipelines {
       .join(broadcast(articles), Seq("pmcid"), "left")
 
     // 5. assemble + split (A3): per-row ok/reason in one pass
-    val assembled = enriched
+    val assembled = Pin(enriched
       .withColumn("body_ok", col("body_len").isNotNull && col("body_len") >= minFulltextChars)
       .withColumn("ok", col("pmcid").isNotNull && col("article_title").isNotNull && col("body_ok"))
       .join(broadcast(failMap.withColumnRenamed("reason", "_fail_reason")), Seq("doi_norm"), "left")
@@ -59,8 +59,7 @@ object Pipelines {
         when(col("ok"), lit(null).cast("string"))
           .when(col("pmcid").isNull, coalesce(col("_fail_reason"), lit("No PMCID")))
           .when(col("article_title").isNull, coalesce(col("_fail_reason"), lit("PMC fetch failed (batched only)")))
-          .otherwise(lit("abstract_only")))
-      .cache()
+          .otherwise(lit("abstract_only"))))
 
     val (okRows, failRows) = Enrich.splitFailures(assembled, "ok", "reason")
     // canonical record shape (fulltext_enricher.py:70-80)
@@ -70,7 +69,7 @@ object Pipelines {
       lit("pmc").as("source"), col("pmcid"), col("sections"))
     val failures = failRows.select(col("doi"), col("journal"), col("reason"))
 
-    // summary as a LAZY one-row plan (one aggregate per cached frame,
+    // summary as a LAZY one-row plan (one aggregate per pinned frame,
     // crossJoined): constructing the result bundle runs no Spark jobs, so
     // callers that only consume records or failures never pay for counts
     val counts = assembled.agg(

@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.graft.Pin
+
 /** BPE trainer rounds-vs-wall measurement: times the sequential
   * one-job-per-merge trainer against the batched trainer at the same
   * round count over the real word table, printing per-round cost — the
@@ -20,7 +22,7 @@ object BpeCurve {
     val spark = graft.Sessions.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.io.Tables.documents(spark, dir)
-    val w0 = graft.ops.Bpe.wordFrequencies(docs).localCheckpoint(false)
+    val w0 = Pin(graft.ops.Bpe.wordFrequencies(docs))
     w0.count() // pin the corpus pass outside both timed windows
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

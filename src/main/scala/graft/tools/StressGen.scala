@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 
 /** Derived stress-corpus generator for the scale-linearity audit.
   *
@@ -77,9 +78,9 @@ object StressGen {
     val nDocs = docs.count()
     val planted = docs.filter(col("doc_id") >= 1000000L).count()
     val t0 = System.nanoTime()
-    val pairs = graft.ops.Winnow.candidatePairs(
+    val pairs = Pin(graft.ops.Winnow.candidatePairs(
       graft.ops.Winnow.fingerprints(docs, "doc_id", "text", k = 5, w = 4),
-      "doc_id", maxPosting = 50, minShared = 2).localCheckpoint(false)
+      "doc_id", maxPosting = 50, minShared = 2))
     val nPairs = pairs.count()
     val secs = (System.nanoTime() - t0) / 1e9
     val found = pairs.filter(col("id_b") === col("id_a") + lit(1000000L)).count()

@@ -32,6 +32,25 @@ object IntegerOpsLint {
     ("ops/Cdc.scala", "md5(concat_ws("),
     ("norm/Norm.scala", "sha2(concat_ws("))
 
+  /** Frame pins outside `org.apache.spark.sql.graft.Pin`: every reused
+    * frame is kept through `Pin` or `Pin.truncate`, whose scaladoc holds
+    * the reasons, so a bare `localCheckpoint`/`checkpoint`/`cache`/`persist`
+    * in main source is a fifth idiom. Allowlist: (path suffix, line regex)
+    * per kept site, with its reason.
+    *  - Components.connectedComponents: the label-propagation loop runs on
+    *    co-partitioned RDDs (the one RDD-API loop in the library), which
+    *    `Pin` does not take; its persists and per-round local checkpoint
+    *    are RDD calls.
+    *  - curation_full's gated text (MultimodalQueries): `DISK_ONLY` keeps
+    *    a corpus-sized text relation off the heap at sf30, a memory reason
+    *    `Pin`'s `MEMORY_AND_DISK` does not meet. */
+  val PinAllow: Seq[(String, String)] = Seq(
+    ("ops/Components.scala",
+      """\.persist\(StorageLevel\.MEMORY_AND_DISK\)|\.localCheckpoint\(\) // RDD loop"""),
+    ("catalog/MultimodalQueries.scala", """\.persist\(org\.apache\.spark\.storage\.StorageLevel\.DISK_ONLY\)"""))
+
+  private val PinCall = """\.(localCheckpoint|checkpoint|persist)\(|\.cache\(\)""".r
+
   private def isCommentLine(l: String): Boolean = {
     val t = l.trim
     t.startsWith("//") || t.startsWith("*") || t.startsWith("/*") || t.startsWith("/**")
@@ -56,7 +75,14 @@ object IntegerOpsLint {
                 "must poison the key (use concat + explicit null handling), or " +
                 "coalesce/length-prefix every part and allowlist the line here"))
           else Seq.empty
-        f1 ++ f2
+        val f3 =
+          if (PinCall.findFirstIn(l).isDefined && !path.endsWith("org/apache/spark/sql/graft/Pin.scala") &&
+              !PinAllow.exists { case (sfx, re) => path.endsWith(sfx) && re.r.findFirstIn(l).isDefined })
+            Seq(Finding(path, i + 1, "pin",
+              "keep a reused frame with Pin(df) (reuse, lineage kept) or Pin.truncate(df) " +
+                "(loop-carried state); see org.apache.spark.sql.graft.Pin"))
+          else Seq.empty
+        f1 ++ f2 ++ f3
       }
     }
 
@@ -73,21 +99,44 @@ object IntegerOpsLint {
 
 class IntegerOpsLintSpec extends AnyFunSuite {
 
-  test("main source carries no un-allowlisted Column.divide or concat_ws") {
+  private def mainFindings(rules: Set[String]): Seq[IntegerOpsLint.Finding] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"lint must run from the repo root, missing $root")
-    val findings = IntegerOpsLint.scanTree(root)
-    assert(findings.isEmpty, findings.map(f =>
-      s"${f.file}:${f.line} [${f.rule}] ${f.text}").mkString("\n", "\n", "\n"))
+    IntegerOpsLint.scanTree(root).filter(f => rules(f.rule))
+  }
+
+  private def report(findings: Seq[IntegerOpsLint.Finding]): String =
+    findings.map(f => s"${f.file}:${f.line} [${f.rule}] ${f.text}").mkString("\n", "\n", "\n")
+
+  test("main source carries no un-allowlisted Column.divide or concat_ws") {
+    val findings = mainFindings(Set("Column.divide", "concat_ws"))
+    assert(findings.isEmpty, report(findings))
+  }
+
+  test("main source carries no bare frame pin outside Pin") {
+    val findings = mainFindings(Set("pin"))
+    assert(findings.isEmpty, report(findings))
   }
 
   test("seeded violations fire: the lint is live, not decorative") {
     val bad = Seq(
       "val h = col(\"h60\").divide(lit(1048576L))",          // rule 1
-      "val key = md5(concat_ws(\":\", col(\"a\"), col(\"b\")))") // rule 2
+      "val key = md5(concat_ws(\":\", col(\"a\"), col(\"b\")))", // rule 2
+      "val a = df.groupBy(\"k\").count().localCheckpoint(false)", // rule 3, each form
+      "val b = df.localCheckpoint()",
+      "val c = df.checkpoint()",
+      "val d = df.cache()",
+      "val e = df.persist(StorageLevel.MEMORY_AND_DISK)")
     val fs = IntegerOpsLint.scan("graft/ops/Seeded.scala", bad)
-    assert(fs.map(_.rule).sorted == Seq("Column.divide", "concat_ws"))
-    assert(fs.map(_.line) == Seq(1, 2))
+    assert(fs.map(_.rule).sorted == Seq("Column.divide", "concat_ws") ++ Seq.fill(5)("pin"))
+    assert(fs.map(_.line) == (1 to 7))
+    // an allowlisted pin fires outside its file, and Pin itself is exempt
+    val rddPersist = Seq("      .persist(StorageLevel.MEMORY_AND_DISK)")
+    assert(IntegerOpsLint.scan("graft/ops/Components.scala", rddPersist).isEmpty)
+    assert(IntegerOpsLint.scan("graft/ops/Graph.scala", rddPersist).map(_.rule) == Seq("pin"))
+    assert(IntegerOpsLint.scan("org/apache/spark/sql/graft/Pin.scala", rddPersist).isEmpty)
+    // unpersist is a release, not a pin
+    assert(IntegerOpsLint.scan("graft/ops/Ivf.scala", Seq("bc.unpersist(blocking = false)")).isEmpty)
   }
 
   test("comment mentions and allowlisted lines do not fire") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Ivf, Mining}
 
@@ -172,14 +173,13 @@ class MiningSpec extends AnyFunSuite {
     // a SMALL batch (the production shape): at fixture scale the codebook
     // has only ~8 composite cells, so a big delta would touch all of them
     // and the untouched-reuse assertion below would be vacuous
-    val base = emb.filter(col("vec_id") % 125 =!= 0).localCheckpoint(false)
+    val base = Pin(emb.filter(col("vec_id") % 125 =!= 0))
     val delta = emb.filter(col("vec_id") % 125 === 0)
     val k2 = math.max(4, math.ceil(math.sqrt(base.count() / 100.0)).toInt)
     val m2 = Ivf.trainHierarchical(base, "vec_id", "embedding", k2 = k2, targetCell = 100)
-    val baseCells = Ivf.assignHierarchical(base, "vec_id", "embedding", m2)
-      .localCheckpoint(false)
-    val basePairs = Mining.bitextPairsWithCells(base, "vec_id", "embedding",
-      side, baseCells, 4, 10000L).localCheckpoint(false)
+    val baseCells = Pin(Ivf.assignHierarchical(base, "vec_id", "embedding", m2))
+    val basePairs = Pin(Mining.bitextPairsWithCells(base, "vec_id", "embedding",
+      side, baseCells, 4, 10000L))
     val inc = Mining.bitextMineIncremental(emb, "vec_id", "embedding", side,
       m2, baseCells, basePairs, delta, 4, 10000L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

@@ -179,7 +179,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // aggregate — the whole three-tier curve fits a fixed exchange budget
     // (11 at pin time: the tier-tagged pair collapse, the two verify-join
     // sides + their aggregates; the signature relation itself is pinned
-    // upstream by the dedup-family localCheckpoint idiom and contributes
+    // upstream (`Pin`) and contributes
     // no per-tier re-derivation). A drift back to per-tier verify or
     // pair checkpoints roughly triples the count. NOTE: comparing against
     // bandingCurvePairs' executedPlan would be apples-to-oranges — its

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingIngest
 import graft.io.Tables
@@ -456,8 +457,7 @@ class StreamingSpec extends AnyFunSuite {
   test("late-data drop: 10h-late rows never count, the open pusher window never emits") {
     import org.apache.spark.sql.functions._
     val base = java.nio.file.Files.createTempDirectory("graft_late").toString + "/run"
-    val out = StreamingIngest.runLateDrops(spark, TestSpark.sf0001, base)
-      .localCheckpoint(false)
+    val out = Pin(StreamingIngest.runLateDrops(spark, TestSpark.sf0001, base))
     // the pusher's window is open at end-of-stream: it must be withheld
     assert(out.filter(col("event_type") === "zz_pusher").count() == 0)
     // the emitted aggregate equals the batch replay of the ON-TIME slice —

@@ -82,16 +82,19 @@ class WritersSpec extends AnyFunSuite {
     assert(spark.read.option("header", "true").csv(s"$dir/one").count() == 200)
   }
 
-  test("A3 splitWrite routes ok/failed/NULL rows without losing any") {
+  test("A3 splitFailures routes ok/failed/NULL rows to the two sinks without losing any") {
     val dir = tmp()
     val assembled = Seq(
-      ("a", Some(true)), ("b", Some(false)), ("c", None)
-    ).toDF("doi", "ok")
-    Writers.splitWrite(assembled, "ok", s"$dir/ok", s"$dir/fail")
+      ("a", Some(true), None), ("b", Some(false), Some("No PMCID")), ("c", None, None)
+    ).toDF("doi", "ok", "reason")
+    val (ok, failed) = graft.enrich.Enrich.splitFailures(assembled, "ok", "reason")
+    Writers.jsonSink(ok, s"$dir/ok")
+    Writers.csvFailureSink(failed.drop("ok"), s"$dir/fail")
     val okBack = spark.read.json(s"$dir/ok")
     val failBack = spark.read.option("header", "true").csv(s"$dir/fail")
-    assert(okBack.count() == 1)
-    assert(failBack.count() == 2, "false AND null rows land in failures")
+    assert(okBack.collect().map(_.getAs[String]("doi")).toSeq == Seq("a"))
+    assert(failBack.collect().map(_.getAs[String]("doi")).sorted.toSeq == Seq("b", "c"),
+      "false AND null rows land in failures")
   }
 
   test("K6 summary sink writes the one-row metrics record") {
